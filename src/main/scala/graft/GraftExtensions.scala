@@ -1,9 +1,6 @@
 package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
-import org.apache.spark.sql.types.IntegerType
 
 /** Spark extensions injector — the deployment-grade registration path
   * for the native graft expressions:
@@ -12,276 +9,14 @@ import org.apache.spark.sql.types.IntegerType
   *   spark-submit --conf spark.sql.extensions=graft.GraftExtensions ...
   * }}}
   *
-  * makes `graft_array_dot`, `graft_shingle_hashes`, `graft_minhash_sig`
-  * and `graft_simhash64` available to every session (including pure-SQL
-  * users) without any driver-side `ensure()` call. The embedded engine
-  * path ([[graft.functions.VectorExpressions.ensure]]) registers the
-  * same functions per-session for programmatic use.
+  * makes every function of [[graft.functions.NativeFunctions.all]]
+  * available to every session (including pure-SQL users) without any
+  * driver-side `ensure()` call. [[graft.engine.Engine.session]] sets
+  * this extension; [[graft.functions.VectorExpressions.ensure]] fills in
+  * the same table for sessions built without it.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-
-  private def intLit(e: Expression, what: String): Int = e match {
-    case Literal(v: Int, IntegerType) => v
-    case other => throw new org.apache.spark.sql.AnalysisException(
-      errorClass = "INTERNAL_ERROR",
-      messageParameters = Map("message" -> s"$what must be an int literal, got $other"))
-  }
-
-  private def dblLit(e: Expression, what: String): Double = e match {
-    case Literal(v: Double, org.apache.spark.sql.types.DoubleType) => v
-    case Literal(v: Int, IntegerType) => v.toDouble
-    // SQL parses exact numeric literals (0.5) as DecimalType — the
-    // natural spelling graft_kll_quantile(s, 0.5) must work
-    case Literal(v: org.apache.spark.sql.types.Decimal,
-        _: org.apache.spark.sql.types.DecimalType) => v.toDouble
-    case other => throw new org.apache.spark.sql.AnalysisException(
-      errorClass = "INTERNAL_ERROR",
-      messageParameters = Map("message" -> s"$what must be a double literal, got $other"))
-  }
-
-  private def arity(name: String, n: Int, exprs: Seq[Expression]): Unit =
-    if (exprs.length != n)
-      throw new org.apache.spark.sql.AnalysisException(
-        errorClass = "INTERNAL_ERROR",
-        messageParameters = Map("message" ->
-          s"$name requires $n argument(s), got ${exprs.length}"))
-
-  private def info(name: String, usage: String) =
-    new ExpressionInfo(classOf[GraftExtensions].getName, null, name, usage, "")
-
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("graft_array_dot"),
-      info("graft_array_dot",
-        "graft_array_dot(a, b) - dot product of two float/double arrays"),
-      (exprs: Seq[Expression]) => {
-        arity("graft_array_dot", 2, exprs)
-        graft.functions.ArrayDot(exprs.head, exprs(1))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_shingle_hashes"),
-      info("graft_shingle_hashes",
-        "graft_shingle_hashes(text, n) - distinct xxhash64 of word n-gram shingles"),
-      (exprs: Seq[Expression]) => {
-        arity("graft_shingle_hashes", 2, exprs)
-        graft.functions.ShingleHashes(exprs.head, intLit(exprs(1), "n"))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_minhash_sig"),
-      info("graft_minhash_sig",
-        "graft_minhash_sig(shingleHashes, numHashes) - per-row MinHash signature"),
-      (exprs: Seq[Expression]) => {
-        arity("graft_minhash_sig", 2, exprs)
-        graft.functions.MinHashSig(exprs.head, intLit(exprs(1), "numHashes"))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_simhash64"),
-      info("graft_simhash64",
-        "graft_simhash64(text) - per-row 64-bit SimHash"),
-      (exprs: Seq[Expression]) => {
-        arity("graft_simhash64", 1, exprs)
-        graft.functions.SimHash64(exprs.head)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_unicode_norm"),
-      info("graft_unicode_norm",
-        "graft_unicode_norm(text, form, stripAccents, toLower, cleanWs) - Unicode normalization (form NFC|NFD|NFKC|NFKD; flags are boolean literals)"),
-      (exprs: Seq[Expression]) => {
-        arity("graft_unicode_norm", 5, exprs)
-        def strL(e: Expression, what: String): String = e match {
-          case Literal(v: org.apache.spark.unsafe.types.UTF8String,
-                       org.apache.spark.sql.types.StringType) => v.toString
-          case other => throw new org.apache.spark.sql.AnalysisException(
-            errorClass = "INTERNAL_ERROR",
-            messageParameters = Map("message" ->
-              s"graft_unicode_norm: $what must be a string literal, got $other"))
-        }
-        def boolL(e: Expression, what: String): Boolean = e match {
-          case Literal(v: Boolean, org.apache.spark.sql.types.BooleanType) => v
-          case other => throw new org.apache.spark.sql.AnalysisException(
-            errorClass = "INTERNAL_ERROR",
-            messageParameters = Map("message" ->
-              s"graft_unicode_norm: $what must be a boolean literal, got $other"))
-        }
-        graft.functions.UnicodeNormExpr(exprs.head,
-          graft.functions.UnicodeNorm.checkForm(strL(exprs(1), "form")),
-          boolL(exprs(2), "stripAccents"), boolL(exprs(3), "toLower"),
-          boolL(exprs(4), "cleanWs"))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_html_text"),
-      info("graft_html_text",
-        "graft_html_text(html) - visible text of an HTML document (single-pass parse, whitespace-collapsed)"),
-      (exprs: Seq[Expression]) => {
-        arity("graft_html_text", 1, exprs)
-        graft.functions.HtmlToText(exprs.head)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_html_title"),
-      info("graft_html_title",
-        "graft_html_title(html) - first <title> content; null when absent"),
-      (exprs: Seq[Expression]) => {
-        arity("graft_html_title", 1, exprs)
-        graft.functions.HtmlTitle(exprs.head)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_html_links"),
-      info("graft_html_links",
-        "graft_html_links(html) - <a href> values in document order"),
-      (exprs: Seq[Expression]) => {
-        arity("graft_html_links", 1, exprs)
-        graft.functions.HtmlLinks(exprs.head)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_html_link_pairs"),
-      info("graft_html_link_pairs",
-        "graft_html_link_pairs(html) - (href, anchor text) structs in document order"),
-      (exprs: Seq[Expression]) => {
-        arity("graft_html_link_pairs", 1, exprs)
-        graft.functions.HtmlLinkPairs(exprs.head)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_html_meta"),
-      info("graft_html_meta",
-        "graft_html_meta(html) - (key, content) structs for <meta> name/property/http-equiv and <link rel=canonical>, document order"),
-      (exprs: Seq[Expression]) => {
-        arity("graft_html_meta", 1, exprs)
-        graft.functions.HtmlMetaPairs(exprs.head)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_srp_sig"),
-      info("graft_srp_sig",
-        "graft_srp_sig(vec, nBits, maxDim) - signed-random-projection LSH signature packed into a long"),
-      (exprs: Seq[Expression]) => {
-        arity("graft_srp_sig", 3, exprs)
-        graft.functions.SrpSig(exprs.head, intLit(exprs(1), "nBits"),
-          intLit(exprs(2), "maxDim"))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_langid"),
-      info("graft_langid",
-        "graft_langid(text) - character-trigram naive-Bayes language id (14 languages)"),
-      (exprs: Seq[Expression]) => {
-        arity("graft_langid", 1, exprs)
-        graft.functions.LangId(exprs.head)
-      }))
-    def cbLit(e: Expression, fn: String): Array[Double] = e match {
-      case Literal(ad: org.apache.spark.sql.catalyst.util.ArrayData,
-                   org.apache.spark.sql.types.ArrayType(
-                     org.apache.spark.sql.types.DoubleType, _)) =>
-        ad.toDoubleArray()
-      case other => throw new org.apache.spark.sql.AnalysisException(
-        errorClass = "INTERNAL_ERROR",
-        messageParameters = Map("message" ->
-          s"$fn: codebook must be an array<double> literal, got $other"))
-    }
-    ext.injectFunction((
-      FunctionIdentifier("graft_pq_encode"),
-      info("graft_pq_encode",
-        "graft_pq_encode(vec, codebook, m, kc) - product-quantization code bytes of a vector"),
-      (exprs: Seq[Expression]) => {
-        arity("graft_pq_encode", 4, exprs)
-        graft.functions.PQEncode(exprs.head, cbLit(exprs(1), "graft_pq_encode"),
-          intLit(exprs(2), "m"), intLit(exprs(3), "kc"))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_pq_lut"),
-      info("graft_pq_lut",
-        "graft_pq_lut(vec, codebook, m, kc) - per-query ADC lookup table"),
-      (exprs: Seq[Expression]) => {
-        arity("graft_pq_lut", 4, exprs)
-        graft.functions.PQLut(exprs.head, cbLit(exprs(1), "graft_pq_lut"),
-          intLit(exprs(2), "m"), intLit(exprs(3), "kc"))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_bpe_encode"),
-      info("graft_bpe_encode",
-        "graft_bpe_encode(text, merges) - trained-BPE subword tokens of a string"),
-      (exprs: Seq[Expression]) => {
-        arity("graft_bpe_encode", 2, exprs)
-        val merges = exprs(1) match {
-          case Literal(ad: org.apache.spark.sql.catalyst.util.ArrayData,
-                       org.apache.spark.sql.types.ArrayType(
-                         org.apache.spark.sql.types.StringType, _)) =>
-            ad.toObjectArray(org.apache.spark.sql.types.StringType).map(_.toString)
-          case other => throw new org.apache.spark.sql.AnalysisException(
-            errorClass = "INTERNAL_ERROR",
-            messageParameters = Map("message" ->
-              s"graft_bpe_encode: merges must be an array<string> literal, got $other"))
-        }
-        graft.functions.BpeEncode(exprs.head, merges)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_pq_adc"),
-      info("graft_pq_adc",
-        "graft_pq_adc(lut, codes) - ADC score (approximate cosine) of a PQ-coded vector"),
-      (exprs: Seq[Expression]) => {
-        arity("graft_pq_adc", 2, exprs)
-        graft.functions.PQAdc(exprs.head, exprs(1))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_topk"),
-      info("graft_topk",
-        "graft_topk(score, id, k) - bounded-heap top-k aggregate; returns array<struct<id,score>> ordered by (score desc, id asc)"),
-      (exprs: Seq[Expression]) => {
-        arity("graft_topk", 3, exprs)
-        graft.functions.TopKByScore(exprs.head, exprs(1), intLit(exprs(2), "k"))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_kll_agg"),
-      info("graft_kll_agg",
-        "graft_kll_agg(value, k) - mergeable KLL quantile-sketch aggregate of a double column; returns the sketch binary"),
-      (exprs: Seq[Expression]) => {
-        arity("graft_kll_agg", 2, exprs)
-        graft.functions.KllAgg(exprs.head, intLit(exprs(1), "k"))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_kll_merge"),
-      info("graft_kll_merge",
-        "graft_kll_merge(sketch) - union KLL sketch binaries to a coarser grain"),
-      (exprs: Seq[Expression]) => {
-        arity("graft_kll_merge", 1, exprs)
-        graft.functions.KllMergeAgg(exprs.head)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_kll_quantile"),
-      info("graft_kll_quantile",
-        "graft_kll_quantile(sketch, p) - inclusive-rank quantile estimate of a KLL sketch binary"),
-      (exprs: Seq[Expression]) => {
-        arity("graft_kll_quantile", 2, exprs)
-        graft.functions.KllQuantile(exprs.head, dblLit(exprs(1), "p"))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_kll_n"),
-      info("graft_kll_n",
-        "graft_kll_n(sketch) - exact stream length a KLL sketch has absorbed"),
-      (exprs: Seq[Expression]) => {
-        arity("graft_kll_n", 1, exprs)
-        graft.functions.KllN(exprs.head)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_freq_agg"),
-      info("graft_freq_agg",
-        "graft_freq_agg(item, weight, maxMapSize) - mergeable frequent-items sketch aggregate; returns the sketch binary"),
-      (exprs: Seq[Expression]) => {
-        arity("graft_freq_agg", 3, exprs)
-        graft.functions.FreqAgg(exprs.head, exprs(1), intLit(exprs(2), "maxMapSize"))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_freq_merge"),
-      info("graft_freq_merge",
-        "graft_freq_merge(sketch, maxMapSize) - union frequent-items sketch binaries to a coarser grain"),
-      (exprs: Seq[Expression]) => {
-        arity("graft_freq_merge", 2, exprs)
-        graft.functions.FreqMergeAgg(exprs.head, intLit(exprs(1), "maxMapSize"))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_freq_items"),
-      info("graft_freq_items",
-        "graft_freq_items(sketch, k) - NO_FALSE_NEGATIVES frequent items of a sketch binary as array<struct<item,est,lb,ub>>"),
-      (exprs: Seq[Expression]) => {
-        arity("graft_freq_items", 2, exprs)
-        graft.functions.FreqItems(exprs.head, intLit(exprs(1), "k"))
-      }))
-  }
+  override def apply(ext: SparkSessionExtensions): Unit =
+    graft.functions.NativeFunctions.all.foreach(f =>
+      ext.injectFunction((f.id, f.info, f.builder)))
 }

@@ -476,14 +476,22 @@ object Engine {
     df
   }
 
-  /** Standard session factory used by mains + tests: local[32]-friendly
-    * defaults, AQE on, shuffle partitions sized for the local profile. */
+  private val LocalN = """local\[(\d+)\]""".r
+
+  /** The one graft session factory: the CLI, Bench, Verify, the specs,
+    * the dev tools and perfbench all build here. The master is `master`,
+    * else `SPARK_GRAFT_MASTER`, else `local[${SPARK_GRAFT_CPUS:-32}]`; a
+    * `local[N]` master gets N shuffle partitions (any other master gets
+    * `SPARK_GRAFT_CPUS:-32`). AQE is on, and every native function of
+    * [[graft.functions.NativeFunctions]] resolves from pure SQL through
+    * [[graft.GraftExtensions]]. */
   def session(appName: String = "graft", master: Option[String] = None): SparkSession = {
-    val b = SparkSession.builder().appName(appName)
-      // native expressions available to pure-SQL users of the session
-      // (the stages also self-register via VectorExpressions.ensure)
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val m = master.orElse(sys.env.get("SPARK_GRAFT_MASTER")).getOrElse(s"local[$cpus]")
+    val partitions = m match { case LocalN(n) => n; case _ => cpus }
+    SparkSession.builder().appName(appName).master(m)
       .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+      .config("spark.sql.shuffle.partitions", partitions)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.adaptive.enabled", "true")
@@ -513,10 +521,7 @@ object Engine {
       // events.ts encoding drifts between fixture generations — see
       // sources.Tables (this flag covers the legacy nanos-int64 one)
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    master.orElse(sys.env.get("SPARK_GRAFT_MASTER"))
-      .orElse(Some(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]"))
-      .foreach(b.master)
-    b.getOrCreate()
+      .getOrCreate()
   }
 
   /** Register the driver-testdata tables for a scale-factor directory. */

@@ -544,271 +544,16 @@ case class BloomMightContainBcast(
 }
 
 object VectorExpressions {
-  private val registered =
-    java.util.Collections.synchronizedSet(new java.util.HashSet[Int]())
-
-  /** Register the native functions in the session's function registry
-    * (idempotent per session) — the supported path for using a custom
-    * Expression from the Column DSL. */
-  def ensure(spark: SparkSession): Unit =
-    if (registered.add(System.identityHashCode(spark.sessionState))) {
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "graft_array_dot",
-        (exprs: Seq[Expression]) => ArrayDot(exprs.head, exprs(1)),
-        "built-in")
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "graft_shingle_hashes",
-        (exprs: Seq[Expression]) => {
-          val n = exprs(1) match {
-            case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, IntegerType) => v
-            case other => sys.error(s"graft_shingle_hashes: n must be an int literal, got $other")
-          }
-          ShingleHashes(exprs.head, n)
-        },
-        "built-in")
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "graft_minhash_sig",
-        (exprs: Seq[Expression]) => {
-          val n = exprs(1) match {
-            case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, IntegerType) => v
-            case other => sys.error(s"graft_minhash_sig: numHashes must be an int literal, got $other")
-          }
-          MinHashSig(exprs.head, n)
-        },
-        "built-in")
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "graft_simhash64",
-        (exprs: Seq[Expression]) => SimHash64(exprs.head),
-        "built-in")
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "graft_unicode_norm",
-        (exprs: Seq[Expression]) => {
-          import org.apache.spark.sql.catalyst.expressions.Literal
-          def s(e: Expression, what: String): String = e match {
-            case Literal(v: org.apache.spark.unsafe.types.UTF8String, StringType) => v.toString
-            case other => sys.error(s"graft_unicode_norm: $what must be a string literal, got $other")
-          }
-          def b(e: Expression, what: String): Boolean = e match {
-            case Literal(v: Boolean, BooleanType) => v
-            case other => sys.error(s"graft_unicode_norm: $what must be a boolean literal, got $other")
-          }
-          UnicodeNormExpr(exprs.head,
-            UnicodeNorm.checkForm(s(exprs(1), "form")),
-            b(exprs(2), "stripAccents"), b(exprs(3), "toLower"),
-            b(exprs(4), "cleanWs"))
-        },
-        "built-in")
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "graft_robots_allowed",
-        (exprs: Seq[Expression]) => {
-          import org.apache.spark.sql.catalyst.expressions.Literal
-          val agent = exprs(2) match {
-            case Literal(v: org.apache.spark.unsafe.types.UTF8String, StringType) => v.toString
-            case other => sys.error(
-              s"graft_robots_allowed: agent must be a string literal, got $other")
-          }
-          graft.text.RobotsAllowed(exprs.head, exprs(1), agent)
-        },
-        "built-in")
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "graft_wikitext_clean",
-        (exprs: Seq[Expression]) => graft.text.WikitextClean(exprs.head),
-        "built-in")
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "graft_deflate_ratio",
-        (exprs: Seq[Expression]) => {
-          import org.apache.spark.sql.catalyst.expressions.Literal
-          val level = exprs(1) match {
-            case Literal(v: Int, IntegerType) => v
-            case other => sys.error(
-              s"graft_deflate_ratio: level must be an int literal, got $other")
-          }
-          DeflateRatioExpr(exprs.head, level)
-        },
-        "built-in")
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "graft_html_text",
-        (exprs: Seq[Expression]) => HtmlToText(exprs.head),
-        "built-in")
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "graft_html_title",
-        (exprs: Seq[Expression]) => HtmlTitle(exprs.head),
-        "built-in")
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "graft_html_links",
-        (exprs: Seq[Expression]) => HtmlLinks(exprs.head),
-        "built-in")
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "graft_html_link_pairs",
-        (exprs: Seq[Expression]) => HtmlLinkPairs(exprs.head),
-        "built-in")
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "graft_html_meta",
-        (exprs: Seq[Expression]) => HtmlMetaPairs(exprs.head),
-        "built-in")
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "graft_html_markdown",
-        (exprs: Seq[Expression]) => HtmlMarkdown(exprs.head),
-        "built-in")
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "graft_html_tables",
-        (exprs: Seq[Expression]) => HtmlTables(exprs.head),
-        "built-in")
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "graft_latex_strip",
-        (exprs: Seq[Expression]) => LatexStrip(exprs.head),
-        "built-in")
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "graft_markdown_strip",
-        (exprs: Seq[Expression]) => MarkdownStrip(exprs.head),
-        "built-in")
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "graft_decode_text",
-        (exprs: Seq[Expression]) => DecodeTextExpr(exprs.head),
-        "built-in")
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "graft_script_mix",
-        (exprs: Seq[Expression]) => ScriptMixExpr(exprs.head),
-        "built-in")
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "graft_srp_sig",
-        (exprs: Seq[Expression]) => {
-          def intLit(e: Expression, what: String): Int = e match {
-            case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, IntegerType) => v
-            case other => sys.error(s"graft_srp_sig: $what must be an int literal, got $other")
-          }
-          SrpSig(exprs.head, intLit(exprs(1), "nBits"), intLit(exprs(2), "dim"))
-        },
-        "built-in")
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "graft_jl_project",
-        (exprs: Seq[Expression]) => {
-          import org.apache.spark.sql.catalyst.expressions.Literal
-          def iLit(e: Expression, what: String): Int = e match {
-            case Literal(v: Int, IntegerType) => v
-            case other => sys.error(s"graft_jl_project: $what must be an int literal, got $other")
-          }
-          def dLit(e: Expression, what: String): Double = e match {
-            case Literal(v: Double, DoubleType) => v
-            case Literal(v: Int, IntegerType) => v.toDouble
-            case Literal(v: org.apache.spark.sql.types.Decimal, _: org.apache.spark.sql.types.DecimalType) => v.toDouble
-            case other => sys.error(s"graft_jl_project: $what must be a double literal, got $other")
-          }
-          def lLit(e: Expression, what: String): Long = e match {
-            case Literal(v: Long, LongType) => v
-            case Literal(v: Int, IntegerType) => v.toLong
-            case other => sys.error(s"graft_jl_project: $what must be a long literal, got $other")
-          }
-          JlProject(exprs.head, iLit(exprs(1), "k"),
-            dLit(exprs(2), "scale"), lLit(exprs(3), "seed"))
-        },
-        "built-in")
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "graft_might_contain",
-        (exprs: Seq[Expression]) =>
-          org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(
-            exprs.head, exprs(1)),
-        "built-in")
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "graft_langid",
-        (exprs: Seq[Expression]) => LangId(exprs.head),
-        "built-in")
-      def cbLit(e: Expression, fn: String): Array[Double] = e match {
-        case org.apache.spark.sql.catalyst.expressions.Literal(ad: ArrayData, ArrayType(DoubleType, _)) =>
-          ad.toDoubleArray()
-        case other => sys.error(s"$fn: codebook must be an array<double> literal, got $other")
-      }
-      def intL(e: Expression, fn: String, what: String): Int = e match {
-        case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, IntegerType) => v
-        case other => sys.error(s"$fn: $what must be an int literal, got $other")
-      }
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "graft_pq_encode",
-        (exprs: Seq[Expression]) => PQEncode(exprs.head,
-          cbLit(exprs(1), "graft_pq_encode"),
-          intL(exprs(2), "graft_pq_encode", "m"),
-          intL(exprs(3), "graft_pq_encode", "kc")),
-        "built-in")
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "graft_pq_lut",
-        (exprs: Seq[Expression]) => PQLut(exprs.head,
-          cbLit(exprs(1), "graft_pq_lut"),
-          intL(exprs(2), "graft_pq_lut", "m"),
-          intL(exprs(3), "graft_pq_lut", "kc")),
-        "built-in")
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "graft_bpe_encode",
-        (exprs: Seq[Expression]) => {
-          val merges = exprs(1) match {
-            case org.apache.spark.sql.catalyst.expressions.Literal(ad: ArrayData, ArrayType(StringType, _)) =>
-              ad.toObjectArray(StringType).map(_.toString)
-            case other => sys.error(
-              s"graft_bpe_encode: merges must be an array<string> literal, got $other")
-          }
-          BpeEncode(exprs.head, merges)
-        },
-        "built-in")
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "graft_pq_adc",
-        (exprs: Seq[Expression]) => PQAdc(exprs.head, exprs(1)),
-        "built-in")
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "graft_topk",
-        (exprs: Seq[Expression]) => {
-          val k = exprs(2) match {
-            case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, IntegerType) => v
-            case other => sys.error(s"graft_topk: k must be an int literal, got $other")
-          }
-          TopKByScore(exprs.head, exprs(1), k) // analyzer wraps AggregateFunction
-        },
-        "built-in")
-      def intLit(e: Expression, fn: String, what: String): Int = e match {
-        case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, IntegerType) => v
-        case other => sys.error(s"$fn: $what must be an int literal, got $other")
-      }
-      def dblLit(e: Expression, fn: String, what: String): Double = e match {
-        case org.apache.spark.sql.catalyst.expressions.Literal(v: Double, DoubleType) => v
-        case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, IntegerType) => v.toDouble
-        // SQL parses exact numeric literals (0.5) as DecimalType
-        case org.apache.spark.sql.catalyst.expressions.Literal(
-            v: org.apache.spark.sql.types.Decimal,
-            _: org.apache.spark.sql.types.DecimalType) => v.toDouble
-        case other => sys.error(s"$fn: $what must be a double literal, got $other")
-      }
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "graft_kll_agg",
-        (exprs: Seq[Expression]) =>
-          KllAgg(exprs.head, intLit(exprs(1), "graft_kll_agg", "k")),
-        "built-in")
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "graft_kll_merge",
-        (exprs: Seq[Expression]) => KllMergeAgg(exprs.head),
-        "built-in")
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "graft_kll_quantile",
-        (exprs: Seq[Expression]) =>
-          KllQuantile(exprs.head, dblLit(exprs(1), "graft_kll_quantile", "p")),
-        "built-in")
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "graft_kll_n",
-        (exprs: Seq[Expression]) => KllN(exprs.head),
-        "built-in")
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "graft_freq_agg",
-        (exprs: Seq[Expression]) =>
-          FreqAgg(exprs.head, exprs(1), intLit(exprs(2), "graft_freq_agg", "maxMapSize")),
-        "built-in")
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "graft_freq_merge",
-        (exprs: Seq[Expression]) =>
-          FreqMergeAgg(exprs.head, intLit(exprs(1), "graft_freq_merge", "maxMapSize")),
-        "built-in")
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "graft_freq_items",
-        (exprs: Seq[Expression]) =>
-          FreqItems(exprs.head, intLit(exprs(1), "graft_freq_items", "k")),
-        "built-in")
+  /** Register every [[NativeFunctions]] entry the session's function
+    * registry lacks — the supported path for using a custom Expression
+    * from the Column DSL. A session built with [[graft.GraftExtensions]]
+    * lacks none, so this does no work there. */
+  def ensure(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
+    NativeFunctions.all.foreach { f =>
+      if (!registry.functionExists(f.id)) registry.registerFunction(f.id, f.info, f.builder)
     }
+  }
 
   /** Native dot product of two float/double array columns. */
   def arrayDot(a: Column, b: Column): Column =

@@ -39,7 +39,6 @@ class BpeSpec extends SparkSpec {
   }
 
   test("native BpeEncode expression == Scala reference on fixture docs") {
-    VectorExpressions.ensure(spark)
     val merges = Bpe.train(corpus, 50)
     val docs = spark.read.parquet(s"$sfDir/documents.parquet").limit(50)
     val got = docs.select(col("text"),

@@ -1582,10 +1582,15 @@ class EngineSpec extends SparkSpec {
   }
 
   test("GraftExtensions: native functions callable from pure SQL (no ensure())") {
-    // the session was built with spark.sql.extensions=graft.GraftExtensions;
-    // the injected functions must resolve in SQL text without any
-    // programmatic VectorExpressions.ensure() registration
-    val r = spark.sql(
+    // a new session starts with the built-ins plus what the extension
+    // injects — none of the temp functions that earlier ensure() calls
+    // left in the shared session
+    val s = spark.newSession()
+    val names = graft.functions.NativeFunctions.all.map(_.name)
+    val listed = s.sql("SHOW FUNCTIONS LIKE 'graft_*'").collect().map(_.getString(0)).toSet
+    assert(names.filterNot(listed).isEmpty, s"missing from pure SQL: ${names.filterNot(listed)}")
+    assert(names.size == 35 && names.distinct == names)
+    val r = s.sql(
       """SELECT graft_simhash64('a b c') AS sh,
         |       graft_array_dot(array(1.0D, 2.0D), array(3.0D, 4.0D)) AS dot,
         |       size(graft_minhash_sig(graft_shingle_hashes('a b c d', 3), 16)) AS nsig,

@@ -210,7 +210,6 @@ class HtmlStageSpec extends SparkSpec {
     assert(out.isNullAt(out.fieldIndex("absent")))
     // fake meta inside script never leaks (SQL surface doubles as the
     // registration check)
-    graft.functions.VectorExpressions.ensure(spark)
     val keys = spark.sql(s"SELECT graft_html_meta('${html.replace("'", "''").replace("\n", " ")}') AS p")
       .selectExpr("transform(p, x -> x.key) AS ks").collect().head
       .getAs[scala.collection.Seq[String]]("ks")

@@ -73,7 +73,6 @@ class LlmStagesSpec extends SparkSpec {
   }
 
   test("native ShingleHashes == HOF wordShingles+xxhash64, in order") {
-    graft.functions.VectorExpressions.ensure(spark)
     val docs = newCtx().table("documents").limit(100)
       .union(Seq((9999L, "one two", "en", "x", 7L)).toDF(
         "doc_id", "text", "lang", "source", "n_chars")) // < n tokens edge
@@ -105,7 +104,6 @@ class LlmStagesSpec extends SparkSpec {
   }
 
   test("native per-row signatures (MinHashSig / SimHash64) equal HOF forms") {
-    graft.functions.VectorExpressions.ensure(spark)
     // fixture docs + blank/whitespace/short edge cases (blank input must
     // reproduce split(trim(s), "\s+")'s single-empty-token behavior)
     val docs = newCtx().table("documents").limit(100)
@@ -1208,7 +1206,6 @@ class LlmStagesSpec extends SparkSpec {
   }
 
   test("native ArrayDot == HOF dot, bit-exact, on fixture embeddings") {
-    graft.functions.VectorExpressions.ensure(spark)
     val emb = newCtx().table("embeddings")
     val pairs = emb.select(col("vec_id").as("a_id"), col("embedding").as("a"))
       .join(emb.select(col("vec_id").as("b_id"), col("embedding").as("b")),
@@ -1222,7 +1219,6 @@ class LlmStagesSpec extends SparkSpec {
   }
 
   test("native SrpSig == HOF srpSignature, bit-exact, on fixture embeddings") {
-    graft.functions.VectorExpressions.ensure(spark)
     val emb = newCtx().table("embeddings")
     // cover a non-default shape too (nBits not a multiple of 8, dim
     // shorter than the vectors so the tail-truncation path runs)
@@ -1236,7 +1232,6 @@ class LlmStagesSpec extends SparkSpec {
   }
 
   test("native JlProject == HOF jl projection, bit-exact, incl. null contracts") {
-    graft.functions.VectorExpressions.ensure(spark)
     def diffCount(df: org.apache.spark.sql.DataFrame, vec: String,
                   k: Int, scale: Double, seed: Long): Long =
       df.select(
@@ -1272,7 +1267,6 @@ class LlmStagesSpec extends SparkSpec {
   }
 
   test("topk heap aggregate ≡ window row_number (ties break on id asc)") {
-    graft.functions.VectorExpressions.ensure(spark)
     // scores with deliberate duplicates across ids, several groups,
     // groups smaller and larger than k
     val rows = for (q <- 0L until 7L; n <- 0L until 23L if n != q)

@@ -51,7 +51,6 @@ class PQSpec extends SparkSpec {
   }
 
   test("PQEncode / PQLut / PQAdc match the pure-Scala reference") {
-    VectorExpressions.ensure(spark)
     import scala.jdk.CollectionConverters._
     val rows = (0L until 50L).map(i =>
       org.apache.spark.sql.Row(i, vecOf(i).toSeq)).asJava

@@ -7,6 +7,12 @@ import org.apache.spark.sql.functions._
   * the stdin source, and the CLI entry with `-NAME=value` vars. */
 class ParitySpec extends SparkSpec {
 
+  /** A shipped config shape from src/test/resources/reference-configs,
+    * its `/data/` paths rooted at `dir`. */
+  private def refConfig(f: String, dir: String = "/data"): String =
+    new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(
+      s"src/test/resources/reference-configs/$f")), "UTF-8").replace("/data/", s"$dir/")
+
   test("orientdb loader, document mode: plocal dbURL → parquet class dir") {
     val dir = java.nio.file.Files.createTempDirectory("graft_odb").toString
     Engine.runJson(newCtx(), s"""{
@@ -163,10 +169,9 @@ class ParitySpec extends SparkSpec {
   }
 
   test("reference's SHIPPED config.json runs verbatim (relaxed JSON + legacy aliases)") {
-    // resources/config.json from the reference, byte-identical except
-    // the input path (its /temp/test.csv doesn't exist here) and the
-    // loader db location. Exercises: unquoted-key JSON, the legacy
-    // `line` extractor (path hoisted to a file source), untyped csv
+    // the config.json shape (reference-configs/config.json), its input
+    // and db paths rooted in a temp dir. Exercises: unquoted-key JSON,
+    // the legacy `line` extractor (path hoisted to a file source), untyped csv
     // columns with ';' separator, `dontknow.trim()` + `sysdate()`
     // dialect expressions, and the `skip` transformer alias (absent
     // from the reference's own factory — broken there, working here).
@@ -176,17 +181,7 @@ class ParitySpec extends SparkSpec {
       ("1;2001-01-01;a1;w1;s1;  keep me  ;2002-01-01\n" +
        "2;2001-01-02;a2;w2;s2;;2002-01-02\n" +
        "3;2001-01-03;a3;w3;s3; also keep ;2002-01-03\n").getBytes("UTF-8"))
-    val cfg = s"""{
-      extractor : { line: { path: "$csv", lock : true } },
-      transformers : [
-       { csv: { separator: ";", columnsOnFirstLine: false, columns: ["id","beginDate","aams","wow","serial","dontknow","endDate"] } },
-       { field: { fieldName: "dontknow", expression: "dontknow.trim()" } },
-       { field: { fieldName: "time", expression: "sysdate()" } },
-       { skip: { expression: "dontknow is null" } }
-      ],
-      loader : { orientdb_doc: { class: "Client", dbURL: "plocal:$dir/db" } }
-    }"""
-    Engine.runJson(newCtx(), cfg)
+    Engine.runJson(newCtx(), refConfig("config.json", dir))
     val out = spark.read.parquet(s"$dir/db/Client")
     assert(out.count() == 2) // row with empty dontknow skipped
     val dk = out.select("dontknow").orderBy("id").collect().map(_.getString(0)).toSeq
@@ -195,11 +190,19 @@ class ParitySpec extends SparkSpec {
   }
 
   test("all three shipped reference configs parse + normalize to known components") {
+    // src/test/resources/reference-configs holds the three shipped config
+    // SHAPES (SURVEY.md §2.7, §4, §5): the legacy line/skip/orientdb_doc
+    // names, the jdbc extractor, and the let/merge/graph-loader chain
     val known = Engine.transformers.keySet ++ Set("row", "line")
+    val expected = Map(
+      "config.json" -> (Seq("csv", "field", "field", "flow"), "orientdb"),
+      "config-jdbc.json" -> (Seq("vertex"), "output"),
+      "config-dbpedia.json" -> (Seq("csv", "merge", "vertex"), "orientdb"))
     for (f <- Seq("config.json", "config-jdbc.json", "config-dbpedia.json")) {
-      val src = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(s"/root/reference/src/main/resources/$f")), "UTF-8")
-      val spec = graft.spec.PipelineSpec.parse(src)
+      val spec = graft.spec.PipelineSpec.parse(refConfig(f))
+      assert((spec.transformers.map(_.name), spec.loader.map(_.name).orNull) == expected(f), f)
+      assert(spec.begin.map(_.name) ==
+        (if (f == "config-dbpedia.json") Seq("let", "let") else Nil), f)
       spec.transformers.foreach(t =>
         assert(known.contains(t.name), s"$f: unknown transformer ${t.name}"))
       spec.loader.foreach(l =>
@@ -231,26 +234,7 @@ class ParitySpec extends SparkSpec {
     import spark.implicits._
     Seq(("u1", "old-alice"), ("u9", "zed")).toDF("URI", "name")
       .createOrReplaceTempView("V")
-    Engine.runJson(ctx, s"""{
-      config: { log: "info", fileDirectory: "$dir/", fileName: "Person.csv.gz",
-                parallel: false },
-      begin: [
-       { let: { name: "$$filePath",  expression: "$$fileDirectory.append( $$fileName )"} },
-       { let: { name: "$$className", expression: "$$fileName.substring( 0, $$fileName.indexOf('.') )"} }
-      ],
-      source : { file: { path: "$$filePath", lock : true } },
-      extractor : { row: {} },
-      transformers : [
-       { csv: { separator: ",", nullValue: "NULL", skipFrom: 1, skipTo: 3 } },
-       { merge: { joinFieldName: "URI", lookup: "V.URI" } },
-       { vertex: { class: "$$className", idField: "URI" } }
-      ],
-      loader : { orientdb: {
-        dbURL: "plocal:$dir/db", dbUser: "admin", dbPassword: "admin",
-        dbAutoCreateProperties: false, dbAutoDropIfExists: true,
-        tx: false, wal: false, batchCommit: 1000, dbType: "graph",
-        indexes: [{class: "V", fields: ["URI:string"], type: "UNIQUE"}]
-      } } }""")
+    Engine.runJson(ctx, refConfig("config-dbpedia.json", dir))
     // vertex class derived from $fileName up to the first '.'
     val vs = spark.read.parquet(s"$dir/db/vertices")
     assert(vs.select("label").distinct().collect().map(_.getString(0)).toSeq ==
@@ -272,14 +256,7 @@ class ParitySpec extends SparkSpec {
     // must fail naming the driver — proving the config PARSES and
     // routes to the jdbc extractor — never a parse/normalize error.
     val e = intercept[Exception] {
-      Engine.runJson(newCtx(), """{
-        config: { verbose: true },
-        extractor : {
-          jdbc: { driver: "com.mysql.jdbc.Driver", url: "jdbc:mysql://localhost/test",
-                  userName: "root", userPassword: "", query: "select * from Client" }
-        },
-        transformers : [ { vertex: { class: "Client"} } ],
-        loader : { output: {} } }""")
+      Engine.runJson(newCtx(), refConfig("config-jdbc.json"))
     }
     val chain = Iterator.iterate[Throwable](e)(_.getCause)
       .takeWhile(_ != null).map(_.toString).mkString(" | ")

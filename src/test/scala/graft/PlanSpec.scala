@@ -146,7 +146,6 @@ class PlanSpec extends SparkSpec {
   }
 
   test("minhash/simhash signatures are pure projections — no shuffle") {
-    graft.functions.VectorExpressions.ensure(spark)
     val ctx = newCtx()
     val docs = ctx.table("documents")
     val mh = docs.select(col("doc_id"),

@@ -71,7 +71,6 @@ class PropertySpec extends SparkSpec {
   }
 
   test("graft_topk ≡ window row_number on random scored pairs (10 cases)") {
-    graft.functions.VectorExpressions.ensure(spark)
     import org.apache.spark.sql.expressions.Window
     // duplicate-heavy scores (small integer range cast to double) force
     // the id tie-break on nearly every group

@@ -117,7 +117,6 @@ class StatsSpec extends SparkSpec {
     assert(kept.columns.toSeq == Seq("p50", "n_values", "kll_sketch_merged"))
     // SQL surface: the natural decimal spelling 0.5 must work (SQL
     // parses it as DecimalType, not Double — r17 review)
-    graft.functions.VectorExpressions.ensure(spark)
     val sqlQ = spark.sql("SELECT graft_kll_quantile(" +
       "graft_kll_agg(CAST(id AS DOUBLE), 200), 0.5) AS p50 FROM range(101)")
       .as[Double].head()
