@@ -2,7 +2,7 @@ package graft.dedup
 
 import graft.engine.EtlContext
 import graft.spec.ComponentSpec
-import graft.stages.Stages
+import graft.stages.{Iterate, Stages}
 import graft.text.TextStages
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -538,17 +538,18 @@ object DedupStages {
     *    materialized through `ckpt` (row-block localCheckpoint), NOT
     *    `.persist()`: the columnar in-memory cache is pathological for
     *    string id frames — measured on the 1.1M-pair geo_cluster list
-    *    (CcStepProbe `store`), cache BUILD 33.8 task-s and every
-    *    decoding read ~17 task-s, vs 1.1 / 0.5 task-s for the same
-    *    frame as localCheckpoint row blocks (~30x: the cache pays
-    *    per-batch compression-scheme trials on build and per-read
-    *    string decompression; row blocks pay neither).
+    *    (`OPTIMIZATION_r19.md` § "connectedComponents second pass"),
+    *    cache BUILD 33.8 task-s and every decoding read ~17 task-s, vs
+    *    1.1 / 0.5 task-s for the same frame as localCheckpoint row
+    *    blocks (~30x: the cache pays per-batch compression-scheme
+    *    trials on build and per-read string decompression; row blocks
+    *    pay neither).
     *  - above `surrogateThreshold` pairs, node ids are translated ONCE
     *    to dense LONG surrogates and the loop runs on longs: `min` over
     *    a fixed-width type plans as a map-side-partial HashAggregate,
     *    while `min(string)` plans as a SortAggregate that fully sorts
     *    the EDGE-sized join output twice per round (measured 2.3×
-    *    per-round cost on a 1.1M-pair graph, CcPlanProbe). Component
+    *    per-round cost on a 1.1M-pair graph, same §). Component
     *    SETS are independent of the label order; the declared
     *    min-STRING-id labels are restored by one NODE-sized relabel
     *    pass at the end. Surrogates come from the keyedByTid recipe
@@ -558,13 +559,13 @@ object DedupStages {
     *    exceeds the per-round win and the loop runs directly on the
     *    string ids, as before. */
   def connectedComponents(pairs: DataFrame, maxIter: Int = 20,
-      ckpt: DataFrame => DataFrame = _.localCheckpoint(true),
+      ckpt: DataFrame => DataFrame = Iterate.localCheckpoint,
       surrogateThreshold: Long = 100000L,
-      localFinishEdges: Long = 200000L): DataFrame = {
-    // the pair count rides the checkpoint job (r19, Stages.ckptObserve)
-    val (p, pN) = Stages.ckptObserve(ckpt,
-      pairs.select(col("a"), col("b")), count(lit(1)).as("__n"))
-    val nPairs = pN.getLong(0)
+      localFinishEdges: Long = 200000L,
+      stage: String = "connectedcomponents"): DataFrame = {
+    val budget = Iterate.Budget.loud(stage, maxIter, "labels still changing " +
+      "— raise maxIter (pointer jumping needs O(log diameter) rounds)")
+    val (p, nPairs) = Iterate.counted(ckpt, pairs.select(col("a"), col("b")))
     // only STRING ids pay the SortAggregate penalty — numeric pair ids
     // (minhash/simhash doc ids) already hash-aggregate and would get
     // pure overhead from a surrogate translation
@@ -573,7 +574,7 @@ object DedupStages {
     if (!stringIds || surrogateThreshold <= 0 || nPairs <= surrogateThreshold) {
       val sym = p.select(col("a").as("src"), col("b").as("dst"))
         .union(p.select(col("b").as("src"), col("a").as("dst")))
-      ccLoop(sym, maxIter, ckpt, localFinishEdges)
+      ccLoop(sym, budget, ckpt, localFinishEdges)
     } else {
       // r19 (optimization round, guide §2.3): surrogates are xxhash64
       // of the id — an in-row projection — instead of a dense dictionary
@@ -597,7 +598,7 @@ object DedupStages {
               xxhash64(col("a")).as("src"), xxhash64(col("b")).as("dst"))
             .union(p.select(
               xxhash64(col("b")).as("src"), xxhash64(col("a")).as("dst"))))
-          ccLoop(sym, maxIter, ckpt, localFinishEdges)
+          ccLoop(sym, budget, ckpt, localFinishEdges)
             .join(ids.withColumn("__h", xxhash64(col("id")))
               .select(col("id").as("__sid"), col("__h")),
               col("id") === col("__h"))
@@ -610,7 +611,7 @@ object DedupStages {
             .join(dict.select(col("id").as("b"), col("__nid").as("__nb")), Seq("b"))
           val sym = ckpt(symN.select(col("__na").as("src"), col("__nb").as("dst"))
             .union(symN.select(col("__nb").as("src"), col("__na").as("dst"))))
-          ccLoop(sym, maxIter, ckpt, localFinishEdges)
+          ccLoop(sym, budget, ckpt, localFinishEdges)
             .join(dict.select(col("__nid").as("__did"), col("id").as("__sid")),
               col("id") === col("__did"))
         }
@@ -630,15 +631,9 @@ object DedupStages {
     * otherwise double the plan tree twice per round (4^rounds nodes:
     * planner/explain OOM long before the data is big). Checkpoint
     * blocks are freed by the ContextCleaner once unreferenced, so
-    * rounds don't accumulate. `hop` is lazily persisted instead of
-    * eagerly checkpointed (r19): it is read twice inside `next`'s plan
-    * (base + the comp→comp mapping), so the cache shares the heavy
-    * neighbour-min aggregation without paying a separate
-    * materialization job per round; `next`'s checkpoint is the round's
-    * one job, the convergence probe rides the cached result. */
-  private def ccLoop(sym: DataFrame, maxIter: Int,
-      ckpt: DataFrame => DataFrame,
-      localFinishEdges: Long = 200000L): DataFrame = {
+    * rounds don't accumulate. */
+  private def ccLoop(sym: DataFrame, budget: Iterate.Budget,
+      ckpt: DataFrame => DataFrame, localFinishEdges: Long): DataFrame = {
     // r19 optimization round: ONE star-contraction pass before the
     // pointer-jumping loop (the min-neighbour star contraction of
     // Kiveris et al., "Connected Components in MapReduce and Beyond",
@@ -653,21 +648,21 @@ object DedupStages {
     // 1.1M-pair clique grid leaves ZERO contracted edges, so the loop
     // sees an empty frame and converges in one cheap round instead of
     // ~5 edge-sized join+aggregate rounds (measured ~7 task-seconds
-    // per round, CcStepProbe). Sparse graphs lose nothing: the pass
-    // strictly merges stars and the contracted set never exceeds the
-    // deduped input, and the pointer-jumping round count only drops
-    // (the deep-chain spec still converges within the same maxIter).
+    // per round, OPTIMIZATION_r19.md § "connectedComponents second
+    // pass"). Sparse graphs lose nothing: the pass strictly merges
+    // stars and the contracted set never exceeds the deduped input, and
+    // the pointer-jumping round count only drops (the deep-chain spec
+    // still converges within the same maxIter).
     val m = ckpt(sym.groupBy(col("src")).agg(min(col("dst")).as("__mn"))
       .select(col("src").as("id"), least(col("src"), col("__mn")).as("__t")))
-    // the gate count rides the contraction checkpoint (r19,
-    // Stages.ckptObserve) — no separate count job
-    val (e2, e2N) = Stages.ckptObserve(ckpt, sym
+    // the gate count rides the contraction checkpoint — no separate
+    // count job
+    val (e2, nE2) = Iterate.counted(ckpt, sym
       .join(m.select(col("id").as("src"), col("__t").as("__ts")), Seq("src"))
       .join(m.select(col("id").as("dst"), col("__t").as("__td")), Seq("dst"))
       .select(col("__ts").as("src"), col("__td").as("dst"))
       .where(col("src") =!= col("dst"))
-      .distinct(),
-      count(lit(1)).as("__n"))
+      .distinct())
     // fully-contracted shortcut (r19): clique/cell graphs — the
     // dominant CC input here — leave ZERO contracted edges, and every
     // remaining job below (labels2 ckpt, a pointer-jumping round, its
@@ -675,7 +670,6 @@ object DedupStages {
     // exactly m(v) then; one bounded count over the checkpointed e2
     // (row blocks — the count doubles as the local-finish gate)
     // replaces ~6 empty-frame driver round-trips.
-    val nE2 = e2N.getLong(0)
     if (nE2 == 0L)
       m.select(col("id"), col("__t").as("comp"))
     else {
@@ -715,7 +709,7 @@ object DedupStages {
           ccLoopRounds(e2,
             e2.select(col("src").as("id")).distinct()
               .select(col("id"), col("id").as("comp")),
-            maxIter, ckpt)
+            budget, ckpt)
       // compose: comp(v) = comp'(m(v)); a contracted star with no
       // surviving edge keeps its own min label m(v)
       ckpt(m.join(comps2.select(col("id").as("__t"), col("comp")), Seq("__t"), "left")
@@ -757,30 +751,18 @@ object DedupStages {
   }
 
   /** The raw pointer-jumping rounds of [[ccLoop]], over an already
-    * checkpointed edge list.
-    *
-    * r19 (optimization round, guide §2.4/§1.2): the rounds run in the
-    * committed graph-loop shape — the contracted edge list is pinned
-    * co-partitioned + sorted on `dst` once, the loop runs under AQE-off
-    * at the pinned data-derived partition count (one materialization
-    * job per checkpoint instead of one per exchange: graph_cc spent
-    * 2.5 s of driver gaps across 62 ~40 ms jobs at sf0.1, and each job
-    * is a barrier whose latency survives at cluster scale), and `hop`
-    * is EAGERLY checkpointed. The earlier CcTuneProbe regression
-    * (AQE-off + lazily persisted hop: the whole-DAG submission computes
-    * hop's heavy upstream twice, concurrently, through a racing cache)
-    * does not apply to an eager materialization — `next` then reads hop
-    * twice as cheap row blocks. */
-  private def ccLoopRounds(sym: DataFrame, labels0: DataFrame, maxIter: Int,
-      ckpt: DataFrame => DataFrame): DataFrame = {
-    val (e, parts) = graft.stages.Stages.pinByKey(ckpt, sym, "dst")
-    graft.stages.Stages.withoutAqe(e.sparkSession, parts) {
-      var labels = ckpt(labels0)
-      var iter = 0
-      var changed = true
-      while (iter < maxIter && changed) {
+    * checkpointed edge list pinned on `dst`. `hop` is checkpointed
+    * eagerly inside each round: `next` reads it twice (base + the
+    * comp→comp mapping), and a lazy persist read twice races under
+    * AQE-off (see [[Iterate]]). */
+  private def ccLoopRounds(sym: DataFrame, labels0: DataFrame,
+      budget: Iterate.Budget, ckpt: DataFrame => DataFrame): DataFrame = {
+    val scope = Iterate.pinned(ckpt, sym, "dst")
+    scope {
+      Iterate.fixpoint(ckpt(labels0), budget, ckpt, col("comp") < col("__old")) { (state, _) =>
+        val labels = state.select("id", "comp")
         // 1-hop: comp := min(comp, min over neighbours of their comp)
-        val nbrMin = e
+        val nbrMin = scope.frame
           .join(labels.select(col("id").as("__nid"), col("comp").as("__ncomp")),
             col("dst") === col("__nid"))
           .groupBy(col("src").as("id")).agg(min("__ncomp").as("__nbr"))
@@ -788,24 +770,12 @@ object DedupStages {
           .select(col("id"), col("comp").as("__old"),
             least(col("comp"), coalesce(col("__nbr"), col("comp"))).as("__hop")))
         // pointer jump: comp := comp(comp) — labels are node ids, so the
-        // hop frame doubles as the id→comp mapping. The convergence
-        // check rides the checkpoint job itself (Stages.ckptObserve) —
-        // no separate probe job per round (r19).
+        // hop frame doubles as the id→comp mapping
         val mapping = hop.select(col("id").as("__mid"), col("__hop").as("__mcomp"))
-        val (next, chg) = graft.stages.Stages.ckptObserve(ckpt,
-          hop.join(mapping, col("__hop") === col("__mid"), "left")
-            .select(col("id"), col("__old"),
-              least(col("__hop"), coalesce(col("__mcomp"), col("__hop"))).as("comp")),
-          count(when(col("comp") < col("__old"), 1)).as("__chg"))
-        changed = chg.getLong(0) > 0L
-        labels = next.select("id", "comp")
-        iter += 1
-      }
-      if (changed)
-        throw new IllegalStateException(
-          s"connectedComponents did not converge in $maxIter rounds " +
-          "(labels still changing) — raise maxIter")
-      labels
+        hop.join(mapping, col("__hop") === col("__mid"), "left")
+          .select(col("id"), col("__old"),
+            least(col("__hop"), coalesce(col("__mcomp"), col("__hop"))).as("comp"))
+      }(_.count == 0L).select("id", "comp")
     }
   }
 
@@ -841,7 +811,7 @@ object DedupStages {
         case _ => minhash(inner, ctx)(df)
       }).select("a", "b")
       val comps = connectedComponents(pairs, spec.int("maxIter", 12),
-        graft.stages.Stages.checkpointerOf(spec, ctx))
+        Stages.checkpointerOf(spec, ctx), stage = "neardupdedup")
       val losers = spec.str("scoreField") match {
         case None => comps.where(col("id") =!= col("comp"))
           .select(col("id").as("__drop"))

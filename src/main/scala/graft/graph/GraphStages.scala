@@ -2,7 +2,7 @@ package graft.graph
 
 import graft.engine.EtlContext
 import graft.spec.ComponentSpec
-import graft.stages.Stages
+import graft.stages.{Iterate, Stages}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -56,14 +56,13 @@ object GraphStages {
     * the rank vector plus a hash aggregation on dst — the canonical
     * distributed PageRank step. Rank lineage grows LINEARLY per round
     * (each rank vector is referenced once — unlike connected
-    * components' pointer jumping, where double self-reference grows the
-    * tree 4^rounds), so checkpointing every round would only pay extra
-    * job launches: `localCheckpoint` fires every `checkpointEvery`
-    * rounds (default 5) to bound analysis cost on long runs, and the
-    * edge list + degree table are checkpointed ONCE so the merged
-    * multi-round job reads them from the block manager instead of
-    * rescanning the source per round. `checkpointDir` switches every
-    * truncation to a reliable `checkpoint` into that directory (see
+    * components' pointer jumping), so the loop is [[Iterate.rounds]]:
+    * a checkpoint every `checkpointEvery` rounds (default 5) bounds
+    * analysis cost on long runs. The edge list (pinned on src, the key
+    * of both per-round joins) and the degree table are checkpointed
+    * ONCE, so rounds exchange only the node-sized rank vector.
+    * `checkpointDir` switches every truncation to a reliable
+    * `checkpoint` into that directory (see
     * [[graft.stages.Stages.checkpointerOf]]) — same rounds, same plan
     * shape, executor-loss-safe. */
   def pageRank(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
@@ -78,16 +77,11 @@ object GraphStages {
       val weighted = spec.bool("weighted", dflt = false)
       if (weighted) require(edges0.columns.contains("weight"),
         "pagerank: weighted requires edges built with `weightField`")
-      // r19: edge list pinned co-partitioned + sorted on src
-      // (Stages.pinByKey) — the per-round contribution join and the
-      // degree join both key on src, so rounds exchange only the
-      // node-sized rank vector; the loop runs with AQE off at the
-      // pinned data-derived partition count (Stages.withoutAqe).
-      val edgesRaw = ckpt(
+      val scope = Iterate.pinned(ckpt, ckpt(
         if (weighted) edges0.select(col("src"), col("dst"),
           coalesce(col("weight"), lit(1.0)).as("__w"))
-        else edges0.select(col("src"), col("dst")))
-      val (edges, prParts) = Stages.pinByKey(ckpt, edgesRaw, "src")
+        else edges0.select(col("src"), col("dst"))), "src")
+      val edges = scope.frame
       if (weighted) {
         // non-positive weights make Σw degrees zero/negative — silent
         // null contributions or negative ranks; fail loud instead (one
@@ -105,13 +99,10 @@ object GraphStages {
       // a SQL oracle writes — the 2e-17 offset systematically breaks
       // round-to-ppm on ranks that land exactly on .5 boundaries
       val teleport = (BigDecimal(1) - BigDecimal(dampStr)).toDouble
-      // |V| rides the node-set checkpoint job (r19)
-      val (nodes, nodesN) = Stages.ckptObserve(ckpt,
+      val (nodes, n) = Iterate.counted(ckpt,
         edges.select(col("src").as("id"))
           .union(edges.select(col("dst").as("id")))
-          .distinct(),
-        count(lit(1)).as("__n"))
-      val n = nodesN.getLong(0)
+          .distinct())
       val deg = ckpt(edges.groupBy("src").agg(
         (if (weighted) sum("__w") else count(lit(1)).cast("double"))
           .as("__deg")))
@@ -141,31 +132,23 @@ object GraphStages {
       // column (oracle mirrors the same two-step arithmetic)
       val teleportTerm: org.apache.spark.sql.Column =
         if (seeds.isDefined) lit(teleport) * reset else lit(teleport / n)
-      var ranks = nodes.select(col("id"), reset.as("rank"))
-      // AQE off for the round loop (Stages.withoutAqe): a 5-round merged
-      // checkpoint plan holds ~15 fixed-shape exchanges that AQE would
-      // otherwise materialize as 15 separate jobs
-      Stages.withoutAqe(ctx.spark, prParts) {
-        for (i <- 0 until iters) {
-          val contrib =
-            if (weighted) col("rank") * col("__w") / col("__deg")
-            else col("rank") / col("__deg")
+      val contrib =
+        if (weighted) col("rank") * col("__w") / col("__deg")
+        else col("rank") / col("__deg")
+      scope {
+        val ranks0 = nodes.select(col("id"), reset.as("rank"))
+        Iterate.rounds(ranks0, iters, ckptEvery, ckpt) { ranks =>
           val contribs = edges
             .join(ranks.select(col("id").as("__rid"), col("rank")),
               col("src") === col("__rid"))
             .join(deg, Seq("src"))
             .select(col("dst").as("__cid"), contrib.as("__c"))
             .groupBy("__cid").agg(sum("__c").as("__csum"))
-          ranks = nodes.join(contribs, col("id") === col("__cid"), "left")
+          nodes.join(contribs, col("id") === col("__cid"), "left")
             .select(col("id"),
               (teleportTerm + lit(d) * coalesce(col("__csum"), lit(0.0))).as("rank"))
-          // checkpointEvery <= 0 means "never checkpoint" (and must not
-          // divide by zero)
-          if (ckptEvery > 0 && i % ckptEvery == ckptEvery - 1 && i != iters - 1)
-            ranks = ckpt(ranks)
         }
       }
-      ranks
     }
 
   /** `shortestpaths`: single-source-set WEIGHTED shortest paths —
@@ -182,9 +165,10 @@ object GraphStages {
     * only the vertices whose distance IMPROVED last round against the
     * edge table (never all-edges × all-rounds), min-aggregates
     * candidates, and left-joins the running distances to keep true
-    * improvements; early exit when a round improves nothing. Per-round
-    * eager checkpoints keep lineage flat (the CLAUDE iterative rule);
-    * state is (id, double), never paths. Negative weights are rejected
+    * improvements; early exit when a round improves nothing. The
+    * oriented edge list is checkpointed ONCE, pinned on the probe key,
+    * so only the (tiny) frontier moves per round; state is
+    * (id, double), never paths. Negative weights are rejected
     * (with a hop bound they would make "shortest within k hops"
     * ill-behaved under the early exit). */
   def shortestPaths(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
@@ -209,48 +193,33 @@ object GraphStages {
         case other => sys.error(s"shortestpaths: unknown direction $other")
       }
       val ckpt = Stages.checkpointerOf(spec, ctx)
-      // r19: the oriented edge list is checkpointed ONCE under AQE
-      // (sizing) and then PINNED co-partitioned + sorted on the probe
-      // key (Stages.pinByKey) — every relaxation round previously
-      // re-built it from the edge-stage lineage AND re-exchanged +
-      // re-sorted it (edge-sized shuffle × rounds, guide §2.4); now
-      // rounds join the frontier against the cached co-partitioned copy
-      // and only the (tiny) frontier moves. The loop runs with AQE off
-      // at the pinned data-derived partition count (Stages.withoutAqe).
-      val step0 = ckpt(step)
-      val (stepC, parts) = Stages.pinByKey(ckpt, step0, "__from")
+      val scope = Iterate.pinned(ckpt, ckpt(step), "__from")
+      val stepC = scope.frame
       // negative weights break the bounded-relaxation early exit (one
       // bounded job over the checkpointed edges)
       val minW = stepC.agg(min(col("__w"))).head()
       require(minW.isNullAt(0) || minW.getDouble(0) >= 0.0,
         "shortestpaths: negative edge weights are not supported")
-      Stages.withoutAqe(ctx.spark, parts) {
-        var dists = ckpt(sources.toDF("id").distinct()
+      scope {
+        val dists0 = ckpt(sources.toDF("id").distinct()
           .select(col("id"), lit(0.0).as("dist")))
-        var frontier = dists
-        var hop = 1
-        var frontierSize = frontier.count()
-        while (hop <= maxHops && frontierSize > 0) {
-          val best = stepC
-            .join(frontier.select(col("id").as("__from"), col("dist")), Seq("__from"))
-            .select(col("__to").as("id"), (col("dist") + col("__w")).as("__cand"))
-            .groupBy("id").agg(min(col("__cand")).as("__cand"))
-          // the frontier size rides the checkpoint job (r19) — no
-          // separate count job per relaxation round
-          val (improved, impN) = Stages.ckptObserve(ckpt, best
-            .join(dists.select(col("id"), col("dist").as("__old")), Seq("id"), "left")
-            .where(col("__old").isNull || col("__cand") < col("__old"))
-            .select(col("id"), col("__cand").as("dist")),
-            count(lit(1)).as("__n"))
-          frontierSize = impN.getLong(0)
-          if (frontierSize > 0) {
-            dists = ckpt(dists.join(improved.select(col("id").as("__iid")),
-                col("id") === col("__iid"), "left_anti")
-              .unionByName(improved))
-            frontier = improved
+        var dists = dists0
+        if (dists0.count() > 0)
+          Iterate.fixpoint(dists0, Iterate.Budget.quiet(maxHops), ckpt) { (frontier, _) =>
+            val best = stepC
+              .join(frontier.select(col("id").as("__from"), col("dist")), Seq("__from"))
+              .select(col("__to").as("id"), (col("dist") + col("__w")).as("__cand"))
+              .groupBy("id").agg(min(col("__cand")).as("__cand"))
+            best.join(dists.select(col("id"), col("dist").as("__old")), Seq("id"), "left")
+              .where(col("__old").isNull || col("__cand") < col("__old"))
+              .select(col("id"), col("__cand").as("dist"))
+          } { improved =>
+            if (improved.count > 0)
+              dists = ckpt(dists.join(improved.state.select(col("id").as("__iid")),
+                  col("id") === col("__iid"), "left_anti")
+                .unionByName(improved.state))
+            improved.count == 0
           }
-          hop += 1
-        }
         dists.select(col("id"), col("dist"))
       }
     }
@@ -409,7 +378,7 @@ object GraphStages {
     * Scale shape: delegates to the dedup family's pointer-jumping CC
     * (DedupStages.connectedComponents — alternating 1-hop min-
     * propagation and comp := comp(comp) jumps): O(log diameter) rounds,
-    * each ONE equi-join + aggregation, per-round `localCheckpoint`
+    * each ONE equi-join + aggregation, per-round checkpoints
     * truncating the self-referencing lineage. The same loop the
     * near-dup keeper already runs at crawl scale. */
   def connectedComponentsStage(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
@@ -420,7 +389,8 @@ object GraphStages {
       // re-evaluates the upstream once, ExecProbe) — and REVERTED:
       // the cache fill's own plan misbehaves (geo_cluster 11 -> 80+
       // task-SECONDS warm, JobStatsProbe A/B), the same lazy-cache
-      // pathology CcTuneProbe documented for ccLoop. Wall clock hid it
+      // pathology as ccLoop's (OPTIMIZATION_r19.md § "connectedComponents
+      // — investigated, second change REVERTED"). Wall clock hid it
       // behind idle cores; task time is the metric that counts at
       // scale. The duplicate evaluation is the cheaper shape.
       val edges0 = ctx.edges.getOrElse(
@@ -463,10 +433,8 @@ object GraphStages {
     *
     * Scale shape: each round is one hash-aggregated degree count over
     * the surviving edge set + two anti-joins against the (shrinking)
-    * drop set, checkpointed per round (the documented iterative-stage
-    * pattern — lineage would otherwise nest per round). Exchanges carry
-    * (id, id) pairs only. The loop's driver-side check reads ONE
-    * aggregate row per round (`low.isEmpty` via limit(1)) — no
+    * drop set, checkpointed per round with the surviving-edge count
+    * observed on the same job. Exchanges carry (id, id) pairs only; no
     * data-path collect. */
   def kcore(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
     Stages.common(spec, ctx) { _ =>
@@ -480,89 +448,62 @@ object GraphStages {
           sys.error("kcore: `k` required (>= 1)"))
         else spec.long("k").map(_.toInt).getOrElse(Int.MaxValue)
       require(k >= 1, s"kcore: k must be >= 1, got $k")
-      val maxIter = spec.int("maxIter", 50)
       val checkpoint = Stages.checkpointerOf(spec, ctx)
       val edges1 = spec.str("label").fold(edges0)(l => edges0.where(col("label") === l))
       // symmetrize + dedup, drop self-loops; everything downstream is
       // (a, b) string pairs
       val sym0 = edges1.select(col("src").cast("string").as("a"),
                                col("dst").cast("string").as("b"))
-      val (live0, liveN0) = Stages.ckptObserve(checkpoint,
+      var (live, liveN) = Iterate.counted(checkpoint,
         sym0.union(sym0.select(col("b").as("a"), col("a").as("b")))
-          .where(col("a") =!= col("b")).distinct(),
-        count(lit(1)).as("__n"))
-      var live = live0
-      var liveN = liveN0.getLong(0)
-      // r19: loop shuffle-partition count derived from the materialized
-      // edge set (AQE sized the checkpoint above) — the peel rounds run
-      // with AQE off at that count (no co-partition pin: the two
-      // anti-joins alternate keys a/b, no single partitioning serves
-      // both)
-      val peelParts = math.max(live.rdd.getNumPartitions, 1)
-      var rounds = 0
-      def bound(): Unit = {
-        rounds += 1
-        require(rounds <= maxIter,
-          s"kcore: no fixed point after $maxIter total rounds — raise " +
-          "maxIter (a long path peels one layer per round; coreness " +
-          "mode sums rounds across every k level)")
-      }
-      /** Peel at threshold `kk` to the fixed point; returns the
-        * (possibly empty) surviving edge frame. */
-      def peel(kk: Int): Unit = {
-        // fixed point = the anti-join removed nothing: the surviving-
-        // edge count rides each round's checkpoint (Stages.ckptObserve),
-        // so a round is ONE job — the old shape paid a separate
-        // degree-probe job before every checkpoint (r19). The final
-        // no-drop round costs a no-op row-block copy instead of a probe.
-        var done = liveN == 0L
-        while (!done) {
-          bound()
-          val deg = live.groupBy(col("a")).agg(count(lit(1)).as("__d"))
-          val low = deg.where(col("__d") < kk).select(col("a").as("__drop"))
-          val (live2, n2) = Stages.ckptObserve(checkpoint,
-            live.join(low, col("a") === col("__drop"), "left_anti")
-                .join(low, col("b") === col("__drop"), "left_anti"),
-            count(lit(1)).as("__n"))
-          live = live2
-          val n = n2.getLong(0)
-          done = n == liveN || n == 0L
-          liveN = n
+          .where(col("a") =!= col("b")).distinct())
+      // one budget across every peel: coreness sums rounds over k levels
+      val budget = Iterate.Budget.loud("kcore", spec.int("maxIter", 50),
+        "raise maxIter (a long path peels one layer per round; coreness " +
+        "mode sums rounds across every k level)")
+      /** Peel at threshold `kk` to the fixed point: the anti-join removed
+        * nothing (or everything). A round is ONE job — the surviving-edge
+        * count rides its checkpoint; the final no-drop round costs a
+        * no-op row-block copy instead of a separate degree probe. */
+      def peel(kk: Int): Unit =
+        if (liveN != 0L) live = Iterate.fixpoint(live, budget, checkpoint) { (cur, _) =>
+          val low = cur.groupBy(col("a")).agg(count(lit(1)).as("__d"))
+            .where(col("__d") < kk).select(col("a").as("__drop"))
+          cur.join(low, col("a") === col("__drop"), "left_anti")
+            .join(low, col("b") === col("__drop"), "left_anti")
+        } { r =>
+          val done = r.count == liveN || r.count == 0L
+          liveN = r.count
+          done
         }
-      }
-      // r19: both peel loops run with AQE off (Stages.withoutAqe) — the
-      // per-round degree probe + anti-join checkpoint are fixed-shape
-      // plans; AQE was materializing each exchange as its own job (90
-      // jobs for ~5 task-seconds on graph_coreness, JobStatsProbe).
-      if (mode == "core") Stages.withoutAqe(ctx.spark, peelParts) {
+      // no co-partition pin: the two anti-joins alternate keys a/b
+      val scope = Iterate.sized(live)
+      if (mode == "core") scope {
         peel(k)
         live.groupBy(col("a").as("id")).agg(count(lit(1)).as("degree"))
-      } else Stages.withoutAqe(ctx.spark, peelParts) {
+      } else scope {
         // full decomposition (Batagelj–Zaveršnik level order, set form):
-        // peel at kk = 1, 2, … — a vertex removed while processing
-        // level kk has coreness kk − 1; survivors of the final level
-        // (capped by `k` when given) keep that level's value
-        var level = 1
+        // peel at level = 1, 2, … — a vertex removed while processing
+        // level L has coreness L − 1; survivors of the final level
+        // (capped by `k` when given) keep that level's value. The
+        // survivor set is the level loop's state: `removed` anti-joins
+        // against its materialized blocks, and the drained check rides
+        // its checkpoint.
         var parts = List.empty[DataFrame]
         var remaining = live.select(col("a").as("id")).distinct()
-        var drained = remaining.limit(1).isEmpty
-        while (!drained && level <= k) {
-          peel(level)
-          // the drained check rides the survivor-set checkpoint, and
-          // `removed` anti-joins against the materialized blocks rather
-          // than re-deriving the distinct from live (r19)
-          val (after, afterN) = Stages.ckptObserve(checkpoint,
-            live.select(col("a").as("id")).distinct(),
-            count(lit(1)).as("__n"))
-          val removed = remaining.join(after, Seq("id"), "left_anti")
-            .withColumn("coreness", lit(level - 1).cast("long"))
-          parts ::= removed
-          remaining = after
-          drained = afterN.getLong(0) == 0L
-          if (!drained && level == k) // k-cap: survivors hold level k
-            parts ::= remaining.withColumn("coreness", lit(level).cast("long"))
-          level += 1
-        }
+        if (!remaining.limit(1).isEmpty)
+          Iterate.fixpoint(remaining, Iterate.Budget.quiet(k), checkpoint) { (_, level) =>
+            peel(level)
+            live.select(col("a").as("id")).distinct()
+          } { after =>
+            parts ::= remaining.join(after.state, Seq("id"), "left_anti")
+              .withColumn("coreness", lit(after.index - 1).cast("long"))
+            remaining = after.state
+            val drained = after.count == 0L
+            if (!drained && after.index == k) // k-cap: survivors hold level k
+              parts ::= remaining.withColumn("coreness", lit(k).cast("long"))
+            drained
+          }
         if (parts.isEmpty)
           remaining.withColumn("coreness", lit(0L)) // edgeless input
         else parts.reduce(_ unionByName _)
@@ -650,13 +591,12 @@ object GraphStages {
     * vertices absent). A query stage (replaces the stream).
     *
     * Scale shape: classic frontier BFS — each round joins the CURRENT
-    * frontier (shrinking set) against the edge table on the shuffle
-    * key, anti-joins the visited set, and checkpoints both (frontier
-    * lineage would otherwise nest per round). Rounds are bounded by
-    * `maxHops`; state is (visited ids × 1 long), never paths. A
+    * frontier (shrinking set) against the edge table (checkpointed once,
+    * pinned on the hop key) and anti-joins the visited set, a lazy union
+    * of the checkpointed frontiers (depth ≤ maxHops). Rounds are bounded
+    * by `maxHops`; state is (visited ids × 1 long), never paths. A
     * celebrity vertex fans the frontier wide in one round — that is the
-    * true result size, and AQE re-plans the join for it; no driver-side
-    * queue exists to overflow. */
+    * true result size; no driver-side queue exists to overflow. */
   def bfs(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
     Stages.common(spec, ctx) { _ =>
       val edges0 = ctx.edges.getOrElse(
@@ -676,35 +616,21 @@ object GraphStages {
         case other => sys.error(s"bfs: unknown direction $other")
       }
       val ckpt = Stages.checkpointerOf(spec, ctx)
-      // r19: edge list checkpointed ONCE pre-partitioned on the hop key
-      // (each hop previously re-built and re-exchanged it from the
-      // edge-stage lineage, guide §2.4); `visited` stays a LAZY union of
-      // the per-hop checkpointed frontiers (depth ≤ maxHops — one fewer
-      // materialization job per hop); loop under AQE off
-      // (Stages.withoutAqe).
-      val step0 = ckpt(step)
-      val (stepC, parts) = Stages.pinByKey(ckpt, step0, "__from")
-      Stages.withoutAqe(ctx.spark, parts) {
-        var frontier = ckpt(sources.toDF("id").distinct())
-        var visited = frontier.select(col("id"), lit(0L).as("dist"))
-        var hop = 1
-        var frontierSize = frontier.count()
-        while (hop <= maxHops && frontierSize > 0) {
-          // the frontier size rides the checkpoint job (r19) — no
-          // separate count job per hop
-          val (next, nextN) = Stages.ckptObserve(ckpt, stepC
-            .join(frontier.select(col("id").as("__from")), Seq("__from"))
-            .select(col("__to").as("id")).distinct()
-            .join(visited, Seq("id"), "left_anti"),
-            count(lit(1)).as("__n"))
-          frontierSize = nextN.getLong(0)
-          if (frontierSize > 0) {
-            visited = visited
-              .union(next.select(col("id"), lit(hop.toLong).as("dist")))
-            frontier = next
+      val scope = Iterate.pinned(ckpt, ckpt(step), "__from")
+      scope {
+        val frontier0 = ckpt(sources.toDF("id").distinct())
+        var visited = frontier0.select(col("id"), lit(0L).as("dist"))
+        if (frontier0.count() > 0)
+          Iterate.fixpoint(frontier0, Iterate.Budget.quiet(maxHops), ckpt) { (frontier, _) =>
+            scope.frame
+              .join(frontier.select(col("id").as("__from")), Seq("__from"))
+              .select(col("__to").as("id")).distinct()
+              .join(visited, Seq("id"), "left_anti")
+          } { next =>
+            if (next.count > 0) visited = visited
+              .union(next.state.select(col("id"), lit(next.index.toLong).as("dist")))
+            next.count == 0
           }
-          hop += 1
-        }
         visited.select(col("id"), col("dist"))
       }
     }
@@ -787,8 +713,7 @@ object GraphStages {
     * Registered edge-less vertices surface as layer-0 isolates.
     *
     * Options: `label` (optional edge-label filter), `maxIter` (default
-    * 50 — must exceed the DAG depth), `checkpointEvery`/`checkpointDir`
-    * like pagerank.
+    * 50 — must exceed the DAG depth), `checkpointDir` like pagerank.
     *
     * Scale shape: each round is ONE equi-join of the (deduplicated)
     * edge list against the (id, layer) vector + ONE hash aggregation
@@ -803,18 +728,9 @@ object GraphStages {
       val maxIter = spec.int("maxIter", 50)
       require(maxIter >= 1, s"toposort: maxIter must be >= 1, got $maxIter")
       val ckpt = Stages.checkpointerOf(spec, ctx)
-      // r19: edge list checkpointed once under AQE (sizing), then PINNED
-      // co-partitioned + sorted on the join key (Stages.pinByKey) —
-      // rounds join the layer vector against the co-partitioned cache
-      // instead of re-exchanging + re-sorting the edge list every round
-      // (guide §2.4). The loop runs with AQE off at the pinned partition
-      // count (Stages.withoutAqe): one ckpt job per round instead of one
-      // per exchange, and the per-round node-sized exchanges use a
-      // data-derived count instead of 32 fixed-overhead micro-tasks.
-      // Convergence rides the round checkpoint via Stages.ckptObserve.
-      val e0 = ckpt(edges.select(col("src").as("__s"), col("dst").as("__d"))
-        .distinct())
-      val (e, parts) = Stages.pinByKey(ckpt, e0, "__s")
+      val scope = Iterate.pinned(ckpt, ckpt(edges
+        .select(col("src").as("__s"), col("dst").as("__d")).distinct()), "__s")
+      val e = scope.frame
       val endpointIds = e.select(col("__s").as("id"))
         .union(e.select(col("__d").as("id")))
       val nodes = ckpt(ctx.vertices match {
@@ -822,33 +738,21 @@ object GraphStages {
         case Some(vs) => vs.select(col("id").cast("string").as("id"))
           .union(endpointIds).distinct()
       })
-      Stages.withoutAqe(ctx.spark, parts) {
-        var layer = ckpt(nodes.select(col("id"), lit(0L).as("layer")))
-        var round = 0
-        var changed = true
-        while (changed) {
-          round += 1
-          require(round <= maxIter,
-            s"toposort: layers still growing after maxIter=$maxIter rounds — " +
-            "the graph has a cycle, or its depth exceeds maxIter (raise it " +
-            "for genuinely deep DAGs)")
+      scope {
+        Iterate.fixpoint(ckpt(nodes.select(col("id"), lit(0L).as("layer"))),
+            Iterate.Budget.loud("toposort", maxIter, "the graph has a cycle, " +
+              "or its depth exceeds maxIter (raise it for genuinely deep DAGs)"),
+            ckpt, col("__chg")) { (layer, _) =>
           val cand = e
             .join(layer.select(col("id").as("__s"), col("layer").as("__pl")),
               Seq("__s"))
             .groupBy(col("__d").as("id"))
             .agg(max(col("__pl") + 1L).as("__nl"))
-          // convergence rides the checkpoint job (Stages.ckptObserve) —
-          // no separate probe job per round (r19)
-          val (next, chg) = Stages.ckptObserve(ckpt,
-            layer.join(cand, Seq("id"), "left")
-              .select(col("id"),
-                greatest(col("layer"), coalesce(col("__nl"), lit(0L))).as("layer"),
-                (coalesce(col("__nl"), lit(0L)) > col("layer")).as("__chg")),
-            count(when(col("__chg"), 1)).as("__n"))
-          changed = chg.getLong(0) > 0L
-          layer = next.drop("__chg")
-        }
-        layer
+          layer.join(cand, Seq("id"), "left")
+            .select(col("id"),
+              greatest(col("layer"), coalesce(col("__nl"), lit(0L))).as("layer"),
+              (coalesce(col("__nl"), lit(0L)) > col("layer")).as("__chg"))
+        }(_.count == 0L).drop("__chg")
       }
     }
 
@@ -878,17 +782,13 @@ object GraphStages {
       val iters = spec.int("iterations", 5)
       val ckptEvery = spec.int("checkpointEvery", 5)
       val ckpt = Stages.checkpointerOf(spec, ctx)
-      // undirected neighbor SET: parallel edges vote once. r19: the set
-      // is checkpointed pre-partitioned on the vote join key, so rounds
-      // exchange only the (node-sized) label vector, never the edge
-      // list (guide §2.4); the round loop runs with AQE off
-      // (Stages.withoutAqe — the merged multi-round checkpoint plan
-      // would otherwise materialize each of its ~3·checkpointEvery
-      // exchanges as a separate job).
-      val u0 = ckpt(edges.select(col("src").as("__a"), col("dst").as("__b"))
-        .union(edges.select(col("dst").as("__a"), col("src").as("__b")))
-        .distinct())
-      val (u, parts) = Stages.pinByKey(ckpt, u0, "__b")
+      // undirected neighbor SET (parallel edges vote once), pinned on the
+      // vote join key
+      val scope = Iterate.pinned(ckpt, ckpt(
+        edges.select(col("src").as("__a"), col("dst").as("__b"))
+          .union(edges.select(col("dst").as("__a"), col("src").as("__b")))
+          .distinct()), "__b")
+      val u = scope.frame
       val endpointIds = u.select(col("__a").as("id"))
       val nodes = ckpt(ctx.vertices match {
         case None => endpointIds.distinct()
@@ -896,9 +796,9 @@ object GraphStages {
           vs.select(col("id").cast("string").as("id"))
             .union(endpointIds).distinct()
       })
-      var labels = nodes.select(col("id"), col("id").as("community"))
-      Stages.withoutAqe(ctx.spark, parts) {
-        for (i <- 0 until iters) {
+      scope {
+        Iterate.rounds(nodes.select(col("id"), col("id").as("community")),
+            iters, ckptEvery, ckpt) { labels =>
           val votes = u
             .join(labels.select(col("id").as("__b"), col("community")), Seq("__b"))
             .groupBy(col("__a"), col("community")).agg(count(lit(1)).as("__c"))
@@ -906,13 +806,10 @@ object GraphStages {
           val winners = votes.groupBy("__a")
             .agg(min(struct((-col("__c")).as("nc"), col("community").as("l"))).as("__w"))
             .select(col("__a").as("id"), col("__w.l").as("__next"))
-          labels = nodes.join(winners, Seq("id"), "left")
+          nodes.join(winners, Seq("id"), "left")
             .select(col("id"), coalesce(col("__next"), col("id")).as("community"))
-          if (ckptEvery > 0 && i % ckptEvery == ckptEvery - 1 && i != iters - 1)
-            labels = ckpt(labels)
         }
       }
-      labels
     }
 
   /** `graphneighbors`: one-hop neighbor expansion — for each vertex id
@@ -987,49 +884,32 @@ object GraphStages {
     Stages.common(spec, ctx) { _ =>
       val edges0 = ctx.edges.getOrElse(
         sys.error("scc: no edges — apply an `edge` stage first"))
-      val maxIter = spec.int("maxIter", 50)
       val checkpoint = Stages.checkpointerOf(spec, ctx)
       val edges1 = spec.str("label").fold(edges0)(l => edges0.where(col("label") === l))
-      // r19: the live edge set is kept as TWO co-partitioned, pre-sorted
-      // checkpointed copies (by d for the forward step, by s for the
-      // backward step) — each propagation round previously re-exchanged
-      // AND re-sorted the full edge list twice; now only the node-sized
-      // label frame moves per round (guide §2.4). The convergence probe
-      // no longer joins next-vs-old: the old labels ride the union into
-      // the min-aggregate as `__of`/`__ob` carrier columns (one row per
-      // id exists in `lbl`, so min() recovers exactly the old value)
-      // and the probe is a narrow limit(1) filter over the checkpointed
-      // round result. Loops run with AQE off (Stages.withoutAqe).
       val liveC = checkpoint(edges1
         .select(col("src").cast("string").as("s"), col("dst").cast("string").as("d"))
         .where(col("s") =!= col("d")).distinct())
-      // loop partition count derived from the materialized edge set
-      // (AQE sized the checkpoint above); every in-loop repartition and
-      // exchange below uses it, so the by-key copies stay co-partitioned
-      // with the per-round label exchanges
-      val sccParts = math.max(liveC.rdd.getNumPartitions, 1)
+      // one budget across every closure pass of the outer loop
+      val budget = Iterate.Budget.loud("scc", spec.int("maxIter", 50),
+        "raise maxIter (rounds grow with graph diameter and with the " +
+        "depth of the condensation DAG; a long directed chain pays one " +
+        "round per hop)")
+      // the live edge set is kept as TWO checkpointed copies, partitioned
+      // and sorted by d (forward step) and by s (backward step), so only
+      // the node-sized label frame moves per round
       var liveByD: DataFrame = liveC
       var liveByS: DataFrame = liveC
-      var remaining: DataFrame = liveC
-      var rounds = 0
-      def bound(): Unit = {
-        rounds += 1
-        require(rounds <= maxIter,
-          s"scc: no fixed point after $maxIter total propagation rounds — " +
-          "raise maxIter (rounds grow with graph diameter and with the " +
-          "depth of the condensation DAG; a long directed chain pays one " +
-          "round per hop)")
-      }
-      /** BOTH closure minima in one fixed-point loop — F (min over the
-        * forward closure) and B (backward) ride the same label frame,
-        * so rounds run to max(diam_F, diam_B) instead of their SUM, one
-        * aggregate and one convergence check per round instead of two
-        * (halved the graph_scc wall time on the planted fixture). */
-      def closureMins(): DataFrame = {
-        var lbl = remaining.select(col("id"), col("id").as("f"), col("id").as("b"))
-        var done = false
-        while (!done) {
-          bound()
+      /** BOTH closure minima of `remaining` in one fixed-point loop — F
+        * (min over the forward closure) and B (backward) ride the same
+        * label frame, so rounds run to max(diam_F, diam_B) instead of
+        * their SUM. The old labels ride the union into the min-aggregate
+        * as `__of`/`__ob` carrier columns (one row per id exists in the
+        * label frame, so min() recovers exactly the old value), so the
+        * change count needs no next-vs-old join. */
+      def closureMins(remaining: DataFrame): DataFrame =
+        Iterate.fixpoint(remaining.select(col("id"), col("id").as("f"), col("id").as("b")),
+            budget, checkpoint, col("f") < col("__of") || col("b") < col("__ob")) { (lbl0, _) =>
+          val lbl = lbl0.select(col("id"), col("f"), col("b"))
           val l2 = lbl.select(col("id").as("__n"), col("f"), col("b"))
           val nulls = lit(null).cast("string")
           // edge s→d: F(s) ← F(d) (forward closure), B(d) ← B(s)
@@ -1039,53 +919,43 @@ object GraphStages {
           val candB = liveByS.join(l2, col("s") === col("__n"))
             .select(col("d").as("id"), nulls.as("f"), col("b"),
               nulls.as("__of"), nulls.as("__ob"))
-          val lblRows = lbl.select(col("id"), col("f"), col("b"),
-            col("f").as("__of"), col("b").as("__ob"))
-          // convergence rides the checkpoint job (Stages.ckptObserve) —
-          // no separate probe job per round (r19)
-          val (next, chg) = Stages.ckptObserve(checkpoint,
-            lblRows.unionByName(candF).unionByName(candB)
-              .groupBy("id").agg(min("f").as("f"), min("b").as("b"),
-                min("__of").as("__of"), min("__ob").as("__ob")),
-            count(when(col("f") < col("__of") || col("b") < col("__ob"), 1))
-              .as("__chg"))
-          if (chg.getLong(0) == 0L) done = true
-          lbl = next.select(col("id"), col("f"), col("b"))
-        }
-        lbl
-      }
+          lbl.select(col("id"), col("f"), col("b"), col("f").as("__of"), col("b").as("__ob"))
+            .unionByName(candF).unionByName(candB)
+            .groupBy("id").agg(min("f").as("f"), min("b").as("b"),
+              min("__of").as("__of"), min("__ob").as("__ob"))
+        }(_.count == 0L).select(col("id"), col("f"), col("b"))
       var parts = List.empty[DataFrame]
-      Stages.withoutAqe(ctx.spark, sccParts) {
+      // no pin of liveC itself: the two copies above are keyed differently
+      val rem0 = Iterate.sized(liveC) {
         liveByD = checkpoint(liveC.repartition(col("d")).sortWithinPartitions("d"))
         liveByS = checkpoint(liveByD.repartition(col("s")).sortWithinPartitions("s"))
-        val (rem0, rem0N) = Stages.ckptObserve(checkpoint,
+        val (rem, remN) = Iterate.counted(checkpoint,
           liveByD.select(col("s").as("id"))
-            .union(liveByD.select(col("d").as("id"))).distinct(),
-          count(lit(1)).as("__n"))
-        remaining = rem0
-        var drained = rem0N.getLong(0) == 0L
-        while (!drained) {
-          val emitted = checkpoint(
-            closureMins().where(col("f") === col("b"))
-              .select(col("id"), col("f").as("scc_id")))
-          parts ::= emitted
-          // the drained check rides the remaining-set checkpoint (r19)
-          val (rem2, remN) = Stages.ckptObserve(checkpoint,
-            remaining.join(emitted, Seq("id"), "left_anti"),
-            count(lit(1)).as("__n"))
-          remaining = rem2
-          drained = remN.getLong(0) == 0L
-          liveByD = checkpoint(liveByD
-            .join(emitted.select(col("id").as("s")), Seq("s"), "left_anti")
-            .join(emitted.select(col("id").as("d")), Seq("d"), "left_anti")
-            .repartition(col("d")).sortWithinPartitions("d"))
-          liveByS = checkpoint(liveByS
-            .join(emitted.select(col("id").as("s")), Seq("s"), "left_anti")
-            .join(emitted.select(col("id").as("d")), Seq("d"), "left_anti")
-            .repartition(col("s")).sortWithinPartitions("s"))
-        }
+            .union(liveByD.select(col("d").as("id"))).distinct())
+        // each pass emits at least the remaining minimum's SCC and spends
+        // at least one round of `budget`, so the pass loop needs no cap
+        if (remN != 0L)
+          Iterate.fixpoint(rem, Iterate.Budget.quiet(Int.MaxValue),
+              checkpoint) { (remaining, _) =>
+            val emitted = checkpoint(closureMins(remaining)
+              .where(col("f") === col("b")).select(col("id"), col("f").as("scc_id")))
+            parts ::= emitted
+            remaining.join(emitted, Seq("id"), "left_anti")
+          } { pass =>
+            val emitted = parts.head
+            liveByD = checkpoint(liveByD
+              .join(emitted.select(col("id").as("s")), Seq("s"), "left_anti")
+              .join(emitted.select(col("id").as("d")), Seq("d"), "left_anti")
+              .repartition(col("d")).sortWithinPartitions("d"))
+            liveByS = checkpoint(liveByS
+              .join(emitted.select(col("id").as("s")), Seq("s"), "left_anti")
+              .join(emitted.select(col("id").as("d")), Seq("d"), "left_anti")
+              .repartition(col("s")).sortWithinPartitions("s"))
+            pass.count == 0L
+          }
+        rem
       }
-      if (parts.isEmpty) remaining.withColumn("scc_id", col("id"))
+      if (parts.isEmpty) rem0.withColumn("scc_id", col("id"))
       else parts.reduce(_ unionByName _)
     }
 

@@ -1,6 +1,7 @@
 package graft.graph
 
 import graft.engine.EtlContext
+import graft.stages.Iterate
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -890,10 +891,6 @@ object Gremlin {
           if (condSrc.isEmpty && !emitAll && timesK.isEmpty)
             fail("repeat(chain) needs a terminator: times(k), until(cond) " +
               "or emit() — an unmodulated repeat never stops")
-          // hard stop: the k <= 12 unroll bound doubles as an implicit
-          // or(loops() == 12) — traversers still active at the cap exit
-          // (times(k) semantics), never loop further
-          val cap = timesK.getOrElse(12)
           val cond = condSrc.map(filterCond("until", _))
           def not(c: Column): Column = !coalesce(c, lit(false))
           var active = frame
@@ -904,29 +901,37 @@ object Gremlin {
             if (!emitStart) emitted += active.where(c)
             active = active.where(not(c))
           }
-          // Running at the IMPLICIT 12 cap (no times(k)): loop eagerly —
-          // per-round localCheckpoint of the stepped frontier (flat
-          // lineage, the iterative-stage pattern shortestPaths uses) and
-          // a drain check, so an until() that converges in 3 hops plans
-          // 3 joins, not 12 fixed stages. Dropped rounds were empty
-          // frames — the unioned result is unchanged. With an explicit
-          // times(k) the user bounded the plan; keep it lazy.
-          val eager = timesK.isEmpty
-          var round = 0
-          var live = true
-          while (round < cap && live) {
-            val stepped0 = applyBranch(ctx, active, idLabel, chain.src)
-            val stepped = if (eager) stepped0.localCheckpoint(true) else stepped0
-            cond match {
-              case Some(c) =>
-                emitted += (if (emitAll) stepped else stepped.where(c))
-                active = stepped.where(not(c))
-              case None =>
-                if (emitAll) emitted += stepped
-                active = stepped
-            }
-            if (eager) live = !active.isEmpty
-            round += 1
+          // one round: step the frontier, emit what the modulators ask
+          // for, and return the traversers that keep looping
+          def absorb(stepped: DataFrame): DataFrame = cond match {
+            case Some(c) =>
+              emitted += (if (emitAll) stepped else stepped.where(c))
+              stepped.where(not(c))
+            case None =>
+              if (emitAll) emitted += stepped
+              stepped
+          }
+          timesK match {
+            // No times(k): the k <= 12 unroll bound doubles as an implicit
+            // or(loops() == 12) — traversers still active at the cap exit
+            // (times(k) semantics). The loop runs eagerly: each stepped
+            // frontier is a checkpointed round whose count of still-
+            // looping traversers rides the checkpoint job, so an until()
+            // that converges in 3 hops plans 3 joins, not 12 fixed
+            // stages. Dropped rounds were empty frames — the unioned
+            // result is unchanged.
+            case None =>
+              Iterate.fixpoint(active, Iterate.Budget.quiet(12),
+                  counting = cond.fold(lit(true))(not)) { (_, _) =>
+                applyBranch(ctx, active, idLabel, chain.src)
+              } { round =>
+                active = absorb(round.state)
+                round.count == 0L
+              }
+            // an explicit times(k): the user bounded the plan; keep it lazy
+            case Some(k) =>
+              active = Iterate.rounds(active, k)(a =>
+                absorb(applyBranch(ctx, a, idLabel, chain.src)))
           }
           // until without emit: cap survivors exit like times(k); with
           // emit they were already in the last frontier

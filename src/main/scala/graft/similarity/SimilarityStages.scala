@@ -1016,7 +1016,7 @@ object SimilarityStages {
         case "dedup" =>
           val comps = graft.dedup.DedupStages
             .connectedComponents(pairs.select("a", "b"), spec.int("maxIter", 12),
-              graft.stages.Stages.checkpointerOf(spec, ctx))
+              graft.stages.Stages.checkpointerOf(spec, ctx), stage = "semanticdedup")
           val losers = comps.where(col("id") =!= col("comp"))
             .select(col("id").as("__drop"))
           df.join(losers, col(id) === col("__drop"), "left_anti")

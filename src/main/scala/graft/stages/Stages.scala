@@ -44,11 +44,11 @@ object Stages {
   def ifCond(spec: ComponentSpec, ctx: EtlContext): Option[Column] =
     spec.ifExpr.map(OrientExpr.compile(_, ctx.varMap))
 
-  /** Lineage truncation for iterative DataFrame algorithms (pagerank,
-    * BFS, connected components): by default eager `localCheckpoint` —
-    * block-manager storage, fastest, but the blocks die with their
-    * executor (fine locally; a lost block fails the job and a retry
-    * restarts the loop). With the stage option `checkpointDir` set, a
+  /** Lineage truncation for the iterative stages ([[Iterate]]): by
+    * default eager `localCheckpoint` — block-manager storage, fastest,
+    * but the blocks die with their executor (fine locally; a lost block
+    * fails the job and a retry restarts the loop). With the stage
+    * option `checkpointDir` set, a
     * RELIABLE eager `checkpoint` into that directory (HDFS/object store
     * at cluster scale): hundred-round jobs on preemptible fleets
     * survive executor loss, at the cost of one distributed write per
@@ -60,86 +60,8 @@ object Stages {
       case Some(dir) =>
         ctx.spark.sparkContext.setCheckpointDir(dir)
         df => df.checkpoint(eager = true)
-      case None => df => df.localCheckpoint(eager = true)
+      case None => Iterate.localCheckpoint
     }
-
-  /** r19 optimization round: run an iterative loop body with AQE OFF
-    * (restored afterwards, exception-safe). AQE turns every `Exchange`
-    * of every per-round checkpoint into its own materialization job —
-    * measured 90–139 jobs for 2–5 task-SECONDS on the iterative graph
-    * stages (JobStatsProbe, guide §1/§7.1): the wall clock was driver
-    * round-trips, not compute. Inside a round the plan shape is fixed
-    * and known (small keyed exchanges at the session's configured
-    * `spark.sql.shuffle.partitions`), so adaptive re-planning buys
-    * nothing, and each extra job is a scheduling barrier whose cost is
-    * independent of cluster size — the overhead SURVIVES at 100 TB
-    * (rounds × barriers), it does not amortize away. One-shot plans
-    * around the loop (edge-list builds, pair generators) keep AQE:
-    * coalescing and skew splitting matter there. The partition count
-    * inside the loop stays the deployment-configured
-    * `spark.sql.shuffle.partitions` (env-derived here, cluster-sized in
-    * production) — scale-adaptive by configuration, not a local
-    * constant. */
-  def withoutAqe[T](spark: org.apache.spark.sql.SparkSession,
-                    shufflePartitions: Int = -1)(body: => T): T = {
-    val aqeKey = "spark.sql.adaptive.enabled"
-    val spKey = "spark.sql.shuffle.partitions"
-    val prevAqe = spark.conf.get(aqeKey, "true")
-    val prevSp = spark.conf.get(spKey, "200")
-    spark.conf.set(aqeKey, "false")
-    if (shufflePartitions > 0) spark.conf.set(spKey, shufflePartitions.toString)
-    try body finally {
-      spark.conf.set(aqeKey, prevAqe)
-      spark.conf.set(spKey, prevSp)
-    }
-  }
-
-  /** r19 optimization round: eager-checkpoint `df` AND compute whole-
-    * frame aggregate metrics ON the materialization job itself via
-    * `Dataset.observe` — the iterative loops' convergence probes
-    * (previously one `limit(1)` job per round) ride the round's
-    * checkpoint for free, removing one driver barrier per round
-    * (guide §1.2 step 1: a barrier's latency is independent of cluster
-    * size, so rounds × barriers survives at 100 TB). Verified for both
-    * localCheckpoint and reliable checkpoint, with AQE on and off
-    * (tools/ObserveProbe). Falls back to aggregating over the
-    * checkpointed row blocks (cheap, but one extra job) if the observed
-    * metrics don't surface — correctness never depends on the listener.
-    * Metrics must be aggregate expressions over `df`'s columns; the
-    * returned Row is positional in the given order. */
-  def ckptObserve(ckpt: DataFrame => DataFrame, df: DataFrame,
-                  metric: org.apache.spark.sql.Column,
-                  more: org.apache.spark.sql.Column*):
-      (DataFrame, org.apache.spark.sql.Row) = {
-    val obs = org.apache.spark.sql.Observation()
-    val out = ckpt(df.observe(obs, metric, more: _*))
-    val row =
-      try scala.concurrent.Await.result(obs.future,
-        scala.concurrent.duration.Duration(60, "s"))
-      catch {
-        case _: java.util.concurrent.TimeoutException =>
-          out.agg(metric, more: _*).head()
-      }
-    (out, row)
-  }
-
-  /** Companion to [[withoutAqe]]: checkpoint `df` a second time,
-    * hash-partitioned AND sorted on `key`, with the partition count
-    * PINNED to what the first (AQE-sized) checkpoint materialized —
-    * pass `df` already checkpointed. The explicit count survives into
-    * the LogicalRDD's outputPartitioning (an AQE-coalesced exchange
-    * reports no reusable partitioning), so every loop round's join on
-    * `key` reads the frame co-partitioned and pre-sorted instead of
-    * re-exchanging + re-sorting it (guide §2.4). Returns the pinned
-    * frame and the count — feed the count to [[withoutAqe]] so the
-    * node-sized per-round exchanges match it. The count is derived from
-    * the frame's own materialized size: 1–2 partitions on a laptop
-    * fixture, hundreds on a cluster — scale-adaptive, never a constant. */
-  def pinByKey(ckpt: DataFrame => DataFrame, ckpted: DataFrame,
-               key: String): (DataFrame, Int) = {
-    val parts = math.max(ckpted.rdd.getNumPartitions, 1)
-    (ckpt(ckpted.repartition(parts, col(key)).sortWithinPartitions(key)), parts)
-  }
 
   /** LSH band-bucket skew guard (see [[BucketGuard]]): reads the stage's
     * `maxBucket` option (default [[BucketGuard.DefaultMaxBucket]];
