@@ -36,13 +36,13 @@ object Bench {
     *  - new query (no anchor yet) → adopts its defended measurement. */
   private def anchorsFile = new java.io.File(
     sys.env.getOrElse("SPARK_GRAFT_ANCHORS", "BENCH_ANCHORS.json"))
-  private def sfKey(sfDir: String): String = new java.io.File(sfDir).getName
+  private[graft] def sfKey(sfDir: String): String = new java.io.File(sfDir).getName
 
   /** A corrupt sidecar (e.g. a run killed mid-write before atomic
     * rename existed, or a hand-edit typo) must degrade to "no anchors"
     * — every unlisted query then defends at [[DefaultAnchor]] — never
     * brick the bench. */
-  private def loadAnchors(key: String): Map[String, Double] = {
+  private[graft] def loadAnchors(key: String): Map[String, Double] = {
     if (!anchorsFile.exists()) return Map.empty
     try {
       val root = new com.fasterxml.jackson.databind.ObjectMapper().readTree(anchorsFile)
@@ -120,35 +120,15 @@ object Bench {
     * window from masking real regressions; reported times stay RAW
     * measurements — only the trigger/warn thresholds normalize. */
   private val AmbientCap = 2.5
-  private val CanaryKey = "_canary"
-  private def canarySeconds(spark: SparkSession): Double = {
-    def once(): Double = {
-      val t0 = System.nanoTime()
-      // deterministic compute + one modest shuffle: the two resources
-      // steal actually contends on; no IO so fixture layout can't drift it
-      spark.range(1L << 24).selectExpr("id % 9973 AS k", "id AS v")
-        .groupBy("k").sum("v").selectExpr("sum(`sum(v)`)").collect()
-      (System.nanoTime() - t0) / 1e9
-    }
-    once(); Seq(once(), once(), once()).min // 1 warm + min of 3
-  }
+  private[graft] val CanaryKey = "_canary"
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = graft.engine.Engine.session("graft-bench",
       Some(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]"))
     spark.sparkContext.setLogLevel("WARN")
-    // absorb JVM/JIT/codegen/session warm-up OUTSIDE the timed loop so
-    // per-query numbers measure plan cost, not which query ran first
-    locally {
-      import org.apache.spark.sql.functions.broadcast
-      val w = spark.read.parquet(s"$sfDir/nation.parquet")
-      w.join(broadcast(w.limit(5)), Seq("n_nationkey")).count()
-      spark.range(1000000).selectExpr("sum(id)").collect()
-      // derived text/CSV/JSON/media fixtures are per-dir one-time setup,
-      // not query cost — generate them outside the timed loop
-      SparkEntry.warm(spark, sfDir)
-    }
+    val meter = new QueryMeter(spark)
+    meter.warm(sfDir)
     // dev loop: SPARK_GRAFT_ONLY=q1,q2 restricts the run (full suite otherwise)
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).toSet).getOrElse(Set.empty[String])
@@ -156,16 +136,19 @@ object Bench {
       if (only.isEmpty) SparkEntry.queries else SparkEntry.queries.filter(q => only(q._1))
 
     val failed = scala.collection.mutable.Set.empty[String]
+    // each query's fastest successful measurement (its first if none succeeded)
+    val measured = scala.collection.mutable.Map.empty[String, Measurement]
     def timeOnce(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch { case e: Throwable =>
+      val m = meter.measure(fn(spark, sfDir))
+      m.error.foreach { e =>
         System.err.println(s"[bench] $name failed: ${e.getMessage}")
         failed += name }
-      val dt = (System.nanoTime() - t0) / 1e9
       // drop any cache a query left behind — cross-query leak pileup
       // shows up as multi-second GC stalls on unrelated later queries
       spark.catalog.clearCache()
-      dt
+      if (measured.get(name).forall(p => m.error.isEmpty && (p.error.nonEmpty || p.wallS > m.wallS)))
+        measured(name) = m
+      m.wallS
     }
 
     // stable ordering so per-query numbers are comparable across rounds
@@ -185,7 +168,7 @@ object Bench {
     // anchor has seen a fast window, a round where the median sits far
     // above the canary ratio means the CODE got uniformly slower — the
     // one pattern the median alone would normalize away.
-    val canaryT = canarySeconds(spark)
+    val canaryT = meter.canarySeconds()
     val canaryAnchor = stored.get(CanaryKey)
     val anchoredRatios = raw.flatMap { case (n, _, t) =>
       stored.get(n).filter(_ >= 0.05).map(t / _) }.sorted
@@ -266,7 +249,7 @@ object Bench {
         f"warnings — deferred re-check after $delay%.0fs decorrelation delay")
       Thread.sleep((delay * 1000).toLong)
       recheckBurst = canaryAnchor.filter(_ >= 0.05).map { a =>
-        math.min(AmbientCap, math.max(1.0, canarySeconds(spark) / a))
+        math.min(AmbientCap, math.max(1.0, meter.canarySeconds() / a))
       }.getOrElse(1.0)
       System.err.println(f"[bench] deferred-window canary ratio " +
         f"$recheckBurst%.2fx (warn bars for re-checked queries scale by " +
@@ -400,6 +383,12 @@ object Bench {
         root.set(name, n)
       }
       putMap("queries", allQs)
+      putMap("task_s", measured.toSeq.map { case (k, v) => k -> v.taskS })
+      locally {
+        val n = m.createObjectNode()
+        measured.toSeq.sortBy(_._1).foreach { case (k, v) => n.put(k, v.jobs) }
+        root.set[com.fasterxml.jackson.databind.JsonNode]("jobs", n)
+      }
       putMap("reruns_first_pass", reruns)
       putMap("anchor_warnings", warnings)
       locally { // immediate vs deferred value per preliminarily-warned query
@@ -427,6 +416,7 @@ object Bench {
       s""""anchor_warnings":${warnings.size},"ambient":${f"$ambient%.2f"},""" +
       s""""uniform_slowdown":$uniformSlowdown,""" +
       s""""detail":"BENCH_DETAIL.json","sf":"${sfKey(sfDir)}"}""")
+    meter.close()
     spark.stop()
   }
 }

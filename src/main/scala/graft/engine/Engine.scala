@@ -504,8 +504,8 @@ object Engine {
       // r19 (optimization round): cache-builder compression trials are
       // pathological on low-cardinality STRING columns (dictionary/RLE
       // probing — measured 33.8 task-s to cache a 1.1M-row string pair
-      // list vs 1.1 task-s as row blocks, CachePerfProbe and
-      // OPTIMIZATION_r19.md § "connectedComponents second pass"),
+      // list vs 1.1 task-s as row blocks, OPTIMIZATION_r19.md
+      // § "connectedComponents second pass"),
       // and every id/lookup frame the stages persist is exactly that
       // shape. Trade cache CPU for cache bytes by default; env-restores
       // the Spark default where memory is the binding constraint.

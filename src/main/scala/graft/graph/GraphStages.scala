@@ -204,22 +204,21 @@ object GraphStages {
         val dists0 = ckpt(sources.toDF("id").distinct()
           .select(col("id"), lit(0.0).as("dist")))
         var dists = dists0
-        if (dists0.count() > 0)
-          Iterate.fixpoint(dists0, Iterate.Budget.quiet(maxHops), ckpt) { (frontier, _) =>
-            val best = stepC
-              .join(frontier.select(col("id").as("__from"), col("dist")), Seq("__from"))
-              .select(col("__to").as("id"), (col("dist") + col("__w")).as("__cand"))
-              .groupBy("id").agg(min(col("__cand")).as("__cand"))
-            best.join(dists.select(col("id"), col("dist").as("__old")), Seq("id"), "left")
-              .where(col("__old").isNull || col("__cand") < col("__old"))
-              .select(col("id"), col("__cand").as("dist"))
-          } { improved =>
-            if (improved.count > 0)
-              dists = ckpt(dists.join(improved.state.select(col("id").as("__iid")),
-                  col("id") === col("__iid"), "left_anti")
-                .unionByName(improved.state))
-            improved.count == 0
-          }
+        Iterate.fixpoint(dists0, Iterate.Budget.quiet(maxHops), ckpt) { (frontier, _) =>
+          val best = stepC
+            .join(frontier.select(col("id").as("__from"), col("dist")), Seq("__from"))
+            .select(col("__to").as("id"), (col("dist") + col("__w")).as("__cand"))
+            .groupBy("id").agg(min(col("__cand")).as("__cand"))
+          best.join(dists.select(col("id"), col("dist").as("__old")), Seq("id"), "left")
+            .where(col("__old").isNull || col("__cand") < col("__old"))
+            .select(col("id"), col("__cand").as("dist"))
+        } { improved =>
+          if (improved.count > 0)
+            dists = ckpt(dists.join(improved.state.select(col("id").as("__iid")),
+                col("id") === col("__iid"), "left_anti")
+              .unionByName(improved.state))
+          improved.count == 0
+        }
         dists.select(col("id"), col("dist"))
       }
     }
@@ -386,11 +385,11 @@ object GraphStages {
       // NOTE (r19 session 4): a lazy persist of the pass-through frame
       // was tried here to share one evaluation between the pair
       // checkpoint and the singleton-vertex union (the terminal action
-      // re-evaluates the upstream once, ExecProbe) — and REVERTED:
-      // the cache fill's own plan misbehaves (geo_cluster 11 -> 80+
-      // task-SECONDS warm, JobStatsProbe A/B), the same lazy-cache
-      // pathology as ccLoop's (OPTIMIZATION_r19.md § "connectedComponents
-      // — investigated, second change REVERTED"). Wall clock hid it
+      // re-evaluates the upstream once) — and REVERTED: the cache
+      // fill's own plan misbehaves (geo_cluster 11 -> 80+ task-SECONDS
+      // warm), the same lazy-cache pathology as ccLoop's; both
+      // measurements are in OPTIMIZATION_r19.md § "connectedComponents
+      // — investigated, second change REVERTED". Wall clock hid it
       // behind idle cores; task time is the metric that counts at
       // scale. The duplicate evaluation is the cheaper shape.
       val edges0 = ctx.edges.getOrElse(
@@ -620,17 +619,16 @@ object GraphStages {
       scope {
         val frontier0 = ckpt(sources.toDF("id").distinct())
         var visited = frontier0.select(col("id"), lit(0L).as("dist"))
-        if (frontier0.count() > 0)
-          Iterate.fixpoint(frontier0, Iterate.Budget.quiet(maxHops), ckpt) { (frontier, _) =>
-            scope.frame
-              .join(frontier.select(col("id").as("__from")), Seq("__from"))
-              .select(col("__to").as("id")).distinct()
-              .join(visited, Seq("id"), "left_anti")
-          } { next =>
-            if (next.count > 0) visited = visited
-              .union(next.state.select(col("id"), lit(next.index.toLong).as("dist")))
-            next.count == 0
-          }
+        Iterate.fixpoint(frontier0, Iterate.Budget.quiet(maxHops), ckpt) { (frontier, _) =>
+          scope.frame
+            .join(frontier.select(col("id").as("__from")), Seq("__from"))
+            .select(col("__to").as("id")).distinct()
+            .join(visited, Seq("id"), "left_anti")
+        } { next =>
+          if (next.count > 0) visited = visited
+            .union(next.state.select(col("id"), lit(next.index.toLong).as("dist")))
+          next.count == 0
+        }
         visited.select(col("id"), col("dist"))
       }
     }

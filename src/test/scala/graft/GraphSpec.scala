@@ -109,8 +109,9 @@ class GraphSpec extends SparkSpec {
         Map[String, Any]("source" -> "a") ++ opts.toMap), ctx)(spark.emptyDataFrame)
       .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
     assert(run() == Map("a" -> 0.0, "b" -> 2.0, "c" -> 1.0))
-    // maxHops 1 keeps the expensive first reach
+    // maxHops 1 keeps the expensive first reach; 0 runs no round
     assert(run("maxHops" -> 1) == Map("a" -> 0.0, "b" -> 10.0, "c" -> 1.0))
+    assert(run("maxHops" -> 0) == Map("a" -> 0.0))
     // direction in: nothing points AT a
     assert(run("direction" -> "in") == Map("a" -> 0.0))
     // edges without weights cost 1 (hop distances)
@@ -1349,6 +1350,7 @@ class GraphSpec extends SparkSpec {
       Map("a" -> 0L, "b" -> 1L, "c" -> 1L, "d" -> 2L))
     assert(run("source" -> "a", "direction" -> "out", "maxHops" -> 1) ==
       Map("a" -> 0L, "b" -> 1L, "c" -> 1L))
+    assert(run("source" -> "a", "direction" -> "out", "maxHops" -> 0) == Map("a" -> 0L))
     // undirected from d: d-c 1, then b (via c) and a (via c) at 2
     assert(run("source" -> "d", "direction" -> "both") ==
       Map("d" -> 0L, "c" -> 1L, "a" -> 2L, "b" -> 2L))

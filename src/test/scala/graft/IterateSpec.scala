@@ -10,7 +10,7 @@ import scala.jdk.CollectionConverters._
   * checkpoint positions, and that no loop outside the module manages its
   * own AQE scope, pin or observed checkpoint. */
 class IterateSpec extends SparkSpec {
-  import JobBudgetSpec.jobsOf
+  import QueryMeter.jobsOf
   import spark.implicits._
 
   private def withAqe[T](on: Boolean)(body: => T): T = {

@@ -1,26 +1,7 @@
 package graft
 
 import graft.spec.ComponentSpec
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.lit
-import java.util.concurrent.atomic.AtomicInteger
-
-object JobBudgetSpec {
-  /** Jobs started while `body` runs. Suites run one at a time in the
-    * test JVM, so every job between the two drains belongs to `body`. */
-  def jobsOf(spark: SparkSession)(body: => Unit): Int = {
-    val n = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = n.incrementAndGet()
-    }
-    org.apache.spark.graft.ListenerBus.drain(spark)
-    spark.sparkContext.addSparkListener(listener)
-    try { body; org.apache.spark.graft.ListenerBus.drain(spark) }
-    finally spark.sparkContext.removeSparkListener(listener)
-    n.get
-  }
-}
 
 /** Job budgets of the iterative family: every Spark job one stage run
   * costs (plan build with its eager checkpoints, plus one `collect` of
@@ -28,7 +9,7 @@ object JobBudgetSpec {
   * is an upper bound, so a new per-round barrier fails here instead of
   * waiting for a bench run. */
 class JobBudgetSpec extends SparkSpec {
-  import JobBudgetSpec.jobsOf
+  import QueryMeter.jobsOf // suites run one at a time, so every job counted is the body's
   import spark.implicits._
 
   // two directed cycles joined by a path, plus a detached edge: every
@@ -52,8 +33,8 @@ class JobBudgetSpec extends SparkSpec {
       Map("iterations" -> 7, "checkpointEvery" -> 2)), 23),
     ("labelprop", () => stageJobs(graph, "labelprop",
       Map("iterations" -> 7, "checkpointEvery" -> 2)), 20),
-    ("bfs", () => stageJobs(graph, "bfs", Map("source" -> "a")), 25),
-    ("shortestpaths", () => stageJobs(graph, "shortestpaths", Map("source" -> "a")), 42),
+    ("bfs", () => stageJobs(graph, "bfs", Map("source" -> "a")), 24),
+    ("shortestpaths", () => stageJobs(graph, "shortestpaths", Map("source" -> "a")), 41),
     ("toposort", () => stageJobs(dag, "toposort", Map.empty), 20),
     ("kcore core", () => stageJobs(graph, "kcore", Map("k" -> 2)), 8),
     ("kcore coreness", () => stageJobs(graph, "kcore", Map("mode" -> "coreness")), 19),

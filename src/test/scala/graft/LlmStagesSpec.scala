@@ -1137,24 +1137,10 @@ class LlmStagesSpec extends SparkSpec {
     assert(e2.getMessage.contains("maxClusterRows"))
     // plan-build runs the SAME jobs with and without the guard (the
     // k-means training sample is inherent; the guard must add none)
-    val counter = new org.apache.spark.scheduler.SparkListener {
-      val n = new java.util.concurrent.atomic.AtomicInteger(0)
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        n.incrementAndGet()
-    }
-    def jobsDuring(body: => Unit): Int = {
-      spark.sparkContext.addSparkListener(counter)
-      try { counter.n.set(0); body;
-        // bus delivery is async; build jobs have already COMPLETED by
-        // here, so their start events are posted — drain briefly
-        Thread.sleep(1000); counter.n.get }
-      finally spark.sparkContext.removeSparkListener(counter)
-    }
-    val without = jobsDuring {
+    val without = QueryMeter.jobsOf(spark) {
       stage("semanticdedup", "k" -> 3, "maxClusterRows" -> 0,
         "emit" -> "pairs")(df) }
-    val withGuard = jobsDuring {
+    val withGuard = QueryMeter.jobsOf(spark) {
       stage("semanticdedup", "k" -> 3, "maxClusterRows" -> 100,
         "emit" -> "pairs")(df) }
     assert(withGuard == without,

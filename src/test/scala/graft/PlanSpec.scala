@@ -391,31 +391,9 @@ class PlanSpec extends SparkSpec {
     // an upstream aggregate means df.rdd would materialize AQE stages at
     // plan-build — spread must take the unconditional-repartition path
     val agg = base.groupBy("lang").agg(count("*").as("n"))
-    // job-group listener + FIFO flush sentinel: if spread launched ANY
-    // job at plan-build, its group id is recorded before the sentinel's
-    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        groups.add(Option(j.properties.getProperty("spark.jobGroup.id")).getOrElse(""))
-    }
-    spark.sparkContext.addSparkListener(listener)
-    val out = try {
-      spark.sparkContext.setJobGroup("spread-probe", "spread-probe")
-      val o = graft.similarity.SimilarityStages.spread(agg)
-      spark.sparkContext.setJobGroup("spread-sentinel", "spread-sentinel")
-      spark.range(1).count() // bus is FIFO: sentinel seen ⇒ probe events seen
-      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
-      while (!groups.contains("spread-sentinel") && System.nanoTime() < deadline)
-        Thread.sleep(20)
-      o
-    } finally {
-      spark.sparkContext.clearJobGroup()
-      spark.sparkContext.removeSparkListener(listener)
-    }
-    assert(groups.contains("spread-sentinel"), "listener never saw the sentinel job")
-    assert(!groups.contains("spread-probe"),
-      "spread ran a job at plan-build time for an exchange-bearing input")
+    var out: org.apache.spark.sql.DataFrame = null
+    val jobs = QueryMeter.jobsOf(spark) { out = graft.similarity.SimilarityStages.spread(agg) }
+    assert(jobs == 0, "spread ran a job at plan-build time for an exchange-bearing input")
     assert(out.queryExecution.analyzed.toString.contains("Repartition"),
       "exchange-bearing input must be unconditionally repartitioned")
     // a plain scan projection keeps the probe-and-skip fast path
