@@ -20,7 +20,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
 
   /** Anchors live in a REPO SIDECAR (`BENCH_ANCHORS.json`, override
-    * with SPARK_GRAFT_ANCHORS), keyed by scale dir — no longer
+    * with SPARK_GRAFT_ANCHORS), keyed by [[anchorKey]] — no longer
     * hand-edited source. An anchor is the best-observed clean seconds
     * for the query; it is a re-run TRIGGER, not a clamp — reported
     * numbers are always real measurements from this run.
@@ -37,6 +37,11 @@ object Bench {
   private def anchorsFile = new java.io.File(
     sys.env.getOrElse("SPARK_GRAFT_ANCHORS", "BENCH_ANCHORS.json"))
   private[graft] def sfKey(sfDir: String): String = new java.io.File(sfDir).getName
+  /** Scale dir and the session's core count, e.g. `sf0.1@32`: anchors
+    * measured at one core count never grade a run at another, and a core
+    * count without anchors reports its times and warns about nothing. */
+  private[graft] def anchorKey(sfDir: String, spark: SparkSession): String =
+    s"${sfKey(sfDir)}@${spark.sparkContext.defaultParallelism}"
 
   /** A corrupt sidecar (e.g. a run killed mid-write before atomic
     * rename existed, or a hand-edit typo) must degrade to "no anchors"
@@ -155,7 +160,8 @@ object Bench {
     val raw = selected.toSeq.sortBy(_._1).map { case (name, fn) =>
       (name, fn, timeOnce(name, fn))
     }
-    val stored = loadAnchors(sfKey(sfDir))
+    val key = anchorKey(sfDir, spark)
+    val stored = loadAnchors(key)
     // ambient drift factor (see scaladoc above) = the MEDIAN raw/anchor
     // ratio across all anchored queries: a handful of genuine plan
     // regressions cannot move the median of ~200, while uniform box
@@ -332,7 +338,7 @@ object Bench {
     // canary anchor: monotone-min like every query anchor
     val canaryUpd = Map(CanaryKey ->
       canaryAnchor.fold(canaryT)(a => math.min(a, canaryT)))
-    try saveAnchors(sfKey(sfDir), stored ++ updated ++ canaryUpd)
+    try saveAnchors(key, stored ++ updated ++ canaryUpd)
     catch { case e: java.io.IOException =>
       System.err.println(s"[bench] could not persist anchors: ${e.getMessage}") }
     def fmtMap(entries: Seq[(String, Double)]): String =

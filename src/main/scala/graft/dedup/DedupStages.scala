@@ -44,7 +44,7 @@ object DedupStages {
     * last (largest: "newest wins", the CDC-snapshot posture when the
     * tie-break is a version/timestamp). */
   def dedup(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       val keys: Seq[Column] = spec.str("keyExpr") match {
         case Some(e) => Seq(expr(e))
         case None =>
@@ -124,7 +124,7 @@ object DedupStages {
     * Output: (`a`, `b`, `jaccard`) with a < b — candidates from band
     * buckets only, then exact-verified. */
   def minhash(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       val id = spec.strOr("idField", "doc_id")
       val field = spec.strOr("field", "text")
       val n = spec.int("shingleSize", 3)
@@ -228,7 +228,7 @@ object DedupStages {
     * signature is split into `maxDistance + 1` blocks; any qualifying
     * pair must agree on at least one block. Output (a, b, hamming). */
   def simhash(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       val id = spec.strOr("idField", "doc_id")
       val field = spec.strOr("field", "text")
       val maxDist = spec.int("maxDistance", 3)
@@ -284,7 +284,7 @@ object DedupStages {
     * Options: `idField` (default doc_id), `hashField` (required),
     * `maxDistance` (default 3). Output: (a, b, hamming), a < b. */
   def hammingPairs(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       val id = spec.strOr("idField", "doc_id")
       val hf = spec.str("hashField")
         .getOrElse(sys.error("hammingpairs: `hashField` required"))
@@ -326,7 +326,7 @@ object DedupStages {
     * are two exact set sizes and ONE IEEE division. Output (a, b,
     * `<metric>` >= threshold) with a < b. */
   def ngramJaccard(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       val id = spec.strOr("idField", "doc_id")
       val field = spec.strOr("field", "text")
       val n = spec.int("shingleSize", 3)
@@ -373,7 +373,7 @@ object DedupStages {
     * distinct contaminated ids anti-join back. The corpus is never
     * all-pairs compared with anything. */
   def decontaminate(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       val id = spec.strOr("idField", "doc_id")
       val field = spec.strOr("field", "text")
       val n = spec.int("shingleSize", 13)
@@ -485,7 +485,7 @@ object DedupStages {
     * crawl). AQE picks broadcast when the against side is in fact
     * small. */
   def crossDedup(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       val id = spec.strOr("idField", "doc_id")
       val field = spec.strOr("field", "text")
       val other = ctx.tableOrSql(spec.str("against")
@@ -802,13 +802,11 @@ object DedupStages {
     * the corpus — the score fetch is one id-keyed join, the argmax two
     * component-keyed aggregations. */
   def neardupDedup(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       val id = spec.strOr("idField", "doc_id")
-      // strip `output` so the inner pair stage can't double-capture
-      val inner = ComponentSpec(spec.name, spec.options - "output")
       val pairs = (spec.strOr("mode", "minhash") match {
-        case "exact" => ngramJaccard(inner, ctx)(df)
-        case _ => minhash(inner, ctx)(df)
+        case "exact" => ngramJaccard(spec, ctx)(df)
+        case _ => minhash(spec, ctx)(df)
       }).select("a", "b")
       val comps = connectedComponents(pairs, spec.int("maxIter", 12),
         Stages.checkpointerOf(spec, ctx), stage = "neardupdedup")
@@ -872,7 +870,7 @@ object DedupStages {
     * merging is a per-document window whose partitions are bounded by
     * document length. No pairwise comparison anywhere. */
   def substringSpans(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       val id = spec.strOr("idField", "doc_id")
       val field = spec.strOr("field", "text")
       val k = spec.int("gram", 8)
@@ -978,7 +976,7 @@ object DedupStages {
     * past `maxDupLines` (default 2,000,000), naming the
     * `crossdedup`/`decontaminate` Bloom pre-filter migration. */
   def lineDedup(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       val id = spec.strOr("idField", "doc_id")
       val f = spec.strOr("field", "text")
       Seq(id, f).foreach(c =>

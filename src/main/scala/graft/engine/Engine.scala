@@ -219,7 +219,11 @@ object Engine {
     "intersect"     -> graft.stages.SetOps.intersect _,
     "semijoin"      -> graft.stages.SetOps.semijoin _,
     "antijoin"      -> graft.stages.SetOps.antijoin _,
-    "sessionize"    -> graft.temporal.TemporalStages.sessionizeBatch _,
+    "sessionize"    -> graft.temporal.TemporalStages.sessionize _,
+    "window_agg"      -> graft.streaming.Streaming.windowAgg _,
+    "stream_dedup"    -> graft.streaming.Streaming.streamDedup _,
+    "stream_throttle" -> graft.streaming.Streaming.streamThrottle _,
+    "stream_join"     -> graft.streaming.Streaming.streamJoin _,
     "rolling"       -> graft.temporal.TemporalStages.rolling _,
     "delta"         -> graft.temporal.TemporalStages.delta _,
     "cumulate"      -> graft.temporal.TemporalStages.cumulate _,
@@ -248,12 +252,10 @@ object Engine {
   /** Run a full pipeline spec. Returns the final record stream (what the
     * loader saw) so callers/tests can assert on it. */
   def run(ctx: EtlContext, spec: PipelineSpec): DataFrame = {
-    // config section → context vars (OETLProcessor.java:245-250)
-    spec.config.foreach { case (k, v) => ctx.vars.put(k, v) }
     // `config: {"dryRun": true}` — validate + plan WITHOUT acting (see
-    // the action branch below). Under dryRun only `let` begin blocks
-    // run (their variable bindings shape the plan); console/code blocks
-    // are side effects and are exactly what a pre-flight must not fire.
+    // [[act]]). Under dryRun only `let` begin blocks run (their variable
+    // bindings shape the plan); console/code blocks are side effects and
+    // are exactly what a pre-flight must not fire.
     val dryRun = configFlag(spec, "dryRun")
     // SAVE/RESTORE around this run: nested `etl` child pipelines reuse
     // the parent ctx — a child (never dryRun itself) must not clobber a
@@ -264,9 +266,88 @@ object Engine {
     finally ctx.dryRun = outerDryRun
   }
 
+  /** The batch run: [[compile]], the telemetry observe nodes, [[act]],
+    * run-scoped cache release, `end` blocks and the listener events. */
   private def runInner(ctx: EtlContext, spec: PipelineSpec,
                        dryRun: Boolean): DataFrame = {
-    // begin blocks execute before extraction (OETLProcessor.java:119-126)
+    // `config: {"telemetry": true}` — engine-level rows/sec for the
+    // extract and load phases (OETLProcessor.java:545-585 parity).
+    // Observe-only: the counts ride the loader's terminal action, no
+    // extra job. Opt-in because each observe node is a codegen-fusion
+    // barrier in the plan — free pipelines stay byte-identical.
+    val telemetry = configFlag(spec, "telemetry")
+    val counts = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.Observation]
+    def counted(df: DataFrame, name: String): DataFrame =
+      if (!telemetry) df else {
+        val o = ctx.newObservation(name)
+        counts += o
+        df.observe(o, org.apache.spark.sql.functions.count(
+          org.apache.spark.sql.functions.lit(1)).as("rows"))
+      }
+    var t0 = 0L
+    var warn0, err0 = 0L
+    var completedNormally = false
+    val (df, acted) = try {
+      val df = counted(compile(ctx, spec, dryRun) { extracted =>
+        t0 = System.nanoTime
+        // counter baselines: the accumulators are context-lifetime, the
+        // RunStats contract is per-run — record deltas, not live values
+        warn0 = ctx.warnings.value; err0 = ctx.errors.value
+        counted(extracted, "rows_extracted")
+      }, "rows_loaded")
+      val acted = act(ctx, spec, df, dryRun)
+      completedNormally = true
+      (df, acted)
+    } catch {
+      case e: EtlHaltException =>
+        ctx.fireListeners(_.onHalt(ctx, e.getMessage)); throw e
+    } finally {
+      // Run-scoped cache release on EVERY failure path (ADVICE r14):
+      // a halt, an analysis error, or a runtime failure must all drop
+      // the run's registered persists — CacheManager entries are never
+      // GC-reclaimed, so any leak here is permanent for the session.
+      // The success path below decides release-vs-adopt; signal it by
+      // only releasing here when the try block did NOT complete.
+      if (!completedNormally) ctx.releaseCache()
+    }
+    // Run-scoped cache release (ADVICE r13): an acted pipeline is done
+    // with its persisted frames (keyedByTid etc.) — unpersist them now
+    // so a long session does not accumulate CacheManager entries. A
+    // plan-handoff pipeline (memory loader: the terminal action runs
+    // later, outside the engine) moves its frames to the bounded
+    // session-level FIFO instead, which evicts the oldest once full.
+    if (acted) ctx.releaseCache()
+    else EtlContext.adoptSessionPersisted(ctx.drainPersisted())
+    if (acted) {
+      if (telemetry) {
+        val elapsedMs = (System.nanoTime - t0) / 1000000L
+        val Seq(extracted, loaded) = counts.toSeq.map(ctx.observedValue(_, "rows"))
+        ctx.lastStats = Some(EtlContext.RunStats(extracted, loaded, elapsedMs,
+          warnings = (ctx.warnings.value: Long) - warn0,
+          errors = (ctx.errors.value: Long) - err0))
+        val secs = math.max(elapsedMs, 1L) / 1000.0
+        System.err.println(
+          f"[graft] extracted $extracted rows, loaded $loaded rows in " +
+          f"$secs%.2f s (${extracted / secs}%.0f extract rows/s, " +
+          f"${loaded / secs}%.0f load rows/s)")
+      }
+      ctx.fireListeners(_.onLoaded(ctx, ctx.lastStats))
+    }
+    if (!dryRun) spec.end.foreach(executeBlock(ctx, _))
+    ctx.fireListeners(_.onEnd(ctx))
+    df
+  }
+
+  /** compile, the step batch and stream runs share: the config section's
+    * variables (OETLProcessor.java:245-250), the begin blocks
+    * (OETLProcessor.java:119-126), `onBegin`, the source (a `stream`
+    * source reads through [[graft.streaming.Streaming.readStream]]), then
+    * every transformer through [[transform]]. `tap` sees the extracted
+    * frame before the first transformer. Returns the frame the loader
+    * gets. */
+  private[graft] def compile(ctx: EtlContext, spec: PipelineSpec, dryRun: Boolean)
+                            (tap: DataFrame => DataFrame): DataFrame = {
+    spec.config.foreach { case (k, v) => ctx.vars.put(k, v) }
     spec.begin.filter(b => !dryRun || b.name == "let")
       .foreach(executeBlock(ctx, _))
     ctx.fireListeners(_.onBegin(ctx))
@@ -295,107 +376,67 @@ object Engine {
     val needNum = remaining.exists(t => t.name == "csv" &&
       (t.long("skipFrom").isDefined || t.long("skipTo").isDefined ||
        t.bool("columnsOnFirstLine", dflt = true)))
-    var df = fused.getOrElse(Sources.build(ctx, spec.source, spec.extractor, needNum))
-    // `config: {"telemetry": true}` — engine-level rows/sec for the
-    // extract and load phases (OETLProcessor.java:545-585 parity).
-    // Observe-only: the counts ride the loader's terminal action, no
-    // extra job. Opt-in because each observe node is a codegen-fusion
-    // barrier in the plan — free pipelines stay byte-identical.
-    val telemetry = configFlag(spec, "telemetry")
-    val t0 = System.nanoTime
-    // counter baselines: the accumulators are context-lifetime, the
-    // RunStats contract is per-run — record deltas, not live values
-    val (warn0, err0) = (ctx.warnings.value: Long, ctx.errors.value: Long)
-    val extractObs = if (telemetry) {
-      val o = ctx.newObservation("rows_extracted")
-      df = df.observe(o, org.apache.spark.sql.functions.count(
-        org.apache.spark.sql.functions.lit(1)).as("rows"))
-      Some(o)
-    } else None
-    var loadObs: Option[org.apache.spark.sql.Observation] = None
-    var completedNormally = false
-    val acted = try {
-      for (t <- remaining) {
-        val fn = transformers.getOrElse(t.name, sys.error(s"unknown transformer ${t.name}"))
-        df = fn(t, ctx)(df)
-      }
-      // `_row_num` is internal bookkeeping (header/skip arithmetic) —
-      // the reference never emits a line number, so it must not reach
-      // the loader's output schema
-      if (df.columns.contains("_row_num")) df = df.drop("_row_num")
-      if (telemetry) {
-        val o = ctx.newObservation("rows_loaded")
-        df = df.observe(o, org.apache.spark.sql.functions.count(
-          org.apache.spark.sql.functions.lit(1)).as("rows"))
-        loadObs = Some(o)
-      }
-      // dryRun action branch: the whole config compiled and Catalyst
-      // analyzes/optimizes it here (unknown components, bad columns,
-      // type errors all still fail), the LOADER spec validates without
-      // acting (unknown name / missing required options fail the
-      // pre-flight like the real run would), the optimized plan prints
-      // to stderr, and pending observe checks are DISCARDED (no action
-      // ran — leaving them would poison the next real run).
-      val actedNow = if (dryRun) {
-        spec.loader.foreach(Loaders.validate(ctx, _))
-        System.err.println("[graft] dryRun plan:\n" +
-          df.queryExecution.optimizedPlan.treeString)
-        ctx.discardChecks()
-        false
-      } else {
-        // loader action → collect deferred observe checks (halt / counters)
-        val a = spec.loader.exists(Loaders.load(ctx, _, df))
-        if (a) ctx.drainChecks()
-        a
-      }
-      completedNormally = true
-      actedNow
-    } catch {
-      case e: EtlHaltException =>
-        ctx.fireListeners(_.onHalt(ctx, e.getMessage)); throw e
-    } finally {
-      // Run-scoped cache release on EVERY failure path (ADVICE r14):
-      // a halt, an analysis error, or a runtime failure must all drop
-      // the run's registered persists — CacheManager entries are never
-      // GC-reclaimed, so any leak here is permanent for the session.
-      // The success path below decides release-vs-adopt; signal it by
-      // only releasing here when the try block did NOT complete.
-      if (!completedNormally) ctx.releaseCache()
-    }
-    // Run-scoped cache release (ADVICE r13): an acted pipeline is done
-    // with its persisted frames (keyedByTid etc.) — unpersist them now
-    // so a long session does not accumulate CacheManager entries. A
-    // plan-handoff pipeline (memory loader: the terminal action runs
-    // later, outside the engine) moves its frames to the bounded
-    // session-level FIFO instead, which evicts the oldest once full.
-    if (acted) ctx.releaseCache()
-    else EtlContext.adoptSessionPersisted(ctx.drainPersisted())
-    if (acted) {
-      (extractObs, loadObs) match {
-        case (Some(eo), Some(lo)) =>
-          val elapsedMs = (System.nanoTime - t0) / 1000000L
-          val extracted = ctx.observedValue(eo, "rows")
-          val loaded = ctx.observedValue(lo, "rows")
-          ctx.lastStats = Some(EtlContext.RunStats(extracted, loaded, elapsedMs,
-            warnings = (ctx.warnings.value: Long) - warn0,
-            errors = (ctx.errors.value: Long) - err0))
-          val secs = math.max(elapsedMs, 1L) / 1000.0
-          System.err.println(
-            f"[graft] extracted $extracted rows, loaded $loaded rows in " +
-            f"$secs%.2f s (${extracted / secs}%.0f extract rows/s, " +
-            f"${loaded / secs}%.0f load rows/s)")
-        case _ => ()
-      }
-      ctx.fireListeners(_.onLoaded(ctx, ctx.lastStats))
-    }
-    if (!dryRun) spec.end.foreach(executeBlock(ctx, _))
-    ctx.fireListeners(_.onEnd(ctx))
-    df
+    val extracted = fused.getOrElse(spec.source match {
+      case Some(src) if src.name == "stream" => graft.streaming.Streaming.readStream(ctx, src)
+      case source => Sources.build(ctx, source, spec.extractor, needNum)
+    })
+    val df = transform(ctx, remaining, tap(extracted))
+    // `_row_num` is internal bookkeeping (header/skip arithmetic) —
+    // the reference never emits a line number, so it must not reach
+    // the loader's output schema
+    if (df.columns.contains("_row_num")) df.drop("_row_num") else df
   }
+
+  /** The transformers that read their own `if` (a per-row guard); on any
+    * other stage an `if` would be silently ignored, so [[transform]]
+    * rejects it. */
+  private val IfStages = Set("field", "flow")
+
+  /** The one transformer loop, batch and stream. Per component it owns
+    * what the reference gives every transformer
+    * (OAbstractTransformer.java:56-76): the registry lookup, the `if`
+    * guard, and `output` — the stage's result goes to `ctx.captured`
+    * under that name and its input passes through. */
+  private def transform(ctx: EtlContext, ts: Seq[ComponentSpec],
+                        input: DataFrame): DataFrame =
+    ts.foldLeft(input) { (df, t) =>
+      val fn = transformers.getOrElse(t.name, sys.error(s"unknown transformer ${t.name}"))
+      if (t.ifExpr.nonEmpty && !IfStages(t.name))
+        sys.error(s"${t.name}: `if` is honoured only by ${IfStages.mkString(" and ")} " +
+          "— this stage would ignore it; filter with a `flow` skip before it")
+      val out = fn(t, ctx)(df)
+      t.outputVar match {
+        case Some(v) => ctx.captured.put(v, out); df
+        case None => out
+      }
+    }
+
+  /** act, the batch run's last step: the loader. Under dryRun the whole
+    * config compiled and Catalyst analyzes/optimizes it here (unknown
+    * components, bad columns, type errors all still fail), the LOADER
+    * spec validates without acting (unknown name / missing required
+    * options fail the pre-flight like the real run would), the optimized
+    * plan prints to stderr, and pending observe checks are DISCARDED (no
+    * action ran — leaving them would poison the next real run). Returns
+    * whether the loader ran a terminal action. */
+  private def act(ctx: EtlContext, spec: PipelineSpec, df: DataFrame,
+                  dryRun: Boolean): Boolean =
+    if (dryRun) {
+      spec.loader.foreach(Loaders.validate(ctx, _))
+      System.err.println("[graft] dryRun plan:\n" +
+        df.queryExecution.optimizedPlan.treeString)
+      ctx.discardChecks()
+      false
+    } else {
+      // loader action → collect deferred observe checks (halt / counters)
+      val acted = spec.loader.exists(Loaders.load(ctx, _, df))
+      if (acted) ctx.drainChecks()
+      acted
+    }
 
   /** Boolean config-section flag (`telemetry`, `dryRun`): accepts a
     * JSON boolean or the string "true"; anything else is false. */
-  private def configFlag(spec: PipelineSpec, key: String): Boolean =
+  private[graft] def configFlag(spec: PipelineSpec, key: String): Boolean =
     spec.config.get(key).exists {
       case b: Boolean => b
       case s: String => s.equalsIgnoreCase("true")
@@ -404,29 +445,6 @@ object Engine {
 
   def runJson(ctx: EtlContext, json: String): DataFrame =
     run(ctx, PipelineSpec.parse(json))
-
-  /** Run a child pipeline given as an already-parsed option map (the
-    * nested `etl` transformer's inline form). */
-  def runMap(ctx: EtlContext, m: Map[String, Any]): DataFrame = {
-    def comp(v: Any): Option[ComponentSpec] = v match {
-      case mm: Map[_, _] if mm.size == 1 =>
-        val (k, o) = mm.head
-        Some(ComponentSpec(k.toString, o.asInstanceOf[Map[String, Any]]))
-      case _ => None
-    }
-    def comps(v: Any): Seq[ComponentSpec] = v match {
-      case s: Seq[_] => s.flatMap(comp)
-      case other => comp(other).toSeq
-    }
-    run(ctx, PipelineSpec(
-      config = m.get("config").map(_.asInstanceOf[Map[String, Any]]).getOrElse(Map.empty),
-      begin = m.get("begin").map(comps).getOrElse(Nil),
-      source = m.get("source").flatMap(comp),
-      extractor = m.get("extractor").flatMap(comp),
-      transformers = m.get("transformers").map(comps).getOrElse(Nil),
-      loader = m.get("loader").flatMap(comp),
-      end = m.get("end").map(comps).getOrElse(Nil)))
-  }
 
   /** Blocks (SURVEY.md §2.5): driver-side procedures. */
   def executeBlock(ctx: EtlContext, b: ComponentSpec): Unit = b.name match {

@@ -327,7 +327,10 @@ object EtlContext {
   * halt (a deferred `flow: halt` or lookup HALT tripped), end (after
   * `end` blocks). Per-record counting remains available through the
   * observe plumbing (`log` stages, csv errorStats) without a callback
-  * per row. Register via [[EtlContext.addListener]]. */
+  * per row. Register via [[EtlContext.addListener]]. A stream run
+  * ([[graft.streaming.Streaming.run]]) fires `onBegin` only: the query
+  * outlives the call, so there is no terminal action to report and no
+  * end moment. */
 trait EtlListener {
   def onBegin(ctx: EtlContext): Unit = ()
   def onLoaded(ctx: EtlContext, stats: Option[EtlContext.RunStats]): Unit = ()

@@ -22,7 +22,7 @@ object GraphStages {
     * stage (replaces the stream, like `command`). One hash aggregation;
     * map-side combine makes it shuffle one row per (partition, vertex). */
   def graphDegree(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { _ =>
+    { _ =>
       val edges0 = ctx.edges.getOrElse(
         sys.error("graphdegree: no edges — apply an `edge` stage first"))
       val edges = spec.str("label").fold(edges0)(l => edges0.where(col("label") === l))
@@ -66,7 +66,7 @@ object GraphStages {
     * [[graft.stages.Stages.checkpointerOf]]) — same rounds, same plan
     * shape, executor-loss-safe. */
   def pageRank(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { _ =>
+    { _ =>
       val ckpt = Stages.checkpointerOf(spec, ctx)
       val edges0 = ctx.edges.getOrElse(
         sys.error("pagerank: no edges — apply an `edge` stage first"))
@@ -172,7 +172,7 @@ object GraphStages {
     * (with a hop bound they would make "shortest within k hops"
     * ill-behaved under the early exit). */
   def shortestPaths(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { _ =>
+    { _ =>
       val edges0 = ctx.edges.getOrElse(
         sys.error("shortestpaths: no edges — apply an `edge` stage first"))
       val edges1 = spec.str("label").fold(edges0)(l => edges0.where(col("label") === l))
@@ -258,7 +258,7 @@ object GraphStages {
     * pattern's cardinality is the true result size, as with any motif
     * engine. */
   def motif(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { _ =>
+    { _ =>
       val edges = ctx.edges.getOrElse(
         sys.error("motif: no edges — apply an `edge` stage first"))
       val patternStr = spec.str("pattern")
@@ -381,7 +381,7 @@ object GraphStages {
     * truncating the self-referencing lineage. The same loop the
     * near-dup keeper already runs at crawl scale. */
   def connectedComponentsStage(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { _ =>
+    { _ =>
       // NOTE (r19 session 4): a lazy persist of the pass-through frame
       // was tried here to share one evaluation between the pair
       // checkpoint and the singleton-vertex union (the terminal action
@@ -436,7 +436,7 @@ object GraphStages {
     * observed on the same job. Exchanges carry (id, id) pairs only; no
     * data-path collect. */
   def kcore(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { _ =>
+    { _ =>
       val edges0 = ctx.edges.getOrElse(
         sys.error("kcore: no edges — apply an `edge` stage first"))
       val mode = spec.strOr("mode", "core")
@@ -528,7 +528,7 @@ object GraphStages {
     * vertex with at least one (non-self-loop) edge; degree < 2 → 0.0.
     * Options: `label` (optional edge-label filter). */
   def clusteringCoef(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { _ =>
+    { _ =>
       val edges0 = ctx.edges.getOrElse(
         sys.error("clusteringcoef: no edges — apply an `edge` stage first"))
       val edges1 = spec.str("label").fold(edges0)(l => edges0.where(col("label") === l))
@@ -597,7 +597,7 @@ object GraphStages {
     * celebrity vertex fans the frontier wide in one round — that is the
     * true result size; no driver-side queue exists to overflow. */
   def bfs(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { _ =>
+    { _ =>
       val edges0 = ctx.edges.getOrElse(
         sys.error("bfs: no edges — apply an `edge` stage first"))
       val edges1 = spec.str("label").fold(edges0)(l => edges0.where(col("label") === l))
@@ -656,7 +656,7 @@ object GraphStages {
     * assortativity pass re-joins the degree frames onto the edge list
     * (vertex-keyed) and adds one more one-row aggregate. */
   def graphMetrics(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { _ =>
+    { _ =>
       val edges0 = ctx.edges.getOrElse(
         sys.error("graphmetrics: no edges — apply an `edge` stage first"))
       val edges = spec.str("label").fold(edges0)(l => edges0.where(col("label") === l))
@@ -719,7 +719,7 @@ object GraphStages {
     * checkpoints truncating lineage; rounds = DAG depth (the
     * propagation frontier advances one layer per round). */
   def topoSort(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { _ =>
+    { _ =>
       val edges0 = ctx.edges.getOrElse(
         sys.error("toposort: no edges — apply an `edge` stage first"))
       val edges = spec.str("label").fold(edges0)(l => edges0.where(col("label") === l))
@@ -773,7 +773,7 @@ object GraphStages {
     * Label lineage grows linearly per round; `checkpointEvery` bounds
     * analysis cost like pagerank's. */
   def labelPropagation(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { _ =>
+    { _ =>
       val edges0 = ctx.edges.getOrElse(
         sys.error("labelprop: no edges — apply an `edge` stage first"))
       val edges = spec.str("label").fold(edges0)(l => edges0.where(col("label") === l))
@@ -825,7 +825,7 @@ object GraphStages {
     * built (per-key `row_number` window), so the aggregation buffer is
     * bounded too, not just the output row. */
   def graphNeighbors(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       val edges0 = ctx.edges.getOrElse(
         sys.error("graphneighbors: no edges — apply an `edge` stage first"))
       val edges = spec.str("label").fold(edges0)(l => edges0.where(col("label") === l))
@@ -879,7 +879,7 @@ object GraphStages {
     * vertex/edge creation, OEdgeTransformer.java:40-47); this extends
     * the graph family the same way kcore/clusteringcoef do. */
   def scc(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { _ =>
+    { _ =>
       val edges0 = ctx.edges.getOrElse(
         sys.error("scc: no edges — apply an `edge` stage first"))
       val checkpoint = Stages.checkpointerOf(spec, ctx)
@@ -987,7 +987,7 @@ object GraphStages {
     * id-keyed frames that AQE broadcasts when small. Exchanges carry
     * (id, id, long) rows — never neighbor lists. */
   def linkPredict(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { _ =>
+    { _ =>
       val edges0 = ctx.edges.getOrElse(
         sys.error("linkpredict: no edges — apply an `edge` stage first"))
       val edges1 = spec.str("label").fold(edges0)(l => edges0.where(col("label") === l))

@@ -40,7 +40,7 @@ object MultimodalStages {
     * (`payload`) + `media_type` tag — the ingest contract for media.
     * Options: `field` (source column, cast to binary), `mediaType`. */
   def attach(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       val f = spec.strOr("field", "text")
       df.withColumn("payload", col(f).cast("binary"))
         .withColumn("media_type", lit(spec.strOr("mediaType", "image/unknown")))
@@ -61,7 +61,7 @@ object MultimodalStages {
     *    `mm_audio` (WAV + MP3/ADTS frame walks), containers to
     *    `mm_video` (MP4 box parse). */
   def decode(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       val id = spec.strOr("idField", "doc_id")
       val payload = spec.strOr("payloadField", "payload")
       val decoder = spec.strOr("decoder", "image")
@@ -103,7 +103,7 @@ object MultimodalStages {
     * posture). Options: `idField`, `payloadField`, `onUndecodable`.
     * Partition-parallel mapPartitions like every mm_* decode. */
   def textMeta(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       val id = spec.strOr("idField", "doc_id")
       val payload = spec.strOr("payloadField", "payload")
       val skip = spec.strOr("onUndecodable", "error") match {
@@ -134,7 +134,7 @@ object MultimodalStages {
     * (default doc_id), `payloadField` (default payload),
     * `onUndecodable` error|skip. */
   def audio(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       val id = spec.strOr("idField", "doc_id")
       val payload = spec.strOr("payloadField", "payload")
       val skip = spec.strOr("onUndecodable", "error") match {
@@ -165,7 +165,7 @@ object MultimodalStages {
     * exchanges. Options: `idField` (default doc_id), `payloadField`
     * (default payload), `onMissing` skip|null. */
   def exif(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       val id = spec.strOr("idField", "doc_id")
       val payload = spec.strOr("payloadField", "payload")
       val keepMissing = spec.strOr("onMissing", "skip") match {
@@ -200,7 +200,7 @@ object MultimodalStages {
     * are null. Per-row byte parsing — zero exchanges, codegen-adjacent
     * mapPartitions like the other codecs. */
   def id3(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       val id = spec.strOr("idField", "doc_id")
       val payload = spec.strOr("payloadField", "payload")
       val keepMissing = spec.strOr("onMissing", "skip") match {
@@ -233,7 +233,7 @@ object MultimodalStages {
     * mapPartitions — zero exchanges, scales with the corpus. Options:
     * `idField` (default doc_id), `payloadField` (default payload). */
   def pdf(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       val id = spec.strOr("idField", "doc_id")
       val payload = spec.strOr("payloadField", "payload")
       val skip = spec.strOr("onUndecodable", "error") match {
@@ -266,7 +266,7 @@ object MultimodalStages {
     * (idField, image_idx, width, height, filter, image). Options:
     * `idField`, `payloadField`, `onUndecodable` error|skip. */
   def pdfImages(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       val id = spec.strOr("idField", "doc_id")
       val payload = spec.strOr("payloadField", "payload")
       val skip = spec.strOr("onUndecodable", "error") match {
@@ -295,7 +295,7 @@ object MultimodalStages {
     * `onUndecodable` error|skip (skip = crawl posture — one corrupt or
     * non-PDF payload must not kill the job, the pdfextract contract). */
   def pdfMeta(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       val id = spec.strOr("idField", "doc_id")
       val payload = spec.strOr("payloadField", "payload")
       val keepMissing = spec.strOr("onMissing", "skip") match {
@@ -338,7 +338,7 @@ object MultimodalStages {
     * `onUndecodable` error|skip (skip = crawl posture). Per-row byte
     * parsing in mapPartitions — zero exchanges. */
   def docx(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       val id = spec.strOr("idField", "doc_id")
       val payload = spec.strOr("payloadField", "payload")
       val skip = spec.strOr("onUndecodable", "error") match {
@@ -367,7 +367,7 @@ object MultimodalStages {
     * `onUndecodable` error|skip. Per-row byte parsing in
     * mapPartitions — zero exchanges. */
   def rtf(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       val id = spec.strOr("idField", "doc_id")
       val payload = spec.strOr("payloadField", "payload")
       val skip = spec.strOr("onUndecodable", "error") match {
@@ -395,7 +395,7 @@ object MultimodalStages {
     * `idField` (default doc_id), `payloadField` (default payload),
     * `onUndecodable` error|skip. */
   def audioStats(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       val id = spec.strOr("idField", "doc_id")
       val payload = spec.strOr("payloadField", "payload")
       val skip = spec.strOr("onUndecodable", "error") match {
@@ -422,7 +422,7 @@ object MultimodalStages {
     * (default payload), `onUndecodable` error|skip (skip = the 100 TB
     * crawl posture, a corrupt container must not kill the job). */
   def video(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       val id = spec.strOr("idField", "doc_id")
       val payload = spec.strOr("payloadField", "payload")
       val skip = spec.strOr("onUndecodable", "error") match {
@@ -454,7 +454,7 @@ object MultimodalStages {
     * `maxFramesPerVideo` (default 64 — a pathological container must
     * not explode the row count), `onUndecodable` error|skip. */
   def frameSample(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       val id = spec.strOr("idField", "doc_id")
       val payload = spec.strOr("payloadField", "payload")
       val step = spec.int("step", 4)
@@ -495,7 +495,7 @@ object MultimodalStages {
     * error|skip. Scale shape: partition-parallel mapPartitions — the
     * byte-decode seam — emitting only stats, never pixels. */
   def frameDecode(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       val id = spec.strOr("idField", "doc_id")
       val payload = spec.strOr("payloadField", "payload")
       val step = spec.int("step", 4)
@@ -542,7 +542,7 @@ object MultimodalStages {
     * `idField` (default doc_id), `payloadField` (default payload),
     * `out` (default phash), `onUndecodable` error|skip. */
   def phash(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       val id = spec.strOr("idField", "doc_id")
       val payload = spec.strOr("payloadField", "payload")
       val out = spec.strOr("out", "phash")
@@ -580,7 +580,7 @@ object MultimodalStages {
     *    preserves the whole input frame. Set `keepInput: true` to join
     *    the input columns back on `idField`, like `mm_decode`. */
   def resize(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       val mw = spec.int("maxWidth", 224)
       val mh = spec.int("maxHeight", 224)
       if (spec.bool("resample", dflt = false)) {
@@ -609,7 +609,7 @@ object MultimodalStages {
     * (`0, step, 2*step, … < n_frames`), plan-level `posexplode` of a
     * `sequence`. Options: `step` (default 1), `nFramesField`. */
   def frames(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       val step = spec.int("step", 1)
       val nf = col(spec.strOr("nFramesField", "n_frames"))
       df.withColumn("frame_idx",
@@ -634,7 +634,7 @@ object MultimodalStages {
     * pure codegen'd row work, no shuffle; one task per payload
     * partition. */
   def srtParse(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       val fieldName = spec.strOr("field", "text")
       require(df.columns.contains(fieldName), s"srtparse: no column '$fieldName'")
       Seq("cue_idx", "start_ms", "end_ms", "cue_text").foreach(c =>
@@ -693,7 +693,7 @@ object MultimodalStages {
     * Scale shape: identical to srtparse — split + explode + per-block
     * regexp projections, pure codegen'd row work, no shuffle. */
   def vttParse(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       val fieldName = spec.strOr("field", "text")
       require(df.columns.contains(fieldName), s"vttparse: no column '$fieldName'")
       Seq("cue_id", "start_ms", "end_ms", "cue_settings", "cue_text").foreach(c =>

@@ -220,7 +220,7 @@ object SimilarityStages {
     * `queryFilter` applies to the query table BEFORE renaming.
     * Self-exclusion is disabled (ids live in different namespaces). */
   def similarity(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       val id = spec.strOr("idField", "vec_id")
       val vec = spec.strOr("field", "embedding")
       val k = spec.int("k", 10)
@@ -332,7 +332,7 @@ object SimilarityStages {
     * recall. Options: idField/field/k plus `nBits` (default 16) and
     * `bands` (default 4). */
   def similarityLsh(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       graft.functions.VectorExpressions.ensure(ctx.spark)
       val id = spec.strOr("idField", "vec_id")
       val vec = spec.strOr("field", "embedding")
@@ -400,7 +400,7 @@ object SimilarityStages {
     * `similarity` stage's size guard points to when both sides outgrow
     * its broadcast cap. */
   def similarityIvf(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       graft.functions.VectorExpressions.ensure(ctx.spark)
       val id = spec.strOr("idField", "vec_id")
       val vec = spec.strOr("field", "embedding")
@@ -654,7 +654,7 @@ object SimilarityStages {
     * oracle-checkable reference the LSH path's recall is measured
     * against; O(N²) compare, small-N verification only. */
   def cosineDup(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       val id = spec.strOr("idField", "vec_id")
       val vec = spec.strOr("field", "embedding")
       graft.functions.VectorExpressions.ensure(ctx.spark)
@@ -906,7 +906,7 @@ object SimilarityStages {
     * against literal centroids. Deterministic end to end: hash-ordered
     * sample, tie-broken argmax. */
   def kmeans(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       graft.functions.VectorExpressions.ensure(ctx.spark)
       val id = spec.strOr("idField", "vec_id")
       val vec = spec.strOr("field", "embedding")
@@ -948,7 +948,7 @@ object SimilarityStages {
     * Dedup mode runs the same pointer-jumping components as
     * `neardupdedup`. */
   def semanticDedup(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       graft.functions.VectorExpressions.ensure(ctx.spark)
       val id = spec.strOr("idField", "vec_id")
       val vec = spec.strOr("field", "embedding")
@@ -1061,7 +1061,7 @@ object SimilarityStages {
     * Scale shape: a pure per-row codegen'd HOF projection — zero
     * shuffles, k·dim integer multiply-adds per row (spec-locked). */
   def randproject(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       val vec = spec.strOr("field", "embedding")
       val out = spec.strOr("out", "proj")
       val k = spec.int("outDim", 16)
@@ -1098,7 +1098,7 @@ object SimilarityStages {
   }
 
   def quantize(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       val vec = spec.strOr("field", "embedding")
       val qf = spec.strOr("qField", vec + "_q8")
       val sf = spec.strOr("scaleField", vec + "_scale")
@@ -1154,7 +1154,7 @@ object SimilarityStages {
     * `scoreField` (score), `labelField` (label), `k` (default 10),
     * `ndcg` (default false). */
   def retrievalEval(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       val q = spec.strOr("queryField", "query_id")
       val d = spec.strOr("docField", "doc_id")
       val s = spec.strOr("scoreField", "score")

@@ -69,6 +69,9 @@ object PipelineSpec {
 
   def parse(json: String): PipelineSpec = fromNode(mapper.readTree(json))
 
+  def fromNode(root: JsonNode): PipelineSpec =
+    fromMap(toScala(root).asInstanceOf[Map[String, Any]])
+
   /** Legacy component-name aliases used by the reference's SHIPPED
     * config files (resources/config.json, config-jdbc.json) but absent
     * from its own era's factory (`skip` is not in
@@ -110,27 +113,30 @@ object PipelineSpec {
       transformers = transformers, loader = loader)
   }
 
-  def fromNode(root: JsonNode): PipelineSpec = {
-    def section(name: String): Option[JsonNode] = Option(root.get(name))
-    def comps(node: Option[JsonNode]): Seq[ComponentSpec] = node match {
-      case Some(a: ArrayNode) => a.elements().asScala.map(component).toSeq
+  /** The one constructor from parsed config: [[parse]] and [[fromNode]]
+    * come here through `toScala`, and so does the nested `etl` stage's
+    * inline `pipeline` map. Each component is a map with exactly one key;
+    * the legacy aliases are mapped by [[normalize]]. */
+  def fromMap(root: Map[String, Any]): PipelineSpec = {
+    def component(v: Any): ComponentSpec = v match {
+      case m: Map[_, _] if m.size == 1 =>
+        ComponentSpec(m.head._1.toString, m.head._2.asInstanceOf[Map[String, Any]])
+      case other =>
+        throw new IllegalArgumentException(s"component must have exactly one key: $other")
+    }
+    def comps(name: String): Seq[ComponentSpec] = root.get(name) match {
+      case Some(s: Seq[_]) => s.map(component)
       case Some(o) => Seq(component(o))
       case None => Nil
     }
-    def component(node: JsonNode): ComponentSpec = {
-      val fields = node.properties().asScala.toSeq
-      require(fields.size == 1, s"component must have exactly one key: $node")
-      val e = fields.head
-      ComponentSpec(e.getKey, toScala(e.getValue).asInstanceOf[Map[String, Any]])
-    }
     normalize(PipelineSpec(
-      config = section("config").map(toScala(_).asInstanceOf[Map[String, Any]]).getOrElse(Map.empty),
-      begin = comps(section("begin")),
-      source = section("source").map(component),
-      extractor = section("extractor").map(component),
-      transformers = comps(section("transformers")),
-      loader = section("loader").map(component),
-      end = comps(section("end"))))
+      config = root.get("config").map(_.asInstanceOf[Map[String, Any]]).getOrElse(Map.empty),
+      begin = comps("begin"),
+      source = root.get("source").map(component),
+      extractor = root.get("extractor").map(component),
+      transformers = comps("transformers"),
+      loader = root.get("loader").map(component),
+      end = comps("end")))
   }
 
   private def toScala(n: JsonNode): Any = n match {

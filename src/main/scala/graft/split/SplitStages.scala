@@ -31,7 +31,7 @@ object SplitStages {
     * remainder. Output column: `split` (configurable via
     * `outputField`). */
   def datasplit(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       val key = spec.str("keyExpr") match {
         case Some(e) => expr(e)
         case None => col(spec.strOr("keyField", "doc_id"))
@@ -74,7 +74,7 @@ object SplitStages {
     * index), `roleField` (default role). Pure per-row projection —
     * fuses into the scan, zero shuffle. */
   def kfold(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       val k = spec.int("k", 5)
       require(k >= 2, s"kfold: k must be >= 2, got $k")
       require(k <= Buckets, s"kfold: k must be <= $Buckets, got $k")
@@ -110,7 +110,7 @@ object SplitStages {
     * `chunk_offset` (the doc's exclusive token offset within its chunk).
     */
   def pack(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       import org.apache.spark.sql.expressions.Window
       val orderField = spec.strOr("orderField", "doc_id")
       val tokenField = spec.strOr("tokenField", "n_tokens")
@@ -166,7 +166,7 @@ object SplitStages {
     * `localCheckpoint`ed once so the offsets and the numbering job see
     * the SAME sampled boundaries (the pack rule). */
   def rowid(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       import org.apache.spark.sql.expressions.Window
       val orderCols = spec.strOr("orderField", "doc_id")
         .split(",").map(_.trim).filter(_.nonEmpty).toSeq
@@ -207,7 +207,7 @@ object SplitStages {
     * `dropShort: true` drops trailing windows shorter than `minTokens`,
     * default 1). */
   def chunk(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       import org.apache.spark.sql.functions.col
       val id = spec.strOr("idField", "doc_id")
       val f = col(spec.strOr("field", "text"))
@@ -252,7 +252,7 @@ object SplitStages {
     * no shuffle at any corpus size. Chunks are never empty (a group
     * only increments AFTER a word); null/empty text yields no rows. */
   def cdcChunk(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       import org.apache.spark.sql.functions.col
       val id = spec.strOr("idField", "doc_id")
       val f = col(spec.strOr("field", "text"))
@@ -300,7 +300,7 @@ object SplitStages {
     * would hang on engine rounding modes; floor of the same IEEE
     * product is identical everywhere). */
   def hashsample(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       val key = spec.str("keyExpr") match {
         case Some(e) => expr(e)
         case None => col(spec.strOr("keyField", "doc_id"))
@@ -342,7 +342,7 @@ object SplitStages {
     * with in-partition sort — exactly a `SORT BY` plan, no extra
     * passes. */
   def zorder(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       val cols = spec.strList("columns")
       require(cols.length >= 2 && cols.length <= 4,
         s"zorder: `columns` needs 2-4 column names, got ${cols.length}")
@@ -378,7 +378,7 @@ object SplitStages {
     * never on partitioning or data volume — adding data never flips
     * existing rows. Pure per-row projection + filter; no shuffle. */
   def stratifiedSample(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       val strata = col(spec.str("strataField")
         .getOrElse(sys.error("stratifiedsample: strataField required")))
       val key = spec.str("keyExpr") match {
@@ -410,7 +410,7 @@ object SplitStages {
     * preserve the order per output file. Re-shuffle epochs by changing
     * `salt`. */
   def shuffle(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       val key = spec.str("keyExpr") match {
         case Some(e) => expr(e)
         case None => col(spec.strOr("keyField", "doc_id"))
@@ -451,7 +451,7 @@ object SplitStages {
     * one partition; ordering by (md5 hex, key) is prefix-consistent
     * with the bucketing. */
   def mixture(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       val keyField = spec.strOr("keyField", "doc_id")
       val salt = spec.strOr("salt", "")
       val budget = spec.long("budget")
@@ -574,7 +574,7 @@ object SplitStages {
     * cardinality) + a one-row min, both BROADCAST back; the keep
     * decision is a pure per-row projection — no shuffle of the data. */
   def classBalance(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       val cF = spec.str("classField").getOrElse(
         sys.error("classbalance: `classField` required"))
       val key = spec.strOr("keyField", "doc_id")

@@ -46,7 +46,7 @@ object CubeStages {
     * shuffle carries one row per (set, key-combo, task); never a union
     * of per-level jobs. */
   def rollup(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       val keys = spec.strList("keys")
       require(keys.nonEmpty, "rollup: `keys` (list of group columns) required")
       keys.foreach(k => require(df.columns.contains(k), s"rollup: no column '$k'"))
@@ -84,7 +84,7 @@ object CubeStages {
     * groupBy keys; each declared value is a conditional aggregate — no
     * second shuffle, no per-value scan. */
   def pivot(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       val keys = spec.strList("groupBy")
       require(keys.nonEmpty, "pivot: `groupBy` (list of key columns) required")
       val pc = spec.str("pivotColumn").getOrElse(
@@ -118,7 +118,7 @@ object CubeStages {
     * `variableField` (default variable), `valueField` (default
     * value), `keepNulls` (default false). */
   def unpivot(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       val ids = spec.strList("ids")
       val values = spec.strList("values")
       require(ids.nonEmpty, "unpivot: `ids` required")

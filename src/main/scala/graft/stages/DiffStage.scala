@@ -33,7 +33,7 @@ import org.apache.spark.sql.functions._
 object DiffStage {
 
   def tablediff(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       val path = spec.str("baseline").getOrElse(
         sys.error("tablediff: `baseline` (parquet path of the BEFORE snapshot) required"))
       val keys = spec.str("key")

@@ -75,7 +75,7 @@ object ExpectStage {
     * rewrite — still a single shuffle), approx mode keeps the exchange
     * constant-size per column. The result is |columns|·5 rows. */
   def profile(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       val cols0 = spec.strList("columns") match {
         case Nil => df.columns.toSeq
         case l => l
@@ -115,7 +115,7 @@ object ExpectStage {
     }
 
   def expect(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       val rules = spec.list("rules").map {
         case m: Map[_, _] => m.asInstanceOf[Map[String, Any]]
         case other => sys.error(s"expect: each rule must be a map, got $other")

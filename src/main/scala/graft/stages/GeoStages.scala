@@ -57,7 +57,7 @@ object GeoStages {
     * `cellXField`/`cellYField` (default `cell_x`/`cell_y`). Pure
     * per-row projection — no shuffle, no UDF. */
   def geocell(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       val cell = spec.long("cellMicroDeg").getOrElse(
         sys.error("geocell: `cellMicroDeg` required"))
       require(cell > 0, s"geocell: cellMicroDeg must be > 0, got $cell")
@@ -99,7 +99,7 @@ object GeoStages {
     * all-points-one-cell config must surface, not quietly go
     * quadratic. */
   def geojoin(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       val right0 = ctx.tableOrSql(spec.str("right").getOrElse(
         sys.error("geojoin: `right` (table or SELECT) required")))
       val radius = spec.long("radius").getOrElse(

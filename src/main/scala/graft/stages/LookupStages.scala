@@ -2,7 +2,7 @@ package graft.stages
 
 import graft.engine.{EtlContext, EtlHaltException}
 import graft.expr.OrientExpr
-import graft.spec.ComponentSpec
+import graft.spec.{ComponentSpec, PipelineSpec}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -101,7 +101,7 @@ object LookupStages {
     * Use [[upsertResult]] for the post-load table view.
     */
   def merge(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { incoming =>
+    { incoming =>
       val joinField = spec.str("joinFieldName").getOrElse(sys.error("merge: joinFieldName required"))
       val (dim, key) = resolveLookup(ctx, spec.str("lookup").getOrElse(sys.error("merge: lookup required")))
       val action = Unresolved.parse(spec.strOr("unresolvedLinkAction", "NOTHING"))
@@ -148,7 +148,7 @@ object LookupStages {
     * stub dim rows for unresolved keys (id = the key itself) and registers
     * the widened dim back into the context. */
   def link(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       val linkField = spec.str("linkFieldName").getOrElse(sys.error("link: linkFieldName required"))
       val (dim0, key) = resolveLookup(ctx, spec.str("lookup").getOrElse(sys.error("link: lookup required")))
       val action = Unresolved.parse(spec.strOr("unresolvedLinkAction", "NOTHING"))
@@ -237,7 +237,7 @@ object LookupStages {
     * CREATE unions stub target vertices first (:102-114). The input
     * stream passes through unchanged (the reference returns the vertex). */
   def edge(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       val label = spec.strOr("class", "E")
       val joinField = spec.str("joinFieldName").getOrElse(sys.error("edge: joinFieldName required"))
       val (dim, key) = resolveLookup(ctx, spec.str("lookup").getOrElse(sys.error("edge: lookup required")))
@@ -325,7 +325,7 @@ object LookupStages {
     * a driver-side child-plan build, the inherently non-scalable part of
     * the reference's design, surfaced as an explicit bound. */
   def etl(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { parent =>
+    { parent =>
       val fieldName = spec.strOr("fieldName", "children")
       val fieldType = spec.strOr("fieldType", "EMBEDDEDLIST")
       val keyF = spec.strOr("keyFieldName", "")
@@ -335,13 +335,14 @@ object LookupStages {
       if (params.nonEmpty) {
         val inline = spec.map("pipeline")
         require(inline.nonEmpty, "etl: parameters require an inline pipeline")
+        val childSpec = PipelineSpec.fromMap(inline)
         val cap = spec.int("maxParameterTuples", 1000)
         val names = params.keys.toSeq
         val parentTagged = params.foldLeft(parent) { case (d, (k, e)) =>
           d.withColumn(s"__p_$k", OrientExpr.compile(e.toString, ctx.varMap))
         }
         val tupleCols = names.map(n => col(s"__p_$n"))
-        val unioned = lateralParamTuples(ctx, inline, names, parentTagged,
+        val unioned = lateralParamTuples(ctx, childSpec, names, parentTagged,
             tupleCols).getOrElse {
           // per-tuple fallback: one child plan per distinct tuple
           val tuples = parentTagged.select(tupleCols: _*).distinct()
@@ -375,7 +376,7 @@ object LookupStages {
               ctx.vars.foreach { case (k, v) => childCtx.vars.put(k, v) }
               ctx.tables.foreach { case (k, v) => childCtx.tables.put(k, v) }
               names.zipWithIndex.foreach { case (n, i) => childCtx.vars.put(n, row.get(i)) }
-              val child = graft.engine.Engine.runMap(childCtx, inline)
+              val child = graft.engine.Engine.run(childCtx, childSpec)
               names.zipWithIndex.foldLeft(child) { case (d, (n, i)) =>
                 d.withColumn(s"__p_$n", lit(row.get(i)))
               }
@@ -395,7 +396,7 @@ object LookupStages {
           case None =>
             val inline = spec.map("pipeline")
             require(inline.nonEmpty, "etl: childTable or pipeline required")
-            graft.engine.Engine.runMap(ctx, inline)
+            graft.engine.Engine.run(ctx, PipelineSpec.fromMap(inline))
         }
         nestedEtl(parent, child,
           spec.str("joinFieldName").getOrElse(sys.error("etl: joinFieldName required")),
@@ -418,24 +419,16 @@ object LookupStages {
     * per-tuple union produces), or None when the shape doesn't apply
     * (quoted/early params, non-SELECT command, extra command options) —
     * the caller then falls back to the bounded per-tuple build. */
-  private def lateralParamTuples(ctx: EtlContext, inline: Map[String, Any],
+  private def lateralParamTuples(ctx: EtlContext, child: PipelineSpec,
       names: Seq[String], parentTagged: DataFrame,
       tupleCols: Seq[Column]): Option[DataFrame] = {
-    val tList: Seq[Any] = inline.get("transformers") match {
-      case Some(s: Seq[_]) => s
-      case Some(one) => Seq(one)
-      case None => Nil
-    }
-    val lastCmd: Option[Map[String, Any]] = tList.lastOption.flatMap {
-      case m: Map[_, _] if m.size == 1 && m.head._1 == "command" =>
-        Some(m.head._2.asInstanceOf[Map[String, Any]])
-      case _ => None
-    }
+    // the child pipeline up to (not including) its last transformer
+    val pre = child.copy(transformers = child.transformers.dropRight(1))
     def occurs(name: String, text: String): Boolean =
       (raw"\$$\{" + java.util.regex.Pattern.quote(name) + raw"\}|" +
         raw"\$$" + java.util.regex.Pattern.quote(name) + raw"\b").r
         .findFirstIn(text).isDefined
-    lastCmd match {
+    child.transformers.lastOption.filter(_.name == "command").map(_.options) match {
       case Some(cmd) if cmd.keySet.subsetOf(Set("command", "language")) &&
           cmd.get("language").forall(l =>
             Set("sql", "auto").contains(l.toString.toLowerCase)) =>
@@ -447,8 +440,7 @@ object LookupStages {
         // a column reference there would silently become literal text).
         // Both quote styles count: Spark SQL's default parser reads
         // "double-quoted" spans as string literals too
-        val preText = (inline - "transformers").toString + tList.dropRight(1).toString
-        if (names.exists(n => occurs(n, preText))) return None
+        if (names.exists(n => occurs(n, pre.toString))) return None
         val quoted = "'[^']*'|\"[^\"]*\"".r.findAllIn(sql).mkString(" ")
         if (names.exists(n => occurs(n, quoted))) return None
         try {
@@ -456,8 +448,7 @@ object LookupStages {
           childCtx.dryRun = ctx.dryRun
           ctx.vars.foreach { case (k, v) => childCtx.vars.put(k, v) }
           ctx.tables.foreach { case (k, v) => childCtx.tables.put(k, v) }
-          val base = graft.engine.Engine.runMap(childCtx,
-            inline.updated("transformers", tList.dropRight(1)))
+          val base = graft.engine.Engine.run(childCtx, pre)
           val resolved = OrientExpr.resolveString(sql,
             ctx.varMap ++ names.map(n => n -> s"__t.__p_$n"))
           val tupleSel = names.map(n => s"__t.`__p_$n`").mkString(", ")
@@ -525,7 +516,7 @@ object LookupStages {
     * volume; past the bound the stage fails loud with the salt-factor
     * math instead). */
   def skewjoin(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       val right0 = ctx.tableOrSql(spec.str("right").getOrElse(
         sys.error("skewjoin: `right` (table or SELECT) required")))
       val on = spec.str("on").getOrElse(sys.error("skewjoin: `on` key required"))

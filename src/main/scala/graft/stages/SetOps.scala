@@ -34,7 +34,7 @@ object SetOps {
       sys.error(s"${spec.name}: `right` (table or SELECT) required")))
 
   def union(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       val right = rightOf(spec, ctx)
       val u =
         if (spec.bool("byName", dflt = true))
@@ -45,14 +45,14 @@ object SetOps {
     }
 
   def except(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       val right = rightOf(spec, ctx)
       if (spec.bool("all", dflt = false)) df.exceptAll(right)
       else df.except(right)
     }
 
   def intersect(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       val right = rightOf(spec, ctx)
       if (spec.bool("all", dflt = false)) df.intersectAll(right)
       else df.intersect(right)
@@ -78,7 +78,7 @@ object SetOps {
     * semi/anti short-circuit per key (no fan-out). */
   private def keyedExistence(kind: String)(
       spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       import org.apache.spark.sql.functions.col
       val right = rightOf(spec, ctx)
       val (lks, rks) = spec.str("on") match {
@@ -172,7 +172,7 @@ object SetOps {
     * dominates (very wide rows, high match rate), plain [[antijoin]]
     * is the right stage. */
   def bloomjoin(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       import org.apache.spark.sql.functions._
       graft.functions.VectorExpressions.ensure(ctx.spark)
       val right = rightOf(spec, ctx)

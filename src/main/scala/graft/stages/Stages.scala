@@ -16,11 +16,13 @@ import org.apache.spark.sql.types.StructType
   * time pipelining, OETLPipeline.java:107-118, for free and vectorized).
   *
   * Common component semantics reproduced here:
-  *  - `if` predicate: stage skipped for rows where false
-  *    (OAbstractETLComponent.java:453-468) → `when(cond, new).otherwise(old)`
-  *  - `output: "var"`: result captured, input passed through
-  *    (OAbstractTransformer.java:63-75)
+  *  - `if` predicate on `field`/`flow`: stage skipped for rows where
+  *    false (OAbstractETLComponent.java:453-468) →
+  *    `when(cond, new).otherwise(old)`
   *  - null result drops the row (OETLPipeline.java:107-114) → `filter`
+  *
+  * `output` capture and the `if` guard on every other stage belong to
+  * the runner ([[graft.engine.Engine.compile]]), not to the stages.
   */
 object Stages {
 
@@ -30,16 +32,6 @@ object Stages {
     * cross-wire. Once `spark.sql` returns the plan is bound, so the view
     * can be safely replaced by the next pipeline. */
   private[graft] val sqlViewLock = new Object
-
-  /** Wrap a stage body with the `if` / `output` common semantics. */
-  def common(spec: ComponentSpec, ctx: EtlContext)
-            (body: DataFrame => DataFrame): DataFrame => DataFrame = { df =>
-    val transformed = body(df)
-    spec.outputVar match {
-      case Some(v) => ctx.captured.put(v, transformed); df // input passes through
-      case None => transformed
-    }
-  }
 
   def ifCond(spec: ComponentSpec, ctx: EtlContext): Option[Column] =
     spec.ifExpr.map(OrientExpr.compile(_, ctx.varMap))
@@ -74,7 +66,7 @@ object Stages {
   /** `field` (OFieldTransformer.java:64-110): set a field from a dialect
     * expression or literal, or remove it. */
   def field(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    common(spec, ctx) { df =>
+    { df =>
       val name = spec.str("fieldName").getOrElse(sys.error("field: fieldName required"))
       val cond = ifCond(spec, ctx)
       if (spec.strOr("operation", "set").equalsIgnoreCase("remove")) {
@@ -134,7 +126,7 @@ object Stages {
   /** `rename` (ORenameTransformer.java:53-68): `{old: new, …}`. The
     * reserved common component options are NOT rename pairs. */
   def rename(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    common(spec, ctx) { df =>
+    { df =>
       val reserved = Set("if", "output", "log")
       val pairs = spec.options.filter { case (k, v) =>
         v.isInstanceOf[String] && !reserved(k) }
@@ -151,7 +143,7 @@ object Stages {
     * `spark.read.csv` path (Engine.run), which handles headers per
     * file. */
   def csvTransform(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    common(spec, ctx) { df0 =>
+    { df0 =>
       val sep = spec.strOr("separator", ",")
       val header = spec.bool("columnsOnFirstLine", dflt = true)
       val quote = spec.strOr("stringCharacter", "\"")
@@ -289,7 +281,7 @@ object Stages {
 
   /** `json` transformer (OJSONTransformer.java:30-37): string → document. */
   def jsonTransform(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    common(spec, ctx) { df =>
+    { df =>
       val fieldName = spec.strOr("field", "value")
       val schema = spec.str("schema") match {
         case Some(ddl) => StructType.fromDDL(ddl)
@@ -332,7 +324,7 @@ object Stages {
     * `shuffle_replicate_nl`. Result-identical by construction; only the
     * physical plan changes. */
   def hintStage(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    common(spec, ctx) { df =>
+    { df =>
       val name = spec.strOr("name", "broadcast").toLowerCase
       val allowed = Set("broadcast", "merge", "shuffle_hash", "shuffle_replicate_nl")
       require(allowed.contains(name),
@@ -349,7 +341,7 @@ object Stages {
     * this is the knob that turns two shuffles (groupBy after join on
     * the same key) into one. */
   def repartitionStage(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    common(spec, ctx) { df =>
+    { df =>
       val num = spec.long("num").map(_.toInt)
       val by = spec.strOr("by", "").split(",").map(_.trim).filter(_.nonEmpty)
       val useRange = spec.bool("range", dflt = false)
@@ -371,7 +363,7 @@ object Stages {
     }
 
   def flatten(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    common(spec, ctx) { df =>
+    { df =>
       val sep = spec.strOr("separator", "_")
       val maxDepth = spec.int("maxDepth", 10)
       var cur = df
@@ -420,7 +412,7 @@ object Stages {
     * [[graft.engine.EtlContext.drainChecks]] (throughput parity with
     * OETLProcessor.java:545-585 without a per-record println). */
   def log(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    common(spec, ctx) { df =>
+    { df =>
       val prefix = spec.strOr("prefix", "stage")
       val obs = ctx.newObservation(s"log_$prefix")
       ctx.registerCheck(ctx.PendingCheck(obs, "rows", "log", s"[graft log] $prefix"))
@@ -471,7 +463,7 @@ object Stages {
     *    script engine offline, and per-record JS is the RBAR pattern
     *    the Spark design removes). */
   def code(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    common(spec, ctx) { df =>
+    { df =>
       spec.str("ref") match {
         case Some(ref) =>
           // a driver hook is arbitrary code — it may touch the catalog
@@ -1817,7 +1809,7 @@ object Stages {
     * (task, group) instead of every row (a `row_number()` window
     * shuffles and sorts the full input). */
   def topkPerGroup(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    common(spec, ctx) { df =>
+    { df =>
       graft.functions.VectorExpressions.ensure(ctx.spark)
       val keys = spec.strList("groupBy")
       require(keys.nonEmpty, "topkpergroup: groupBy required")
@@ -1854,7 +1846,7 @@ object Stages {
     * [min, max) clamp into the edge buckets. Output (bucket, lo, hi,
     * cnt) for non-empty buckets. */
   def histogram(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    common(spec, ctx) { df =>
+    { df =>
       val f = col(spec.str("field").getOrElse(sys.error("histogram: field required")))
       val lo = spec.str("min").getOrElse(sys.error("histogram: min required")).toDouble
       val hi = spec.str("max").getOrElse(sys.error("histogram: max required")).toDouble
@@ -1881,7 +1873,7 @@ object Stages {
     * subset translator — set-oriented joins over the vertices/edges
     * contract, with a named migration error for richer scripts. */
   def command(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    common(spec, ctx) { df =>
+    { df =>
       val sql = spec.str("command").getOrElse(sys.error("command: command required"))
       val lang = spec.strOr("language", "auto").toLowerCase
       if (lang == "gremlin" || (lang == "auto" && graft.graph.Gremlin.applies(sql)))
@@ -1897,7 +1889,7 @@ object Stages {
   /** `vertex` (OVertexTransformer.java:54-75): promote rows to labeled
     * vertices in the two-DataFrame graph contract. */
   def vertex(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    common(spec, ctx) { df =>
+    { df =>
       // `$var` resolves like in SQL/paths — the shipped config-dbpedia
       // derives the class from a let ({vertex: {class: "$className"}})
       val label = OrientExpr.resolveString(spec.strOr("class", "V"), ctx.varMap)

@@ -42,7 +42,7 @@ object StatStages {
     * division error. One hash agg (map-side combine) + a null-safe key
     * join — never a window over all rows (the StatStages shape). */
   def minMaxScale(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       val fld = spec.str("field").getOrElse(sys.error("minmaxscale: `field` required"))
       require(df.columns.contains(fld), s"minmaxscale: no column '$fld'")
       val keys = spec.str("keyField")
@@ -81,7 +81,7 @@ object StatStages {
     * Scale shape: ONE per-row HOF fold (O(tokens·k) array copies per
     * row — k is small by design); zero shuffles, fuses into the scan. */
   def featureHash(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       val f = spec.strOr("field", "text")
       require(df.columns.contains(f), s"featurehash: no column '$f'")
       val k = spec.int("k", 64)
@@ -121,7 +121,7 @@ object StatStages {
     * Scale shape: distinct + a window over the DISTINCT set (vocabulary-
     * sized, not corpus-sized) + one broadcast-eligible join back. */
   def labelEncode(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       val f = spec.str("field").getOrElse(sys.error("labelencode: `field` required"))
       require(df.columns.contains(f), s"labelencode: no column '$f'")
       val out = spec.strOr("outputField", s"${f}_id")
@@ -192,7 +192,7 @@ object StatStages {
     * (default 12 ≈ 1.6 % relative error), `out` (default "hll_sketch").
     * One hash aggregation with map-side combine. */
   def hllSketch(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       val f = spec.str("field").getOrElse(sys.error("hllsketch: field required"))
       val lgK = spec.int("lgConfigK", 12)
       require(lgK >= 4 && lgK <= 21, s"hllsketch: lgConfigK out of range: $lgK")
@@ -209,7 +209,7 @@ object StatStages {
     * `keepSketch` (default false — true also keeps the merged binary
     * for further rollups). */
   def hllMerge(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       val f = spec.strOr("field", "hll_sketch")
       require(df.columns.contains(f), s"hllmerge: no column '$f'")
       val keys = spec.strOr("groupBy", "").split(",").map(_.trim).filter(_.nonEmpty)
@@ -241,7 +241,7 @@ object StatStages {
     * (comma-separated; absent = one global sketch), `k` (default 200),
     * `out` (default "kll_sketch"). */
   def kllSketch(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       graft.functions.VectorExpressions.ensure(ctx.spark)
       val f = spec.str("field").getOrElse(sys.error("kllsketch: field required"))
       require(df.columns.contains(f), s"kllsketch: no column '$f'")
@@ -266,7 +266,7 @@ object StatStages {
     * `n_values`: the EXACT total stream length (KLL tracks n exactly),
     * so a rollup self-reports its support. */
   def kllMerge(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       graft.functions.VectorExpressions.ensure(ctx.spark)
       val f = spec.strOr("field", "kll_sketch")
       require(df.columns.contains(f), s"kllmerge: no column '$f'")
@@ -307,7 +307,7 @@ object StatStages {
     * `groupBy`, `maxMapSize` (power of two, default 1024), `out`
     * (default "freq_sketch"). */
   def topkSketch(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       graft.functions.VectorExpressions.ensure(ctx.spark)
       val f = spec.str("itemField").getOrElse(
         sys.error("topksketch: itemField required"))
@@ -335,7 +335,7 @@ object StatStages {
     * `groupBy`, `k` (default 0 = all qualifying items), `maxMapSize`
     * (merge-buffer size, default 1024). */
   def topkMerge(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       graft.functions.VectorExpressions.ensure(ctx.spark)
       val f = spec.strOr("field", "freq_sketch")
       require(df.columns.contains(f), s"topkmerge: no column '$f'")
@@ -387,7 +387,7 @@ object StatStages {
     * Scale shape: ONE hash aggregation with map-side combine; the
     * exchange carries (grain, 3 longs). */
   def checksum(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       val keys = spec.strOr("groupBy", "").split(",").map(_.trim).filter(_.nonEmpty)
       keys.foreach(c => require(df.columns.contains(c), s"checksum: no column '$c'"))
       val fields = spec.strList("fields") match {
@@ -419,7 +419,7 @@ object StatStages {
     * the whole-table checksum (mod is additive-compatible). Options:
     * `groupBy` (coarser keys; absent = one global row). */
   def checksumMerge(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       Seq("n_rows", "xor64", "sum_mod").foreach(c => require(
         df.columns.contains(c), s"checksummerge: no column '$c' — input " +
         "must be a checksum grain table"))
@@ -455,7 +455,7 @@ object StatStages {
     * GROUP VALUE in executor memory — bounded-cardinality groups
     * only; a 100 TB unbounded-group profile belongs to `approx`. */
   def quantiles(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       val fld = spec.str("field").getOrElse(sys.error("quantiles: `field` required"))
       require(df.columns.contains(fld), s"quantiles: no column '$fld'")
       require(df.schema(fld).dataType.isInstanceOf[NumericType],
@@ -506,7 +506,7 @@ object StatStages {
     * `keyField` (optional, comma-separated), `outputField` (default
     * `<field>_bin`). */
   def quantileBin(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       val fld = spec.str("field").getOrElse(sys.error("quantilebin: `field` required"))
       require(df.columns.contains(fld), s"quantilebin: no column '$fld'")
       require(df.schema(fld).dataType.isInstanceOf[NumericType],
@@ -550,7 +550,7 @@ object StatStages {
     * join back on the group keys (broadcast — group-cardinality rows),
     * then a per-row projection. Never a window over all rows. */
   def winsorize(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       val fld = spec.str("field").getOrElse(sys.error("winsorize: `field` required"))
       require(df.columns.contains(fld), s"winsorize: no column '$fld'")
       require(df.schema(fld).dataType.isInstanceOf[NumericType],
@@ -614,7 +614,7 @@ object StatStages {
     * Floating inputs use plain double sums (documented: last-ulp
     * variation under re-partitioning, like every parallel float sum). */
   def zscore(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       val fld = spec.str("field").getOrElse(sys.error("zscore: `field` required"))
       require(df.columns.contains(fld), s"zscore: no column '$fld'")
       val keys = spec.str("keyField")
@@ -708,7 +708,7 @@ object StatStages {
     * Options: `field` (required, numeric), `strategy` mean|median|
     * constant (default mean), `value`, `keyField`, `outputField`. */
   def impute(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       val fld = spec.str("field").getOrElse(sys.error("impute: `field` required"))
       require(df.columns.contains(fld), s"impute: no column '$fld'")
       require(df.schema(fld).dataType.isInstanceOf[NumericType],
@@ -770,7 +770,7 @@ object StatStages {
     * Options: `xField`, `yField` (required), `groupBy`. Output:
     * (group keys…, n, r, slope, intercept). */
   def correlate(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       val xF = spec.str("xField").getOrElse(sys.error("correlate: xField required"))
       val yF = spec.str("yField").getOrElse(sys.error("correlate: yField required"))
       // Same integral contract as impute's mean strategy: the exact-sum
@@ -836,7 +836,7 @@ object StatStages {
     * (tuple, long) frame; AQE broadcasts when the tuple space is
     * small. Never a window over every row. */
   def kAnonymity(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       val fields = spec.strList("fields")
       require(fields.nonEmpty, "kanonymity: `fields` (quasi-identifier columns) required")
       fields.foreach(f =>
@@ -906,7 +906,7 @@ object StatStages {
     * quasi key — the same shape as kanonymity. Envelope: exact while
     * c_gv·n fits a long. */
   def tCloseness(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       val fields = spec.strList("fields")
       require(fields.nonEmpty, "tcloseness: `fields` (quasi columns) required")
       fields.foreach(f =>
@@ -988,7 +988,7 @@ object StatStages {
     * total broadcast back (class cardinality is small by problem
     * shape). Joins are null-safe; features/classes may be null. */
   def chiSquare(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       val fF = spec.strOr("featureField", "feature")
       val cF = spec.strOr("classField", "class")
       Seq(fF, cF).foreach(f =>
@@ -1043,7 +1043,7 @@ object StatStages {
     * projection — the vocabulary ships in the plan, no join, no
     * shuffle. */
   def oneHot(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       val f = spec.str("field").getOrElse(sys.error("onehot: `field` required"))
       require(df.columns.contains(f), s"onehot: no column '$f'")
       val prefix = spec.strOr("prefix", f)
@@ -1097,7 +1097,7 @@ object StatStages {
     * Scale shape (grouped): ONE keyed window — exchange on the group
     * hash, per-partition sort, rank streamed. */
   def percentRank(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       val f = spec.str("field").getOrElse(sys.error("percentrank: `field` required"))
       require(df.columns.contains(f), s"percentrank: no column '$f'")
       val groupCols = spec.strList("groupBy")
@@ -1175,7 +1175,7 @@ object StatStages {
     * Scale shape: ONE hash aggregation with map-side combine; the CI
     * arithmetic is a projection over the group-count frame. */
   def proportions(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       val sF = spec.str("successField").getOrElse(
         sys.error("proportions: `successField` required"))
       require(df.columns.contains(sF), s"proportions: no column '$sF'")
@@ -1228,7 +1228,7 @@ object StatStages {
     * and join back group-keyed (broadcast when global); the closing
     * per-group aggregation runs over the same small frame. */
   def entropy(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       val fieldName = spec.str("field").getOrElse(
         sys.error("entropy: `field` required"))
       require(df.columns.contains(fieldName), s"entropy: no column '$fieldName'")
@@ -1274,7 +1274,7 @@ object StatStages {
     * a null-safe key join back (broadcast when keyless) — the
     * StatStages shape, never a window over rows. */
   def robustScale(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       val fld = spec.str("field").getOrElse(
         sys.error("robustscale: `field` required"))
       require(df.columns.contains(fld), s"robustscale: no column '$fld'")
@@ -1330,7 +1330,7 @@ object StatStages {
     * (group, value) counts, then a group-keyed re-aggregation of that
     * vocabulary-sized frame; no joins back to the data. */
   def gini(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       val fieldName = spec.str("field").getOrElse(
         sys.error("gini: `field` required"))
       require(df.columns.contains(fieldName), s"gini: no column '$fieldName'")
@@ -1371,7 +1371,7 @@ object StatStages {
     * ride a key join; class marginals and the total are tiny and
     * BROADCAST. Nothing joins back to the raw rows. */
   def mutualInfo(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       val fF = spec.str("featureField").getOrElse(
         sys.error("mutualinfo: `featureField` required"))
       val cF = spec.str("classField").getOrElse(
@@ -1439,7 +1439,7 @@ object StatStages {
     * broadcasts. Null baskets/items are observations of nothing — they
     * are dropped (documented, not silent: a null item cannot pair). */
   def freqPairs(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       val bF = spec.str("basketField").getOrElse(
         sys.error("freqpairs: `basketField` required"))
       val iF = spec.str("itemField").getOrElse(
@@ -1513,7 +1513,7 @@ object StatStages {
     * Scale shape: ONE hash aggregation with map-side combine; metrics
     * are projections over the group-count frame. */
   def regressionEval(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       val lF = spec.str("labelField").getOrElse(
         sys.error("regressioneval: `labelField` required"))
       val pF = spec.str("predField").getOrElse(
@@ -1565,7 +1565,7 @@ object StatStages {
     *
     * Scale shape: ONE hash aggregation to ≤ `bins` rows. */
   def calibration(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       val sF = spec.str("scoreField").getOrElse(
         sys.error("calibration: `scoreField` required"))
       val lF = spec.str("labelField").getOrElse(
@@ -1631,7 +1631,7 @@ object StatStages {
     * Scale shape: ONE hash aggregation to the variant table
     * (arm-cardinality), the control row broadcast back as one row. */
   def abTest(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       val vF = spec.str("variantField").getOrElse(
         sys.error("abtest: `variantField` required"))
       val sF = spec.str("successField").getOrElse(
@@ -1699,7 +1699,7 @@ object StatStages {
     * (≤ maxTimes rows per group, guarded — never over subject rows).
     * Subjects shuffle once, as counts. */
   def survival(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       val tF = spec.str("timeField").getOrElse(
         sys.error("survival: `timeField` required"))
       val eF = spec.str("eventField").getOrElse(
@@ -1776,7 +1776,7 @@ object StatStages {
     *
     * Options: `against` (table name or SELECT, required). */
   def schemaDiff(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       val right = ctx.tableOrSql(spec.str("against").getOrElse(
         sys.error("schemadiff: `against` (table or SELECT) required")))
       val l = df.schema.map(f => f.name -> f).toMap
@@ -1821,7 +1821,7 @@ object StatStages {
     * Scale shape: a pure per-row projection (the splits ship in the
     * plan as literals) — no shuffle, no aggregation. */
   def bucketize(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       val f = spec.str("field").getOrElse(sys.error("bucketize: `field` required"))
       require(df.columns.contains(f), s"bucketize: no column '$f'")
       require(Set[DataType](LongType, IntegerType, ShortType, ByteType)
@@ -1864,7 +1864,7 @@ object StatStages {
     * Scale shape: ONE hash aggregation to ≤ 9 rows per group; group
     * totals re-aggregate that frame. */
   def benford(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       val f = spec.str("field").getOrElse(sys.error("benford: `field` required"))
       require(df.columns.contains(f), s"benford: no column '$f'")
       require(Set[DataType](LongType, IntegerType, ShortType, ByteType)
@@ -1927,7 +1927,7 @@ object StatStages {
     * 256-bucket pattern (no global window); the closing combine is a
     * group-sized aggregation. */
   def concentration(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       val key = spec.str("keyField").getOrElse(
         sys.error("concentration: `keyField` required"))
       require(df.columns.contains(key), s"concentration: no column '$key'")
@@ -2016,7 +2016,7 @@ object StatStages {
     * never sort through one partition; the closing arg-max is ONE
     * struct-max aggregation. */
   def ksTest(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       val f = spec.str("field").getOrElse(sys.error("kstest: `field` required"))
       require(df.columns.contains(f), s"kstest: no column '$f'")
       require(Set[DataType](LongType, IntegerType, ShortType, ByteType)
@@ -2098,7 +2098,7 @@ object StatStages {
     * re-aggregate the JOINED frame (so both are exact over the same
     * rows) and broadcast back as one row. Nothing rejoins the data. */
   def drift(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       val f = spec.str("field").getOrElse(sys.error("drift: `field` required"))
       require(df.columns.contains(f), s"drift: no column '$f'")
       val base0 = ctx.tableOrSql(spec.str("against").getOrElse(
@@ -2159,7 +2159,7 @@ object StatStages {
     * output) full-outer-joined on the class value; no windows, no
     * per-row comparison matrix. */
   def classifyEval(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       val lF = spec.str("labelField").getOrElse(
         sys.error("classifyeval: `labelField` required"))
       val pF = spec.str("predField").getOrElse(
@@ -2225,7 +2225,7 @@ object StatStages {
     * window is PARTITIONED by (group, bucket) — distinct scores never
     * sort through one partition, keyless or not. */
   def auc(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       val sF = spec.str("scoreField").getOrElse(
         sys.error("auc: `scoreField` required"))
       val lF = spec.str("labelField").getOrElse(
@@ -2332,7 +2332,7 @@ object StatStages {
     * the category frame BROADCASTS back onto the rows (null-safe key)
     * — no shuffle of the data side, no windows. */
   def targetEncode(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       val f = spec.str("field").getOrElse(
         sys.error("targetencode: `field` required"))
       val tF = spec.str("targetField").getOrElse(

@@ -13,9 +13,11 @@ import org.apache.spark.sql.types.StructType
   *
   * Design: the batch transformers are `DataFrame => DataFrame`, and most
   * are stream-safe as-is (field/rename/json/flow-skip/csv/textstats/
-  * langid/fingerprint/mm_*…), so a streaming pipeline reuses the SAME
-  * registry — `readStream` in, `writeStream` out, with the
-  * streaming-specific stages:
+  * langid/fingerprint/mm_*…), so a streaming pipeline compiles through
+  * the SAME runner and registry as a batch one
+  * ([[graft.engine.Engine.compile]]) — `readStream` in, `writeStream`
+  * out. The streaming-specific stages, registered in
+  * [[graft.engine.Engine.transformers]] like every other:
   *  - `window_agg`: event-time windowed aggregation with a watermark;
   *  - `sessionize`: gap-based sessions via `flatMapGroupsWithState`
   *    (custom state — the operator Spark's built-ins can't express);
@@ -112,12 +114,20 @@ object Streaming {
     }.load(path)
   }
 
+  /** The stream-only stages' one guard: their watermark and state
+    * contract has no meaning on a bounded frame (a watermark is a no-op
+    * there), so a batch input fails by name. */
+  private def requireStream(stage: String, df: DataFrame): Unit =
+    if (!df.isStreaming) sys.error(s"$stage: stream-only stage, but its input is a " +
+      "batch frame — read a `stream` source and run the pipeline with Streaming.run")
+
   /** `window_agg`: watermarked event-time windowed aggregation.
     * Options: `tsField`, `watermark` ("10 minutes"), `window`
     * ("5 minutes"), optional `slide`, `groupBy` (extra keys), `aggs`
     * (["count", "sum:value", "avg:value", …]). Output: window start/end +
     * keys + aggregates. */
   def windowAgg(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame = { df =>
+    requireStream("window_agg", df)
     val ts = spec.strOr("tsField", "ts")
     val wm = spec.strOr("watermark", "10 minutes")
     val win = spec.strOr("window", "5 minutes")
@@ -248,6 +258,7 @@ object Streaming {
     * partitions, and Catalyst cannot prune columns through a sink that
     * materializes them). */
   def streamDedup(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame = { df =>
+    requireStream("stream_dedup", df)
     val keys = spec.strList("keyFields")
     require(keys.nonEmpty, "stream_dedup: keyFields required")
     val ts = spec.strOr("tsField", "ts")
@@ -289,6 +300,7 @@ object Streaming {
     * is one (long, long) per active key; the in-batch sort buffers one
     * key's batch slice (capped loud). */
   def streamThrottle(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame = { df =>
+    requireStream("stream_throttle", df)
     val keyF = spec.strOr("keyField", "user_id")
     val tsF = spec.strOr("tsField", "ts")
     val tieF = spec.str("tieField").getOrElse(
@@ -396,6 +408,7 @@ object Streaming {
     * arrival rate (watermark eviction), and the pre-state projection
     * keeps stored rows narrow. */
   def streamJoin(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame = { df =>
+    requireStream("stream_join", df)
     val rightMap = spec.options.get("right") match {
       case Some(m: Map[_, _]) => m.asInstanceOf[Map[String, Any]]
       case _ => sys.error("stream_join: `right` (nested stream source map) required")
@@ -454,12 +467,22 @@ object Streaming {
       .drop((keys.map(k => s"__r_$k") :+ "__r_ts"): _*)
   }
 
-  /** Run a streaming pipeline spec: `stream` source → registered
-    * transformers (+ the streaming stages) → `streamsink` loader.
-    * Returns the started query; callers manage its lifecycle. */
+  /** Run a streaming pipeline spec: [[graft.engine.Engine.compile]] (the
+    * batch runner's config variables, `let`/`console`/`code` begin
+    * blocks, `onBegin`, `stream` source and transformers) plus
+    * [[startSink]] for the `streamsink` loader. `end` blocks and `dryRun`
+    * fail by name before anything runs: a started stream has no end
+    * moment, and a dry run would still start the query. Returns the
+    * started query; callers manage its lifecycle. */
   def run(ctx: EtlContext, spec: PipelineSpec): StreamingQuery = {
     val src = spec.source.getOrElse(sys.error("streaming: source required"))
     require(src.name == "stream", "streaming: source must be {stream: {...}}")
+    val sink = spec.loader.getOrElse(sys.error("streaming: loader required"))
+    require(sink.name == "streamsink", "streaming: loader must be {streamsink: {...}}")
+    if (spec.end.nonEmpty) sys.error("streaming: `end` blocks are not supported " +
+      "— a started stream has no end moment; run them after stopping the query")
+    if (Engine.configFlag(spec, "dryRun")) sys.error("streaming: `dryRun` is not " +
+      "supported — Streaming.run always starts the query and writes its sink")
     // `shufflePartitions` (stream source option): stateful operators
     // create one state store per shuffle partition, each paying its own
     // checkpoint commit per micro-batch — the partition count should
@@ -482,10 +505,9 @@ object Streaming {
         () => ctx.spark.conf.set(key, prev)
       }
       try {
-        val telemetry = spec.config.get("telemetry").exists(v =>
-          v == true || v.toString.equalsIgnoreCase("true"))
-        if (!telemetry) runInner(ctx, spec, src)
-        else withBatchTelemetry(ctx)(runInner(ctx, spec, src))
+        def start() = startSink(ctx, Engine.compile(ctx, spec, dryRun = false)(identity), sink)
+        if (!Engine.configFlag(spec, "telemetry")) start()
+        else withBatchTelemetry(ctx)(start())
       }
       finally restoreConf.foreach(_.apply())
     }
@@ -550,26 +572,6 @@ object Streaming {
       if (cur != null) cur
       else { val o = new Object; confLocks.put(s, o); o }
     }
-
-  private def runInner(ctx: EtlContext, spec: PipelineSpec,
-                       src: ComponentSpec): StreamingQuery = {
-    var df = readStream(ctx, src)
-    for (t <- spec.transformers) {
-      val fn = t.name match {
-        case "window_agg" => windowAgg(t, ctx)
-        case "sessionize" => sessionize(t, ctx)
-        case "stream_dedup" => streamDedup(t, ctx)
-        case "stream_throttle" => streamThrottle(t, ctx)
-        case "stream_join" => streamJoin(t, ctx)
-        case other => Engine.transformers.getOrElse(other,
-          sys.error(s"unknown transformer $other"))(t, ctx)
-      }
-      df = fn(df)
-    }
-    val sink = spec.loader.getOrElse(sys.error("streaming: loader required"))
-    require(sink.name == "streamsink", "streaming: loader must be {streamsink: {...}}")
-    startSink(ctx, df, sink)
-  }
 
   /** Start the `streamsink` writer: memory (named table), parquet dir,
     * console, or `upsert` (continuous MERGE: each micro-batch is applied

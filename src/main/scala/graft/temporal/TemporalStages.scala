@@ -86,7 +86,7 @@ object TemporalStages {
     * pre-aggregate the right side when that matters, as DuckDB's ASOF
     * leaves the same tie unspecified). */
   def asofJoin(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       val right = ctx.tableOrSql(spec.str("right")
         .getOrElse(sys.error("asofjoin: `right` (table or SELECT) required")))
       val keys = spec.str("on").map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
@@ -217,6 +217,13 @@ object TemporalStages {
       filled.select(df.columns.map(col).toSeq ++ attached: _*)
     }
 
+  /** `sessionize`: [[sessionizeBatch]] on a batch frame, the stateful
+    * [[graft.streaming.Streaming.sessionize]] on a stream; both emit
+    * (key, session_start, session_end, n_events). */
+  def sessionize(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame = df =>
+    (if (df.isStreaming) graft.streaming.Streaming.sessionize(spec, ctx)
+     else sessionizeBatch(spec, ctx))(df)
+
   /** `sessionize` (batch): gap-based sessions per key — the batch twin
     * of the streaming `sessionize` (graft.streaming.Streaming), over
     * the same contract: a new session starts when the gap to the
@@ -233,7 +240,7 @@ object TemporalStages {
     * row, never a session buffer. Per-key volume bounds the sort task
     * (as in any keyed sessionization). */
   def sessionizeBatch(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       val key = spec.strOr("keyField", "user_id")
       val ts = spec.strOr("tsField", "ts")
       val gapMs = spec.long("gapMs").getOrElse(30L * 60 * 1000)
@@ -267,7 +274,7 @@ object TemporalStages {
     * RANGE frame is a sliding two-pointer over the sorted run (Spark's
     * bounded-frame window), state = the in-frame rows of one key. */
   def rolling(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       val key = spec.strOr("keyField", "user_id")
       val ts = spec.strOr("tsField", "ts")
       val winSec = spec.str("window").map(_.toDouble)
@@ -301,7 +308,7 @@ object TemporalStages {
     * `tieField` (optional), `valueFields` (optional list of numeric
     * columns). */
   def delta(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       val key = spec.strOr("keyField", "user_id")
       val ts = spec.strOr("tsField", "ts")
       val tsUs = epochMicros(df, ts)
@@ -336,7 +343,7 @@ object TemporalStages {
     * decision — running sums are order-defined, so unlike [[graft.stages.LookupStages.skewjoin]]
     * there is no transparent salt that preserves semantics). */
   def cumulate(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       val key = spec.strOr("keyField", "user_id")
       val ts = spec.strOr("tsField", "ts")
       val tsUs = epochMicros(df, ts)
@@ -364,7 +371,7 @@ object TemporalStages {
     *
     * Scale shape: pure per-row codegen'd projection — no shuffle. */
   def dateFeatures(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df0 =>
+    { df0 =>
       val f = spec.strOr("field", "ts")
       require(df0.columns.contains(f), s"datefeatures: no column '$f'")
       val df = graft.sources.Tables.normalizeTs(df0, f)
@@ -412,7 +419,7 @@ object TemporalStages {
     * sort_array then fixes the order inside the bounded list, + ONE
     * count aggregation over path strings. No global sort. */
   def eventPaths(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       val key = spec.strOr("keyField", "user_id")
       val ts = spec.strOr("tsField", "ts")
       val state = spec.str("stateField").getOrElse(
@@ -459,7 +466,7 @@ object TemporalStages {
     * exchange + one per-partition sort regardless of how many
     * lag/lead steps are requested. */
   def lagFeatures(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       val key = spec.strOr("keyField", "user_id")
       val ts = spec.strOr("tsField", "ts")
       val fields = spec.strList("valueFields")
@@ -515,7 +522,7 @@ object TemporalStages {
     * frame) + a per-row fold of ≤ `window` elements — no global sort,
     * no unbounded per-key state. */
   def ewma(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       val f = spec.str("field").getOrElse(sys.error("ewma: `field` required"))
       require(df.columns.contains(f), s"ewma: no column '$f'")
       require(df.schema(f).dataType.isInstanceOf[NumericType],
@@ -564,7 +571,7 @@ object TemporalStages {
     * Scale shape: ONE keyed window (lag + running change count) + ONE
     * hash aggregation on (key, run) — no per-key buffering. */
   def runLength(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       val key = spec.strOr("keyField", "user_id")
       val ts = spec.strOr("tsField", "ts")
       val st = spec.str("stateField").getOrElse(
@@ -611,7 +618,7 @@ object TemporalStages {
     * stacking explodes the AGGREGATED frame (key-cardinality), never
     * the events. */
   def autocorr(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       val key = spec.strOr("keyField", "user_id")
       val ts = spec.strOr("tsField", "ts")
       val vF = spec.str("valueField").getOrElse(
@@ -690,7 +697,7 @@ object TemporalStages {
     * events + group totals joined back null-safely + ONE struct-max
     * aggregation — no per-key buffering, no second pass. */
   def changepoint(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       val key = spec.strOr("keyField", "user_id")
       val ts = spec.strOr("tsField", "ts")
       val vF = spec.str("valueField").getOrElse(
@@ -757,7 +764,7 @@ object TemporalStages {
     * null-safely. State spaces are small by problem shape — the join
     * broadcasts under AQE. */
   def transitions(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       val key = spec.strOr("keyField", "user_id")
       val ts = spec.strOr("tsField", "ts")
       val state = spec.str("stateField").getOrElse(
@@ -809,7 +816,7 @@ object TemporalStages {
     * (key, 3 timestamps) frames, never a per-key sort of the full
     * event history and never a window over unbounded state. */
   def funnel(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       val key = spec.strOr("keyField", "user_id")
       val ts = spec.strOr("tsField", "ts")
       val typ = spec.strOr("typeField", "event_type")
@@ -859,7 +866,7 @@ object TemporalStages {
     * triples, never event payloads; the final per-(cohort, period)
     * count is a trivially small aggregate. */
   def cohortRetention(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       val key = spec.strOr("keyField", "user_id")
       val ts = spec.strOr("tsField", "ts")
       val period = spec.strOr("period", "week")
@@ -928,7 +935,7 @@ object TemporalStages {
     * and one keyed window for the fill — every step keyed, nothing
     * driver-side, no per-row subqueries. */
   def resample(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       val ts = spec.strOr("tsField", "ts")
       val keys = spec.str("keyField")
         .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq).getOrElse(Nil)
@@ -1089,7 +1096,7 @@ object TemporalStages {
     * interval length: much smaller multiplies interval copies, much
     * larger multiplies false candidates per bin. */
   def rangeJoin(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       val right = ctx.tableOrSql(spec.str("right")
         .getOrElse(sys.error("rangejoin: `right` (table or SELECT) required")))
       val lt = spec.strOr("leftTime", "ts")
@@ -1207,7 +1214,7 @@ object TemporalStages {
     * both sides cover by definition, so every pair surfaces exactly
     * once with no post-dedup distinct. */
   def intervalJoin(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       val right = ctx.tableOrSql(spec.str("right")
         .getOrElse(sys.error("intervaljoin: `right` (table or SELECT) required")))
       val lsC = spec.strOr("leftStart", "start")

@@ -67,7 +67,7 @@ import org.apache.spark.sql.functions._
 object FuzzyJoinStage {
 
   def fuzzyjoin(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       val fld = spec.str("field").getOrElse(sys.error("fuzzyjoin: `field` required"))
       val id = spec.strOr("idField", "doc_id")
       val d = spec.int("maxDistance", 2)

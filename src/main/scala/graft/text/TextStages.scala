@@ -28,7 +28,7 @@ object TextStages {
   /** `textstats`: length / token / quality statistics.
     * Options: `field` (default "text"), `keepInput` (default true). */
   def textstats(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       val f = col(spec.strOr("field", "text"))
       val toks = tokens(f)
       val stop = Stopwords.map(lit(_))
@@ -70,7 +70,7 @@ object TextStages {
     * Output: input + `n_words`, `n_sentences`, `n_syllables`,
     * `flesch_score`. */
   def readability(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       val f = col(spec.strOr("field", "text"))
       val p = spec.strOr("outputPrefix", "")
       val toks = tokens(f)
@@ -102,7 +102,7 @@ object TextStages {
     * `minAvgTokenLen`/`maxAvgTokenLen`. Pure filter — pushes into the
     * scan when the stats columns fold to scan-level expressions. */
   def qualityFilter(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       val f = col(spec.strOr("field", "text"))
       val toks = tokens(f)
       val nToks = size(toks).cast("double")
@@ -149,7 +149,7 @@ object TextStages {
     * tokenizer — fuses into the scan, zero shuffle at any corpus
     * size. */
   def gopherFilter(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       val f = col(spec.strOr("field", "text"))
       def dbl(k: String, dflt: Double) = spec.str(k).map(_.toDouble).getOrElse(dflt)
       val words = tokens(f)
@@ -215,7 +215,7 @@ object TextStages {
     * deterministically. Pure per-row regex projection — fuses into the
     * scan. */
   def piiMask(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       val f = spec.strOr("field", "text")
       require(df.columns.contains(f), s"piimask: no column '$f'")
       val wanted = spec.strList("entities") match {
@@ -246,7 +246,7 @@ object TextStages {
     * `outputField` (default: overwrite). One codegen'd expression,
     * pure per-row projection. */
   def wikitext(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       graft.functions.VectorExpressions.ensure(ctx.spark)
       val f = spec.strOr("field", "text")
       require(df.columns.contains(f), s"wikitext: no column '$f'")
@@ -263,7 +263,7 @@ object TextStages {
     * when set, also emits boolean `compress_keep` (ratio >= minRatio).
     * One codegen'd expression, pure per-row projection. */
   def compressRatio(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       graft.functions.VectorExpressions.ensure(ctx.spark)
       val f = spec.strOr("field", "text")
       require(df.columns.contains(f), s"compressratio: no column '$f'")
@@ -309,7 +309,7 @@ object TextStages {
     * the plan as a literal array (lists are thousands of words, not
     * data); no shuffle, no join. */
   def wordFilter(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       val fieldName = spec.strOr("field", "text")
       require(df.columns.contains(fieldName), s"wordfilter: no column '$fieldName'")
       val words = spec.strList("words")
@@ -350,7 +350,7 @@ object TextStages {
     * Scale shape: per-row HOF filter against a plan-shipped literal
     * array — no shuffle, no join. */
   def stopwordsStage(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       val fieldName = spec.strOr("field", "text")
       require(df.columns.contains(fieldName), s"stopwords: no column '$fieldName'")
       val words = spec.strList("words") match {
@@ -383,7 +383,7 @@ object TextStages {
     * projection/generator, no shuffle; match counts bound the fan-out
     * and the pattern ships in the plan. */
   def regexExtract(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       val fieldName = spec.strOr("field", "text")
       require(df.columns.contains(fieldName), s"regexextract: no column '$fieldName'")
       val pattern = spec.str("pattern").getOrElse(
@@ -406,7 +406,7 @@ object TextStages {
     }
 
   def c4Filter(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       val fieldName = spec.strOr("field", "text")
       require(df.columns.contains(fieldName), s"c4filter: no column '$fieldName'")
       val f = col(fieldName)
@@ -449,7 +449,7 @@ object TextStages {
     * per-row projection, fuses into the scan, no UDF, no broadcast.
     * Output column: `lang_pred`. */
   def langid(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       graft.functions.VectorExpressions.ensure(ctx.spark)
       df.withColumn("lang_pred",
         graft.functions.VectorExpressions.langId(col(spec.strOr("field", "text"))))
@@ -459,7 +459,7 @@ object TextStages {
     * units via `regexp_extract_all`, the classic pre-tokenizer regex
     * shape. Output: `n_bpeish_tokens` (+ `ws_tokens` whitespace count). */
   def tokenize(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       val f = col(spec.strOr("field", "text"))
       df.withColumn("n_ws_tokens", size(tokens(f)))
         .withColumn("n_bpeish_tokens",
@@ -483,7 +483,7 @@ object TextStages {
     * bpe_tokens; also emits `n_<outputField>`), `numMerges` (default
     * 200), `trainRows` (default 512). */
   def bpe(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       graft.functions.VectorExpressions.ensure(ctx.spark)
       val fieldName = spec.strOr("field", "text")
       val outField = spec.strOr("outputField", "bpe_tokens")
@@ -541,7 +541,7 @@ object TextStages {
     * One codegen'd native expression ([[graft.functions.UnicodeNorm]]):
     * pure per-row projection, fuses into the scan. */
   def normalizetext(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       graft.functions.VectorExpressions.ensure(ctx.spark)
       val f = spec.strOr("field", "text")
       require(df.columns.contains(f), s"normalizetext: no column '$f'")
@@ -563,7 +563,7 @@ object TextStages {
     * Patterns should stick to the regex subset shared by Java and RE2
     * (no backrefs/lookbehind) so results stay oracle-portable. */
   def regexReplace(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       val fieldName = spec.strOr("field", "text")
       val pats = spec.list("patterns").map {
         case m: Map[_, _] =>
@@ -587,7 +587,7 @@ object TextStages {
     * shuffle: a token-explode groupBy would shuffle the entire corpus'
     * token stream at 100 TB; this fuses into the scan). */
   def repetition(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       val f = col(spec.strOr("field", "text"))
       val toks = tokens(f)
       val nToks = size(toks).cast("double")
@@ -636,7 +636,7 @@ object TextStages {
     * line was boilerplate keeps an empty string. No driver collect, no
     * window over the corpus. */
   def boilerplate(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       val field = spec.strOr("field", "text")
       val idF = spec.strOr("idField", "doc_id")
       val minDocs = spec.int("minDocs", 10)
@@ -726,7 +726,7 @@ object TextStages {
     * totalN/sketchSize (asserted in specs); counts are always exact for
     * returned rows. */
   def ngramCount(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       val f = col(spec.strOr("field", "text"))
       val n = spec.int("n", 3)
       val k = spec.int("k", 50)
@@ -788,7 +788,7 @@ object TextStages {
     * under the filter. Output: id + `sent_idx` + `sentence` (trimmed).
     * Pure projection + explode — no shuffle. */
   def sentenceSplit(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       val id = spec.strOr("idField", "doc_id")
       val f = col(spec.strOr("field", "text"))
       val sents = regexp_extract_all(f, lit("[^.!?]+[.!?]*"), lit(0))
@@ -818,7 +818,7 @@ object TextStages {
     * (default true). Output: id + `term` + `tf` + `df` + `score` +
     * `term_rank`. */
   def tfidf(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       import org.apache.spark.sql.expressions.Window
       val id = spec.strOr("idField", "doc_id")
       val f0 = col(spec.strOr("field", "text"))
@@ -879,7 +879,7 @@ object TextStages {
     * K highest-weight docs exactly (TakeOrdered over (weight desc, id
     * asc) — ids and weights only, never a global sort of the rows). */
   def dsirWeight(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       val id = spec.strOr("idField", "doc_id")
       val fName = spec.strOr("field", "text")
       val lc = spec.bool("lowercase", dflt = true)
@@ -947,7 +947,7 @@ object TextStages {
     * ≥ threshold — the purity filter), `expectScript` (keep docs whose
     * dominant script equals the name, e.g. LATIN). */
   def scriptMix(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       graft.functions.VectorExpressions.ensure(ctx.spark)
       val f = spec.strOr("field", "text")
       require(df.columns.contains(f), s"scriptmix: no column '$f'")
@@ -1012,7 +1012,7 @@ object TextStages {
     * nb_label; also emits `<outputField>_bits`, the winning score),
     * `saveModel` / `loadModel` (parquet paths). */
   def nbClassify(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       val id = spec.strOr("idField", "doc_id")
       val fName = spec.strOr("field", "text")
       val lc = spec.bool("lowercase", dflt = true)
@@ -1138,7 +1138,7 @@ object TextStages {
     * bigram mode swaps the 1-row total for the prefix-count join —
     * same shape, one extra vocabulary-keyed join. */
   def tokenInfo(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       val id = spec.strOr("idField", "doc_id")
       val f0 = col(spec.strOr("field", "text"))
       val f = if (spec.bool("lowercase", dflt = true)) lower(f0) else f0
@@ -1254,7 +1254,7 @@ object TextStages {
     * combine) → vocabulary-sized frames; ONE full-outer join on the
     * token; one-row combine. Documents never pair. */
   def vocabOverlap(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       val f = spec.strOr("field", "text")
       require(df.columns.contains(f), s"vocaboverlap: no column '$f'")
       val base0 = ctx.tableOrSql(spec.str("against").getOrElse(
@@ -1323,7 +1323,7 @@ object TextStages {
     * join back vocabulary-keyed; the grand total broadcasts as one
     * row. */
   def collocations(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       val f0 = col(spec.strOr("field", "text"))
       val f = if (spec.bool("lowercase", dflt = true)) lower(f0) else f0
       val minCount = spec.long("minCount").getOrElse(5L)
@@ -1420,7 +1420,7 @@ object TextStages {
     * `orderBy.limit` = TakeOrdered (per-partition heaps + driver merge
     * of k), never a single-partition global sort. */
   def bm25(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       import org.apache.spark.sql.expressions.Window
       val id = spec.strOr("idField", "doc_id")
       val f0 = col(spec.strOr("field", "text"))
@@ -1492,7 +1492,7 @@ object TextStages {
     * `approximate: true` switches to `approx_percentile` (KLL-style
     * constant-memory sketch, rank error 1/accuracy) for those. */
   def corpusstats(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       val fName = spec.str("field").getOrElse(sys.error("corpusstats: field required"))
       val f = col(fName)
       val qs = spec.strList("quantiles") match {
@@ -1541,7 +1541,7 @@ object TextStages {
     * shuffles every unique value; the HLL shuffles ~kilobytes per task).
     * Output: one row, one `<col>_distinct` column per input. */
   def distinctCount(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       val fields = spec.strList("fields") match {
         case Nil => spec.str("field").toSeq
         case l => l
@@ -1563,7 +1563,7 @@ object TextStages {
     * checkable) and `fp_xx` (xxhash64 — the cheap 64-bit rolling-hash
     * analogue used for grouping at scale). */
   def fingerprint(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       val f = col(spec.strOr("field", "text"))
       val norm = regexp_replace(lower(f), "\\s+", " ")
       df.withColumn("fp_md5", md5(norm.cast("binary")))

@@ -129,7 +129,7 @@ object WebStages {
     *    corpus is full of malformed URLs; don't half-normalize them).
     * Options: `field` (default url), `out` (default url_norm). */
   def urlnormalize(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       val f = spec.strOr("field", "url")
       val out = spec.strOr("out", "url_norm")
       require(df.columns.contains(f), s"urlnormalize: no column '$f'")
@@ -177,7 +177,7 @@ object WebStages {
     * native expression per requested output — fuses into the scan's
     * whole-stage-codegen pass, zero shuffle, no UDF boxing. */
   def htmlextract(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       graft.functions.VectorExpressions.ensure(ctx.spark)
       val f = spec.strOr("field", "html")
       require(df.columns.contains(f), s"htmlextract: no column '$f'")
@@ -206,7 +206,7 @@ object WebStages {
     * Options: `field` (default html), `outputField` (default
     * markdown), `keepHtml` (default false). */
   def htmlmarkdown(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       graft.functions.VectorExpressions.ensure(ctx.spark)
       val f = spec.strOr("field", "html")
       require(df.columns.contains(f), s"htmlmarkdown: no column '$f'")
@@ -227,7 +227,7 @@ object WebStages {
     * restore; whitespace collapses). Options: `field` (default tex),
     * `outputField` (default text), `keepSource` (default false). */
   def latexstrip(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       graft.functions.VectorExpressions.ensure(ctx.spark)
       val f = spec.strOr("field", "tex")
       require(df.columns.contains(f), s"latexstrip: no column '$f'")
@@ -249,7 +249,7 @@ object WebStages {
     * literal, whitespace collapses). Options: `field` (default md),
     * `outputField` (default text), `keepSource` (default false). */
   def markdownstrip(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       graft.functions.VectorExpressions.ensure(ctx.spark)
       val f = spec.strOr("field", "md")
       require(df.columns.contains(f), s"markdownstrip: no column '$f'")
@@ -273,7 +273,7 @@ object WebStages {
     * `outputField` (default text), `charsetField` (default charset),
     * `keepBinary` (default false). */
   def decodetext(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       graft.functions.VectorExpressions.ensure(ctx.spark)
       val f = spec.strOr("field", "body")
       require(df.columns.contains(f), s"decodetext: no column '$f'")
@@ -314,7 +314,7 @@ object WebStages {
     * per-row flatMap that fuses into the scan; zero shuffle, link rows
     * never hold the page bytes unless `keepHtml`. */
   def htmllinks(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       graft.functions.VectorExpressions.ensure(ctx.spark)
       val f = spec.strOr("field", "html")
       require(df.columns.contains(f), s"htmllinks: no column '$f'")
@@ -358,7 +358,7 @@ object WebStages {
     * Scale shape: ONE codegen'd single-pass parse per row feeding pure
     * array projections — no shuffle, no explode. */
   def htmlmeta(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       graft.functions.VectorExpressions.ensure(ctx.spark)
       val f = spec.strOr("field", "html")
       require(df.columns.contains(f), s"htmlmeta: no column '$f'")
@@ -405,7 +405,7 @@ object WebStages {
     * `cellsField` (defaults table_idx/row_idx/cells), `keepHtml`
     * (default false), `emptyPages` drop|keep. */
   def htmltables(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       graft.functions.VectorExpressions.ensure(ctx.spark)
       val f = spec.strOr("field", "html")
       require(df.columns.contains(f), s"htmltables: no column '$f'")
@@ -456,7 +456,7 @@ object WebStages {
     * bounded segment fold (paths are dozens of segments; the
     * per-element array append is quadratic ONLY in that tiny bound). */
   def urlresolve(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       val baseF = spec.strOr("baseField", "base_url")
       val refF = spec.strOr("refField", "href")
       val out = spec.strOr("outputField", "resolved_url")
@@ -493,7 +493,7 @@ object WebStages {
     }
 
   def urlparse(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       val field = spec.strOr("field", "url")
       val prefix = spec.strOr("prefix", "url_")
       val parts = spec.strList("parts") match {
@@ -517,7 +517,7 @@ object WebStages {
     * refuses >100k entries and names that migration). Per-row
     * projection, no shuffle. */
   def urlfilter(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       val f = spec.strOr("field", "url")
       require(df.columns.contains(f), s"urlfilter: no column '$f'")
       val domains = spec.strList("blockDomains").map(_.toLowerCase)
@@ -561,7 +561,7 @@ object WebStages {
     * broadcast-eligible) + a codegen'd per-row verdict with a
     * per-executor parse cache (bodies repeat per host, rows per page). */
   def robotsfilter(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       graft.functions.VectorExpressions.ensure(ctx.spark)
       val f = spec.strOr("field", "url")
       require(df.columns.contains(f), s"robotsfilter: no column '$f'")
@@ -619,7 +619,7 @@ object WebStages {
     * and non-null (asserted in specs; threshold mode excludes
     * null-order rows from quota selection, window ranks them first). */
   def groupcap(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
-    Stages.common(spec, ctx) { df =>
+    { df =>
       val group = spec.str("groupField")
         .getOrElse(sys.error("groupcap: groupField required"))
       val order = spec.str("orderField")

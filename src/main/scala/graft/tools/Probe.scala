@@ -69,7 +69,7 @@ object Probe {
           meter.warm(dir)
           if (mode == "time") {
             val c = meter.canarySeconds()
-            val anchor = Bench.loadAnchors(Bench.sfKey(dir)).get(Bench.CanaryKey)
+            val anchor = Bench.loadAnchors(Bench.anchorKey(dir, spark)).get(Bench.CanaryKey)
             println(f"_canary min=$c%.3f s (bench anchor ${anchor.getOrElse(Double.NaN)}%.3f s " +
               f"=> window ratio ${anchor.fold(Double.NaN)(c / _)}%.2fx)")
           }

@@ -205,6 +205,23 @@ class EngineSpec extends SparkSpec {
     }""")
     assert(!out.columns.contains("extra"))          // input passed through
     assert(ctx.captured("sideline").columns.contains("extra"))
+    // the runner owns `output` for every stage (flow had no capture) and
+    // rejects `if` on a stage that would silently ignore it
+    def run(transformer: String, c: graft.engine.EtlContext = newCtx()) =
+      Engine.runJson(c, s"""{
+        "source": { "file": { "path": "$path" } },
+        "extractor": { "csv": { "columns": ["n_nationkey:integer", "n_name:string", "n_regionkey:integer"] } },
+        "transformers": [ $transformer ],
+        "loader": { "memory": {} }
+      }""")
+    val ctx2 = newCtx()
+    assert(run("""{ "flow": { "operation": "skip", "if": "n_nationkey > 3", "output": "kept" } }""",
+      ctx2).count() == 25)
+    assert(ctx2.captured("kept").count() == 4)
+    val e = intercept[RuntimeException](
+      run("""{ "rename": { "n_name": "name", "if": "n_nationkey > 3" } }"""))
+    assert(e.getMessage.startsWith("rename: `if` is honoured only by field and flow"),
+      e.getMessage)
   }
 
   test("skipFirst/skipLast on file source (documented intent)") {

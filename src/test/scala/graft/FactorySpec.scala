@@ -4,8 +4,9 @@ import graft.functions.{NativeFunctions, VectorExpressions}
 import org.apache.spark.sql.{AnalysisException, SparkSession}
 import scala.jdk.CollectionConverters._
 
-/** One session factory ([[graft.engine.Engine.session]]) and one native
-  * function table ([[NativeFunctions]]) behind both registration paths. */
+/** One session factory ([[graft.engine.Engine.session]]), one native
+  * function table ([[NativeFunctions]]) behind both registration paths,
+  * and one pipeline runner for batch and stream. */
 class FactorySpec extends SparkSpec {
 
   /** A session whose native functions come from `ensure()`: a new
@@ -30,6 +31,27 @@ class FactorySpec extends SparkSpec {
     // the specs pass only their master; partitions follow its core count
     assert(spark.sparkContext.master == "local[4]")
     assert(spark.conf.get("spark.sql.shuffle.partitions") == "4")
+  }
+
+  private def mainSources: Map[String, String] =
+    java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala")).iterator.asScala
+      .filter(_.toString.endsWith(".scala"))
+      .map(p => p.toString -> java.nio.file.Files.readString(p)).toMap
+  private def hitsIn(sources: Map[String, String], re: scala.util.matching.Regex) =
+    sources.map { case (p, src) => p -> re.findAllIn(src).size }.filter(_._2 > 0)
+
+  test("one transformer loop: Engine is the only pipeline runner in src/main") {
+    val src = mainSources
+    // the one registry lookup that raises the unknown-stage error
+    assert(hitsIn(src, "unknown transformer".r) ==
+      Map("src/main/scala/graft/engine/Engine.scala" -> 1))
+    // every other registry read is a dev tool calling one named stage
+    val lookups = hitsIn(src, """Engine\s*\.\s*transformers\s*(\(|\.get)""".r)
+    assert(lookups.keys.forall(_.startsWith("src/main/scala/graft/tools/")), lookups)
+    // the runner owns `output`: no per-stage wrapper is left
+    assert(hitsIn(src, """\bcommon\s*\(""".r).isEmpty)
+    // stream stages live in the registry, not in a private match
+    assert(hitsIn(src, "case\\s+\"(window_agg|sessionize|stream_dedup|stream_throttle|stream_join)\"".r).isEmpty)
   }
 
   test("ensure() registers exactly what a session lacks, in every session") {

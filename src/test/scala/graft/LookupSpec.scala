@@ -279,6 +279,27 @@ class LookupSpec extends SparkSpec {
     assert(lateral == perTupleDq)
   }
 
+  test("etl inline pipeline parses like a top-level config: `skip` alias, one-key components") {
+    val ctx = newCtx()
+    def run(transformers: List[Map[String, Any]]) = LookupStages.etl(ComponentSpec("etl", Map(
+      "pipeline" -> Map(
+        "source" -> Map("file" -> Map("path" -> s"$sfDir/nation.parquet")),
+        "extractor" -> Map("parquet" -> Map.empty[String, Any]),
+        "transformers" -> transformers),
+      "joinFieldName" -> "r_regionkey", "childJoinFieldName" -> "n_regionkey",
+      "fieldName" -> "nk", "fieldType" -> "EMBEDDEDLIST",
+      "valueFieldName" -> "n_nationkey")), ctx)(ctx.table("region"))
+    val kept = run(List(Map("skip" -> Map("expression" -> "n_nationkey >= 5"))))
+      .select("nk").collect().toSeq
+      .flatMap(r => Option(r.getSeq[Any](0)).toSeq.flatten.map(_.toString.toLong))
+    assert(kept.sorted == Seq(0L, 1L, 2L, 3L, 4L))
+    // a component map with two keys is a config error, never dropped
+    val e = intercept[IllegalArgumentException](run(List(
+      Map("skip" -> Map("expression" -> "n_nationkey >= 5"),
+        "rename" -> Map("n_name" -> "name")))))
+    assert(e.getMessage.contains("exactly one key"), e.getMessage)
+  }
+
   test("etl parameters: empty parent (zero tuples) yields empty output, not a crash") {
     val ctx = newCtx()
     // quoted param forces the per-tuple path, whose tuple collect sees

@@ -1,5 +1,6 @@
 package graft
 
+import graft.engine.{Engine, EtlContext, EtlListener}
 import graft.spec.{ComponentSpec, PipelineSpec}
 import graft.streaming.Streaming
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -7,7 +8,8 @@ import org.apache.spark.sql.functions._
 import java.sql.Timestamp
 
 /** Structured Streaming extension: windowed agg with watermark, gap
-  * sessionization via flatMapGroupsWithState, file-stream pipeline. */
+  * sessionization via flatMapGroupsWithState, file-stream pipeline, and
+  * stream configs through the batch runner's compile step. */
 class StreamingSpec extends SparkSpec {
   import spark.implicits._
 
@@ -393,5 +395,124 @@ class StreamingSpec extends SparkSpec {
     assert(intercept[Exception](Streaming.streamThrottle(ComponentSpec(
       "stream_throttle", Map("tieField" -> "eid")), newCtx())(df))
       .getMessage.contains("maxPerWindow"))
+  }
+
+  /** A parquet dir of (id, value, ts) rows, id 2 twice, for the runner
+    * legs below. */
+  private def idValueDir(prefix: String): String = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix).toString
+    Seq((1L, 1.0, ts(0)), (2L, 5.0, ts(1)), (2L, 5.0, ts(1)), (3L, 9.0, ts(2)))
+      .toDF("id", "value", "ts").write.mode("overwrite").parquet(dir)
+    dir
+  }
+  private def streamConfig(dir: String, sections: String): PipelineSpec =
+    PipelineSpec.parse(s"""{ $sections
+      "source": { "stream": { "path": "$dir", "format": "parquet",
+                              "schema": "id BIGINT, value DOUBLE, ts TIMESTAMP" } } }""")
+  private def phases(ctx: EtlContext): scala.collection.mutable.ArrayBuffer[String] = {
+    val events = scala.collection.mutable.ArrayBuffer.empty[String]
+    ctx.addListener(new EtlListener {
+      override def onBegin(c: EtlContext): Unit = events += "begin"
+      override def onLoaded(c: EtlContext, s: Option[EtlContext.RunStats]): Unit =
+        events += "loaded"
+      override def onEnd(c: EtlContext): Unit = events += "end"
+    })
+    events
+  }
+
+  test("stream runner: config variables and let begin blocks resolve before the query starts; onBegin fires") {
+    val ctx = newCtx()
+    val events = phases(ctx)
+    val q = Streaming.run(ctx, streamConfig(idValueDir("graft_stream_vars"), """
+      "config": { "base": 10 },
+      "begin": [ { "let": { "name": "bump", "expression": "$base + 1" } } ],
+      "transformers": [ { "field": { "fieldName": "bumped", "expression": "value + $bump" } } ],
+      "loader": { "streamsink": { "format": "memory", "name": "stream_vars_out",
+                                  "trigger": "availableNow" } },"""))
+    try {
+      q.awaitTermination()
+      val got = spark.table("stream_vars_out").select("id", "bumped")
+        .as[(Long, Double)].collect().toSet
+      assert(got == Set((1L, 12.0), (2L, 16.0), (3L, 20.0)), got.toString)
+    } finally q.stop()
+    assert(events.toSeq == Seq("begin"))
+  }
+
+  test("stream runner: end blocks and dryRun fail by name before anything starts") {
+    var fired = 0
+    Engine.registerCode("stream_side_effect")(df => { fired += 1; df })
+    val dir = idValueDir("graft_stream_loud")
+    val out = java.nio.file.Files.createTempDirectory("graft_stream_loud_out").toString
+    val sink = s""""loader": { "streamsink": { "format": "parquet", "path": "$out/t",
+      "checkpoint": "$out/cp", "trigger": "availableNow" } },"""
+    val begin = """"begin": [ { "code": { "ref": "stream_side_effect" } } ],"""
+    val active = spark.streams.active.length
+    val ctx = newCtx()
+    val events = phases(ctx)
+    val end = intercept[RuntimeException](Streaming.run(ctx, streamConfig(dir,
+      begin + sink + """"end": [ { "let": { "name": "x", "value": 1 } } ],""")))
+    assert(end.getMessage.contains("`end` blocks"), end.getMessage)
+    val dry = intercept[RuntimeException](Streaming.run(ctx, streamConfig(dir,
+      begin + sink + """"config": { "dryRun": true },""")))
+    assert(dry.getMessage.contains("`dryRun`"), dry.getMessage)
+    assert(fired == 0 && events.isEmpty, "nothing may run before the loud failure")
+    assert(spark.streams.active.length == active, "no query may be left running")
+    assert(!new java.io.File(s"$out/t").exists, "the sink must not be written")
+  }
+
+  test("stream runner: `output` on a stream stage captures its result, input passes through") {
+    val ctx = newCtx()
+    val q = Streaming.run(ctx, streamConfig(idValueDir("graft_stream_output"), """
+      "transformers": [ { "stream_dedup": { "keyFields": ["id"], "tsField": "ts",
+                                            "watermark": "1 minute", "output": "deduped" } } ],
+      "loader": { "streamsink": { "format": "memory", "name": "stream_output_all",
+                                  "trigger": "availableNow" } },"""))
+    try {
+      q.awaitTermination()
+      assert(spark.table("stream_output_all").count() == 4)
+    } finally q.stop()
+    val deduped = ctx.captured("deduped")
+    assert(deduped.isStreaming)
+    val q2 = deduped.writeStream.format("memory").queryName("stream_output_dedup")
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+    try {
+      q2.awaitTermination()
+      assert(spark.table("stream_output_dedup").select("id").as[Long]
+        .collect().sorted.toSeq == Seq(1L, 2L, 3L))
+    } finally q2.stop()
+  }
+
+  test("sessionize through the registry: batch frame and stream, one output schema") {
+    val spec = ComponentSpec("sessionize", Map("keyField" -> "user_id",
+      "tsField" -> "ts", "gapMs" -> (5 * 60 * 1000)))
+    val sessionize = Engine.transformers("sessionize")
+    val batch = sessionize(spec, newCtx())(
+      Seq(("u1", ts(0)), ("u1", ts(2)), ("u1", ts(20))).toDF("user_id", "ts"))
+    assert(!batch.isStreaming)
+    assert(batch.as[(String, Timestamp, Timestamp, Long)].collect().sortBy(_._2.getTime)
+      .toSeq == Seq(("u1", ts(0), ts(2), 2L), ("u1", ts(20), ts(20), 1L)))
+    implicit val sqlCtx = spark.sqlContext
+    val stream = sessionize(spec, newCtx())(
+      MemoryStream[(String, Timestamp)].toDF().toDF("user_id", "ts"))
+    assert(stream.queryExecution.logical.treeString.contains("FlatMapGroupsWithState"),
+      "a stream must get the stateful form")
+    assert(stream.schema.map(f => f.name -> f.dataType) ==
+      batch.schema.map(f => f.name -> f.dataType))
+  }
+
+  test("stream-only stages on a batch frame fail by name") {
+    val batch = Seq((1L, ts(0))).toDF("id", "ts")
+    for (name <- Seq("window_agg", "stream_dedup", "stream_throttle", "stream_join")) {
+      val e = intercept[RuntimeException](
+        Engine.transformers(name)(ComponentSpec(name, Map.empty), newCtx())(batch))
+      assert(e.getMessage.startsWith(s"$name: stream-only stage"), e.getMessage)
+    }
+    // through the batch runner as well
+    val e = intercept[RuntimeException](Engine.runJson(newCtx(), s"""{
+      "source": { "file": { "path": "$sfDir/events.parquet" } },
+      "extractor": { "parquet": {} },
+      "transformers": [ { "window_agg": { "tsField": "ts" } } ],
+      "loader": { "memory": {} } }"""))
+    assert(e.getMessage.startsWith("window_agg: stream-only stage"), e.getMessage)
   }
 }
