@@ -48,22 +48,6 @@ object Loaders {
     }
   }
 
-  /** File-based MERGE — the reference's save-or-update per record
-    * (OOrientDBLoader.java:164-177) without a transactional store:
-    * existing table ⟕ incoming on `key` (last-wins per key within the
-    * batch, untouched rows preserved), rewritten through a staging dir
-    * so the source files are never read and overwritten in the same
-    * job, then swapped in with renames through the Hadoop `FileSystem`
-    * API — works on any Hadoop filesystem (local, HDFS; object stores
-    * without atomic rename get a copy-rename from their connector, with
-    * the same recoverability). The swap keeps a recoverable copy through
-    * the window: target → `.old`, staging → target, then delete `.old` —
-    * a crash mid-swap leaves either the old or the new table on disk,
-    * never neither, and the next run restores a stranded `.old` before
-    * reading (so the crash window cannot silently drop prior rows).
-    * At real scale the same merge plan targets a
-    * transactional table format; this is the plain-filesystem
-    * equivalent. */
   /** SCD Type-2 history config — the nested `scd2` object on an upsert
     * loader turns the last-wins merge into a VERSIONED history merge:
     * the table keeps every value a key ever held, as
@@ -298,6 +282,22 @@ object Loaders {
     }
   }
 
+  /** File-based MERGE — the reference's save-or-update per record
+    * (OOrientDBLoader.java:164-177) without a transactional store:
+    * existing table ⟕ incoming on `key` (last-wins per key within the
+    * batch, untouched rows preserved), rewritten through a staging dir
+    * so the source files are never read and overwritten in the same
+    * job, then swapped in with renames through the Hadoop `FileSystem`
+    * API — works on any Hadoop filesystem (local, HDFS; object stores
+    * without atomic rename get a copy-rename from their connector, with
+    * the same recoverability). The swap keeps a recoverable copy through
+    * the window: target → `.old`, staging → target, then delete `.old` —
+    * a crash mid-swap leaves either the old or the new table on disk,
+    * never neither, and the next run restores a stranded `.old` before
+    * reading (so the crash window cannot silently drop prior rows).
+    * At real scale the same merge plan targets a
+    * transactional table format; this is the plain-filesystem
+    * equivalent. */
   private def upsertParquet(ctx: EtlContext, spec: ComponentSpec,
                             df: DataFrame, path: String): Boolean = {
     val key = spec.str("key").getOrElse(sys.error("parquet loader: upsert requires key"))
@@ -767,9 +767,6 @@ object Loaders {
       case m: Map[_, _] => m.asInstanceOf[Map[String, Any]]
     }
 
-  /** Run the sink. Returns true when a terminal ACTION executed (so the
-    * engine can collect deferred observe checks — EtlContext.drainChecks);
-    * `memory` only registers the plan and returns false. */
   /** The names [[load]] dispatches on — dryRun validates against this
     * set (and the per-format required options below) without acting. */
   val KnownLoaders: Set[String] = Set("output", "memory", "parquet", "orc",
@@ -790,6 +787,9 @@ object Loaders {
     ()
   }
 
+  /** Run the sink. Returns true when a terminal ACTION executed (so the
+    * engine can collect deferred observe checks — EtlContext.drainChecks);
+    * `memory` only registers the plan and returns false. */
   def load(ctx: EtlContext, spec: ComponentSpec, df0: DataFrame): Boolean = {
     val vars = ctx.varMap
     // `quarantinePath` (any loader): the badRecordsPath pattern — rows a

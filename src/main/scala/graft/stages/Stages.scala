@@ -7,6 +7,7 @@ import graft.spec.ComponentSpec
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
+import scala.util.matching.Regex
 
 /** Row-wise transformer stages (SURVEY.md §2.3).
   *
@@ -456,12 +457,16 @@ object Stages {
     *  - `ref: "name"` — a Scala DataFrame=>DataFrame hook registered in
     *    [[graft.engine.Engine.registerCode]]
     *  - legacy JavaScript configs (the reference's default engine,
-    *    OCommandScript): a MIGRATION SHIM translates the trivial
-    *    `record.x = expr;` assignment form to the dialect-expression
-    *    path; anything richer fails with a message naming the supported
-    *    forms (full JS is out of parity scope, SURVEY.md §7.4 — no
-    *    script engine offline, and per-record JS is the RBAR pattern
-    *    the Spark design removes). */
+    *    OCommandScript): a MIGRATION SHIM ([[jsShim]]) compiles the
+    *    script to Columns once per run — `record.x = expr;`
+    *    assignments, `var` locals, compound ops, `if`/`else if`/`else`
+    *    guarded assignments, `switch`, literal-bounded `for`/`for…of`/
+    *    `while` loops, `function` macros, object-literal namespaces,
+    *    template and regex literals, ternaries, `Math.*` and JS
+    *    string/array methods. Anything else fails with a message naming
+    *    the supported forms (full JS is out of parity scope, SURVEY.md
+    *    §7.4 — no script engine offline, and per-record JS is the RBAR
+    *    pattern the Spark design removes). */
   def code(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
     { df =>
       spec.str("ref") match {
@@ -532,48 +537,111 @@ object Stages {
     }
   }
 
-  /** ONE literal scanner for every JS-shim text pass: segments of `s`
-    * tagged `isLiteral` (single/double-quoted; a backslash inside a
-    * literal escapes the next char — the JS escape, so `'it\'s'` is one
-    * literal). An unterminated literal runs to the end of the string. */
-  private[graft] def jsLiteralSpans(s: String): Seq[(String, Boolean)] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[(String, Boolean)]
-    val cur = new StringBuilder
-    var quote: Char = 0
-    var escaped = false
-    def flush(lit: Boolean): Unit =
-      if (cur.nonEmpty) { out += ((cur.toString, lit)); cur.clear() }
-    s.foreach { c =>
-      if (quote != 0) {
-        cur.append(c)
-        if (escaped) escaped = false
-        else if (c == '\\') escaped = true
-        else if (c == quote) { quote = 0; flush(lit = true) }
-      } else if (c == '\'' || c == '"') {
-        flush(lit = false); quote = c; cur.append(c)
-      } else cur.append(c)
+  /** The ONE literal and bracket scanner behind every JS-shim text pass.
+    * A single walk over `text` records, per offset:
+    *  - whether it sits inside a `'…'`, `"…"` or `` `…` `` literal — a
+    *    backslash inside a literal escapes the next char (the JS escape,
+    *    so `'it\'s'` is one literal), and an unterminated literal runs to
+    *    the end of the text;
+    *  - the offset closing each `(`, `[` or `{` outside literals — a
+    *    closer that does not match the innermost open bracket is skipped,
+    *    and an opener left open has no close (−1);
+    *  - its bracket depth (a bracket sits at the depth outside it), so
+    *    offsets at depth 0 outside every literal are top-level.
+    * Lookups read the recorded arrays and never rescan. */
+  private[graft] final class JsScan(val text: String) {
+    private val n = text.length
+    private val litOpen = Array.fill(n)(-1) // opening quote of the enclosing literal
+    private val depth = new Array[Int](n)
+    private val close = Array.fill(n)(-1)
+    locally {
+      val open = scala.collection.mutable.ArrayBuffer.empty[Int]
+      var quote: Char = 0
+      var escaped = false
+      var start = -1
+      for (i <- 0 until n) {
+        val c = text.charAt(i)
+        if (quote != 0) {
+          litOpen(i) = start
+          if (escaped) escaped = false
+          else if (c == '\\') escaped = true
+          else if (c == quote) quote = 0
+        } else c match {
+          case '\'' | '"' | '`' => quote = c; start = i; litOpen(i) = i
+          case '(' | '[' | '{' => depth(i) = open.length; open += i
+          case ')' | ']' | '}' if open.nonEmpty &&
+              text.charAt(open.last) == "([{".charAt(")]}".indexOf(c)) =>
+            close(open.last) = i; open.dropRightInPlace(1); depth(i) = open.length
+          case _ => depth(i) = open.length
+        }
+      }
     }
-    flush(lit = quote != 0)
-    out.toSeq
+    def inLiteral(i: Int): Boolean = litOpen(i) >= 0
+    /** Is `i` the quote that opens a literal? */
+    def opensLiteral(i: Int): Boolean = litOpen(i) == i
+    /** The offset closing the bracket at `i`; −1 when unbalanced. */
+    def closing(i: Int): Int = close(i)
+    def topLevel(i: Int): Boolean = litOpen(i) < 0 && depth(i) == 0
+    /** Matches of `re` that start outside every literal. */
+    def outside(re: Regex): Iterator[Regex.Match] =
+      re.findAllMatchIn(text).filter(m => !inLiteral(m.start))
+    /** Maximal runs of `text`, each tagged `isLiteral`. */
+    def spans: Seq[(String, Boolean)] = if (n == 0) Nil else {
+      val cuts = (1 until n).filter(i => inLiteral(i) != inLiteral(i - 1))
+      (0 +: cuts).zip(cuts :+ n).map { case (a, b) => text.substring(a, b) -> inLiteral(a) }
+    }
+    /** The pieces between `sep` chars outside literals (top-level ones
+      * only, unless `anyDepth`), trimmed, empty pieces dropped. */
+    def split(sep: Char, anyDepth: Boolean = false): List[String] = {
+      val cuts = (0 until n).filter(i => text.charAt(i) == sep &&
+        !inLiteral(i) && (anyDepth || depth(i) == 0))
+      (-1 +: cuts).zip(cuts :+ n).map { case (a, b) => text.substring(a + 1, b).trim }
+        .filter(_.nonEmpty).toList
+    }
+  }
+
+  /** The first match of `re` in `s` outside every literal. */
+  private def jsFirstOutside(s: String, re: Regex): Option[Regex.Match] =
+    new JsScan(s).outside(re).nextOption()
+
+  /** The ONE bounded rewrite loop of the JS-shim passes: each round hands
+    * the first `head` match outside every literal, with the text's scan,
+    * to `splice`, whose `(end, replacement)` replaces the text from the
+    * match start to `end`; the loop ends when no head is left. A head in
+    * a literal is data and never masks a real one further on. Round
+    * `cap + 1` fails with `capMsg` — the pass is nested too deep (or
+    * recursive) to expand. */
+  private def jsRewriteAll(code: String, head: Regex, cap: Int, capMsg: String)(
+      splice: (JsScan, Regex.Match) => (Int, String)): String = {
+    @annotation.tailrec def round(cur: String, k: Int): String = {
+      require(k <= cap, capMsg)
+      val scan = new JsScan(cur)
+      scan.outside(head).nextOption() match {
+        case None => cur
+        case Some(m) =>
+          val (end, repl) = splice(scan, m)
+          round(cur.substring(0, m.start) + repl + cur.substring(end), k + 1)
+      }
+    }
+    round(code, 1)
   }
 
   /** Apply `f` to the regions of `s` OUTSIDE string literals — '&&' in
     * a literal is DATA, and a local name inside a literal must not
     * inline. */
   private def outsideJsLiterals(s: String)(f: String => String): String =
-    jsLiteralSpans(s).map { case (seg, lit) => if (lit) seg else f(seg) }.mkString
+    new JsScan(s).spans.map { case (seg, lit) => if (lit) seg else f(seg) }.mkString
 
   /** `s` with its string literals removed — for guards that must not
     * trip on words inside literal data. */
   private def withoutJsLiterals(s: String): String =
-    jsLiteralSpans(s).collect { case (seg, false) => seg }.mkString
+    new JsScan(s).spans.collect { case (seg, false) => seg }.mkString
 
   /** Split a JS body into shim statements: single-assignment braces
     * (`if (c) { record.x = e; }` and its else) normalize to the
-    * brace-free form first; the split is QUOTE-AWARE via
-    * [[jsLiteralSpans]] (a ';' inside a string literal is data, not a
-    * terminator); bare `record` / `return record` terminators are
-    * dropped. */
+    * brace-free form first; the split skips literals (a ';' inside a
+    * string literal is data, not a terminator); bare `record` /
+    * `return record` terminators are dropped. */
   private def jsStatements(code: String): Seq[String] = {
     val normalized = code.replaceAll(
         raw"if\s*\(([^)]*)\)\s*\{\s*record\.([A-Za-z_][A-Za-z0-9_]*)\s*=\s*([^;{}]+);\s*\}",
@@ -581,58 +649,8 @@ object Stages {
       .replaceAll(
         raw"else\s*\{\s*record\.([A-Za-z_][A-Za-z0-9_]*)\s*=\s*([^;{}]+);\s*\}",
         "else record.$1 = $2;")
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    val cur = new StringBuilder
-    jsLiteralSpans(normalized).foreach {
-      case (seg, true) => cur.append(seg)
-      case (seg, false) =>
-        var rest = seg
-        var idx = rest.indexOf(';')
-        while (idx >= 0) {
-          cur.append(rest.substring(0, idx))
-          out += cur.toString
-          cur.clear()
-          rest = rest.substring(idx + 1)
-          idx = rest.indexOf(';')
-        }
-        cur.append(rest)
-    }
-    out += cur.toString
-    out.toSeq.map(_.trim).filter(_.nonEmpty)
+    new JsScan(normalized).split(';', anyDepth = true)
       .filterNot(s => s == "record" || s == "return record")
-  }
-
-  /** Literal-region check: is offset `pos` of `s` inside a string
-    * literal? (offsets derived from [[jsLiteralSpans]] segment widths). */
-  private def inJsLiteral(s: String, pos: Int): Boolean = {
-    var off = 0
-    jsLiteralSpans(s).foreach { case (seg, lit) =>
-      val end = off + seg.length
-      if (pos >= off && pos < end) return lit
-      off = end
-    }
-    false
-  }
-
-  /** Index of the '}' closing the '{' at `open` (quote- and
-    * escape-aware), or -1 when unbalanced. */
-  private def closingBrace(s: String, open: Int): Int = {
-    var depth = 0; var i = open; var quote: Char = 0; var escaped = false
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (quote != 0) {
-        if (escaped) escaped = false
-        else if (c == '\\') escaped = true
-        else if (c == quote) quote = 0
-      } else c match {
-        case '\'' | '"' => quote = c
-        case '{' => depth += 1
-        case '}' => depth -= 1; if (depth == 0) return i
-        case _ => ()
-      }
-      i += 1
-    }
-    -1
   }
 
   /** Substitute identifier `name` with `repl` outside literals; the
@@ -649,8 +667,9 @@ object Stages {
     * the named migration error). */
   private[graft] def jsFoldBrackets(code: String): String = {
     val Bracket = raw"record\s*\[([^\]]*)\]".r
+    val scan = new JsScan(code)
     Bracket.replaceAllIn(code, m => {
-      if (inJsLiteral(code, m.start)) java.util.regex.Matcher.quoteReplacement(m.group(0))
+      if (scan.inLiteral(m.start)) java.util.regex.Matcher.quoteReplacement(m.group(0))
       else {
         val parts = m.group(1).split("\\+").map(_.trim)
         val folded = parts.foldLeft(Option(new StringBuilder)) {
@@ -673,29 +692,21 @@ object Stages {
 
   /** Expand JS template literals (`` `a${expr}b` ``) to dialect string
     * concatenation BEFORE any other shim pass:
-    * `('' + 'a' + (expr) + 'b')`. The scanner is quote-aware (a
-    * backtick inside '…'/"…" is data); `${}` scans balanced braces
-    * (quote-aware, nested templates ride as quoted regions) and the
-    * interpolated expression recursively expands. Backslash escapes
-    * follow JS: `\n`/`\t`/`\r` are control chars, any other escaped
-    * char is itself (`` \` ``, `\$`, `\\`). The `''` seed keeps
-    * a bare `${x}` template a STRING — the dialect's `+` concatenates
-    * once a side is stringy (OrientExpr.scala's stringy routing). */
+    * `('' + 'a' + (expr) + 'b')`. The first backtick that opens a
+    * [[JsScan]] literal starts a template (a backtick inside '…'/"…" is
+    * data); its text is decoded here, each `${}` ends at the brace the
+    * scanner matches (nested templates ride as quoted regions) and the
+    * interpolated expression recursively expands, and the text after
+    * the template expands on a fresh scan. Backslash escapes follow JS:
+    * `\n`/`\t`/`\r` are control chars, any other escaped char is itself
+    * (`` \` ``, `\$`, `\\`). The `''` seed keeps a bare `${x}` template a
+    * STRING — the dialect's `+` concatenates once a side is stringy
+    * (OrientExpr.scala's stringy routing). */
   private[graft] def jsExpandTemplates(code: String): String = {
-    val sb = new StringBuilder
-    var i = 0
-    var quote: Char = 0
-    var escaped = false
-    while (i < code.length) {
-      val c = code.charAt(i)
-      if (quote != 0) {
-        sb.append(c)
-        if (escaped) escaped = false
-        else if (c == '\\') escaped = true
-        else if (c == quote) quote = 0
-        i += 1
-      } else if (c == '\'' || c == '"') { quote = c; sb.append(c); i += 1 }
-      else if (c == '`') {
+    val scan = new JsScan(code)
+    code.indices.find(i => code.charAt(i) == '`' && scan.opensLiteral(i)) match {
+      case None => code
+      case Some(start) =>
         val parts = scala.collection.mutable.ArrayBuffer.empty[String]
         val text = new StringBuilder
         def flushText(): Unit = if (text.nonEmpty) {
@@ -708,7 +719,7 @@ object Stages {
             .replace("\n", "\\n").replace("\t", "\\t").replace("\r", "\\r") + "'"
           text.clear()
         }
-        i += 1
+        var i = start + 1
         var closed = false
         while (i < code.length && !closed) {
           val t = code.charAt(i)
@@ -726,36 +737,20 @@ object Stages {
           } else if (t == '`') { closed = true; i += 1 }
           else if (t == '$' && i + 1 < code.length && code.charAt(i + 1) == '{') {
             flushText()
-            var depth = 1; var j = i + 2; var q: Char = 0; var esc = false
-            while (j < code.length && depth > 0) {
-              val e = code.charAt(j)
-              if (q != 0) {
-                if (esc) esc = false
-                else if (e == '\\') esc = true
-                else if (e == q) q = 0
-              } else e match {
-                case '\'' | '"' | '`' => q = e
-                case '{' => depth += 1
-                case '}' => depth -= 1
-                case _ => ()
-              }
-              j += 1
-            }
-            require(depth == 0,
-              "code: unterminated ${…} in JS template literal")
-            parts += "(" + jsExpandTemplates(code.substring(i + 2, j - 1)) + ")"
-            i = j
+            val close = new JsScan(code.substring(i + 1)).closing(0)
+            require(close > 0, "code: unterminated ${…} in JS template literal")
+            parts += "(" + jsExpandTemplates(code.substring(i + 2, i + 1 + close)) + ")"
+            i += close + 2
           } else { text.append(t); i += 1 }
         }
         require(closed, "code: unterminated JS template literal")
         flushText()
-        sb.append(
+        code.substring(0, start) + (
           if (parts.isEmpty) "''"
           else if (parts.length == 1 && parts.head.startsWith("'")) parts.head
-          else ("''" +: parts).mkString("(", " + ", ")"))
-      } else { sb.append(c); i += 1 }
+          else ("''" +: parts).mkString("(", " + ", ")")) +
+          jsExpandTemplates(code.substring(i))
     }
-    sb.toString
   }
 
   /** Expand `switch (sel) { case v: record.x = e; break; … default: … }`
@@ -776,144 +771,128 @@ object Stages {
     *    column any case assigns (each emitted `if` re-evaluates them
     *    AFTER earlier writes — the same hazard the if/else-chain guard
     *    rejects). */
-  private[graft] def jsExpandSwitch(code: String): String = {
-    val Head = raw"\bswitch\s*\(".r
-    var cur = code
-    var rounds = 0
-    var continue = true
-    while (continue) {
-      rounds += 1
-      require(rounds <= 32, "code: JS switch nesting too deep to expand")
-      Head.findAllMatchIn(cur).find(m => !inJsLiteral(cur, m.start)) match {
-        case None => continue = false
-        case Some(m) =>
-          val openParen = m.end - 1
-          val closeParen = closingParen(cur, openParen)
-          require(closeParen > openParen, "code: unbalanced switch selector")
-          val sel = cur.substring(openParen + 1, closeParen).trim
-          val openBrace = cur.indexOf('{', closeParen)
-          require(openBrace > 0 &&
-            cur.substring(closeParen + 1, openBrace).trim.isEmpty,
-            "code: switch body must be a braced block")
-          val closeBrace = closingBrace(cur, openBrace)
-          require(closeBrace > openBrace, "code: unbalanced switch body")
-          val body = cur.substring(openBrace + 1, closeBrace)
-          // label positions (case …: / default:), literal-aware. The
-          // terminating ':' is found by SCANNING (skipping quoted
-          // regions), not a [^:]* regex — `case 'a:b':` keeps its
-          // embedded colon, and subset-breaking case values (ternaries,
-          // braces) fail NAMED here instead of surfacing downstream as
-          // a misleading parse error (r18 advice).
-          val Kw = raw"\b(case|default)\b".r
-          val kws = Kw.findAllMatchIn(body)
-            .filterNot(km => inJsLiteral(body, km.start))
-            .filterNot(km => km.start > 0 && body.charAt(km.start - 1) == '.')
-            .toList
-          // (value, labelStart, bodyStart-after-':')
-          val labels = kws.map { km =>
-            if (km.group(1) == "default") {
-              var j = km.end
-              while (j < body.length && body.charAt(j).isWhitespace) j += 1
-              require(j < body.length && body.charAt(j) == ':',
-                "code: `default` in a switch body must be a label (default:)")
-              (None: Option[String], km.start, j + 1)
-            } else {
-              var j = km.end
-              var colon = -1
-              while (j < body.length && colon < 0) {
-                val c = body.charAt(j)
-                if (inJsLiteral(body, j)) j += 1
-                else if (c == ':') colon = j
-                else {
-                  require(c != '?',
-                    "code: ternary case values in a switch are outside " +
-                    "the shim subset — compute the value into a column " +
-                    "before the switch or use a Scala hook via `ref`")
-                  require(c != '{' && c != '}' && c != ';',
-                    "code: switch case label missing its ':' or holds a " +
-                    "brace/statement — case values are expressions only")
-                  j += 1
-                }
-              }
-              require(colon > 0, "code: switch case label without a ':'")
-              (Some(body.substring(km.end, colon).trim), km.start, colon + 1)
-            }
-          }
-          require(labels.nonEmpty,
-            "code: switch without case/default labels")
-          require(body.substring(0, labels.head._2).trim.isEmpty,
-            "code: statements before the first case label in a switch")
-          val sections = labels.zipWithIndex.map { case ((value, _, after), k) =>
-            val until =
-              if (k + 1 < labels.length) labels(k + 1)._2 else body.length
-            (value, body.substring(after, until))
-          }
-          sections.flatMap(_._1).foreach(v => require(v.nonEmpty,
-            "code: empty case label in a switch"))
-          val parsed = sections.zipWithIndex.map { case ((value, text), k) =>
-            var stmts = jsStatements(text)
-            val hadBreak = stmts.lastOption.contains("break")
-            if (hadBreak) stmts = stmts.dropRight(1)
-            require(hadBreak || k == sections.length - 1,
-              "code: switch case without a trailing `break;` falls " +
-              "through — no one-pass guarded-assignment spelling exists; " +
-              "duplicate the shared statements per case or use a Scala " +
-              "hook via `ref` (Engine.registerCode)")
-            require(stmts.forall(s =>
-              JsAssign.pattern.matcher(s).matches()),
-              "code: switch case bodies translate record.<field> = expr; " +
-              "assignments only — move locals/compound ops outside the " +
-              "switch or use a Scala hook via `ref`")
-            (value, stmts)
-          }
-          // read-after-write hazard (the if/else-chain rule): the
-          // selector AND every case-value expression re-evaluate in each
-          // emitted guard AFTER earlier case writes — any of them
-          // reading an assigned column silently diverges from JS
-          val assigned = parsed.flatMap(_._2).collect {
-            case JsAssign(f, _) => f }.distinct
-          val readTexts = withoutJsLiterals(sel) +:
-            parsed.collect { case (Some(v), _) => withoutJsLiterals(v) }
-          assigned.foreach { f =>
-            readTexts.foreach { t =>
-              require(!t.matches(raw"(?is).*\b" +
-                  java.util.regex.Pattern.quote(f) + raw"\b.*"),
-                s"code: switch selector or a case value reads record.$f, " +
-                "which a case assigns — the emitted guards re-evaluate " +
-                "them AFTER earlier writes; switch on a differently-named " +
-                "column instead")
-            }
-          }
-          // null-safe matched-tests (a NULL selector matches no case and
-          // runs the default, like JS); each case excludes every EARLIER
-          // case so duplicate/overlapping values keep JS's
-          // first-match-only semantics. A literal `case null:` maps to
-          // an IS NULL guard — JS strict equality matches switch(null)
-          // to case null, which `=== null` (three-valued) never would
-          // (r18 advice).
-          val matchedOf = parsed.collect {
-            case (Some(v), _) if v == "null" => s"(($sel) IS NULL)"
-            case (Some(v), _) => s"coalesce(($sel) === ($v), false)" }
-          var caseIdx = 0
-          val emitted = parsed.flatMap {
-            case (Some(_), stmts) =>
-              val cond = (matchedOf(caseIdx) +:
-                matchedOf.take(caseIdx).map(c => s"!($c)")).mkString(" && ")
-              caseIdx += 1
-              stmts.map(s => s"if ($cond) $s;")
-            case (None, stmts) =>
-              if (matchedOf.isEmpty) stmts.map(_ + ";")
-              else {
-                val noneMatch = matchedOf.map(c => s"!($c)").mkString(" && ")
-                stmts.map(s => s"if ($noneMatch) $s;")
-              }
-          }.mkString(" ")
-          cur = cur.substring(0, m.start) + emitted +
-            cur.substring(closeBrace + 1)
+  private[graft] def jsExpandSwitch(code: String): String =
+    jsRewriteAll(code, raw"\bswitch\s*\(".r, 32,
+        "code: JS switch nesting too deep to expand") { (scan, m) =>
+      val cur = scan.text
+      val openParen = m.end - 1
+      val closeParen = scan.closing(openParen)
+      require(closeParen > openParen, "code: unbalanced switch selector")
+      val sel = cur.substring(openParen + 1, closeParen).trim
+      val openBrace = cur.indexOf('{', closeParen)
+      require(openBrace > 0 &&
+        cur.substring(closeParen + 1, openBrace).trim.isEmpty,
+        "code: switch body must be a braced block")
+      val closeBrace = scan.closing(openBrace)
+      require(closeBrace > openBrace, "code: unbalanced switch body")
+      val body = cur.substring(openBrace + 1, closeBrace)
+      // label positions (case …: / default:), literal-aware. The
+      // terminating ':' is found by SCANNING (skipping quoted
+      // regions), not a [^:]* regex — `case 'a:b':` keeps its
+      // embedded colon, and subset-breaking case values (ternaries,
+      // braces) fail NAMED here instead of surfacing downstream as
+      // a misleading parse error (r18 advice).
+      val bodyScan = new JsScan(body)
+      val kws = bodyScan.outside(raw"\b(case|default)\b".r)
+        .filterNot(km => km.start > 0 && body.charAt(km.start - 1) == '.')
+        .toList
+      // (value, labelStart, bodyStart-after-':')
+      val labels = kws.map { km =>
+        if (km.group(1) == "default") {
+          var j = km.end
+          while (j < body.length && body.charAt(j).isWhitespace) j += 1
+          require(j < body.length && body.charAt(j) == ':',
+            "code: `default` in a switch body must be a label (default:)")
+          (None: Option[String], km.start, j + 1)
+        } else {
+          val colon = (km.end until body.length).find { j =>
+            val c = body.charAt(j)
+            !bodyScan.inLiteral(j) && (c == ':' || {
+              require(c != '?',
+                "code: ternary case values in a switch are outside " +
+                "the shim subset — compute the value into a column " +
+                "before the switch or use a Scala hook via `ref`")
+              require(c != '{' && c != '}' && c != ';',
+                "code: switch case label missing its ':' or holds a " +
+                "brace/statement — case values are expressions only")
+              false
+            })
+          }.getOrElse(-1)
+          require(colon > 0, "code: switch case label without a ':'")
+          (Some(body.substring(km.end, colon).trim), km.start, colon + 1)
+        }
       }
+      require(labels.nonEmpty,
+        "code: switch without case/default labels")
+      require(body.substring(0, labels.head._2).trim.isEmpty,
+        "code: statements before the first case label in a switch")
+      val sections = labels.zipWithIndex.map { case ((value, _, after), k) =>
+        val until =
+          if (k + 1 < labels.length) labels(k + 1)._2 else body.length
+        (value, body.substring(after, until))
+      }
+      sections.flatMap(_._1).foreach(v => require(v.nonEmpty,
+        "code: empty case label in a switch"))
+      val parsed = sections.zipWithIndex.map { case ((value, text), k) =>
+        var stmts = jsStatements(text)
+        val hadBreak = stmts.lastOption.contains("break")
+        if (hadBreak) stmts = stmts.dropRight(1)
+        require(hadBreak || k == sections.length - 1,
+          "code: switch case without a trailing `break;` falls " +
+          "through — no one-pass guarded-assignment spelling exists; " +
+          "duplicate the shared statements per case or use a Scala " +
+          "hook via `ref` (Engine.registerCode)")
+        require(stmts.forall(s =>
+          JsAssign.pattern.matcher(s).matches()),
+          "code: switch case bodies translate record.<field> = expr; " +
+          "assignments only — move locals/compound ops outside the " +
+          "switch or use a Scala hook via `ref`")
+        (value, stmts)
+      }
+      // read-after-write hazard (the if/else-chain rule): the
+      // selector AND every case-value expression re-evaluate in each
+      // emitted guard AFTER earlier case writes — any of them
+      // reading an assigned column silently diverges from JS
+      val assigned = parsed.flatMap(_._2).collect {
+        case JsAssign(f, _) => f }.distinct
+      val readTexts = withoutJsLiterals(sel) +:
+        parsed.collect { case (Some(v), _) => withoutJsLiterals(v) }
+      assigned.foreach { f =>
+        readTexts.foreach { t =>
+          require(!t.matches(raw"(?is).*\b" +
+              java.util.regex.Pattern.quote(f) + raw"\b.*"),
+            s"code: switch selector or a case value reads record.$f, " +
+            "which a case assigns — the emitted guards re-evaluate " +
+            "them AFTER earlier writes; switch on a differently-named " +
+            "column instead")
+        }
+      }
+      // null-safe matched-tests (a NULL selector matches no case and
+      // runs the default, like JS); each case excludes every EARLIER
+      // case so duplicate/overlapping values keep JS's
+      // first-match-only semantics. A literal `case null:` maps to
+      // an IS NULL guard — JS strict equality matches switch(null)
+      // to case null, which `=== null` (three-valued) never would
+      // (r18 advice).
+      val matchedOf = parsed.collect {
+        case (Some(v), _) if v == "null" => s"(($sel) IS NULL)"
+        case (Some(v), _) => s"coalesce(($sel) === ($v), false)" }
+      var caseIdx = 0
+      val emitted = parsed.flatMap {
+        case (Some(_), stmts) =>
+          val cond = (matchedOf(caseIdx) +:
+            matchedOf.take(caseIdx).map(c => s"!($c)")).mkString(" && ")
+          caseIdx += 1
+          stmts.map(s => s"if ($cond) $s;")
+        case (None, stmts) =>
+          if (matchedOf.isEmpty) stmts.map(_ + ";")
+          else {
+            val noneMatch = matchedOf.map(c => s"!($c)").mkString(" && ")
+            stmts.map(s => s"if ($noneMatch) $s;")
+          }
+      }.mkString(" ")
+      (closeBrace + 1, emitted)
     }
-    cur
-  }
 
   /** Unroll literal-bounded `for` loops:
     * `for (var i = A; i (<|<=) B; i(++|+= S)) { body }` expands to the
@@ -927,38 +906,27 @@ object Stages {
   private[graft] def jsUnrollLoops(code: String, maxUnroll: Int = 64): String = {
     val ForHead = (raw"for\s*\(\s*(?:var|let)\s+([A-Za-z_]\w*)\s*=\s*(-?\d+)\s*;" +
       raw"\s*\1\s*(<=|<)\s*(-?\d+)\s*;\s*\1\s*(?:(\+\+)|\+=\s*(\d+))\s*\)").r
-    var cur = code
-    var rounds = 0
-    var continue = true
-    while (continue) {
-      rounds += 1
-      require(rounds <= 32, "code: JS loop nesting too deep to unroll")
-      // first match OUTSIDE a literal — a for-head inside a string is
-      // data and must not stop the scan from reaching a real loop later
-      ForHead.findAllMatchIn(cur).find(m => !inJsLiteral(cur, m.start)) match {
-        case None => continue = false
-        case Some(m) =>
-          val (v, a, cmp, b) = (m.group(1), m.group(2).toLong, m.group(3), m.group(4).toLong)
-          val step = Option(m.group(6)).map(_.toLong).getOrElse(1L)
-          require(step > 0, s"code: JS for-loop step must be positive ($v += $step)")
-          val hi = if (cmp == "<=") b else b - 1
-          val values = (a to hi by step).toSeq
-          require(values.size <= maxUnroll,
-            s"code: JS for-loop over $v unrolls to ${values.size} iterations " +
-            s"(cap $maxUnroll) — each iteration becomes plan columns; " +
-            "restructure as SQL (language: \"sql\") or a Scala hook (`ref`)")
-          val open = cur.indexOf('{', m.end)
-          require(open >= 0 && cur.substring(m.end, open).trim.isEmpty,
-            s"code: JS for-loop body must be a braced block: `${m.group(0)}`")
-          val close = closingBrace(cur, open)
-          require(close > open, s"code: unbalanced braces in JS for-loop body")
-          val body = cur.substring(open + 1, close)
-          val expanded = values.map(i =>
-            jsFoldBrackets(substIdent(body, v, i.toString))).mkString(" ")
-          cur = cur.substring(0, m.start) + expanded + cur.substring(close + 1)
-      }
+    jsRewriteAll(code, ForHead, 32, "code: JS loop nesting too deep to unroll") { (scan, m) =>
+      val cur = scan.text
+      val (v, a, cmp, b) = (m.group(1), m.group(2).toLong, m.group(3), m.group(4).toLong)
+      val step = Option(m.group(6)).map(_.toLong).getOrElse(1L)
+      require(step > 0, s"code: JS for-loop step must be positive ($v += $step)")
+      val hi = if (cmp == "<=") b else b - 1
+      val values = (a to hi by step).toSeq
+      require(values.size <= maxUnroll,
+        s"code: JS for-loop over $v unrolls to ${values.size} iterations " +
+        s"(cap $maxUnroll) — each iteration becomes plan columns; " +
+        "restructure as SQL (language: \"sql\") or a Scala hook (`ref`)")
+      val open = cur.indexOf('{', m.end)
+      require(open >= 0 && cur.substring(m.end, open).trim.isEmpty,
+        s"code: JS for-loop body must be a braced block: `${m.group(0)}`")
+      val close = scan.closing(open)
+      require(close > open, s"code: unbalanced braces in JS for-loop body")
+      val body = cur.substring(open + 1, close)
+      val expanded = values.map(i =>
+        jsFoldBrackets(substIdent(body, v, i.toString))).mkString(" ")
+      (close + 1, expanded)
     }
-    cur
   }
 
   /** Unroll `for (var x of [e1, e2, …]) { body }` over a LITERAL array
@@ -969,109 +937,53 @@ object Stages {
     * cannot compile into a plan. */
   private[graft] def jsUnrollForOf(code: String, maxUnroll: Int = 64): String = {
     val Head = raw"for\s*\(\s*(?:var|let|const)\s+([A-Za-z_]\w*)\s+of\b".r
-    var cur = code
-    var rounds = 0
-    var continue = true
-    while (continue) {
-      rounds += 1
-      require(rounds <= 32, "code: JS for…of nesting too deep to unroll")
-      Head.findAllMatchIn(cur).find(m => !inJsLiteral(cur, m.start)) match {
-        case None =>
-          raw"\bfor\s*\(\s*(?:var|let|const)\s+\w+\s+(?:of|in)\b".r
-            .findAllMatchIn(cur).find(m => !inJsLiteral(cur, m.start))
-            .foreach { _ =>
-              sys.error("code: JS for…of iterates a LITERAL array only " +
-                "(`for (var x of ['a', 'b']) { … }`), and for…in has no " +
-                "plan spelling — a data-dependent iterable cannot unroll; " +
-                "use the dialect's array HOFs (.map/.filter) or a Scala " +
-                "hook via `ref` (Engine.registerCode)")
-            }
-          continue = false
-        case Some(m) =>
-          val v = m.group(1)
-          var j = m.end
-          while (j < cur.length && cur.charAt(j).isWhitespace) j += 1
-          require(j < cur.length && cur.charAt(j) == '[',
-            "code: JS for…of iterates a LITERAL array only — a variable " +
-            "iterable cannot unroll into a plan; use .map/.filter or a " +
-            "Scala hook via `ref`")
-          var k = j
-          var depth = 0
-          var quote: Char = 0
-          var escaped = false
-          var closeBr = -1
-          while (k < cur.length && closeBr < 0) {
-            val c = cur.charAt(k)
-            if (quote != 0) {
-              if (escaped) escaped = false
-              else if (c == '\\') escaped = true
-              else if (c == quote) quote = 0
-            }
-            else c match {
-              case '\'' | '"' => quote = c
-              case '[' => depth += 1
-              case ']' => depth -= 1; if (depth == 0) closeBr = k
-              case _ => ()
-            }
-            k += 1
-          }
-          require(closeBr > j, "code: unbalanced [ ] in JS for…of iterable")
-          val elems = splitTopLevelJs(cur.substring(j + 1, closeBr))
-          require(elems.nonEmpty, "code: JS for…of over an empty array")
-          require(elems.size <= maxUnroll,
-            s"code: JS for…of over $v unrolls to ${elems.size} iterations " +
-            s"(cap $maxUnroll) — each iteration becomes plan columns; " +
-            "restructure as SQL (language: \"sql\") or a Scala hook (`ref`)")
-          var p = closeBr + 1
-          while (p < cur.length && cur.charAt(p).isWhitespace) p += 1
-          require(p < cur.length && cur.charAt(p) == ')',
-            "code: expected ')' after the JS for…of iterable")
-          val open = cur.indexOf('{', p + 1)
-          require(open >= 0 && cur.substring(p + 1, open).trim.isEmpty,
-            "code: JS for…of body must be a braced block")
-          val close = closingBrace(cur, open)
-          require(close > open, "code: unbalanced braces in JS for…of body")
-          val body = cur.substring(open + 1, close)
-          val expanded = elems.map { e0 =>
-            val e = e0.trim
-            val repl =
-              if ((e.startsWith("'") && e.endsWith("'") && e.length >= 2) ||
-                  (e.startsWith("\"") && e.endsWith("\"") && e.length >= 2) ||
-                  e.matches(raw"-?\d+(\.\d+)?")) e
-              else s"($e)"
-            jsFoldBrackets(substIdent(body, v, repl))
-          }.mkString(" ")
-          cur = cur.substring(0, m.start) + expanded + cur.substring(close + 1)
-      }
+    val out = jsRewriteAll(code, Head, 32,
+        "code: JS for…of nesting too deep to unroll") { (scan, m) =>
+      val cur = scan.text
+      val v = m.group(1)
+      var j = m.end
+      while (j < cur.length && cur.charAt(j).isWhitespace) j += 1
+      require(j < cur.length && cur.charAt(j) == '[',
+        "code: JS for…of iterates a LITERAL array only — a variable " +
+        "iterable cannot unroll into a plan; use .map/.filter or a " +
+        "Scala hook via `ref`")
+      val closeBr = scan.closing(j)
+      require(closeBr > j, "code: unbalanced [ ] in JS for…of iterable")
+      val elems = new JsScan(cur.substring(j + 1, closeBr)).split(',')
+      require(elems.nonEmpty, "code: JS for…of over an empty array")
+      require(elems.size <= maxUnroll,
+        s"code: JS for…of over $v unrolls to ${elems.size} iterations " +
+        s"(cap $maxUnroll) — each iteration becomes plan columns; " +
+        "restructure as SQL (language: \"sql\") or a Scala hook (`ref`)")
+      var p = closeBr + 1
+      while (p < cur.length && cur.charAt(p).isWhitespace) p += 1
+      require(p < cur.length && cur.charAt(p) == ')',
+        "code: expected ')' after the JS for…of iterable")
+      val open = cur.indexOf('{', p + 1)
+      require(open >= 0 && cur.substring(p + 1, open).trim.isEmpty,
+        "code: JS for…of body must be a braced block")
+      val close = scan.closing(open)
+      require(close > open, "code: unbalanced braces in JS for…of body")
+      val body = cur.substring(open + 1, close)
+      val expanded = elems.map { e =>
+        val repl =
+          if ((e.startsWith("'") && e.endsWith("'") && e.length >= 2) ||
+              (e.startsWith("\"") && e.endsWith("\"") && e.length >= 2) ||
+              e.matches(raw"-?\d+(\.\d+)?")) e
+          else s"($e)"
+        jsFoldBrackets(substIdent(body, v, repl))
+      }.mkString(" ")
+      (close + 1, expanded)
     }
-    cur
-  }
-
-  /** Quote- and escape-aware top-level comma split (for…of array
-    * elements — `'it\'s'` is one element, r19 review). */
-  private def splitTopLevelJs(raw: String): List[String] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    val cur = new StringBuilder
-    var depth = 0
-    var quote: Char = 0
-    var escaped = false
-    raw.foreach { c =>
-      if (quote != 0) {
-        cur.append(c)
-        if (escaped) escaped = false
-        else if (c == '\\') escaped = true
-        else if (c == quote) quote = 0
+    jsFirstOutside(out, raw"\bfor\s*\(\s*(?:var|let|const)\s+\w+\s+(?:of|in)\b".r)
+      .foreach { _ =>
+        sys.error("code: JS for…of iterates a LITERAL array only " +
+          "(`for (var x of ['a', 'b']) { … }`), and for…in has no " +
+          "plan spelling — a data-dependent iterable cannot unroll; " +
+          "use the dialect's array HOFs (.map/.filter) or a Scala " +
+          "hook via `ref` (Engine.registerCode)")
       }
-      else c match {
-        case '\'' | '"' => quote = c; cur.append(c)
-        case '(' | '[' => depth += 1; cur.append(c)
-        case ')' | ']' => depth -= 1; cur.append(c)
-        case ',' if depth == 0 => out += cur.toString; cur.clear()
-        case other => cur.append(other)
-      }
-    }
-    out += cur.toString
-    out.toList.map(_.trim).filter(_.nonEmpty)
+    out
   }
 
   /** Encode text as a dialect string literal (OrientExpr lexing rules:
@@ -1096,71 +1008,54 @@ object Stages {
     * names itself instead of dying inside codegen. `.match` returns
     * plan-level TRUTH (rlike boolean), not JS's match-array — the
     * `if (s.match(/re/))` guard idiom, documented deviation. */
-  private[graft] def jsRewriteRegexLiterals(code: String): String = {
-    val Head = raw"\.\s*(replace|match)\s*\(".r
-    var cur = code
-    var rounds = 0
-    var continue = true
-    while (continue) {
-      rounds += 1
-      require(rounds <= 256, "code: too many JS regex literals to rewrite")
-      Head.findAllMatchIn(cur).find { m =>
-        !inJsLiteral(cur, m.start) && {
-          var j = m.end
-          while (j < cur.length && cur.charAt(j).isWhitespace) j += 1
-          j < cur.length && cur.charAt(j) == '/'
+  private[graft] def jsRewriteRegexLiterals(code: String): String =
+    jsRewriteAll(code, raw"\.\s*(replace|match)\s*\((?=\s*/)".r, 256,
+        "code: too many JS regex literals to rewrite") { (scan, m) =>
+      val cur = scan.text
+      val method = m.group(1)
+      var j = m.end
+      while (cur.charAt(j).isWhitespace) j += 1
+      val start = j + 1
+      var k = start
+      var inClass = false
+      var closed = -1
+      while (k < cur.length && closed < 0) {
+        val c = cur.charAt(k)
+        if (c == '\\') k += 2
+        else if (c == '[' && !inClass) { inClass = true; k += 1 }
+        else if (c == ']' && inClass) { inClass = false; k += 1 }
+        else if (c == '/' && !inClass) closed = k
+        else {
+          require(c != '\n' && c != '\r',
+            "code: unterminated JS regex literal")
+          k += 1
         }
-      } match {
-        case None => continue = false
-        case Some(m) =>
-          val method = m.group(1)
-          var j = m.end
-          while (cur.charAt(j).isWhitespace) j += 1
-          val start = j + 1
-          var k = start
-          var inClass = false
-          var closed = -1
-          while (k < cur.length && closed < 0) {
-            val c = cur.charAt(k)
-            if (c == '\\') k += 2
-            else if (c == '[' && !inClass) { inClass = true; k += 1 }
-            else if (c == ']' && inClass) { inClass = false; k += 1 }
-            else if (c == '/' && !inClass) closed = k
-            else {
-              require(c != '\n' && c != '\r',
-                "code: unterminated JS regex literal")
-              k += 1
-            }
-          }
-          require(closed > 0, "code: unterminated JS regex literal")
-          val pat = cur.substring(start, closed)
-          var f = closed + 1
-          while (f < cur.length && cur.charAt(f).isLetter) f += 1
-          val flags = cur.substring(closed + 1, f)
-          flags.find(ch => !"gims".contains(ch)).foreach(ch =>
-            sys.error(s"code: JS regex flag '$ch' has no plan translation " +
-              "(supported: g, i, m, s)"))
-          if (method == "replace" && !flags.contains('g'))
-            sys.error("code: .replace(/re/) without the g flag replaces " +
-              "the FIRST match only, which regexp_replace cannot spell — " +
-              "add the g flag, or use the literal string form " +
-              ".replace('from', 'to')")
-          val prefix = Seq('i' -> "(?i)", 'm' -> "(?m)", 's' -> "(?s)")
-            .collect { case (ch, p) if flags.contains(ch) => p }.mkString
-          val full = prefix + pat
-          try java.util.regex.Pattern.compile(full)
-          catch {
-            case e: java.util.regex.PatternSyntaxException =>
-              sys.error(s"code: invalid JS regex /$pat/: ${e.getDescription}")
-          }
-          val newName =
-            if (method == "replace") "regexreplace" else "regexmatches"
-          cur = cur.substring(0, m.start) +
-            s".$newName(${dialectQuote(full)}" + cur.substring(f)
       }
+      require(closed > 0, "code: unterminated JS regex literal")
+      val pat = cur.substring(start, closed)
+      var f = closed + 1
+      while (f < cur.length && cur.charAt(f).isLetter) f += 1
+      val flags = cur.substring(closed + 1, f)
+      flags.find(ch => !"gims".contains(ch)).foreach(ch =>
+        sys.error(s"code: JS regex flag '$ch' has no plan translation " +
+          "(supported: g, i, m, s)"))
+      if (method == "replace" && !flags.contains('g'))
+        sys.error("code: .replace(/re/) without the g flag replaces " +
+          "the FIRST match only, which regexp_replace cannot spell — " +
+          "add the g flag, or use the literal string form " +
+          ".replace('from', 'to')")
+      val prefix = Seq('i' -> "(?i)", 'm' -> "(?m)", 's' -> "(?s)")
+        .collect { case (ch, p) if flags.contains(ch) => p }.mkString
+      val full = prefix + pat
+      try java.util.regex.Pattern.compile(full)
+      catch {
+        case e: java.util.regex.PatternSyntaxException =>
+          sys.error(s"code: invalid JS regex /$pat/: ${e.getDescription}")
+      }
+      val newName =
+        if (method == "replace") "regexreplace" else "regexmatches"
+      (f, s".$newName(${dialectQuote(full)}")
     }
-    cur
-  }
 
   /** Unroll the bounded-counter `while` idiom:
     * `var i = A; while (i (<|<=) B) { body…; i++ }` — literal init A,
@@ -1175,58 +1070,48 @@ object Stages {
   private[graft] def jsUnrollWhile(code: String, maxUnroll: Int = 64): String = {
     val WhileHead = (raw"(?:var|let)\s+([A-Za-z_]\w*)\s*=\s*(-?\d+)\s*;\s*" +
       raw"while\s*\(\s*\1\s*(<=|<)\s*(-?\d+)\s*\)").r
-    var cur = code
-    var rounds = 0
-    var continue = true
-    while (continue) {
-      rounds += 1
-      require(rounds <= 32, "code: JS while nesting too deep to unroll")
-      WhileHead.findAllMatchIn(cur).find(m => !inJsLiteral(cur, m.start)) match {
-        case None =>
-          raw"\bwhile\s*\(".r.findAllMatchIn(cur)
-            .find(m => !inJsLiteral(cur, m.start)).foreach { _ =>
-              sys.error("code: JS `while` must be the bounded counter idiom " +
-                "`var i = A; while (i < B) { …; i++; }` — literal init " +
-                "IMMEDIATELY before the loop, literal bound, and a trailing " +
-                "literal step (i++ / i += S / i = i + S) as the body's last " +
-                "statement. A data-dependent trip count cannot compile to a " +
-                "plan — use a Scala hook via `ref` (Engine.registerCode)")
-            }
-          continue = false
-        case Some(m) =>
-          val (v, a, cmp, b) =
-            (m.group(1), m.group(2).toLong, m.group(3), m.group(4).toLong)
-          val open = cur.indexOf('{', m.end)
-          require(open >= 0 && cur.substring(m.end, open).trim.isEmpty,
-            s"code: JS while body must be a braced block: `${m.group(0)}`")
-          val close = closingBrace(cur, open)
-          require(close > open, "code: unbalanced braces in JS while body")
-          val body0 = cur.substring(open + 1, close)
-          val vq = java.util.regex.Pattern.quote(v)
-          val Inc = (raw"(?s)(.*?)\s*(?:$vq\s*\+\+|$vq\s*\+=\s*(\d+)|" +
-            raw"$vq\s*=\s*$vq\s*\+\s*(\d+))\s*;?\s*$$").r
-          val (body, step) = body0 match {
-            case Inc(rest, s1, s2) =>
-              (rest, Option(s1).orElse(Option(s2)).map(_.toLong).getOrElse(1L))
-            case _ => sys.error(s"code: JS while over $v needs a trailing " +
-              s"literal step ($v++ / $v += S / $v = $v + S) as the LAST " +
-              "statement of the body")
-          }
-          require(step > 0, s"code: JS while step must be positive ($v += $step)")
-          val hi = if (cmp == "<=") b else b - 1
-          val values = (a to hi by step).toSeq
-          require(values.size <= maxUnroll,
-            s"code: JS while over $v unrolls to ${values.size} iterations " +
-            s"(cap $maxUnroll) — each iteration becomes plan columns; " +
-            "restructure as SQL (language: \"sql\") or a Scala hook (`ref`)")
-          val expanded = values.map(i =>
-            jsFoldBrackets(substIdent(body, v, i.toString))).mkString(" ")
-          val fin = if (values.isEmpty) a else values.last + step
-          cur = cur.substring(0, m.start) + expanded +
-            s" var $v = $fin; " + cur.substring(close + 1)
+    val out = jsRewriteAll(code, WhileHead, 32,
+        "code: JS while nesting too deep to unroll") { (scan, m) =>
+      val cur = scan.text
+      val (v, a, cmp, b) =
+        (m.group(1), m.group(2).toLong, m.group(3), m.group(4).toLong)
+      val open = cur.indexOf('{', m.end)
+      require(open >= 0 && cur.substring(m.end, open).trim.isEmpty,
+        s"code: JS while body must be a braced block: `${m.group(0)}`")
+      val close = scan.closing(open)
+      require(close > open, "code: unbalanced braces in JS while body")
+      val body0 = cur.substring(open + 1, close)
+      val vq = java.util.regex.Pattern.quote(v)
+      val Inc = (raw"(?s)(.*?)\s*(?:$vq\s*\+\+|$vq\s*\+=\s*(\d+)|" +
+        raw"$vq\s*=\s*$vq\s*\+\s*(\d+))\s*;?\s*$$").r
+      val (body, step) = body0 match {
+        case Inc(rest, s1, s2) =>
+          (rest, Option(s1).orElse(Option(s2)).map(_.toLong).getOrElse(1L))
+        case _ => sys.error(s"code: JS while over $v needs a trailing " +
+          s"literal step ($v++ / $v += S / $v = $v + S) as the LAST " +
+          "statement of the body")
       }
+      require(step > 0, s"code: JS while step must be positive ($v += $step)")
+      val hi = if (cmp == "<=") b else b - 1
+      val values = (a to hi by step).toSeq
+      require(values.size <= maxUnroll,
+        s"code: JS while over $v unrolls to ${values.size} iterations " +
+        s"(cap $maxUnroll) — each iteration becomes plan columns; " +
+        "restructure as SQL (language: \"sql\") or a Scala hook (`ref`)")
+      val expanded = values.map(i =>
+        jsFoldBrackets(substIdent(body, v, i.toString))).mkString(" ")
+      val fin = if (values.isEmpty) a else values.last + step
+      (close + 1, expanded + s" var $v = $fin; ")
     }
-    cur
+    jsFirstOutside(out, raw"\bwhile\s*\(".r).foreach { _ =>
+      sys.error("code: JS `while` must be the bounded counter idiom " +
+        "`var i = A; while (i < B) { …; i++; }` — literal init " +
+        "IMMEDIATELY before the loop, literal bound, and a trailing " +
+        "literal step (i++ / i += S / i = i + S) as the body's last " +
+        "statement. A data-dependent trip count cannot compile to a " +
+        "plan — use a Scala hook via `ref` (Engine.registerCode)")
+    }
+    out
   }
 
   /** Extract `function name(args) { … }` definitions as inline macros;
@@ -1239,42 +1124,16 @@ object Stages {
   private[graft] def jsExtractFunctions(code: String): (String, Map[String, (Seq[String], String)]) = {
     val FnHead = raw"function\s+([A-Za-z_]\w*)\s*\(([^)]*)\)\s*\{".r
     var fns = Map.empty[String, (Seq[String], String)]
-    var cur = code
-    var continue = true
-    while (continue) {
-      FnHead.findAllMatchIn(cur).find(m => !inJsLiteral(cur, m.start)) match {
-        case None => continue = false
-        case Some(m) =>
-          val close = closingBrace(cur, m.end - 1)
-          require(close > 0, s"code: unbalanced braces in function ${m.group(1)}")
-          val params = m.group(2).split(",").map(_.trim).filter(_.nonEmpty).toSeq
-          val body = cur.substring(m.end, close)
-          fns += m.group(1) -> ((params, jsFnBodyToExpr(m.group(1), body)))
-          cur = cur.substring(0, m.start) + " " + cur.substring(close + 1)
-      }
+    val out = jsRewriteAll(code, FnHead, 256,
+        "code: too many JS functions to extract") { (scan, m) =>
+      val close = scan.closing(m.end - 1)
+      require(close > 0, s"code: unbalanced braces in function ${m.group(1)}")
+      val params = m.group(2).split(",").map(_.trim).filter(_.nonEmpty).toSeq
+      val body = scan.text.substring(m.end, close)
+      fns += m.group(1) -> ((params, jsFnBodyToExpr(m.group(1), body)))
+      (close + 1, " ")
     }
-    (cur, fns)
-  }
-
-  /** Index of the ')' closing the '(' at `open` (quote/escape-aware),
-    * or -1 when unbalanced. */
-  private def closingParen(s: String, open: Int): Int = {
-    var depth = 0; var i = open; var quote: Char = 0; var escaped = false
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (quote != 0) {
-        if (escaped) escaped = false
-        else if (c == '\\') escaped = true
-        else if (c == quote) quote = 0
-      } else c match {
-        case '\'' | '"' => quote = c
-        case '(' => depth += 1
-        case ')' => depth -= 1; if (depth == 0) return i
-        case _ => ()
-      }
-      i += 1
-    }
-    -1
+    (out, fns)
   }
 
   /** Compile a JS function BODY to ONE expression. Supported statement
@@ -1292,9 +1151,10 @@ object Stages {
     // rewrite would never match across a quoted return value.
     val IfBrace =
       raw"if\s*\(([^()]*(?:\([^()]*\)[^()]*)*)\)\s*\{\s*return\s+([^;{}]+);\s*\}".r
+    val bodyScan = new JsScan(body)
     val normalized = IfBrace.replaceAllIn(body, m =>
       java.util.regex.Matcher.quoteReplacement(
-        if (inJsLiteral(body, m.start)) m.group(0)
+        if (bodyScan.inLiteral(m.start)) m.group(0)
         else s"if (${m.group(1)}) return ${m.group(2)};"))
     val VarDecl = raw"(?s)var\s+([A-Za-z_]\w*)\s*=\s*(.+)".r
     val Return = raw"(?s)return\s+(.+)".r
@@ -1305,7 +1165,7 @@ object Stages {
       case VarDecl(v, rhs) :: tail => go(tail, (v, inline(rhs, locals)) :: locals)
       case s :: tail if s.matches(raw"(?s)if\s*\(.*") =>
         val open = s.indexOf('(')
-        val close = closingParen(s, open)
+        val close = new JsScan(s).closing(open)
         require(close > open, s"code: unbalanced parens in `$s` (function $name)")
         s.substring(close + 1).trim match {
           case Return(e) =>
@@ -1331,86 +1191,37 @@ object Stages {
     go(jsStatements(normalized).toList, Nil)
   }
 
-  /** Inline macro CALLS of the extracted functions into `s`: arguments
-    * split on top-level commas (paren- and quote-aware), parameters
-    * substituted into the body, result parenthesized. Bounded passes —
-    * recursion cannot terminate in a macro expansion and is rejected. */
-  private def jsInlineCalls(s0: String, fns: Map[String, (Seq[String], String)]): String = {
-    if (fns.isEmpty) return s0
-    def splitArgs(s: String): Seq[String] = {
-      val out = scala.collection.mutable.ArrayBuffer.empty[String]
-      val cur = new StringBuilder
-      var depth = 0; var quote: Char = 0; var escaped = false
-      s.foreach { c =>
-        if (quote != 0) {
-          cur.append(c)
-          if (escaped) escaped = false
-          else if (c == '\\') escaped = true
-          else if (c == quote) quote = 0
-        } else c match {
-          case '\'' | '"' => quote = c; cur.append(c)
-          case '(' | '[' => depth += 1; cur.append(c)
-          case ')' | ']' => depth -= 1; cur.append(c)
-          case ',' if depth == 0 => out += cur.toString; cur.clear()
-          case c2 => cur.append(c2)
-        }
+  /** Inline macro CALLS of the extracted functions into `s`, first call
+    * first: arguments split on top-level commas (`f()` has none),
+    * parameters substituted into the body, result parenthesized. The
+    * rewrite loop's cap bounds the inlines — recursion cannot terminate
+    * in a macro expansion and is rejected. */
+  private def jsInlineCalls(s: String, fns: Map[String, (Seq[String], String)]): String =
+    if (fns.isEmpty) s
+    else jsRewriteAll(s, (raw"(?<![\w.])(" + fns.keys.mkString("|") + raw")\s*\(").r, 256,
+        "code: JS function calls nest too deep to inline " +
+        "(recursive functions cannot inline — use a Scala hook via `ref`)") { (scan, m) =>
+      val name = m.group(1)
+      val (params, body) = fns(name)
+      val open = m.end - 1
+      val close = scan.closing(open)
+      require(close > open, s"code: unbalanced parens in call to $name(…)")
+      val args = new JsScan(scan.text.substring(open + 1, close)).split(',')
+      require(args.size == params.size,
+        s"code: $name(…) takes ${params.size} argument(s), got ${args.size}")
+      // two-phase substitution: params -> opaque placeholders first,
+      // THEN placeholders -> argument text. Direct sequential
+      // substitution would re-rewrite an argument that happens to
+      // contain a LATER parameter's name (scale(f, 10) with params
+      // (x, f): x -> "(f)" and then f -> "(10)" corrupts both)
+      val withPlaceholders = params.zipWithIndex.foldLeft(body) {
+        case (b, (p, i)) => substIdent(b, p, s"\u0001$i\u0001")
       }
-      out += cur.toString
-      out.toSeq.map(_.trim)
-    }
-    var cur = s0
-    var pass = 0
-    var changed = true
-    while (changed) {
-      pass += 1
-      require(pass <= 16, "code: JS function calls nest too deep to inline " +
-        "(recursive functions cannot inline — use a Scala hook via `ref`)")
-      changed = false
-      fns.foreach { case (name, (params, body)) =>
-        val Call = (raw"(?<![\w.])" + java.util.regex.Pattern.quote(name) + raw"\s*\(").r
-        // first call OUTSIDE a literal (the macro's name inside a string
-        // is data, and must not mask a real call further on)
-        Call.findAllMatchIn(cur).find(m => !inJsLiteral(cur, m.start)).foreach { m =>
-          val open = m.end - 1
-          // find the matching ')' (quote/paren aware)
-          var depth = 0; var i = open; var close = -1
-          var quote: Char = 0; var escaped = false
-          while (i < cur.length && close < 0) {
-            val c = cur.charAt(i)
-            if (quote != 0) {
-              if (escaped) escaped = false
-              else if (c == '\\') escaped = true
-              else if (c == quote) quote = 0
-            } else c match {
-              case '\'' | '"' => quote = c
-              case '(' => depth += 1
-              case ')' => depth -= 1; if (depth == 0) close = i
-              case _ => ()
-            }
-            i += 1
-          }
-          require(close > open, s"code: unbalanced parens in call to $name(…)")
-          val args = splitArgs(cur.substring(open + 1, close))
-          require(args.size == params.size,
-            s"code: $name(…) takes ${params.size} argument(s), got ${args.size}")
-          // two-phase substitution: params -> opaque placeholders first,
-          // THEN placeholders -> argument text. Direct sequential
-          // substitution would re-rewrite an argument that happens to
-          // contain a LATER parameter's name (scale(f, 10) with params
-          // (x, f): x -> "(f)" and then f -> "(10)" corrupts both)
-          val withPlaceholders = params.zipWithIndex.foldLeft(body) {
-            case (b, (p, i)) => substIdent(b, p, s"\u0001$i\u0001")
-          }
-          val inlined = args.zipWithIndex.foldLeft(withPlaceholders) {
-            case (b, (a, i)) => b.replace(s"\u0001$i\u0001", s"($a)")
-          }
-          cur = cur.substring(0, m.start) + "(" + inlined + ")" + cur.substring(close + 1)
-          changed = true
-        }
+      val inlined = args.zipWithIndex.foldLeft(withPlaceholders) {
+        case (b, (a, i)) => b.replace(s"\u0001$i\u0001", s"($a)")
       }
+      (close + 1, "(" + inlined + ")")
     }
-    cur
-  }
 
   /** JS `Math.*` calls → dialect free functions (`Math.log` is the
     * NATURAL log in JS → dialect `ln`; `Math.PI` inlines as a literal).
@@ -1439,233 +1250,166 @@ object Stages {
     * parts (so chained `a ? b : c ? d : e` and nested parenthesized
     * ternaries both translate). */
   private[graft] def jsRewriteTernary(s: String): String = {
-    def scan(): (Int, Int) = {
-      // (index of first top-level `?`, index of its matching `:`); -1s absent
-      var depth = 0; var i = 0; var quote: Char = 0; var escaped = false
-      var q = -1; var nest = 0
-      while (i < s.length) {
-        val c = s.charAt(i)
-        if (quote != 0) {
-          if (escaped) escaped = false
-          else if (c == '\\') escaped = true
-          else if (c == quote) quote = 0
-        } else c match {
-          case '\'' | '"' => quote = c
-          case '(' | '[' => depth += 1
-          case ')' | ']' => depth -= 1
-          case '?' if depth == 0 =>
-            if (q < 0) q = i else nest += 1
-          case ':' if depth == 0 && q >= 0 =>
-            if (nest == 0) return (q, i) else nest -= 1
-          case _ => ()
+    if (!s.contains('?')) return s
+    val scan = new JsScan(s)
+    val top = s.indices.filter(scan.topLevel)
+    top.find(s.charAt(_) == '?') match {
+      case Some(q) =>
+        var nest = 0 // `?`s opened after q whose `:` is still ahead
+        val colon = top.find(i => i > q && (s.charAt(i) match {
+          case '?' => nest += 1; false
+          case ':' => nest == 0 || { nest -= 1; false }
+          case _ => false
+        })).getOrElse(-1)
+        require(colon > q, s"code: ternary `?` without a matching `:` in `$s`")
+        def part(from: Int, until: Int) = jsRewriteTernary(s.substring(from, until)).trim
+        s"if((${part(0, q)}), (${part(q + 1, colon)}), (${part(colon + 1, s.length)}))"
+      case None =>
+        // No top-level `?` — but a ternary may hide one bracket level
+        // down (`(b ? c : d)` arriving here as a recursive part):
+        // rewrite the interior of every top-level (…)/[…] group
+        val sb = new StringBuilder
+        var from = 0
+        top.filter(i => s.charAt(i) == '(' || s.charAt(i) == '[').foreach { i =>
+          val j = scan.closing(i)
+          require(j > i, s"code: unbalanced '${s.charAt(i)}' in `$s`")
+          sb.append(s.substring(from, i + 1)).append(jsRewriteTernary(s.substring(i + 1, j)))
+          from = j
         }
-        i += 1
-      }
-      (q, -1)
+        sb.append(s.substring(from)).toString
     }
-    val (q, colon) = scan()
-    if (q < 0) {
-      // No top-level `?` — but a ternary may hide one paren level down
-      // (`(b ? c : d)` arriving here as a recursive part). Rewrite the
-      // interior of every top-level balanced (...)/[...] group,
-      // string-literal-aware, so it still translates.
-      if (!s.contains('?')) return s
-      val sb = new StringBuilder
-      var i = 0; var quote: Char = 0; var escaped = false
-      while (i < s.length) {
-        val c = s.charAt(i)
-        if (quote != 0) {
-          sb.append(c)
-          if (escaped) escaped = false
-          else if (c == '\\') escaped = true
-          else if (c == quote) quote = 0
-          i += 1
-        } else if (c == '\'' || c == '"') {
-          quote = c; sb.append(c); i += 1
-        } else if (c == '(' || c == '[') {
-          var depth = 1; var j = i + 1; var q2: Char = 0; var esc2 = false
-          while (j < s.length && depth > 0) {
-            val cj = s.charAt(j)
-            if (q2 != 0) {
-              if (esc2) esc2 = false
-              else if (cj == '\\') esc2 = true
-              else if (cj == q2) q2 = 0
-            } else if (cj == '\'' || cj == '"') q2 = cj
-            else if (cj == '(' || cj == '[') depth += 1
-            else if (cj == ')' || cj == ']') depth -= 1
-            j += 1
-          }
-          require(depth == 0, s"code: unbalanced '$c' in `$s`")
-          sb.append(c).append(jsRewriteTernary(s.substring(i + 1, j - 1)))
-            .append(s.charAt(j - 1))
-          i = j
-        } else { sb.append(c); i += 1 }
-      }
-      return sb.toString
-    }
-    require(colon > q, s"code: ternary `?` without a matching `:` in `$s`")
-    val cond = jsRewriteTernary(s.substring(0, q)).trim
-    val thenP = jsRewriteTernary(s.substring(q + 1, colon)).trim
-    val elseP = jsRewriteTernary(s.substring(colon + 1)).trim
-    s"if(($cond), ($thenP), ($elseP))"
   }
 
-  /** Legacy-JS translation (the reference's default `code` engine was
-    * JavaScript — OCodeTransformer.java:67-80): the three statement
-    * shapes real configs are made of compile to Columns —
-    *  - `record.x = expr;` → a dialect-expression column,
-    *  - `var x = expr;` → a LOCAL: its (rewritten) expression inlines
-    *    into every later reference, so locals cost nothing in the plan,
-    *  - `if (cond) record.x = expr;` (braces allowed around a single
-    *    assignment) → `when(cond, expr)` keeping the existing value
-    *    (null for a new column) otherwise; an immediately following
-    *    `else record.x = expr;` fills the other branch (the condition
-    *    must not read the column it assigns — it is re-evaluated).
-    * `record.` prefixes resolve to fields. Three macro-level forms
-    * expand BEFORE statement translation:
-    *  - `function f(a,b) { … }` defs become inline macros — calls
-    *    substitute arguments textually, parenthesized; bodies may hold
-    *    `var` locals and `if (cond) return expr;` guard clauses before
-    *    the final return ([[jsFnBodyToExpr]]);
-    *  - `for (var i = A; i < B; i++) { … }` with literal bounds unrolls
-    *    (≤ 64 iterations — an unrolled plan column per round is the
-    *    honest cost), with `record["q" + i]` folding to `record.qN`;
-    *  - `x = expr;` reassigning a known `var` local redefines it (the
-    *    loop-accumulator idiom).
-    * Expression surface beyond the dialect: ternaries (`c ? a : b` →
-    * `if(c, a, b)`, right-associative, nestable), `Math.*` calls
-    * ([[jsRewriteMath]] — `Math.log` = natural log, `Math.PI`/`Math.E`
-    * inline, `Math.random` rejected as nondeterministic), the JS
-    * `.length` property, and JS string-method chains (toUpperCase,
-    * substring, indexOf, startsWith/endsWith/includes, padStart/padEnd,
-    * repeat, slice, charAt, replace, split — resolved by the dialect's
-    * method table). Bounded-counter `while` loops unroll
-    * ([[jsUnrollWhile]]). Array literals, `[idx]` indexing,
-    * `.map/.filter` lambdas and `.join` resolve in the dialect
-    * (OrientExpr). Anything richer (data-dependent trip counts,
-    * recursion, closures, object literals) fails with a named migration
-    * path — full JS is out of parity scope (SURVEY.md §7.4, no script
-    * engine offline). */
   /** Expand `var o = { k1: expr, k2: expr };` OBJECT literals: each
     * later `o.k1` member read inlines as the (parenthesized) member
     * expression — objects are compile-time namespaces, like locals.
     * Guards: a member write (`o.k = …`), an unknown member, or passing
     * the bare object name onward all fail with named errors (an object
-    * VALUE has no column translation). Literal-blind like the other
-    * passes. */
-  private[graft] def jsExpandObjects(code: String): String = {
-    val ObjHead = raw"var\s+([A-Za-z_]\w*)\s*=\s*\{".r
-    var cur = code
-    var continue = true
-    while (continue) {
-      ObjHead.findAllMatchIn(cur).find(m => !inJsLiteral(cur, m.start)) match {
-        case None => continue = false
-        case Some(m) =>
-          val open = m.end - 1
-          val close = closingBrace(cur, open)
-          require(close > open,
-            s"code: unbalanced braces in object literal var ${m.group(1)}")
-          val name = m.group(1)
-          val bodyTxt = cur.substring(open + 1, close)
-          // split members on top-level commas (quote/paren/bracket-aware)
-          val members = scala.collection.mutable.LinkedHashMap.empty[String, String]
-          var depth = 0; var quote: Char = 0; var escaped = false
-          val b = new StringBuilder
-          def flush(): Unit = if (b.toString.trim.nonEmpty) {
-            val kv = b.toString
-            val colonAt = kv.indexOf(':')
-            require(colonAt > 0, s"code: object $name: member `${kv.trim}` " +
-              "is not a `key: expr` pair")
-            val k = kv.substring(0, colonAt).trim
-              .stripPrefix("'").stripSuffix("'")
-              .stripPrefix("\"").stripSuffix("\"")
-            require(k.matches(raw"[A-Za-z_]\w*"),
-              s"code: object $name: member name `$k` is not an identifier")
-            members += k -> kv.substring(colonAt + 1).trim
-            b.clear()
-          }
-          bodyTxt.foreach { ch =>
-            if (quote != 0) {
-              b.append(ch)
-              if (escaped) escaped = false
-              else if (ch == '\\') escaped = true
-              else if (ch == quote) quote = 0
-            } else ch match {
-              case '\'' | '"' => quote = ch; b.append(ch)
-              case '(' | '[' | '{' => depth += 1; b.append(ch)
-              case ')' | ']' | '}' => depth -= 1; b.append(ch)
-              case ',' if depth == 0 => flush()
-              case other => b.append(other)
-            }
-          }
-          flush()
-          var rest = cur.substring(close + 1).replaceFirst(raw"^\s*;", "")
-          // member writes fail loud BEFORE the read-inline would orphan them
-          val q = java.util.regex.Pattern.quote(name)
-          (raw"(?<![\w.])$q\s*\.\s*(\w+)\s*(\+\+|--|[+\-*/]?=(?!=))").r
-            .findAllMatchIn(rest).find(mm => !inJsLiteral(rest, mm.start))
-            .foreach { mm => sys.error(s"code: object $name is a compile-time " +
-              s"namespace — `$name.${mm.group(1)} ${mm.group(2)}` mutation has " +
-              "no plan translation; assign through record fields or locals") }
-          // inline member reads to a FIXPOINT: a member whose value
-          // reads another member ({a: 1, b: o.a}) re-introduces `o.a`
-          // when `o.b` is inlined, so one pass per member is not enough
-          var inlinePass = 0
-          var inlineChanged = true
-          while (inlineChanged) {
-            inlinePass += 1
-            require(inlinePass <= 16,
-              s"code: object $name: member references are cyclic or " +
-                "nested too deeply to inline")
-            val before = rest
-            members.foreach { case (k, v) =>
-              rest = outsideJsLiterals(rest)(_.replaceAll(
-                raw"(?<![\w.])$q\s*\.\s*" + java.util.regex.Pattern.quote(k) + raw"\b",
-                java.util.regex.Matcher.quoteReplacement(s"($v)")))
-            }
-            inlineChanged = rest != before
-          }
-          (raw"(?<![\w.])$q\s*\.\s*(\w+)").r.findAllMatchIn(rest)
-            .find(mm => !inJsLiteral(rest, mm.start)).foreach { mm =>
-              sys.error(s"code: object $name has no member " +
-                s"`${mm.group(1)}` (members: ${members.keys.mkString(", ")})")
-            }
-          (raw"(?<![\w.])$q\b(?!\s*\.)").r.findAllMatchIn(rest)
-            .find(mm => !inJsLiteral(rest, mm.start)).foreach { _ =>
-              sys.error(s"code: object $name is a compile-time namespace — " +
-                "its VALUE cannot flow into the plan; read members " +
-                members.keys.headOption.fold("")(h => s"($name.$h) ") +
-                "instead")
-            }
-          cur = cur.substring(0, m.start) + " " + rest
+    * VALUE has no column translation). A member name inside a string
+    * literal is data and stays. */
+  private[graft] def jsExpandObjects(code: String): String =
+    jsRewriteAll(code, raw"var\s+([A-Za-z_]\w*)\s*=\s*\{".r, 256,
+        "code: too many JS object literals to expand") { (scan, m) =>
+      val cur = scan.text
+      val open = m.end - 1
+      val close = scan.closing(open)
+      require(close > open,
+        s"code: unbalanced braces in object literal var ${m.group(1)}")
+      val name = m.group(1)
+      val bodyTxt = cur.substring(open + 1, close)
+      // members split on top-level commas; a repeated key keeps its
+      // first position and its last value
+      val members = scala.collection.mutable.LinkedHashMap.from(
+        new JsScan(bodyTxt).split(',').map { kv =>
+          val colonAt = kv.indexOf(':')
+          require(colonAt > 0, s"code: object $name: member `$kv` " +
+            "is not a `key: expr` pair")
+          val k = kv.substring(0, colonAt).trim
+            .stripPrefix("'").stripSuffix("'")
+            .stripPrefix("\"").stripSuffix("\"")
+          require(k.matches(raw"[A-Za-z_]\w*"),
+            s"code: object $name: member name `$k` is not an identifier")
+          k -> kv.substring(colonAt + 1).trim
+        })
+      var rest = cur.substring(close + 1).replaceFirst(raw"^\s*;", "")
+      // member writes fail loud BEFORE the read-inline would orphan them
+      val q = java.util.regex.Pattern.quote(name)
+      jsFirstOutside(rest, (raw"(?<![\w.])$q\s*\.\s*(\w+)\s*(\+\+|--|[+\-*/]?=(?!=))").r)
+        .foreach { mm => sys.error(s"code: object $name is a compile-time " +
+          s"namespace — `$name.${mm.group(1)} ${mm.group(2)}` mutation has " +
+          "no plan translation; assign through record fields or locals") }
+      // inline member reads to a FIXPOINT: a member whose value
+      // reads another member ({a: 1, b: o.a}) re-introduces `o.a`
+      // when `o.b` is inlined, so one pass per member is not enough
+      var inlinePass = 0
+      var inlineChanged = true
+      while (inlineChanged) {
+        inlinePass += 1
+        require(inlinePass <= 16,
+          s"code: object $name: member references are cyclic or " +
+            "nested too deeply to inline")
+        val before = rest
+        members.foreach { case (k, v) =>
+          rest = outsideJsLiterals(rest)(_.replaceAll(
+            raw"(?<![\w.])$q\s*\.\s*" + java.util.regex.Pattern.quote(k) + raw"\b",
+            java.util.regex.Matcher.quoteReplacement(s"($v)")))
+        }
+        inlineChanged = rest != before
       }
+      jsFirstOutside(rest, (raw"(?<![\w.])$q\s*\.\s*(\w+)").r).foreach { mm =>
+        sys.error(s"code: object $name has no member " +
+          s"`${mm.group(1)}` (members: ${members.keys.mkString(", ")})")
+      }
+      jsFirstOutside(rest, (raw"(?<![\w.])$q\b(?!\s*\.)").r).foreach { _ =>
+        sys.error(s"code: object $name is a compile-time namespace — " +
+          "its VALUE cannot flow into the plan; read members " +
+          members.keys.headOption.fold("")(h => s"($name.$h) ") +
+          "instead")
+      }
+      (cur.length, " " + rest)
     }
-    cur
-  }
 
+  /** Legacy-JS translation (the reference's default `code` engine was
+    * JavaScript — OCodeTransformer.java:67-80). Text passes first
+    * rewrite the script into statements over the dialect, each reading
+    * literals and brackets through [[JsScan]] and expanding through
+    * [[jsRewriteAll]]:
+    *  - template literals → string concatenation ([[jsExpandTemplates]]);
+    *  - regex literals in `.replace(/re/g, to)` / `.match(/re/)` →
+    *    quoted-pattern methods ([[jsRewriteRegexLiterals]]);
+    *  - `switch` blocks → guarded assignments ([[jsExpandSwitch]]);
+    *  - `var o = { k: expr, … }` object literals → compile-time
+    *    namespaces whose member reads inline ([[jsExpandObjects]]);
+    *  - `function f(a, b) { … }` defs → inline macros — calls substitute
+    *    arguments textually, parenthesized; bodies may hold `var` locals
+    *    and `if (cond) return expr;` guard clauses before the final
+    *    return ([[jsFnBodyToExpr]]);
+    *  - literal-bounded `for (var i = A; i < B; i++)`, `for (var x of
+    *    [e1, …])` and `var i = A; while (i < B) { …; i++ }` loops unroll
+    *    (≤ 64 iterations — an unrolled plan column per round is the
+    *    honest cost), with `record["q" + i]` folding to `record.qN`.
+    * The statements then compile to Columns:
+    *  - `record.x = expr;` → a dialect-expression column;
+    *  - `var x = expr;` → a LOCAL: its (rewritten) expression inlines
+    *    into every later reference, so locals cost nothing in the plan;
+    *    `x = expr;` reassigning a known local redefines it (the
+    *    loop-accumulator idiom); `x += e`, `x++` expand first;
+    *  - `if (cond) record.x = expr;` (braces allowed around a single
+    *    assignment) → `when(cond, expr)` keeping the existing value
+    *    (null for a new column) otherwise; following
+    *    `else if (…) record.x = expr;` / `else record.x = expr;` fill the
+    *    other branches (a condition must not read the column it
+    *    assigns — it is re-evaluated).
+    * `record.` prefixes resolve to fields. Expression surface beyond the
+    * dialect: ternaries (`c ? a : b` → `if(c, a, b)`, right-associative,
+    * nestable), `Math.*` calls ([[jsRewriteMath]] — `Math.log` = natural
+    * log, `Math.PI`/`Math.E` inline, `Math.random` rejected as
+    * nondeterministic), `&&`/`||`/`!`/`===`/`!==`, `=>` lambdas, the JS
+    * `.length` property, and JS string-method chains (toUpperCase,
+    * substring, indexOf, startsWith/endsWith/includes, padStart/padEnd,
+    * repeat, slice, charAt, replace, split — resolved by the dialect's
+    * method table). Array literals, `[idx]` indexing, `.map/.filter`
+    * lambdas and `.join` resolve in the dialect (OrientExpr). Anything
+    * richer (data-dependent trip counts, recursion, closures, try/catch,
+    * object values) fails with a named migration path — full JS is out
+    * of parity scope (SURVEY.md §7.4, no script engine offline). */
   private def jsShim(code: String, ctx: EtlContext): DataFrame => DataFrame = { df =>
     // template literals expand to stringy concatenation first, so every
-    // later pass sees only '…'/"…" literals; switch blocks then expand
-    // to guarded assignments
-    // regex literals rewrite AFTER template expansion (template text is
-    // then safely inside '…' literals — jsLiteralSpans is
-    // backtick-unaware) and BEFORE switch expansion (case bodies then
-    // hold only quoted patterns)
+    // later pass sees only '…'/"…" literals; regex literals rewrite
+    // BEFORE switch expansion (case bodies then hold only quoted
+    // patterns), and switch blocks expand to guarded assignments
     val templated =
       jsExpandSwitch(jsRewriteRegexLiterals(jsExpandTemplates(code)))
     // try/catch NAMED-fail (not a silent mis-parse): per-row error
     // recovery has no plan spelling — the engine's typed policies own
-    // it. Scanned AFTER template expansion so a 'try {' that was
-    // template TEXT sits inside a '…' literal and stays data (r18
-    // review: jsLiteralSpans is backtick-unaware)
-    raw"\btry\s*\{".r.findAllMatchIn(templated)
-      .find(m => !inJsLiteral(templated, m.start)).foreach { _ =>
-        sys.error("code: JS try/catch cannot compile to a plan — per-row " +
-          "error handling belongs to the engine's typed policies (csv " +
-          "per-field errors, link unresolvedLinkAction, flow/expect " +
-          "guards); for genuinely imperative recovery use a Scala hook " +
-          "via `ref` (Engine.registerCode)")
-      }
+    // it. A 'try {' inside a literal is data.
+    jsFirstOutside(templated, raw"\btry\s*\{".r).foreach { _ =>
+      sys.error("code: JS try/catch cannot compile to a plan — per-row " +
+        "error handling belongs to the engine's typed policies (csv " +
+        "per-field errors, link unresolvedLinkAction, flow/expect " +
+        "guards); for genuinely imperative recovery use a Scala hook " +
+        "via `ref` (Engine.registerCode)")
+    }
     val (defree, fns) = jsExtractFunctions(jsExpandObjects(templated))
     // alternate the two unrollers to a fixpoint: a while nested in a for
     // body only becomes literal-bounded after the for substitutes its

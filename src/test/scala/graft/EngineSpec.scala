@@ -1106,6 +1106,17 @@ class EngineSpec extends SparkSpec {
     def band(k: Int) =
       out.filter(col("n_nationkey") === k).head().getAs[String]("band")
     assert(band(3) == "low" && band(9) == "mid" && band(20) == "high")
+    // a zero-parameter function is called with an empty argument list,
+    // and twenty calls in one statement all inline
+    val zero = Engine.runJson(newCtx(), s"""{
+      "source": { "file": { "path": "$path" } },
+      "extractor": { "csv": { "columns": ["n_nationkey:integer", "n_name:string", "n_regionkey:integer"] } },
+      "transformers": [ { "code": { "language": "javascript", "code":
+        "function k() { return 5; } record.x = k() + record.n_nationkey; record.many = ${Seq.fill(20)("k()").mkString(" + ")};" } } ],
+      "loader": { "memory": {} }
+    }""")
+    val z = zero.filter(col("n_nationkey") === 7).head()
+    assert(z.getAs[Number]("x").intValue == 12 && z.getAs[Number]("many").intValue == 100)
     // parenthesized ternary (r11 ADVICE): the inner `?:` sits one paren
     // level down and must still rewrite
     val t = Engine.runJson(newCtx(), s"""{

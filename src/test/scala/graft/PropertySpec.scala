@@ -258,6 +258,54 @@ class PropertySpec extends SparkSpec {
     }
   }
 
+  test("JsScan: literal flags, bracket closes and top-level offsets match a stack walk") {
+    val textGen = Gen.listOf(Gen.oneOf("'", "\"", "`", "\\", "(", ")", "[", "]",
+      "{", "}", ",", "?", ":", "a", " ")).map(_.mkString)
+    // reference: a quote opens a literal that runs to the next same quote
+    // not escaped by a backslash (or to the end); outside literals a
+    // closer pops the stack only when it matches the innermost opener
+    def reference(s: String): (Seq[Boolean], Map[Int, Int], Seq[Int]) = {
+      val lit = Array.fill(s.length)(false)
+      val closes = Map.newBuilder[Int, Int]
+      val top = Seq.newBuilder[Int]
+      var stack = List.empty[Int]
+      var i = 0
+      while (i < s.length) {
+        val c = s(i)
+        if ("'\"`".contains(c)) {
+          var j = i + 1
+          while (j < s.length && s(j) != c) j += (if (s(j) == '\\') 2 else 1)
+          val end = math.min(j, s.length - 1)
+          (i to end).foreach(lit(_) = true)
+          i = end + 1
+        } else {
+          val k = ")]}".indexOf(c)
+          if ("([{".contains(c)) {
+            if (stack.isEmpty) top += i
+            stack = i :: stack
+          } else if (k >= 0 && stack.nonEmpty && s(stack.head) == "([{".charAt(k)) {
+            closes += stack.head -> i
+            stack = stack.tail
+            if (stack.isEmpty) top += i
+          } else if (stack.isEmpty) top += i
+          i += 1
+        }
+      }
+      (lit.toSeq, closes.result(), top.result())
+    }
+    samples(textGen, 200).foreach { s =>
+      val (lit, closes, top) = reference(s)
+      val scan = new graft.stages.Stages.JsScan(s)
+      assert(s.indices.map(scan.inLiteral) == lit, s)
+      assert(s.indices.filter(scan.closing(_) >= 0).map(i => i -> scan.closing(i)).toMap == closes, s)
+      assert(s.indices.filter(scan.topLevel) == top, s)
+      val commas = top.filter(s(_) == ',')
+      val pieces = (-1 +: commas).zip(commas :+ s.length)
+        .map { case (a, b) => s.substring(a + 1, b).trim }.filter(_.nonEmpty)
+      assert(scan.split(',') == pieces, s)
+    }
+  }
+
   test("winsorize: outputs within bounds, unflagged rows unchanged, count kept") {
     val valGen = Gen.listOfN(40, Gen.chooseNum(-1000L, 1000L))
     samples(valGen, 8).zipWithIndex.foreach { case (vs, i) =>
