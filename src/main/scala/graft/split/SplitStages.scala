@@ -2,7 +2,7 @@ package graft.split
 
 import graft.engine.EtlContext
 import graft.spec.ComponentSpec
-import graft.stages.Stages
+import graft.stages.{GroupStats, Stages}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -444,12 +444,11 @@ object SplitStages {
     * document that would overflow the share is excluded. Token counts
     * come from `tokenField` (an existing per-doc count column) or are
     * computed as the whitespace token count of `field` (default
-    * `text`). Scale shape: the per-part running sum is TWO-LEVEL — a
-    * 256-bucket (md5-prefix) token-sum aggregate, an exclusive prefix
-    * over those 256 rows, then an intra-bucket running-sum window
-    * PARTITIONED by bucket — so no part ever sorts its full row set in
-    * one partition; ordering by (md5 hex, key) is prefix-consistent
-    * with the bucketing. */
+    * `text`). Scale shape: the per-part running sum is
+    * [[graft.stages.GroupStats.runningBelow]] over 256 md5-prefix
+    * buckets — no part ever sorts its full row set in one partition;
+    * ordering by (md5 hex, key) is prefix-consistent with the
+    * bucketing. */
   def mixture(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
     { df =>
       val keyField = spec.strOr("keyField", "doc_id")
@@ -504,8 +503,7 @@ object SplitStages {
           // salt || name); bucket = first 2 hex chars, so ordering by
           // (hash, key) is identical to (bucket, hash, key).
           // NULL keys coalesce to a sentinel BEFORE hashing — a null
-          // key would otherwise null the md5 and the row would silently
-          // vanish from the __b join and the __cum filter (ADVICE r15);
+          // key would otherwise null the md5 and its bucket (ADVICE r15);
           // with the sentinel, null-keyed docs participate
           // deterministically (they all share one hash, ordered
           // adjacently — fine: the key is an identity, not a weight)
@@ -516,28 +514,16 @@ object SplitStages {
           // and the token source need not survive into `columns`
           val rows = part
             .withColumn("__h", hash)
-            .withColumn("__b", substring(col("__h"), 1, 2))
+            .withColumn("__bkt", substring(col("__h"), 1, 2))
             .withColumn("__k", keyStr)
             .withColumn("__tok", tokCol)
             .select(cols.map(col) ++ Seq(lit(name).as("mix_source"),
-              col("__h"), col("__b"), col("__k"), col("__tok")): _*)
-          // level 1: 256 bucket totals → exclusive prefix (256-row
-          // window, trivially single-partition) → broadcast back
-          val pre = rows.groupBy("__b").agg(sum("__tok").as("__bt"))
-            .withColumn("__pre", coalesce(sum(col("__bt")).over(
-              org.apache.spark.sql.expressions.Window.orderBy(col("__b"))
-                .rowsBetween(Long.MinValue, -1)), lit(0L)))
-            .select("__b", "__pre")
-          // level 2: intra-bucket running sum, PARTITIONED by bucket —
-          // the part's rows never sort through one partition
-          val intra = org.apache.spark.sql.expressions.Window
-            .partitionBy(col("__b"))
-            .orderBy(col("__h"), col("__k"))
-            .rowsBetween(Long.MinValue, 0)
-          rows.join(broadcast(pre), "__b")
-            .withColumn("__cum", col("__pre") + sum(col("__tok")).over(intra))
-            .where(col("__cum") <= share)
-            .drop("__h", "__b", "__k", "__tok", "__pre", "__cum")
+              col("__h"), col("__bkt"), col("__k"), col("__tok")): _*)
+          // the two-level running sum over the 256 md5-prefix buckets;
+          // a document's own tokens count toward its cut
+          GroupStats.runningBelow(rows, Nil, Seq(col("__h"), col("__k")), "__tok" -> "__cum")
+            .where(col("__cum") + col("__tok") <= share)
+            .drop("__h", "__bkt", "__k", "__tok", "__cum")
       }
       val partFrames = parts.map { case (path, frac, name) =>
         sampled(ctx.spark.read.parquet(path), frac, name)

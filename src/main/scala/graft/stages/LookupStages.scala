@@ -299,19 +299,8 @@ object LookupStages {
   def nestedEtl(parent: DataFrame, child: DataFrame, parentKey: String,
                 childKey: String, fieldName: String, fieldType: String,
                 keyFieldName: String = "", valueFieldName: String = ""): DataFrame = {
-    val agged = fieldType.toUpperCase match {
-      case "EMBEDDEDLIST" | "LINKLIST" =>
-        child.groupBy(col(childKey).as("__ck"))
-          .agg(sort_array(collect_list(col(valueFieldName))).as(fieldName))
-      case "EMBEDDEDSET" | "LINKSET" =>
-        child.groupBy(col(childKey).as("__ck"))
-          .agg(array_distinct(sort_array(collect_list(col(valueFieldName)))).as(fieldName))
-      case "EMBEDDEDMAP" =>
-        child.groupBy(col(childKey).as("__ck"))
-          .agg(map_from_entries(sort_array(collect_list(
-            struct(col(keyFieldName), col(valueFieldName))))).as(fieldName))
-      case other => sys.error(s"etl: unsupported fieldType $other")
-    }
+    val agged = groupToField(child, Seq(col(childKey).as("__ck")), fieldName, fieldType,
+      keyFieldName, valueFieldName)
     parent.join(agged, parent(parentKey) === col("__ck"), "left").drop("__ck")
   }
 

@@ -11,28 +11,14 @@ import org.apache.spark.sql.types._
   * express because it needs corpus statistics.
   *
   * Scale shape: statistics come from ONE hash aggregation with map-side
-  * combine (one row per group), joined back on the group key — never a
-  * window over every row (a global window would sort the whole table
-  * into one partition). AQE broadcasts the stats side when small. */
+  * combine (one row per group) and reach the rows through
+  * [[GroupStats.attach]]; running sums go through
+  * [[GroupStats.runningBelow]] — never a window over every row (a
+  * global window would sort the whole table into one partition). Every
+  * key option (`keyField`, `groupBy`) takes a JSON list or a
+  * comma-separated string ([[GroupStats.keyList]]). */
 object StatStages {
-
-  /** `max − min + 1` of two long columns with a LOUD overflow guard for
-    * the two-level bucket paths (percentrank/concentration/kstest/auc):
-    * a value span at or beyond 2^63 (a Long.MinValue sentinel mixed
-    * with positive ids is enough) overflows the subtraction — ANSI
-    * mode would throw an opaque ArithmeticException mid-job, non-ANSI
-    * would silently corrupt every bucket id. `try_subtract`/`try_add`
-    * surface the overflow as null, turned into a named error here. */
-  private def spanOf(mx: Column, mn: Column, stage: String): Column = {
-    val span = try_add(try_subtract(mx, mn), lit(1L))
-    // raise ONLY on a real overflow: NULL min/max (an all-NULL field —
-    // legal input, every value lands in the null bucket) must keep its
-    // pre-guard NULL span, not a misleading 2^63 error
-    when(mx.isNotNull && mn.isNotNull && span.isNull, raise_error(lit(
-      s"$stage: value span of the field exceeds 2^63 — min and max are " +
-      "too far apart (sentinel values like Long.MinValue mixed with " +
-      "real data?); shift or scale the field upstream"))).otherwise(span)
-  }
+  import GroupStats.{attach, keyList, rangeBucket, runningBelow}
 
   /** `minmaxscale`: per-group min-max normalization to [0, 1] —
     * (x − min)/(max − min), the bounded-range scaler (zscore's
@@ -45,21 +31,12 @@ object StatStages {
     { df =>
       val fld = spec.str("field").getOrElse(sys.error("minmaxscale: `field` required"))
       require(df.columns.contains(fld), s"minmaxscale: no column '$fld'")
-      val keys = spec.str("keyField")
-        .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq).getOrElse(Nil)
+      val keys = keyList(spec, "keyField")
       keys.foreach(k => require(df.columns.contains(k), s"minmaxscale: no key column '$k'"))
       val outField = spec.strOr("outField", s"${fld}_scaled")
       val x = col(fld).cast("double")
-      val stats = (if (keys.nonEmpty) df.groupBy(keys.map(col): _*) else df.groupBy())
-        .agg(min(x).as("__mn"), max(x).as("__mx"))
-      val joined =
-        if (keys.nonEmpty) {
-          val r = stats.toDF(stats.columns.map(c =>
-            if (keys.contains(c)) s"__k_$c" else c): _*)
-          val cond = keys.map(k => col(k) <=> col(s"__k_$k")).reduce(_ && _)
-          df.join(r, cond, "left").drop(keys.map(k => s"__k_$k"): _*)
-        } else df.crossJoin(broadcast(stats))
-      joined.withColumn(outField,
+      val stats = df.groupBy(keys.map(col): _*).agg(min(x).as("__mn"), max(x).as("__mx"))
+      attach(df, stats, keys).withColumn(outField,
           when(col("__mx") > col("__mn"), (x - col("__mn")) / (col("__mx") - col("__mn"))))
         .drop("__mn", "__mx")
     }
@@ -196,10 +173,9 @@ object StatStages {
       val f = spec.str("field").getOrElse(sys.error("hllsketch: field required"))
       val lgK = spec.int("lgConfigK", 12)
       require(lgK >= 4 && lgK <= 21, s"hllsketch: lgConfigK out of range: $lgK")
-      val keys = spec.strOr("groupBy", "").split(",").map(_.trim).filter(_.nonEmpty)
-      val agg = hll_sketch_agg(col(f), lit(lgK)).as(spec.strOr("out", "hll_sketch"))
-      if (keys.isEmpty) df.agg(agg)
-      else df.groupBy(keys.map(col).toIndexedSeq: _*).agg(agg)
+      val keys = keyList(spec, "groupBy")
+      df.groupBy(keys.map(col): _*)
+        .agg(hll_sketch_agg(col(f), lit(lgK)).as(spec.strOr("out", "hll_sketch")))
     }
 
   /** `hllmerge`: union previously-built HLL sketches to a coarser grain
@@ -212,15 +188,12 @@ object StatStages {
     { df =>
       val f = spec.strOr("field", "hll_sketch")
       require(df.columns.contains(f), s"hllmerge: no column '$f'")
-      val keys = spec.strOr("groupBy", "").split(",").map(_.trim).filter(_.nonEmpty)
+      val keys = keyList(spec, "groupBy")
       val merged = hll_union_agg(col(f))
       val est = hll_sketch_estimate(merged).as(spec.strOr("out", "distinct_est"))
-      val aggs =
-        if (spec.bool("keepSketch", dflt = false))
-          Seq(est, merged.as(f + "_merged"))
-        else Seq(est)
-      if (keys.isEmpty) df.agg(aggs.head, aggs.tail: _*)
-      else df.groupBy(keys.map(col).toIndexedSeq: _*).agg(aggs.head, aggs.tail: _*)
+      val keep =
+        if (spec.bool("keepSketch", dflt = false)) Seq(merged.as(f + "_merged")) else Nil
+      df.groupBy(keys.map(col): _*).agg(est, keep: _*)
     }
 
   /** `kllsketch`: mergeable QUANTILE sketches (Apache DataSketches KLL
@@ -249,12 +222,10 @@ object StatStages {
         s"kllsketch: '$f' must be numeric, is ${df.schema(f).dataType.simpleString}")
       val k = spec.int("k", 200)
       require(k >= 8 && k <= 65535, s"kllsketch: k out of range [8, 65535]: $k")
-      val keys = spec.strOr("groupBy", "").split(",").map(_.trim).filter(_.nonEmpty)
+      val keys = keyList(spec, "groupBy")
       keys.foreach(c => require(df.columns.contains(c), s"kllsketch: no column '$c'"))
-      val agg = graft.functions.VectorExpressions
-        .kllAgg(col(f).cast("double"), k).as(spec.strOr("out", "kll_sketch"))
-      if (keys.isEmpty) df.agg(agg)
-      else df.groupBy(keys.map(col).toIndexedSeq: _*).agg(agg)
+      df.groupBy(keys.map(col): _*).agg(graft.functions.VectorExpressions
+        .kllAgg(col(f).cast("double"), k).as(spec.strOr("out", "kll_sketch")))
     }
 
   /** `kllmerge`: union previously-built KLL sketches to a coarser grain
@@ -270,7 +241,7 @@ object StatStages {
       graft.functions.VectorExpressions.ensure(ctx.spark)
       val f = spec.strOr("field", "kll_sketch")
       require(df.columns.contains(f), s"kllmerge: no column '$f'")
-      val keys = spec.strOr("groupBy", "").split(",").map(_.trim).filter(_.nonEmpty)
+      val keys = keyList(spec, "groupBy")
       keys.foreach(c => require(df.columns.contains(c), s"kllmerge: no column '$c'"))
       val probs = spec.list("probs") match {
         case Nil => Seq(0.5)
@@ -281,9 +252,7 @@ object StatStages {
         "p" + BigDecimal(p * 100).underlying.stripTrailingZeros.toPlainString
           .replace(".", "_").replace("-", "m")
       val merged = graft.functions.VectorExpressions.kllMerge(col(f))
-      val agged = (if (keys.isEmpty) df.groupBy()
-                   else df.groupBy(keys.map(col).toIndexedSeq: _*))
-        .agg(merged.as("__sk"))
+      val agged = df.groupBy(keys.map(col): _*).agg(merged.as("__sk"))
       val qs = probs.map(p => graft.functions.VectorExpressions
         .kllQuantile(col("__sk"), p).as(nameOf(p)))
       val n = graft.functions.VectorExpressions.kllN(col("__sk")).as("n_values")
@@ -319,13 +288,11 @@ object StatStages {
       val maxMap = spec.int("maxMapSize", 1024)
       require(maxMap >= 8 && Integer.bitCount(maxMap) == 1,
         s"topksketch: maxMapSize must be a power of two >= 8, got $maxMap")
-      val keys = spec.strOr("groupBy", "").split(",").map(_.trim).filter(_.nonEmpty)
+      val keys = keyList(spec, "groupBy")
       keys.foreach(c => require(df.columns.contains(c), s"topksketch: no column '$c'"))
-      val agg = graft.functions.VectorExpressions
+      df.groupBy(keys.map(col): _*).agg(graft.functions.VectorExpressions
         .freqAgg(col(f).cast("string"), w, maxMap)
-        .as(spec.strOr("out", "freq_sketch"))
-      if (keys.isEmpty) df.agg(agg)
-      else df.groupBy(keys.map(col).toIndexedSeq: _*).agg(agg)
+        .as(spec.strOr("out", "freq_sketch")))
     }
 
   /** `topkmerge`: union frequent-items sketches to a coarser grain and
@@ -339,7 +306,7 @@ object StatStages {
       graft.functions.VectorExpressions.ensure(ctx.spark)
       val f = spec.strOr("field", "freq_sketch")
       require(df.columns.contains(f), s"topkmerge: no column '$f'")
-      val keys = spec.strOr("groupBy", "").split(",").map(_.trim).filter(_.nonEmpty)
+      val keys = keyList(spec, "groupBy")
       keys.foreach(c => require(df.columns.contains(c), s"topkmerge: no column '$c'"))
       val k = spec.int("k", 0)
       require(k >= 0, s"topkmerge: k must be >= 0, got $k")
@@ -347,10 +314,8 @@ object StatStages {
       require(maxMap >= 8 && Integer.bitCount(maxMap) == 1,
         s"topkmerge: maxMapSize must be a power of two >= 8, got $maxMap")
       val merged = graft.functions.VectorExpressions.freqMerge(col(f), maxMap)
-      val agged = (if (keys.isEmpty) df.groupBy()
-                   else df.groupBy(keys.map(col).toIndexedSeq: _*))
-        .agg(graft.functions.VectorExpressions
-          .freqItems(merged, k).as("__items"))
+      val agged = df.groupBy(keys.map(col): _*)
+        .agg(graft.functions.VectorExpressions.freqItems(merged, k).as("__items"))
       agged.select(keys.map(col) :+ explode(col("__items")).as("__it"): _*)
         .select(keys.map(col) ++ Seq(
           col("__it.item").as("item"), col("__it.est").as("est"),
@@ -388,7 +353,7 @@ object StatStages {
     * exchange carries (grain, 3 longs). */
   def checksum(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
     { df =>
-      val keys = spec.strOr("groupBy", "").split(",").map(_.trim).filter(_.nonEmpty)
+      val keys = keyList(spec, "groupBy")
       keys.foreach(c => require(df.columns.contains(c), s"checksum: no column '$c'"))
       val fields = spec.strList("fields") match {
         case Nil => df.columns.filterNot(keys.contains).toSeq
@@ -404,9 +369,7 @@ object StatStages {
         expr("bit_xor(__rh)").as("xor64"),
         sum(col("__rh").cast("decimal(38,0)"))
           .cast("decimal(38,0)").as("__sum"))
-      val g = df.withColumn("__rh", rh)
-      val agged = (if (keys.isEmpty) g.groupBy()
-                   else g.groupBy(keys.map(col).toIndexedSeq: _*))
+      val agged = df.withColumn("__rh", rh).groupBy(keys.map(col): _*)
         .agg(aggs.head, aggs.tail: _*)
       agged.withColumn("sum_mod",
           pmod(col("__sum"), lit(BigDecimal("18446744073709551616")))
@@ -423,10 +386,9 @@ object StatStages {
       Seq("n_rows", "xor64", "sum_mod").foreach(c => require(
         df.columns.contains(c), s"checksummerge: no column '$c' — input " +
         "must be a checksum grain table"))
-      val keys = spec.strOr("groupBy", "").split(",").map(_.trim).filter(_.nonEmpty)
+      val keys = keyList(spec, "groupBy")
       keys.foreach(c => require(df.columns.contains(c), s"checksummerge: no column '$c'"))
-      val agged = (if (keys.isEmpty) df.groupBy()
-                   else df.groupBy(keys.map(col).toIndexedSeq: _*))
+      val agged = df.groupBy(keys.map(col): _*)
         .agg(sum("n_rows").as("n_rows"),
           expr("bit_xor(xor64)").as("xor64"),
           sum(col("sum_mod").cast("decimal(38,0)"))
@@ -460,8 +422,7 @@ object StatStages {
       require(df.columns.contains(fld), s"quantiles: no column '$fld'")
       require(df.schema(fld).dataType.isInstanceOf[NumericType],
         s"quantiles: '$fld' must be numeric, is ${df.schema(fld).dataType.simpleString}")
-      val keys = spec.str("keyField")
-        .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq).getOrElse(Nil)
+      val keys = keyList(spec, "keyField")
       keys.foreach(k => require(df.columns.contains(k), s"quantiles: no key column '$k'"))
       val probs = spec.list("probs") match {
         case Nil => Seq(0.5)
@@ -483,8 +444,7 @@ object StatStages {
         case "exact" => percentile(col(fld), probsArr)
         case _ => percentile_approx(col(fld), probsArr, lit(accuracy))
       }
-      val agged = (if (keys.nonEmpty) df.groupBy(keys.map(col): _*) else df.groupBy())
-        .agg(aggCol.as("__qs"))
+      val agged = df.groupBy(keys.map(col): _*).agg(aggCol.as("__qs"))
       agged.select(keys.map(col) ++ probs.zipWithIndex.map { case (p, i) =>
         element_at(col("__qs"), i + 1).cast("double").as(nameOf(p))
       }: _*)
@@ -500,8 +460,8 @@ object StatStages {
     * further float math), so a value equal to a cut stays in the lower
     * bin and the whole assignment is hash-exact. NULL values keep a
     * NULL bin. ONE exact-percentile aggregate (bounded-cardinality
-    * groups — same contract as quantiles' exact mode) broadcast-joined
-    * back; the data side never shuffles.
+    * groups — same contract as quantiles' exact mode) attached back
+    * null-safely ([[GroupStats.attach]] — a NULL key is a real group).
     * Options: `field` (required, numeric), `bins` (default 4),
     * `keyField` (optional, comma-separated), `outputField` (default
     * `<field>_bin`). */
@@ -513,17 +473,13 @@ object StatStages {
         s"quantilebin: '$fld' must be numeric, is ${df.schema(fld).dataType.simpleString}")
       val k = spec.int("bins", 4)
       require(k >= 2, s"quantilebin: bins must be >= 2, got $k")
-      val keys = spec.str("keyField")
-        .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq).getOrElse(Nil)
+      val keys = keyList(spec, "keyField")
       keys.foreach(kf => require(df.columns.contains(kf), s"quantilebin: no key column '$kf'"))
       val outF = spec.strOr("outputField", s"${fld}_bin")
       val probs = (1 until k).map(i => lit(i.toDouble / k))
-      val cuts = (if (keys.nonEmpty) df.groupBy(keys.map(col): _*) else df.groupBy())
+      val cuts = df.groupBy(keys.map(col): _*)
         .agg(percentile(col(fld), array(probs: _*)).as("__cuts"))
-      val joined =
-        if (keys.isEmpty) df.crossJoin(broadcast(cuts))
-        else df.join(broadcast(cuts), keys)
-      joined.withColumn(outF,
+      attach(df, cuts, keys).withColumn(outF,
           when(col(fld).isNull, lit(null).cast("int")).otherwise(
             size(filter(col("__cuts"), c => col(fld).cast("double") > c))))
         .drop("__cuts")
@@ -547,16 +503,15 @@ object StatStages {
     * adds a boolean "was clipped" column).
     *
     * Scale shape: ONE hash aggregation for the bounds + a null-safe
-    * join back on the group keys (broadcast — group-cardinality rows),
-    * then a per-row projection. Never a window over all rows. */
+    * join back on the group keys ([[GroupStats.attach]]), then a
+    * per-row projection. Never a window over all rows. */
   def winsorize(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
     { df =>
       val fld = spec.str("field").getOrElse(sys.error("winsorize: `field` required"))
       require(df.columns.contains(fld), s"winsorize: no column '$fld'")
       require(df.schema(fld).dataType.isInstanceOf[NumericType],
         s"winsorize: '$fld' must be numeric, is ${df.schema(fld).dataType.simpleString}")
-      val keys = spec.str("keyField")
-        .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq).getOrElse(Nil)
+      val keys = keyList(spec, "keyField")
       keys.foreach(k => require(df.columns.contains(k), s"winsorize: no key column '$k'"))
       val lo = spec.str("lower").map(_.toDouble).getOrElse(0.05)
       val hi = spec.str("upper").map(_.toDouble).getOrElse(0.95)
@@ -571,26 +526,19 @@ object StatStages {
         case _ => percentile_approx(col(fld), probsArr,
           lit(spec.int("accuracy", 10000)))
       }
-      val bounds = (if (keys.nonEmpty) df.groupBy(keys.map(col): _*)
-                    else df.groupBy())
+      val bounds = df.groupBy(keys.map(col): _*)
         .agg(element_at(aggCol, 1).cast("double").as("__wlo"),
              element_at(aggCol, 2).cast("double").as("__whi"))
-      val joined =
-        if (keys.isEmpty) df.crossJoin(broadcast(bounds))
-        else df.join(broadcast(bounds.select(
-          (keys.map(k => col(k).as(s"__wk_$k")) ++
-            Seq(col("__wlo"), col("__whi"))): _*)),
-          keys.map(k => col(k) <=> col(s"__wk_$k")).reduce(_ && _), "left")
       val x = col(fld).cast("double")
       val clipped = when(x.isNull, lit(null).cast("double"))
         .otherwise(least(greatest(x, col("__wlo")), col("__whi")))
       val outF = spec.strOr("outputField", s"${fld}_w")
-      val out = joined.withColumn(outF, clipped)
+      val out = attach(df, bounds, keys).withColumn(outF, clipped)
       val flagged = spec.str("flagField") match {
         case Some(fl) => out.withColumn(fl, x.isNotNull && (x < col("__wlo") || x > col("__whi")))
         case None => out
       }
-      flagged.drop((Seq("__wlo", "__whi") ++ keys.map(k => s"__wk_$k")): _*)
+      flagged.drop("__wlo", "__whi")
     }
 
   /** `zscore`: per-group standardization `z = (x − mean) / stddev_pop`
@@ -617,8 +565,7 @@ object StatStages {
     { df =>
       val fld = spec.str("field").getOrElse(sys.error("zscore: `field` required"))
       require(df.columns.contains(fld), s"zscore: no column '$fld'")
-      val keys = spec.str("keyField")
-        .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq).getOrElse(Nil)
+      val keys = keyList(spec, "keyField")
       keys.foreach(k => require(df.columns.contains(k), s"zscore: no key column '$k'"))
       val outField = spec.strOr("outField", s"${fld}_z")
       require(!df.columns.contains(outField),
@@ -636,20 +583,10 @@ object StatStages {
       // two keyed aggs + two null-safe joins, never a window.
       if (spec.strOr("method", "std").toLowerCase == "mad") {
         val x = col(fld).cast("double")
-        def attach(base: DataFrame, agg: DataFrame): DataFrame =
-          if (keys.nonEmpty) {
-            val r = agg.toDF(agg.columns.map(c =>
-              if (keys.contains(c)) s"__k_$c" else c): _*)
-            val cond = keys.map(k => col(k) <=> col(s"__k_$k")).reduce(_ && _)
-            base.join(r, cond, "left").drop(keys.map(k => s"__k_$k"): _*)
-          } else base.crossJoin(broadcast(agg))
-        val med = (if (keys.nonEmpty) df.groupBy(keys.map(col): _*) else df.groupBy())
-          .agg(percentile(x, lit(0.5)).as("__med"))
-        val withMed = attach(df, med)
-        val mad = (if (keys.nonEmpty) withMed.groupBy(keys.map(col): _*)
-                   else withMed.groupBy())
-          .agg(percentile(abs(x - col("__med")), lit(0.5)).as("__mad"))
-        val joined = attach(withMed, mad)
+        val withMed = attach(df,
+          df.groupBy(keys.map(col): _*).agg(percentile(x, lit(0.5)).as("__med")), keys)
+        val joined = attach(withMed, withMed.groupBy(keys.map(col): _*)
+          .agg(percentile(abs(x - col("__med")), lit(0.5)).as("__mad")), keys)
         val z = when(col("__mad") > 0, (x - col("__med")) / col("__mad"))
         val withZ = joined.withColumn(outField, z)
         val withFlag = threshold.fold(withZ)(t =>
@@ -669,18 +606,8 @@ object StatStages {
             .cast("decimal(38,0)")).cast("double"))
         else (sum(col(fld).cast("double")),
           sum(col(fld).cast("double") * col(fld).cast("double")))
-      val stats = (if (keys.nonEmpty) df.groupBy(keys.map(col): _*) else df.groupBy())
-        .agg(count(col(fld)).as("__n"), sumE.as("__s"), sumSqE.as("__ss"))
-      val joined =
-        if (keys.nonEmpty) {
-          // null-safe key match: a null group key forms its own stats
-          // group and must join back to its rows (plain equi-join
-          // never matches null = null and would drop those rows)
-          val statsR = stats.toDF(stats.columns.map(c =>
-            if (keys.contains(c)) s"__k_$c" else c): _*)
-          val cond = keys.map(k => col(k) <=> col(s"__k_$k")).reduce(_ && _)
-          df.join(statsR, cond, "left").drop(keys.map(k => s"__k_$k"): _*)
-        } else df.crossJoin(broadcast(stats)) // one-row stats attach
+      val joined = attach(df, df.groupBy(keys.map(col): _*)
+        .agg(count(col(fld)).as("__n"), sumE.as("__s"), sumSqE.as("__ss")), keys)
       val nD = col("__n").cast("double")
       val mean = col("__s") / nD
       val std = sqrt((col("__ss") - col("__s") * col("__s") / nD) / nD)
@@ -703,8 +630,8 @@ object StatStages {
     * that is entirely NULL keeps its NULLs (nothing to learn from —
     * LOUD in the row, not a silent 0). Output is DOUBLE in
     * `outputField` (default `<field>_imputed`); the input column is
-    * untouched. One hash aggregate broadcast back — the data side
-    * never shuffles.
+    * untouched. One hash aggregate attached back null-safely
+    * ([[GroupStats.attach]] — a NULL key is a real group).
     * Options: `field` (required, numeric), `strategy` mean|median|
     * constant (default mean), `value`, `keyField`, `outputField`. */
   def impute(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
@@ -713,8 +640,7 @@ object StatStages {
       require(df.columns.contains(fld), s"impute: no column '$fld'")
       require(df.schema(fld).dataType.isInstanceOf[NumericType],
         s"impute: '$fld' must be numeric, is ${df.schema(fld).dataType.simpleString}")
-      val keys = spec.str("keyField")
-        .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq).getOrElse(Nil)
+      val keys = keyList(spec, "keyField")
       keys.foreach(k => require(df.columns.contains(k), s"impute: no key column '$k'"))
       val outF = spec.strOr("outputField", s"${fld}_imputed")
       val strategy = spec.strOr("strategy", "mean")
@@ -736,12 +662,8 @@ object StatStages {
               (sum(col(fld).cast(DecimalType(38, 0))).cast("double") /
                 count(col(fld)).cast("double")).as("__stat")
             else percentile(col(fld), lit(0.5)).cast("double").as("__stat")
-          val stats = (if (keys.nonEmpty) df.groupBy(keys.map(col): _*)
-                       else df.groupBy()).agg(statCol)
-          val joined =
-            if (keys.isEmpty) df.crossJoin(broadcast(stats))
-            else df.join(broadcast(stats), keys, "left")
-          joined.withColumn(outF, coalesce(col(fld).cast("double"), col("__stat")))
+          attach(df, df.groupBy(keys.map(col): _*).agg(statCol), keys)
+            .withColumn(outF, coalesce(col(fld).cast("double"), col("__stat")))
             .drop("__stat")
         case other =>
           sys.error(s"impute: unknown strategy '$other' (mean|median|constant)")
@@ -785,11 +707,10 @@ object StatStages {
           "sums would silently round fractions; scale upstream (cents, " +
           "micros) to integers first")
       }
-      val keys = spec.str("groupBy").map(_.split(",").map(_.trim).toSeq)
-        .getOrElse(Nil)
+      val keys = keyList(spec, "groupBy")
       val x = col(xF).cast(DecimalType(38, 0))
       val y = col(yF).cast(DecimalType(38, 0))
-      val agg = (if (keys.isEmpty) df.groupBy() else df.groupBy(keys.map(col): _*))
+      val agg = df.groupBy(keys.map(col): _*)
         .agg(count(lit(1)).as("__n"),
           sum(x).as("__sx"), sum(y).as("__sy"),
           sum(x * y).as("__sxy"), sum(x * x).as("__sxx"),
@@ -858,13 +779,8 @@ object StatStages {
         s"kanonymity: no column '$sf'"))
       val aggs = count(lit(1)).as("__kn") +:
         sensitive.map(sf => count_distinct(col(sf)).as("__ld")).toSeq
-      val counts = df.groupBy(fields.map(col): _*)
-        .agg(aggs.head, aggs.tail: _*)
-        .select(fields.map(f => col(f).as(s"__q_$f")) ++
-          (col("__kn") +: sensitive.map(_ => col("__ld")).toSeq): _*)
-      val cond = fields.map(f => df(f) <=> counts(s"__q_$f")).reduce(_ && _)
-      val joined = df.join(counts, cond)
-        .drop(fields.map(f => s"__q_$f"): _*)
+      val joined = attach(df, df.groupBy(fields.map(col): _*).agg(aggs.head, aggs.tail: _*),
+        fields)
       val anon = sensitive.fold(col("__kn") >= k)(_ =>
         col("__kn") >= k && col("__ld") >= lDiv)
       (action match {
@@ -925,11 +841,8 @@ object StatStages {
       val tot = cells.groupBy().agg(sum("__cgv").as("__n"))
       // the group size n_g is needed INSIDE the |…| sum — a window-free
       // two-pass: group sizes first, joined back onto the cells
-      val sizes = cells.groupBy(fields.map(f => col(f).as(s"__s_$f")): _*)
-        .agg(sum("__cgv").as("__ng0"))
-      val cellsG = cells.join(sizes,
-        fields.map(f => col(f) <=> col(s"__s_$f")).reduce(_ && _))
-        .drop(fields.map(f => s"__s_$f"): _*)
+      val cellsG = attach(cells,
+        cells.groupBy(fields.map(col): _*).agg(sum("__cgv").as("__ng0")), fields)
       val groups = cellsG
         .join(broadcast(gv), col("__sv") <=> col("__gv"))
         .crossJoin(broadcast(tot))
@@ -942,9 +855,8 @@ object StatStages {
           col("__present") + col("__ng") * (col("__nn") - col("__cvsum")))
         .withColumn("__tvd", col("__num").cast("double") /
           (col("__ng") * col("__nn") * 2L).cast("double"))
-        .select(fields.map(f => col(f).as(s"__q_$f")) :+ col("__tvd"): _*)
-      val cond = fields.map(f => df(f) <=> groups(s"__q_$f")).reduce(_ && _)
-      val joined = df.join(groups, cond).drop(fields.map(f => s"__q_$f"): _*)
+        .select(fields.map(col) :+ col("__tvd"): _*)
+      val joined = attach(df, groups, fields)
       val ok = col("__tvd") <= t
       action match {
         case "filter" => joined.where(ok).drop("__tvd")
@@ -1086,7 +998,7 @@ object StatStages {
     * `global` is set true), `outputField` (default `<field>_pct`).
     * Keyless `global:true` with an INTEGRAL field takes the SCALABLE
     * path: per-distinct-value counts + the two-level 256-bucket rank
-    * prefix (the `auc` pattern) joined back by value — identical
+    * prefix ([[GroupStats.runningBelow]]) joined back by value — identical
     * percent_rank results (ties share the first peer's rank, NULL is
     * the lowest value), and nothing ever sorts through one partition.
     * A keyless NON-integral field still costs one global sort on a
@@ -1100,7 +1012,7 @@ object StatStages {
     { df =>
       val f = spec.str("field").getOrElse(sys.error("percentrank: `field` required"))
       require(df.columns.contains(f), s"percentrank: no column '$f'")
-      val groupCols = spec.strList("groupBy")
+      val groupCols = keyList(spec, "groupBy")
       groupCols.foreach(g =>
         require(df.columns.contains(g), s"percentrank: no column '$g'"))
       if (groupCols.isEmpty) require(spec.bool("global", dflt = false),
@@ -1119,35 +1031,16 @@ object StatStages {
         // prefix over distinct values, NULL the lowest (null-safe
         // grouping + a null-first bucket)
         val counts = df.groupBy(col(f).as("__v")).agg(count(lit(1)).as("__c"))
-        val mm = counts.groupBy().agg(min("__v").as("__mn"),
-          max("__v").as("__mx"), sum("__c").as("__n"))
-        val keyed = counts.crossJoin(broadcast(mm))
-          .withColumn("__span", spanOf(col("__mx").cast("long"),
-            col("__mn").cast("long"), "percentrank"))
-          .withColumn("__chunk", expr("(__span - 1) div 256 + 1"))
-          .withColumn("__bkt",
-            when(col("__v").isNull, lit(-1L))
-              .otherwise(expr(
-                "(cast(__v as bigint) - cast(__mn as bigint)) div __chunk")))
-          .drop("__mn", "__mx", "__span", "__chunk")
-        val W = org.apache.spark.sql.expressions.Window
-        val bw = W.orderBy(col("__bkt")).rowsBetween(Long.MinValue, -1)
-        val pre = keyed.groupBy("__bkt").agg(sum("__c").as("__bc"))
-          .withColumn("__pre", coalesce(sum(col("__bc")).over(bw), lit(0L)))
-          .select(col("__bkt").as("__pb"), col("__pre"))
-        val iw = W.partitionBy(col("__bkt")).orderBy(col("__v").asc)
-          .rowsBetween(Long.MinValue, -1)
-        val below = keyed.join(broadcast(pre), col("__bkt") === col("__pb"))
-          .withColumn("__below",
-            col("__pre") + coalesce(sum(col("__c")).over(iw), lit(0L)))
-          .select(col("__v").as("__jv"), col("__below"), col("__n"))
-        // value-cardinality frame: NOT force-broadcast (ids would blow
-        // the driver); the value-keyed shuffle join is the scalable path
-        df.join(below, col(f) <=> col("__jv"))
+        val keyed = rangeBucket(counts, "__v", Nil, "percentrank", sum("__c").as("__n"))
+        val below = runningBelow(keyed, Nil, Seq(col("__v").asc), "__c" -> "__below")
+          .select(col("__v").as(f), col("__below"), col("__n"))
+        // value-cardinality frame: attached keyed by value, so never
+        // force-broadcast (ids would blow the driver)
+        attach(df, below, Seq(f))
           .withColumn(out, when(col("__n") > 1,
             col("__below").cast("double") / (col("__n") - 1L).cast("double"))
             .otherwise(lit(0.0)))
-          .drop("__jv", "__below", "__n")
+          .drop("__below", "__n")
       } else {
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy(groupCols.map(col): _*).orderBy(col(f).asc)
@@ -1179,7 +1072,7 @@ object StatStages {
       val sF = spec.str("successField").getOrElse(
         sys.error("proportions: `successField` required"))
       require(df.columns.contains(sF), s"proportions: no column '$sF'")
-      val groupCols = spec.strList("groupBy")
+      val groupCols = keyList(spec, "groupBy")
       groupCols.foreach(g =>
         require(df.columns.contains(g), s"proportions: no column '$g'"))
       val z = spec.str("z").map(_.toDouble).getOrElse(1.96)
@@ -1232,19 +1125,13 @@ object StatStages {
       val fieldName = spec.str("field").getOrElse(
         sys.error("entropy: `field` required"))
       require(df.columns.contains(fieldName), s"entropy: no column '$fieldName'")
-      val groupCols = spec.strList("groupBy")
+      val groupCols = keyList(spec, "groupBy")
       groupCols.foreach(g =>
         require(df.columns.contains(g), s"entropy: no column '$g'"))
       val vc = df.groupBy((groupCols :+ fieldName).map(col): _*)
         .agg(count(lit(1)).as("__nv"))
-      val gt = (if (groupCols.isEmpty) vc.groupBy()
-                else vc.groupBy(groupCols.map(g => col(g).as(s"__g_$g")): _*))
-        .agg(sum("__nv").as("__n"), count(lit(1)).as("__dv"))
-      val joined =
-        if (groupCols.isEmpty) vc.crossJoin(broadcast(gt))
-        else vc.join(gt,
-          groupCols.map(g => col(g) <=> col(s"__g_$g")).reduce(_ && _))
-          .drop(groupCols.map(g => s"__g_$g"): _*)
+      val joined = attach(vc, vc.groupBy(groupCols.map(col): _*)
+        .agg(sum("__nv").as("__n"), count(lit(1)).as("__dv")), groupCols)
       val surprise = (length(bin(expr("__n div __nv"))) - 1).cast("long")
       joined
         .withColumn("__bits", col("__nv") * surprise)
@@ -1280,8 +1167,7 @@ object StatStages {
       require(df.columns.contains(fld), s"robustscale: no column '$fld'")
       require(df.schema(fld).dataType.isInstanceOf[NumericType],
         s"robustscale: '$fld' must be numeric, is ${df.schema(fld).dataType.simpleString}")
-      val keys = spec.str("keyField")
-        .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq).getOrElse(Nil)
+      val keys = keyList(spec, "keyField")
       keys.foreach(k => require(df.columns.contains(k), s"robustscale: no key column '$k'"))
       val out = spec.strOr("outputField", s"${fld}_robust")
       require(!df.columns.contains(out),
@@ -1293,19 +1179,10 @@ object StatStages {
           percentile_approx(col(fld), probsArr, lit(spec.int("accuracy", 10000)))
         case other => sys.error(s"robustscale: mode must be exact|approx, got '$other'")
       }
-      val q = (if (keys.nonEmpty)
-          df.groupBy(keys.map(k => col(k).as(s"__g_$k")): _*)
-        else df.groupBy())
-        .agg(aggCol.as("__qs"))
-        .select((keys.map(k => col(s"__g_$k")) ++ Seq(
-          element_at(col("__qs"), 1).as("__q1"),
-          element_at(col("__qs"), 2).as("__med"),
-          element_at(col("__qs"), 3).as("__q3"))): _*)
-      val joined =
-        if (keys.isEmpty) df.crossJoin(broadcast(q))
-        else df.join(q, keys.map(k => col(k) <=> col(s"__g_$k")).reduce(_ && _))
-          .drop(keys.map(k => s"__g_$k"): _*)
-      joined
+      val q = df.groupBy(keys.map(col): _*)
+        .agg(element_at(aggCol, 1).as("__q1"), element_at(aggCol, 2).as("__med"),
+          element_at(aggCol, 3).as("__q3"))
+      attach(df, q, keys)
         .withColumn(out, when(col("__q3") > col("__q1"),
           (col(fld).cast("double") - col("__med")) / (col("__q3") - col("__q1"))))
         .drop("__q1", "__med", "__q3")
@@ -1334,7 +1211,7 @@ object StatStages {
       val fieldName = spec.str("field").getOrElse(
         sys.error("gini: `field` required"))
       require(df.columns.contains(fieldName), s"gini: no column '$fieldName'")
-      val groupCols = spec.strList("groupBy")
+      val groupCols = keyList(spec, "groupBy")
       groupCols.foreach(g =>
         require(df.columns.contains(g), s"gini: no column '$g'"))
       df.groupBy((groupCols :+ fieldName).map(col): _*)
@@ -1526,7 +1403,7 @@ object StatStages {
           s"${df.schema(f).dataType.simpleString}) — exact error sums; " +
           "scale upstream (cents, micros) to integers first")
       }
-      val groupCols = spec.strList("groupBy")
+      val groupCols = keyList(spec, "groupBy")
       groupCols.foreach(g =>
         require(df.columns.contains(g), s"regressioneval: no column '$g'"))
       val y = col(lF).cast("long")
@@ -1711,7 +1588,7 @@ object StatStages {
         s"survival: timeField '$tF' must be an INTEGRAL column (got " +
         s"${df.schema(tF).dataType.simpleString}) — quantize to " +
         "days/weeks upstream; distinct times bound the fold buffer")
-      val groupCols = spec.strList("groupBy")
+      val groupCols = keyList(spec, "groupBy")
       groupCols.foreach(g =>
         require(df.columns.contains(g), s"survival: no column '$g'"))
       val maxTimes = spec.long("maxTimes").getOrElse(4096L)
@@ -1739,19 +1616,12 @@ object StatStages {
         .rowsBetween(Long.MinValue, -1)
       val wAll = W.partitionBy(groupCols.map(col): _*).orderBy(col(tF))
         .rowsBetween(Long.MinValue, 0)
-      val tot = cells.groupBy(groupCols.map(g => col(g).as(s"__g_$g")): _*)
-        .agg(sum("__cnt").as("__n0"))
-      val keyed =
-        if (groupCols.isEmpty) cells.crossJoin(broadcast(tot))
-        else cells.join(tot,
-          groupCols.map(g => col(g) <=> col(s"__g_$g")).reduce(_ && _))
-          .drop(groupCols.map(g => s"__g_$g"): _*)
-      val withRisk = keyed
+      attach(cells,
+          cells.groupBy(groupCols.map(col): _*).agg(sum("__cnt").as("__n0")), groupCols)
         .withColumn("n_risk",
           col("__n0") - coalesce(sum(col("__cnt")).over(wPre), lit(0L)))
         .withColumn("__factor",
           lit(1.0) - col("events").cast("double") / col("n_risk").cast("double"))
-      withRisk
         .withColumn("__fs", collect_list(col("__factor")).over(wAll))
         .withColumn("survival", aggregate(
           slice(col("__fs"), lit(2), size(col("__fs")) - 1),
@@ -1872,21 +1742,15 @@ object StatStages {
         s"benford: '$f' must be an INTEGRAL column (got " +
         s"${df.schema(f).dataType.simpleString}) — the leading digit " +
         "comes from the exact decimal string; scale upstream")
-      val groupCols = spec.strList("groupBy")
+      val groupCols = keyList(spec, "groupBy")
       groupCols.foreach(g =>
         require(df.columns.contains(g), s"benford: no column '$g'"))
       val digit = substring(col(f).cast("string"), 1, 1).cast("int")
       val counts = df.where(col(f).isNotNull && col(f) > 0)
         .groupBy((groupCols.map(col) :+ digit.as("digit")): _*)
         .agg(count(lit(1)).as("n_digit"))
-      val tot = (if (groupCols.isEmpty) counts.groupBy()
-                 else counts.groupBy(groupCols.map(g => col(g).as(s"__g_$g")): _*))
-        .agg(sum("n_digit").as("n"))
-      val keyed =
-        if (groupCols.isEmpty) counts.crossJoin(broadcast(tot))
-        else counts.join(tot,
-          groupCols.map(g => col(g) <=> col(s"__g_$g")).reduce(_ && _))
-          .drop(groupCols.map(g => s"__g_$g"): _*)
+      val keyed = attach(counts,
+        counts.groupBy(groupCols.map(col): _*).agg(sum("n_digit").as("n")), groupCols)
       val expected = (1 to 9).foldLeft(lit(null).cast("double")) { (acc, d) =>
         when(col("digit") === d, lit(BenfordP(d))).otherwise(acc)
       }
@@ -1923,15 +1787,16 @@ object StatStages {
     * row count per key otherwise), `groupBy` (optional).
     *
     * Scale shape: ONE hash aggregation to per-key volumes, ONE more to
-    * distinct-volume blocks; the rank prefix uses the two-level
-    * 256-bucket pattern (no global window); the closing combine is a
-    * group-sized aggregation. */
+    * distinct-volume blocks; the rank prefix is the two-level
+    * [[GroupStats.runningBelow]] (no global window); the closing
+    * combine is a group-sized aggregation. A key whose values are all
+    * NULL has no volume and is left out. */
   def concentration(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
     { df =>
       val key = spec.str("keyField").getOrElse(
         sys.error("concentration: `keyField` required"))
       require(df.columns.contains(key), s"concentration: no column '$key'")
-      val groupCols = spec.strList("groupBy")
+      val groupCols = keyList(spec, "groupBy")
       groupCols.foreach(g =>
         require(df.columns.contains(g), s"concentration: no column '$g'"))
       val vol: Column = spec.str("valueField") match {
@@ -1944,39 +1809,14 @@ object StatStages {
           sum(col(v).cast("long"))
         case None => count(lit(1))
       }
-      val perKey = df.groupBy((groupCols :+ key).map(col): _*)
-        .agg(vol.as("__vol"))
-      val blocks = perKey.groupBy((groupCols :+ "__vol").map(col): _*)
+      // a key whose values are all NULL has no volume: it is no key of
+      // the Lorenz curve and stays out of every count and sum
+      val blocks = df.groupBy((groupCols :+ key).map(col): _*)
+        .agg(vol.as("__vol")).where(col("__vol").isNotNull)
+        .groupBy((groupCols :+ "__vol").map(col): _*)
         .agg(count(lit(1)).as("__cnt"))
-      val mm = (if (groupCols.isEmpty) blocks.groupBy()
-                else blocks.groupBy(groupCols.map(g => col(g).as(s"__g_$g")): _*))
-        .agg(min("__vol").as("__mn"), max("__vol").as("__mx"))
-      val keyed =
-        if (groupCols.isEmpty) blocks.crossJoin(broadcast(mm))
-        else blocks.join(mm,
-          groupCols.map(g => col(g) <=> col(s"__g_$g")).reduce(_ && _))
-          .drop(groupCols.map(g => s"__g_$g"): _*)
-      val bucketed = keyed
-        .withColumn("__span", spanOf(col("__mx"), col("__mn"), "concentration"))
-        .withColumn("__chunk", expr("(__span - 1) div 256 + 1"))
-        .withColumn("__bkt", expr("(__vol - __mn) div __chunk"))
-        .drop("__mn", "__mx", "__span", "__chunk")
-      val W = org.apache.spark.sql.expressions.Window
-      val bw = W.partitionBy(groupCols.map(col): _*).orderBy(col("__bkt"))
-        .rowsBetween(Long.MinValue, -1)
-      val pre = bucketed.groupBy((groupCols :+ "__bkt").map(col): _*)
-        .agg(sum("__cnt").as("__bc"))
-        .withColumn("__pre", coalesce(sum(col("__bc")).over(bw), lit(0L)))
-        .select(groupCols.map(g => col(g).as(s"__pg_$g")) ++
-          Seq(col("__bkt").as("__pb"), col("__pre")): _*)
-      val iw = W.partitionBy((groupCols :+ "__bkt").map(col): _*)
-        .orderBy(col("__vol")).rowsBetween(Long.MinValue, -1)
-      val below = bucketed.join(pre,
-          (groupCols.map(g => col(g) <=> col(s"__pg_$g")) :+
-            (col("__bkt") === col("__pb"))).reduce(_ && _))
-        .drop(groupCols.map(g => s"__pg_$g") :+ "__pb": _*)
-        .withColumn("__below",
-          col("__pre") + coalesce(sum(col("__cnt")).over(iw), lit(0L)))
+      val below = runningBelow(rangeBucket(blocks, "__vol", groupCols, "concentration"),
+        groupCols, Seq(col("__vol")), "__cnt" -> "__below")
       val contrib = col("__vol") * (col("__below") * col("__cnt") +
         expr("(__cnt * (__cnt + 1)) div 2"))
       below.withColumn("__siv", contrib)
@@ -2012,7 +1852,7 @@ object StatStages {
     *
     * Scale shape: ONE hash aggregation per corpus to distinct-value
     * counts, full-outer-merged; the cumulative counts use the
-    * two-level 256-bucket prefix (the `auc` pattern) — distinct values
+    * two-level 256-bucket prefix ([[GroupStats.runningBelow]]) — distinct values
     * never sort through one partition; the closing arg-max is ONE
     * struct-max aggregation. */
   def ksTest(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
@@ -2036,26 +1876,12 @@ object StatStages {
         .select(coalesce(col("__v"), col("__bv")).as("__v"),
           coalesce(col("__ca"), lit(0L)).as("__ca"),
           coalesce(col("__cb"), lit(0L)).as("__cb"))
-      val mm = j.groupBy().agg(min("__v").as("__mn"), max("__v").as("__mx"),
+      val keyed = rangeBucket(j, "__v", Nil, "kstest",
         sum("__ca").as("__n1"), sum("__cb").as("__n2"))
-      val keyed = j.crossJoin(broadcast(mm))
-        .withColumn("__span", spanOf(col("__mx"), col("__mn"), "kstest"))
-        .withColumn("__chunk", expr("(__span - 1) div 256 + 1"))
-        .withColumn("__bkt", expr("(__v - __mn) div __chunk"))
-        .drop("__mn", "__mx", "__span", "__chunk")
-      val W = org.apache.spark.sql.expressions.Window
-      val bw = W.orderBy(col("__bkt")).rowsBetween(Long.MinValue, -1)
-      val pre = keyed.groupBy("__bkt")
-        .agg(sum("__ca").as("__ba"), sum("__cb").as("__bb"))
-        .withColumn("__pa", coalesce(sum(col("__ba")).over(bw), lit(0L)))
-        .withColumn("__pb", coalesce(sum(col("__bb")).over(bw), lit(0L)))
-        .select(col("__bkt").as("__pbk"), col("__pa"), col("__pb"))
-      // inclusive intra-bucket prefix: the ECDF at v counts v itself
-      val iw = W.partitionBy(col("__bkt")).orderBy(col("__v"))
-        .rowsBetween(Long.MinValue, 0)
-      keyed.join(broadcast(pre), col("__bkt") === col("__pbk")).drop("__pbk")
-        .withColumn("__c1", col("__pa") + sum(col("__ca")).over(iw))
-        .withColumn("__c2", col("__pb") + sum(col("__cb")).over(iw))
+      // inclusive: the ECDF at v counts v itself
+      runningBelow(keyed, Nil, Seq(col("__v")), "__ca" -> "__c1", "__cb" -> "__c2")
+        .withColumn("__c1", col("__c1") + col("__ca"))
+        .withColumn("__c2", col("__c2") + col("__cb"))
         .withColumn("__d", abs(col("__c1") * col("__n2") - col("__c2") * col("__n1")))
         .groupBy()
         .agg(max("__n1").as("n_cur"), max("__n2").as("n_base"),
@@ -2218,12 +2044,11 @@ object StatStages {
     * one-row result otherwise).
     *
     * Scale shape: ONE hash aggregation to (group, score) counts, then
-    * the running negative count uses the codebase's TWO-LEVEL prefix
-    * sum (the `mixture` budget pattern): scores bucket into ≤256
-    * range-ordered chunks via min/max joined back group-keyed, bucket
-    * totals take a ≤256-row window per group, and the intra-bucket
-    * window is PARTITIONED by (group, bucket) — distinct scores never
-    * sort through one partition, keyless or not. */
+    * the running negative count is the TWO-LEVEL prefix sum of
+    * [[GroupStats]]: scores bucket into ≤256 range-ordered chunks per
+    * group, bucket totals take a ≤256-row window per group, and the
+    * intra-bucket window is PARTITIONED by (group, bucket) — distinct
+    * scores never sort through one partition, keyless or not. */
   def auc(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
     { df =>
       val sF = spec.str("scoreField").getOrElse(
@@ -2238,7 +2063,7 @@ object StatStages {
         s"${df.schema(sF).dataType.simpleString}) — quantize model " +
         "scores upstream (e.g. permille buckets); the rank arithmetic " +
         "is exact longs")
-      val groupCols = spec.strList("groupBy")
+      val groupCols = keyList(spec, "groupBy")
       groupCols.foreach(g =>
         require(df.columns.contains(g), s"auc: no column '$g'"))
       val isPos = df.schema(lF).dataType match {
@@ -2247,51 +2072,14 @@ object StatStages {
         case other => sys.error(
           s"auc: labelField '$lF' must be boolean or numeric, got $other")
       }
-      val W = org.apache.spark.sql.expressions.Window
-      // one hash agg to per-(group, score) class counts
+      // one hash agg to per-(group, score) class counts; the running
+      // negative count below each score is the two-level prefix
       val perScore = df.where(col(sF).isNotNull && col(lF).isNotNull)
         .groupBy((groupCols :+ sF).map(col): _*)
         .agg(sum(when(isPos, 1L).otherwise(0L)).as("__p"),
           sum(when(isPos, 0L).otherwise(1L)).as("__g"))
-      // group score range, joined back to key the bucket arithmetic
-      // (broadcast when global); chunk divides FIRST so (score−min)/chunk
-      // can't overflow a long for any span
-      val mm = (if (groupCols.isEmpty) perScore.groupBy()
-                else perScore.groupBy(groupCols.map(g => col(g).as(s"__g_$g")): _*))
-        .agg(min(col(sF)).as("__mn"), max(col(sF)).as("__mx"))
-      val keyed =
-        if (groupCols.isEmpty) perScore.crossJoin(broadcast(mm))
-        else perScore.join(mm,
-          groupCols.map(g => col(g) <=> col(s"__g_$g")).reduce(_ && _))
-          .drop(groupCols.map(g => s"__g_$g"): _*)
-      // integer `div` throughout — double division would round for
-      // spans near 2^63; chunk ≥ 1 keeps every bucket in [0, 256)
-      val bucketed = keyed
-        .withColumn("__span", spanOf(col("__mx").cast("long"),
-          col("__mn").cast("long"), "auc"))
-        .withColumn("__chunk", expr("(__span - 1) div 256 + 1"))
-        .withColumn("__bkt",
-          expr(s"(cast(`$sF` as bigint) - cast(__mn as bigint)) div __chunk"))
-        .drop("__mn", "__mx", "__span", "__chunk")
-      // level 1: per-group bucket totals → exclusive prefix over ≤256
-      // rows per group
-      val bw = W.partitionBy(groupCols.map(col): _*).orderBy(col("__bkt"))
-        .rowsBetween(Long.MinValue, -1)
-      val pre = bucketed.groupBy((groupCols :+ "__bkt").map(col): _*)
-        .agg(sum("__g").as("__bg"))
-        .withColumn("__pre", coalesce(sum(col("__bg")).over(bw), lit(0L)))
-        .select(groupCols.map(g => col(g).as(s"__pg_$g")) ++
-          Seq(col("__bkt").as("__pb"), col("__pre")): _*)
-      // level 2: intra-bucket running negatives, partitioned by bucket;
-      // the pre join is null-safe on the group keys (null groups are
-      // real groups)
-      val iw = W.partitionBy((groupCols :+ "__bkt").map(col): _*)
-        .orderBy(col(sF)).rowsBetween(Long.MinValue, -1)
-      val below = bucketed.join(pre,
-          (groupCols.map(g => col(g) <=> col(s"__pg_$g")) :+
-            (col("__bkt") === col("__pb"))).reduce(_ && _))
-        .drop(groupCols.map(g => s"__pg_$g") :+ "__pb": _*)
-        .withColumn("__nb", col("__pre") + coalesce(sum(col("__g")).over(iw), lit(0L)))
+      val below = runningBelow(rangeBucket(perScore, sF, groupCols, "auc"),
+        groupCols, Seq(col(sF)), "__g" -> "__nb")
       val u2 = col("__p") * (col("__nb") * 2L + col("__g"))
       below.withColumn("__u2", u2)
         .groupBy(groupCols.map(col): _*)

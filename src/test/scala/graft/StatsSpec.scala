@@ -93,6 +93,12 @@ class StatsSpec extends SparkSpec {
     val perShard = StatStages.kllSketch(ComponentSpec("kllsketch",
       Map("field" -> "v", "groupBy" -> "shard", "k" -> 512)), ctx)(df)
     assert(perShard.count() == 4)
+    // a JSON-list key list groups like the comma string
+    val byList = StatStages.kllSketch(ComponentSpec("kllsketch",
+      Map("field" -> "v", "groupBy" -> Seq("shard", "half"))), ctx)(
+      df.withColumn("half", col("shard") % 2))
+    assert(byList.columns.toSeq == Seq("shard", "half", "kll_sketch"))
+    assert(byList.count() == 4)
     val m = StatStages.kllMerge(ComponentSpec("kllmerge",
       Map("probs" -> Seq(0.0, 0.5, 1.0))), ctx)(perShard)
       .select("p0", "p50", "p100", "n_values").head()
@@ -408,7 +414,8 @@ class StatsSpec extends SparkSpec {
     val ctx = newCtx()
     import spark.implicits._
     val df = Seq(("a", Some(10L)), ("a", Some(20L)), ("a", None),
-      ("b", Some(5L)), ("b", None), ("c", None))
+      ("b", Some(5L)), ("b", None), ("c", None),
+      (null, Some(7L)), (null, None))
       .toDF("g", "v")
     def run(opts: (String, Any)*): Map[(String, Option[Long]), Option[Double]] =
       graft.stages.StatStages.impute(ComponentSpec("impute",
@@ -422,6 +429,11 @@ class StatsSpec extends SparkSpec {
     assert(mean(("c", None)).isEmpty)            // all-null group stays null
     val med = run("strategy" -> "median")
     assert(med(("a", None)) == Some(15.0) && med(("b", None)) == Some(5.0))
+    // a NULL key is a real group: its NULL fills from its own statistic
+    assert(mean((null, None)) == Some(7.0) && med((null, None)) == Some(7.0))
+    assert(graft.stages.StatStages.impute(ComponentSpec("impute",
+      Map("field" -> "v", "keyField" -> "g")), ctx)(df).columns.toSeq ==
+      Seq("g", "v", "v_imputed"))
     val const = run("strategy" -> "constant", "value" -> -1)
     assert(const(("c", None)) == Some(-1.0))
     // mean over a float column fails LOUD (decimal cast would truncate)
@@ -452,6 +464,16 @@ class StatsSpec extends SparkSpec {
       Map("field" -> "v", "bins" -> 2, "keyField" -> "k")), ctx)(tie)
       .select("v", "v_bin").as[(Long, Int)].collect().toSet
     assert(tied == Set((1L, 0), (5L, 0), (9L, 1))) // median 5.0, 5 !> 5
+    // a NULL key is a real group: its rows stay, binned within it, and
+    // the input's column order is kept
+    val nk = Seq(("t", 1L), ("t", 9L), (null, 2L), (null, 4L), (null, 6L), (null, 8L))
+      .toDF("k", "v").select("v", "k")
+    val nkBins = graft.stages.StatStages.quantileBin(ComponentSpec("quantilebin",
+      Map("field" -> "v", "bins" -> 2, "keyField" -> "k")), ctx)(nk)
+    assert(nkBins.select("k", "v", "v_bin").as[(String, Long, Int)].collect().toSet ==
+      Set(("t", 1L, 0), ("t", 9L, 1), (null, 2L, 0), (null, 4L, 0), (null, 6L, 1),
+        (null, 8L, 1)))
+    assert(nkBins.columns.toSeq == Seq("v", "k", "v_bin"))
     // global (key-less) path + bad-config guards
     val g = graft.stages.StatStages.quantileBin(ComponentSpec("quantilebin",
       Map("field" -> "v", "bins" -> 2)), ctx)(tie)
@@ -676,6 +698,13 @@ class StatsSpec extends SparkSpec {
       "percentrank", Map("field" -> "v", "global" -> true)), ctx)(wide)
       .collect())
     assert(ov.getMessage.contains("2^63"), ov.getMessage)
+    // a comma-string key list groups like the JSON list
+    val two = df.withColumn("h", col("v") % 20)
+    def pcts(groupBy: Any) = StatStages.percentRank(ComponentSpec("percentrank",
+      Map("field" -> "v", "groupBy" -> groupBy)), ctx)(two)
+      .select("k", "h", "v", "v_pct").as[(String, Long, Long, Double)].collect().toSet
+    assert(pcts("k, h") == pcts(Seq("k", "h")))
+    assert(pcts("k, h").size == 4)
   }
 
   test("proportions: Wilson CI matches an independent computation; null ≠ trial") {
@@ -1005,6 +1034,13 @@ class StatsSpec extends SparkSpec {
       .select("grp", "gini").as[(String, Double)].collect().toMap
     // g1: Σi·x = 1 + 18 = 19 → (38 − 30)/20 = 0.4; g2 uniform → 0
     assert(byG("g1") == 8.0 / 20.0 && byG("g2") == 0.0)
+    // a key whose values are all NULL has no volume and is no key:
+    // {A: NULL, B: 1, C: 2} is {B: 1, C: 2} — Σi·x = 5, S = 3, n = 2
+    val withNull = Seq(("A", None), ("B", Some(1L)), ("C", Some(2L))).toDF("k", "v")
+    assert(StatStages.concentration(ComponentSpec("concentration",
+      Map("keyField" -> "k", "valueField" -> "v")), ctx)(withNull)
+      .select("n_keys", "total", "gini").as[(Long, Long, Double)].head() ==
+      ((2L, 3L, 1.0 / 6.0)))
     assert(intercept[Exception](StatStages.concentration(ComponentSpec(
       "concentration", Map()), ctx)(df)).getMessage.contains("keyField"))
   }
