@@ -4,7 +4,11 @@ import org.apache.spark.sql.SparkSession
 
 /** Bench harness: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR (default sf0.1) and prints ONE JSON line with
-  * per-query wall seconds. `count()` forces full execution of each plan.
+  * per-query wall seconds. Each plan is forced with `count()`, which
+  * Catalyst may prune: a join that cannot change the row count and
+  * whose right-side columns nothing reads is dropped (impute_missing's
+  * and mad_outliers' joins to their statistics), so such a query's
+  * time covers less work than its loader output needs.
   *
   * SELF-DEFENDING against host CPU steal (this box shows invisible
   * 10–130× per-query stalls across rounds — see BASELINE.md): any query

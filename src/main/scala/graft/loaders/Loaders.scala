@@ -3,6 +3,7 @@ package graft.loaders
 import graft.engine.EtlContext
 import graft.expr.OrientExpr
 import graft.spec.ComponentSpec
+import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{array, col, concat_ws, explode, filter, hash, lit, pmod, raise_error, struct, when}
 
@@ -181,20 +182,85 @@ object Loaders {
     scd2Cfg(spec).map(scd2Stamp(incoming, _)).getOrElse(incoming)
 
   /** One upsert application (a batch load, or ONE micro-batch of the
-    * streaming `upsert` sink): `buckets: n` opts into the hash-bucketed
-    * layout whose upserts rewrite only key-containing buckets — the
-    * shape for targets too big to rewrite per delta. `scd2: {…}` turns
-    * the merge into the Type-2 history merge (see [[Scd2Cfg]]); batch
-    * loads only — a streaming sink re-applies one config-level version
-    * per micro-batch, which is a no-op for unchanged values and an
-    * out-of-order error for changed ones. */
-  def upsertDelta(ctx: EtlContext, spec: ComponentSpec,
-                  df: DataFrame, path: String): Boolean =
+    * streaming `upsert` sink) — the reference's save-or-update per
+    * record + batchCommit (OOrientDBLoader.java:164-177, 181-194)
+    * without a transactional store: existing table ⟕ incoming on `key`
+    * (last-wins per key within the batch, untouched rows preserved),
+    * written to `<path>.staging` and swapped in by [[TableSwap]], so the
+    * source files are never read and overwritten in the same job.
+    *
+    * `buckets: n` opts into the hash-bucketed layout for targets too big
+    * to rewrite per delta: `__bucket=<i>` partition dirs,
+    * `i = pmod(hash(key), n)`, layout recorded in a `_graft_buckets.json`
+    * sidecar. An upsert into such a table computes the DISTINCT bucket
+    * ids the delta touches (≤ n values), scans ONLY those partitions
+    * (Catalyst partition pruning; Spark's partition discovery still
+    * lists every bucket dir), merges within them and swaps in ONLY the
+    * rewritten bucket dirs, so its scan and rewrite scale with the
+    * delta, not the table (PlanSpec, the ScaleStress upsert leg).
+    * Every other write — a first write, a flat table, the one-time
+    * flat → bucketed migration — replaces the whole table, sidecar
+    * included, in one rename. The sidecar's (key, n) is
+    * the on-disk hash: a spec that differs from it (a missing `buckets`
+    * included) would read and write the wrong buckets, so it fails.
+    *
+    * `scd2: {…}` turns the merge into the Type-2 history merge (see
+    * [[Scd2Cfg]]); batch loads only — a streaming sink re-applies one
+    * config-level version per micro-batch, which is a no-op for
+    * unchanged values and an out-of-order error for changed ones. At
+    * real scale the same merge plan targets a transactional table
+    * format; this is the plain-filesystem equivalent. */
+  def upsertDelta(ctx: EtlContext, spec: ComponentSpec, df: DataFrame): Boolean = {
+    val path = resolved(ctx, spec, "path")
     withWriteLease(ctx, spec, path) {
-      if (spec.options.contains("buckets"))
-        upsertParquetBucketed(ctx, spec, df, path, spec.int("buckets", 16))
-      else upsertParquet(ctx, spec, df, path)
+      val key = spec.str("key").getOrElse(sys.error("parquet loader: upsert requires key"))
+      val buckets = if (spec.options.contains("buckets")) Some(spec.int("buckets", 16)) else None
+      buckets.foreach(n => require(n > 0, s"parquet upsert: buckets must be positive, got $n"))
+      val incoming = applyDeclaredSchema(df, spec)
+      require(incoming.columns.contains(key),
+        s"parquet upsert: incoming batch lacks key column '$key'")
+      val table = new TableSwap(ctx, path, "upsert")
+      table.recover()
+      val bucketOf = buckets.map(n => pmod(hash(col(key)), lit(n)))
+      def layout(n: Int) = s"""{"key":"$key","buckets":$n}"""
+      val sidecar = new HPath(table.target, "_graft_buckets.json")
+      val recorded = readText(table.fs, sidecar)
+      recorded.foreach(meta => require(buckets.exists(n => meta.trim == layout(n)),
+        s"parquet upsert: bucket layout mismatch for $path — table sidecar " +
+        s"$meta vs spec (key=$key, buckets=${buckets.getOrElse("none")}); " +
+        "re-create the table or match the recorded layout"))
+      val (merged, dirs) =
+        if (recorded.isDefined) {
+          val affected = incoming.select(bucketOf.get.cast("int")).distinct()
+            .collect().map(_.getInt(0)).toSeq.sorted
+          // partition-PRUNED read: only the affected bucket dirs are
+          // scanned (isin on the partition column)
+          val existing = ctx.spark.read.parquet(path)
+            .where(col("__bucket").isin(affected.map(Integer.valueOf): _*))
+            .drop("__bucket")
+          (mergeResult(existing, incoming, key, spec), affected.map(b => s"__bucket=$b"))
+        } else if (table.fs.exists(table.target)) {
+          val existing = ctx.spark.read.parquet(path)
+          require(!existing.columns.contains("__bucket"), s"parquet upsert: $path " +
+            s"has __bucket= partitions but no $sidecar — its bucket layout is " +
+            "unknown; re-create the table")
+          (mergeResult(existing, incoming, key, spec), Nil)
+        } else (firstWrite(incoming, spec), Nil)
+      // an empty delta into a bucketed table touches no bucket
+      if (recorded.isEmpty || dirs.nonEmpty) {
+        bucketOf match {
+          case Some(b) => merged.withColumn("__bucket", b).write.mode("overwrite")
+            .partitionBy("__bucket").parquet(table.staging.toString)
+          case None => merged.write.mode("overwrite").parquet(table.staging.toString)
+        }
+        // a whole-table write carries its layout into the same rename
+        if (dirs.isEmpty) buckets.foreach(n =>
+          writeText(table.fs, new HPath(table.staging, sidecar.getName), layout(n)))
+        table.replace(dirs)
+      }
+      true
     }
+  }
 
   /** Single-writer lease on a parquet merge target: two simultaneous
     * merges to one table would interleave their bucket/table swaps into
@@ -210,25 +276,18 @@ object Loaders {
     * refreshes the lock's mtime every staleMins/4, so a LIVE merge of
     * any duration never looks stale; a lease whose mtime is older than
     * `lockStaleMinutes` (default 60) can only come from a dead writer
-    * and is broken and re-acquired — the crash-recovery rename protocol
-    * makes the table state safe to take over. (Stale-breaking is
-    * best-effort: two waiters racing the break can in principle both
-    * proceed on a store without compare-and-swap; the stale window is
-    * the accepted trade, same as every marker-file lease.) */
+    * and is broken and re-acquired — [[TableSwap.recover]] makes the
+    * table state safe to take over. (Stale-breaking is best-effort: two
+    * waiters racing the break can in principle both proceed on a store
+    * without compare-and-swap; the stale window is the accepted trade,
+    * same as every marker-file lease.) */
   private def withWriteLease[T](ctx: EtlContext, spec: ComponentSpec,
                                 path: String, mode: String = "upsert")
                                (body: => T): T = {
-    import org.apache.hadoop.fs.{Path => HPath}
     val fs = new HPath(path).getFileSystem(ctx.spark.sparkContext.hadoopConfiguration)
     val lock = new HPath(path + ".lock")
     val staleMins = spec.long("lockStaleMinutes").getOrElse(60L)
     val holder = java.lang.management.ManagementFactory.getRuntimeMXBean.getName
-    def writeInfo(): Unit = {
-      val out = fs.create(lock, true)
-      out.write((s"""{"holder":"$holder",""" +
-        s""""acquired_ms":${System.currentTimeMillis()}}""").getBytes("UTF-8"))
-      out.close()
-    }
     def tryAcquire(): Boolean = {
       val claimed =
         if ("file".equals(lock.toUri.getScheme) ||
@@ -240,7 +299,8 @@ object Loaders {
         else
           try { fs.create(lock, false).close(); true }
           catch { case _: java.io.IOException => false }
-      if (claimed) writeInfo()
+      if (claimed) writeText(fs, lock, s"""{"holder":"$holder",""" +
+        s""""acquired_ms":${System.currentTimeMillis()}}""")
       claimed
     }
     var acquired = tryAcquire()
@@ -249,19 +309,16 @@ object Loaders {
                catch { case _: java.io.FileNotFoundException => None }
       val stale = st.exists(s =>
         System.currentTimeMillis() - s.getModificationTime > staleMins * 60000L)
-      if (stale || st.isEmpty) { fs.delete(lock, false); acquired = tryAcquire() }
+      // no lock file: the claim failed on a missing parent dir
+      if (stale || st.isEmpty) {
+        fs.delete(lock, false); fs.mkdirs(lock.getParent); acquired = tryAcquire()
+      }
     }
-    if (!acquired) {
-      val info =
-        try { val in = fs.open(lock)
-              val t = scala.io.Source.fromInputStream(in, "UTF-8").mkString
-              in.close(); t }
-        catch { case scala.util.control.NonFatal(_) => "?" }
+    if (!acquired)
       sys.error(s"parquet $mode: another writer holds the lease on $path " +
-        s"($info at $lock) — concurrent merges to one table would " +
-        "interleave their swaps; retry after it finishes (a dead " +
-        s"holder's lease breaks automatically after lockStaleMinutes=$staleMins)")
-    }
+        s"(${readText(fs, lock).getOrElse("?")} at $lock) — concurrent merges " +
+        "to one table would interleave their swaps; retry after it finishes " +
+        s"(a dead holder's lease breaks automatically after lockStaleMinutes=$staleMins)")
     // heartbeat: a LIVE merge must never cross the stale threshold
     val beat = new Thread(() => {
       try while (!Thread.interrupted()) {
@@ -282,193 +339,75 @@ object Loaders {
     }
   }
 
-  /** File-based MERGE — the reference's save-or-update per record
-    * (OOrientDBLoader.java:164-177) without a transactional store:
-    * existing table ⟕ incoming on `key` (last-wins per key within the
-    * batch, untouched rows preserved), rewritten through a staging dir
-    * so the source files are never read and overwritten in the same
-    * job, then swapped in with renames through the Hadoop `FileSystem`
-    * API — works on any Hadoop filesystem (local, HDFS; object stores
-    * without atomic rename get a copy-rename from their connector, with
-    * the same recoverability). The swap keeps a recoverable copy through
-    * the window: target → `.old`, staging → target, then delete `.old` —
-    * a crash mid-swap leaves either the old or the new table on disk,
-    * never neither, and the next run restores a stranded `.old` before
-    * reading (so the crash window cannot silently drop prior rows).
-    * At real scale the same merge plan targets a
-    * transactional table format; this is the plain-filesystem
-    * equivalent. */
-  private def upsertParquet(ctx: EtlContext, spec: ComponentSpec,
-                            df: DataFrame, path: String): Boolean = {
-    val key = spec.str("key").getOrElse(sys.error("parquet loader: upsert requires key"))
-    val incoming = applyDeclaredSchema(df, spec)
-    val hadoopConf = ctx.spark.sparkContext.hadoopConfiguration
-    val target = new org.apache.hadoop.fs.Path(path)
-    val fs = target.getFileSystem(hadoopConf)
-    val old = new org.apache.hadoop.fs.Path(path + ".old")
-    // crash recovery: a previous run that died between moving the target
-    // aside and swapping staging in leaves `.old` as the ONLY surviving
-    // copy of the table — restore it before reading, never delete it.
-    if (!fs.exists(target) && fs.exists(old))
-      require(fs.rename(old, target),
-        s"parquet upsert: crash recovery failed restoring $old -> $target")
-    val existed = fs.exists(target)
-    val merged =
-      if (existed) mergeResult(ctx.spark.read.parquet(path), incoming, key, spec)
-      else firstWrite(incoming, spec)
-    val staging = new org.apache.hadoop.fs.Path(path + ".staging")
-    merged.write.mode("overwrite").parquet(staging.toString)
-    // a leftover .old at this point coexists with a live target (crash
-    // after the staging swap but before cleanup) — safe to drop
-    if (fs.exists(old)) fs.delete(old, true)
-    if (existed)
-      require(fs.rename(target, old),
-        s"parquet upsert: could not move current table aside ($target -> $old)")
-    if (!fs.rename(staging, target)) {
-      // roll back so the table is never lost: restore the old copy
-      if (existed) fs.rename(old, target)
-      sys.error(s"parquet upsert: staging rename failed for $path (staging " +
-        s"left at $staging; original table restored)")
-    }
-    if (existed) fs.delete(old, true)
-    true
-  }
-
-  /** Partition-pruned MERGE for large targets — the 100 TB shape of
-    * [[upsertParquet]]. The table lives hash-bucketed on the merge key
-    * (`__bucket=<i>` partition directories, `i = pmod(hash(key), n)`,
-    * layout recorded in a `_graft_buckets.json` sidecar); an upsert
-    * 1. computes the DISTINCT bucket ids the delta touches (≤ n values),
-    * 2. reads ONLY those partitions (genuine Catalyst partition pruning
-    *    — the scan never lists untouched buckets),
-    * 3. merges last-wins per key within them, and
-    * 4. swaps in ONLY the rewritten bucket directories.
-    * Untouched buckets' files are never read, rewritten, or moved, so
-    * upsert cost scales with DELTA size, not table size (asserted by
-    * PlanSpec + the ScaleStress upsert leg). Same crash contract as the
-    * whole-table path, per bucket: target bucket → `.old`, staging
-    * bucket → target, delete `.old`; a crash leaves every bucket in
-    * either its old or new state, never neither, and the next run
-    * restores stranded `.old` buckets before reading.
-    * Reference semantics: save-or-update per record +
-    * batchCommit (OOrientDBLoader.java:164-177, 181-194) — the
-    * transactional store's row-level upsert re-expressed as bounded
-    * partition rewrites on a plain filesystem. */
-  private def upsertParquetBucketed(ctx: EtlContext, spec: ComponentSpec,
-                                    df: DataFrame, path: String,
-                                    nBuckets: Int): Boolean = {
-    import org.apache.hadoop.fs.{Path => HPath}
-    val key = spec.str("key").getOrElse(sys.error("parquet loader: upsert requires key"))
-    require(nBuckets > 0, s"parquet upsert: buckets must be positive, got $nBuckets")
-    val incoming = applyDeclaredSchema(df, spec)
-    require(incoming.columns.contains(key),
-      s"parquet upsert: incoming batch lacks key column '$key'")
-    val spark = ctx.spark
-    val fs = new HPath(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+  /** The one way a parquet table is rewritten (upsert, compact): the
+    * new state is written to `<path>.staging`, then [[replace]] moves
+    * the current copy to `<path>.old`, renames the staged copy in and
+    * deletes `.old` — all through the Hadoop `FileSystem` API, so any
+    * Hadoop filesystem works (object stores without atomic rename get a
+    * copy-rename from their connector, with the same recoverability). A
+    * crash mid-swap leaves each swapped dir in its old or its new
+    * state, never neither, and [[recover]], run under the write lease
+    * before the table is read, restores what only `.old` still holds —
+    * the crash window cannot silently drop prior rows. */
+  private final class TableSwap(ctx: EtlContext, path: String, mode: String) {
     val target = new HPath(path)
-    val old = new HPath(path + ".old")
     val staging = new HPath(path + ".staging")
-    def bucketDirs(root: HPath): Seq[(Int, HPath)] =
-      if (!fs.exists(root)) Nil
-      else fs.listStatus(root).toSeq.collect {
-        case s if s.isDirectory && s.getPath.getName.startsWith("__bucket=") =>
-          (s.getPath.getName.stripPrefix("__bucket=").toInt, s.getPath)
+    private val old = new HPath(path + ".old")
+    val fs: FileSystem = target.getFileSystem(ctx.spark.sparkContext.hadoopConfiguration)
+
+    private def move(from: HPath, to: HPath, what: String): Unit =
+      require(fs.rename(from, to), s"parquet $mode: $what ($from -> $to)")
+
+    /** A whole table found only in `.old` (died between moving it aside
+      * and the swap) is restored; otherwise each `__bucket=` dir found
+      * only in `.old` is, and `.old` copies of dirs whose swap landed
+      * are dropped. */
+    def recover(): Unit = if (fs.exists(old)) {
+      if (!fs.exists(target)) move(old, target, "crash recovery failed restoring the table")
+      else {
+        for (s <- fs.listStatus(old) if s.isDirectory && s.getPath.getName.startsWith("__bucket=")) {
+          val live = new HPath(target, s.getPath.getName)
+          if (!fs.exists(live)) move(s.getPath, live, "crash recovery failed restoring a bucket")
+        }
+        fs.delete(old, true)
       }
-    // crash recovery. Whole-table case first: a migration crash between
-    // move-aside and swap leaves `.old` as the ONLY copy of the table —
-    // restore it, never delete it. Then per-bucket: restore any bucket
-    // whose only surviving copy is in `.old` (died between move-aside
-    // and staging swap); drop `.old` copies that coexist with a live
-    // target bucket (died after swap).
-    if (!fs.exists(target) && fs.exists(old)) {
-      require(fs.rename(old, target),
-        s"parquet upsert: crash recovery failed restoring $old -> $target")
-    } else {
-      for ((b, oldDir) <- bucketDirs(old)) {
-        val tgt = new HPath(target, s"__bucket=$b")
-        if (!fs.exists(tgt))
-          require(fs.rename(oldDir, tgt),
-            s"parquet upsert: crash recovery failed restoring bucket $b")
-        else fs.delete(oldDir, true)
-      }
-      if (fs.exists(old)) fs.delete(old, true)
     }
 
-    val sidecar = new HPath(target, "_graft_buckets.json")
-    val bucketCol = pmod(hash(col(key)), lit(nBuckets))
-    def writeSidecar(): Unit = {
-      val out = fs.create(sidecar, true)
-      out.write(s"""{"key":"$key","buckets":$nBuckets}""".getBytes("UTF-8"))
-      out.close()
-    }
-    val existed = fs.exists(target)
-    if (!existed) {
-      firstWrite(incoming, spec).withColumn("__bucket", bucketCol)
-        .write.mode("overwrite").partitionBy("__bucket").parquet(path)
-      writeSidecar()
-      return true
-    }
-    if (!fs.exists(sidecar)) {
-      // existing NON-bucketed table: one-time migration — full merge +
-      // rewrite into the bucketed layout; every later upsert is pruned
-      val merged = mergeResult(spark.read.parquet(path), incoming, key, spec)
-      merged.withColumn("__bucket", bucketCol)
-        .write.mode("overwrite").partitionBy("__bucket").parquet(staging.toString)
-      require(fs.rename(target, old), s"parquet upsert: could not move " +
-        s"current table aside ($target -> $old)")
-      if (!fs.rename(staging, target)) {
-        fs.rename(old, target)
-        sys.error(s"parquet upsert: staging rename failed for $path")
+    /** Swaps the staged copy in: the whole table when `dirs` is empty,
+      * else only the named partition dirs (the target's other dirs stay
+      * as they are). A failed rename puts the moved-aside copy back. */
+    def replace(dirs: Seq[String]): Unit = {
+      val swaps =
+        if (dirs.isEmpty) Seq((target, staging, old))
+        else {
+          fs.mkdirs(old)
+          dirs.map(d => (new HPath(target, d), new HPath(staging, d), new HPath(old, d)))
+        }
+      for ((live, staged, aside) <- swaps) {
+        val existed = fs.exists(live)
+        if (existed) move(live, aside, "could not move the current copy aside")
+        if (!fs.rename(staged, live)) {
+          if (existed) fs.rename(aside, live)
+          sys.error(s"parquet $mode: staging rename failed for $live (current copy " +
+            "restored; dirs swapped before it are recovered on the next run)")
+        }
       }
       fs.delete(old, true)
-      writeSidecar()
-      return true
+      fs.delete(staging, true)
     }
-    // layout contract: the sidecar's (key, n) define the on-disk hash —
-    // a different spec would read/write the WRONG buckets silently
-    val meta = {
-      val in = fs.open(sidecar)
-      val txt = scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      in.close(); txt
-    }
-    require(meta.contains(s""""key":"$key"""") &&
-            meta.contains(s""""buckets":$nBuckets"""),
-      s"parquet upsert: bucket layout mismatch for $path — table sidecar " +
-      s"$meta vs spec (key=$key, buckets=$nBuckets); re-create the table " +
-      "or match the recorded layout")
+  }
 
-    val affected: Seq[Int] = incoming
-      .select(bucketCol.cast("int").as("__b")).distinct()
-      .collect().map(_.getInt(0)).toSeq.sorted
-    if (affected.isEmpty) return true // empty delta — nothing to touch
-    // partition-PRUNED read: only the affected bucket directories are
-    // listed and scanned (isin on the partition column)
-    val existing = spark.read.parquet(path)
-      .where(col("__bucket").isin(affected.map(Integer.valueOf): _*))
-      .drop("__bucket")
-    val merged = mergeResult(existing, incoming, key, spec)
-    merged.withColumn("__bucket", bucketCol)
-      .write.mode("overwrite").partitionBy("__bucket").parquet(staging.toString)
-    // per-bucket swap: every merged row hashes into an affected bucket,
-    // so staging holds exactly the affected partition dirs
-    fs.mkdirs(old)
-    for (b <- affected) {
-      val tgtB = new HPath(target, s"__bucket=$b")
-      val stgB = new HPath(staging, s"__bucket=$b")
-      val oldB = new HPath(old, s"__bucket=$b")
-      if (fs.exists(tgtB))
-        require(fs.rename(tgtB, oldB),
-          s"parquet upsert: could not move bucket $b aside")
-      if (fs.exists(stgB) && !fs.rename(stgB, tgtB)) {
-        if (fs.exists(oldB)) fs.rename(oldB, tgtB)
-        sys.error(s"parquet upsert: staging swap failed for bucket $b of " +
-          s"$path (prior buckets already swapped — per-bucket recovery " +
-          "applies on the next run)")
-      }
-    }
-    fs.delete(old, true)
-    fs.delete(staging, true)
-    true
+  /** A small UTF-8 text file (bucket sidecar, lease, schema sidecar);
+    * None when it cannot be read. */
+  private def readText(fs: FileSystem, p: HPath): Option[String] =
+    try {
+      val in = fs.open(p)
+      try Some(new String(in.readAllBytes(), "UTF-8")) finally in.close()
+    } catch { case _: java.io.IOException => None }
+
+  private def writeText(fs: FileSystem, p: HPath, text: String): Unit = {
+    val out = fs.create(p, true)
+    try out.write(text.getBytes("UTF-8")) finally out.close()
   }
 
   /** `mode: "compact"` — small-file maintenance for an existing parquet
@@ -490,30 +429,25 @@ object Loaders {
     * bigger files" without funneling a large table through one task.
     * `_`-prefixed sidecars (e.g.
     * `_graft_buckets.json`) are carried over, and the result swaps in
-    * through the same staging + `.old` crash contract as upsert: a
-    * crash leaves either the old or the new table, never neither.
+    * whole through [[TableSwap]], as an upsert's does: a crash leaves
+    * either the old or the new table, never neither.
     *
     * The pipeline's incoming rows are IGNORED — compact is a
     * maintenance action on `path`, not a write of new data (documented
     * at the config surface; pair it with any 1-row source). */
   private def compactParquet(ctx: EtlContext, spec: ComponentSpec,
                              path: String): Boolean = {
-    import org.apache.hadoop.fs.{Path => HPath}
     val spark = ctx.spark
-    val target = new HPath(path)
-    val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val old = new HPath(path + ".old")
-    val staging = new HPath(path + ".staging")
-    if (!fs.exists(target) && fs.exists(old))
-      require(fs.rename(old, target),
-        s"parquet compact: crash recovery failed restoring $old -> $target")
-    require(fs.exists(target), s"parquet compact: no table at $path")
+    val table = new TableSwap(ctx, path, "compact")
+    val fs = table.fs
+    table.recover()
+    require(fs.exists(table.target), s"parquet compact: no table at $path")
     val maxRecords = spec.long("maxRecordsPerFile")
     maxRecords.foreach(m => require(m >= 1,
       "parquet compact: maxRecordsPerFile must be >= 1"))
     // hive-layout partition columns, walked level by level
     val parts = scala.collection.mutable.ArrayBuffer.empty[String]
-    var cur = target
+    var cur = table.target
     var descending = true
     while (descending) {
       val dirs = fs.listStatus(cur).toSeq
@@ -542,7 +476,7 @@ object Loaders {
           // funnel on a large unpartitioned table. On-disk bytes are a
           // metadata-only ContentSummary walk; output files inherit
           // roughly the same compression, so the estimate holds.
-          val bytes = fs.getContentSummary(target).getLength
+          val bytes = fs.getContentSummary(table.target).getLength
           val n = math.max(1L, (bytes + mb * 1048576L - 1) / (mb * 1048576L))
           data.repartition(n.toInt)
         case None => data.coalesce(1) // no layout: no shuffle needed
@@ -550,24 +484,16 @@ object Loaders {
     var writer = clustered.write.mode("overwrite")
     maxRecords.foreach(m => writer = writer.option("maxRecordsPerFile", m))
     if (parts.nonEmpty) writer = writer.partitionBy(parts.toSeq: _*)
-    writer.parquet(staging.toString)
+    writer.parquet(table.staging.toString)
     // carry metadata sidecars (leading `_`, skipped by readers) over
-    fs.listStatus(target).toSeq
+    fs.listStatus(table.target).toSeq
       .filter(s => s.isFile && s.getPath.getName.startsWith("_"))
       .foreach { s =>
         org.apache.hadoop.fs.FileUtil.copy(fs, s.getPath, fs,
-          new HPath(staging, s.getPath.getName), false,
+          new HPath(table.staging, s.getPath.getName), false,
           spark.sparkContext.hadoopConfiguration)
       }
-    if (fs.exists(old)) fs.delete(old, true)
-    require(fs.rename(target, old),
-      s"parquet compact: could not move current table aside ($target -> $old)")
-    if (!fs.rename(staging, target)) {
-      fs.rename(old, target)
-      sys.error(s"parquet compact: staging rename failed for $path " +
-        "(original table restored)")
-    }
-    fs.delete(old, true)
+    table.replace(Nil)
     true
   }
 
@@ -767,31 +693,38 @@ object Loaders {
       case m: Map[_, _] => m.asInstanceOf[Map[String, Any]]
     }
 
-  /** The names [[load]] dispatches on — dryRun validates against this
-    * set (and the per-format required options below) without acting. */
-  val KnownLoaders: Set[String] = Set("output", "memory", "parquet", "orc",
-    "csv", "jsonl", "jdbc", "graph", "orientdb", "avro", "tar", "zip")
+  /** Each loader [[load]] dispatches on, with the options it cannot
+    * run without — dryRun ([[validate]]) and the real run check the
+    * same list. */
+  private val RequiredOptions: Map[String, Seq[String]] = Map(
+    "output" -> Nil, "memory" -> Nil, "jdbc" -> Seq("url", "table"),
+    "orientdb" -> Seq("dbURL")) ++
+    Seq("parquet", "orc", "csv", "jsonl", "graph", "avro", "tar", "zip").map(_ -> Seq("path"))
 
-  /** dryRun-time loader validation: unknown names and missing required
-    * options fail the pre-flight exactly like the real run would, with
+  val KnownLoaders: Set[String] = RequiredOptions.keySet
+
+  /** Loader validation: unknown names and missing required options fail
+    * here — the dryRun pre-flight and the first step of [[load]] — with
     * zero side effects. */
   def validate(ctx: EtlContext, spec: ComponentSpec): Unit = {
-    if (!KnownLoaders(spec.name)) sys.error(s"unknown loader ${spec.name}")
-    spec.name match {
-      case "parquet" | "orc" | "csv" | "jsonl" | "avro" | "tar" | "zip" =>
-        spec.str("path").getOrElse(sys.error(s"${spec.name} loader: path required"))
-        if (spec.name == "parquet" && spec.strOr("mode", "overwrite") == "upsert")
-          spec.str("key").getOrElse(sys.error("parquet loader: upsert requires key"))
-      case _ => ()
-    }
+    RequiredOptions.getOrElse(spec.name, sys.error(s"unknown loader ${spec.name}"))
+      .foreach(o => spec.str(o).getOrElse(sys.error(s"${spec.name} loader: $o required")))
+    if (spec.name == "parquet" && spec.strOr("mode", "overwrite") == "upsert")
+      spec.str("key").getOrElse(sys.error("parquet loader: upsert requires key"))
     ()
   }
+
+  /** Option `name` with config variables resolved — the one read of a
+    * loader's target (`path`, `url`, `dbURL`). */
+  private def resolved(ctx: EtlContext, spec: ComponentSpec, name: String): String =
+    OrientExpr.resolveString(spec.str(name)
+      .getOrElse(sys.error(s"${spec.name} loader: $name required")), ctx.varMap)
 
   /** Run the sink. Returns true when a terminal ACTION executed (so the
     * engine can collect deferred observe checks — EtlContext.drainChecks);
     * `memory` only registers the plan and returns false. */
   def load(ctx: EtlContext, spec: ComponentSpec, df0: DataFrame): Boolean = {
-    val vars = ctx.varMap
+    validate(ctx, spec)
     // `quarantinePath` (any loader): the badRecordsPath pattern — rows a
     // transformer flagged in `quarantineField` (default `__errors`, see
     // the csv transformer's `errorField`) are diverted to a parquet
@@ -814,10 +747,9 @@ object Loaders {
         false
 
       case "parquet" =>
-        val path = OrientExpr.resolveString(
-          spec.str("path").getOrElse(sys.error("parquet loader: path required")), vars)
+        val path = resolved(ctx, spec, "path")
         if (spec.strOr("mode", "overwrite") == "upsert")
-          upsertDelta(ctx, spec, df, path)
+          upsertDelta(ctx, spec, df)
         else if (spec.strOr("mode", "overwrite") == "compact")
           // compact swaps the same table state merges do — one lease
           // covers both, so maintenance can't interleave with a merge
@@ -845,8 +777,7 @@ object Loaders {
         }
 
       case "orc" =>
-        val path = OrientExpr.resolveString(
-          spec.str("path").getOrElse(sys.error("orc loader: path required")), vars)
+        val path = resolved(ctx, spec, "path")
         var w = applyDeclaredSchema(df, spec).write.mode(spec.strOr("mode", "overwrite"))
         val parts = spec.strList("partitionBy")
         if (parts.nonEmpty) w = w.partitionBy(parts: _*)
@@ -858,8 +789,7 @@ object Loaders {
       // OCSVTransformer option names (separator/stringCharacter/
       // nullValue) are honored on the way OUT too.
       case "csv" =>
-        val path = OrientExpr.resolveString(
-          spec.str("path").getOrElse(sys.error("csv loader: path required")), vars)
+        val path = resolved(ctx, spec, "path")
         var w = applyDeclaredSchema(df, spec).write
           .mode(spec.strOr("mode", "overwrite"))
           .option("sep", spec.strOr("separator", ","))
@@ -881,32 +811,23 @@ object Loaders {
         // (no spark-avro DataSource on this classpath) — one deflate
         // container per partition, executor-side; see sources/Avro.write
         graft.sources.Avro.write(applyDeclaredSchema(df, spec),
-          OrientExpr.resolveString(
-            spec.str("path").getOrElse(sys.error("avro loader: path required")), vars),
-          spec)
+          resolved(ctx, spec, "path"), spec)
         true
 
       case "tar" =>
         // WebDataset-style shard export: rolling ustar shards per
         // partition, executor-side; see sources/Tar.write
-        graft.sources.Tar.write(df,
-          OrientExpr.resolveString(
-            spec.str("path").getOrElse(sys.error("tar loader: path required")), vars),
-          spec)
+        graft.sources.Tar.write(df, resolved(ctx, spec, "path"), spec)
         true
 
       case "zip" =>
         // ZIP shard export (java.util.zip writer — independent of the
         // extractor's own walk); see sources/Zip.write
-        graft.sources.Zip.write(df,
-          OrientExpr.resolveString(
-            spec.str("path").getOrElse(sys.error("zip loader: path required")), vars),
-          spec)
+        graft.sources.Zip.write(df, resolved(ctx, spec, "path"), spec)
         true
 
       case "jsonl" =>
-        val path = OrientExpr.resolveString(
-          spec.str("path").getOrElse(sys.error("jsonl loader: path required")), vars)
+        val path = resolved(ctx, spec, "path")
         var w = applyDeclaredSchema(df, spec).write
           .mode(spec.strOr("mode", "overwrite"))
         spec.str("compression").foreach(c => w = w.option("compression", c))
@@ -916,10 +837,9 @@ object Loaders {
         true
 
       case "jdbc" =>
-        val url = spec.str("url").getOrElse(sys.error("jdbc loader: url required"))
         var w = applyDeclaredSchema(df, spec).write.format("jdbc")
-          .option("url", OrientExpr.resolveString(url, vars))
-          .option("dbtable", spec.str("table").getOrElse(sys.error("jdbc loader: table required")))
+          .option("url", resolved(ctx, spec, "url"))
+          .option("dbtable", spec.str("table").get)
           // batchCommit parity (OOrientDBLoader.java:181-194)
           .option("batchsize", spec.int("batchCommit", 1000).toString)
           .option("isolationLevel", "NONE") // wal:false analogue for bulk load
@@ -932,8 +852,7 @@ object Loaders {
       // graph mode of the orientdb loader: persist the two-DataFrame
       // property-graph contract
       case "graph" =>
-        val dir = OrientExpr.resolveString(
-          spec.str("path").getOrElse(sys.error("graph loader: path required")), vars)
+        val dir = resolved(ctx, spec, "path")
         ctx.vertices.foreach(_.write.mode("overwrite").parquet(s"$dir/vertices"))
         ctx.edges.foreach(_.write.mode("overwrite").parquet(s"$dir/edges"))
         true
@@ -945,15 +864,12 @@ object Loaders {
       // dbType=graph writes the vertices/edges table pair. tx/WAL/
       // batchCommit map to writer batching; indexes are a no-op (noted).
       case "orientdb" =>
-        val dbUrl = OrientExpr.resolveString(
-          spec.str("dbURL").getOrElse(sys.error("orientdb loader: dbURL required")), vars)
+        val dbUrl = resolved(ctx, spec, "dbURL")
         val cls = spec.strOr("class", "record")
         val (df2, sidecar) = orientSchema(spec, df, cls)
         def writeSidecar(dir: String): Unit = sidecar.foreach { json =>
-          val p = new org.apache.hadoop.fs.Path(s"$dir/_schema.json")
-          val fs = p.getFileSystem(ctx.spark.sparkContext.hadoopConfiguration)
-          val out = fs.create(p, true)
-          try out.write(json.getBytes("UTF-8")) finally out.close()
+          val p = new HPath(s"$dir/_schema.json")
+          writeText(p.getFileSystem(ctx.spark.sparkContext.hadoopConfiguration), p, json)
         }
         if (dbUrl.startsWith("jdbc:")) {
           // a jdbc target has no database DIRECTORY to carry the sidecar
@@ -976,8 +892,6 @@ object Loaders {
           load(ctx, ComponentSpec("parquet", (spec.options - "indexes") ++ Map(
             "path" -> s"$dir/$cls")), df2)
         }
-
-      case other => sys.error(s"unknown loader $other")
     }
   }
 }

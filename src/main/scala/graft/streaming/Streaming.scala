@@ -625,8 +625,7 @@ object Streaming {
         triggered(ephemeral(
           df.writeStream.format("console").outputMode(mode))).start()
       case "upsert" =>
-        val path = spec.str("path").getOrElse(
-          sys.error("streamsink: upsert requires path"))
+        spec.str("path").getOrElse(sys.error("streamsink: upsert requires path"))
         spec.str("key").getOrElse(sys.error("streamsink: upsert requires key"))
         // scd2 is a batch-load contract: it applies ONE config-level
         // version per load, so a value changing across micro-batches
@@ -645,7 +644,7 @@ object Streaming {
           .outputMode(mode)
           .foreachBatch { (batch: DataFrame, _: Long) =>
             if (!batch.isEmpty)
-              graft.loaders.Loaders.upsertDelta(ctx, spec, batch, path): Unit
+              graft.loaders.Loaders.upsertDelta(ctx, spec, batch): Unit
           }).start()
       case other => sys.error(s"streamsink: unknown format $other")
     }

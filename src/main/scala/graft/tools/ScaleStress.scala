@@ -416,15 +416,17 @@ object ScaleStress {
     val only: Option[Set[String]] = args.headOption.map(_.split(",").toSet)
     def enabled(name: String): Boolean = only.forall(_.contains(name))
 
+    // wall seconds of one build + action through the query meter
+    val meter = new graft.QueryMeter(spark)
+    def wallS(build: => DataFrame, action: DataFrame => Unit = _.count()): Double = {
+      val m = meter.measure(build, action)
+      m.error.foreach(e => throw e)
+      m.wallS
+    }
     def time2(json: String): Double = {
-      def once(): Double = {
-        val t0 = System.nanoTime()
-        Engine.runJson(ctx(), json).count()
-        (System.nanoTime() - t0) / 1e9
-      }
-      val a = once(); val b = once()
+      val t = math.min(wallS(Engine.runJson(ctx(), json)), wallS(Engine.runJson(ctx(), json)))
       spark.catalog.clearCache()
-      math.min(a, b)
+      t
     }
 
     val results = scala.collection.mutable.Map.empty[(String, Int), Double]
@@ -1121,8 +1123,8 @@ object ScaleStress {
     for (factor <- Seq(1, 10, 100) if enabled("stream_join")) {
       val n = 10000L * factor
       val ev = ensureEventsTs(spark, n, s"/tmp/graft_stress_evts_f$factor")
-      val t0 = System.nanoTime()
-      val q = graft.streaming.Streaming.run(ctx(), graft.spec.PipelineSpec.parse(s"""{
+      val t = wallS(spark.emptyDataFrame, _ => graft.streaming.Streaming.run(ctx(),
+          graft.spec.PipelineSpec.parse(s"""{
         "source": {"stream": {"path": "$ev", "format": "parquet",
           "shufflePartitions": 8,
           "schema": "eid BIGINT, user_id BIGINT, ts TIMESTAMP, kind INT"}},
@@ -1138,9 +1140,7 @@ object ScaleStress {
             "select": ["eid:rid"]}}],
         "loader": {"streamsink": {"format": "memory",
           "name": "stress_sj_f$factor", "outputMode": "append",
-          "trigger": "availableNow"}} }"""))
-      q.awaitTermination()
-      val t = (System.nanoTime() - t0) / 1e9
+          "trigger": "availableNow"}} }""")).awaitTermination())
       val rows = spark.table(s"stress_sj_f$factor").count()
       results(("stream_join", factor)) = t
       println(f"[stress] stream_join        factor=$factor%-2d n=$n%-6d wall = $t%7.2fs (pairs=$rows)")
@@ -1172,16 +1172,12 @@ object ScaleStress {
         .where(pmod(hash(col("id")), lit(buckets)) === 0).limit(200)
         .select(col("id"), lit("UPDATED").as("v"))
         .write.mode("overwrite").parquet(s"${dir}_delta")
-      def once(): Double = {
-        val t0 = System.nanoTime()
-        Engine.runJson(ctx(), s"""{
+      def once(): Double = wallS(Engine.runJson(ctx(), s"""{
           "source": {"file": {"path": "${dir}_delta"}},
           "extractor": {"parquet": {}},
           "loader": {"parquet": {"path": "${dir}_tbl", "mode": "upsert",
-                                 "key": "id", "buckets": $buckets}} }""")
-        (System.nanoTime() - t0) / 1e9
-      }
-      val t = { val a = once(); val b = once(); math.min(a, b) }
+                                 "key": "id", "buckets": $buckets}} }"""), _ => ())
+      val t = math.min(once(), once())
       results(("upsert_delta", factor)) = t
       println(f"[stress] upsert_delta       factor=$factor%-2d n=$n%-6d min-of-2 = $t%7.2fs (table=${n} rows, delta=200)")
     }

@@ -354,6 +354,13 @@ class EngineSpec extends SparkSpec {
       .as[(Long, String)].collect().toMap
     assert(after == Map(1L -> "D1", 2L -> "b"))
     assert(!lockFile.exists, "lease released after the stale-break merge")
+    // a target whose parent dir does not exist yet takes the lease too
+    val nested = s"$tmp/lease_new_parent/tbl"
+    Engine.runJson(newCtx(), s"""{
+      "source": {"file": {"path": "$basePq"}},
+      "extractor": {"parquet": {}},
+      "loader": {"parquet": {"path": "$nested", "mode": "upsert", "key": "id"}} }""")
+    assert(spark.read.parquet(nested).count() == 2)
   }
 
   test("bucketed upsert: delta rewrites ONLY key-containing buckets") {
@@ -412,11 +419,11 @@ class EngineSpec extends SparkSpec {
   test("bucketed upsert: per-bucket crash recovery and layout guards") {
     import spark.implicits._
     val path = s"$tmp/upsert_bucketed_crash"
-    def run(src: String, buckets: Int = 4, key: String = "id"): Unit =
+    def run(src: String, buckets: Int = 4, key: String = "id", table: String = path): Unit =
       Engine.runJson(newCtx(), s"""{
         "source": {"file": {"path": "$src"}},
         "extractor": {"parquet": {}},
-        "loader": {"parquet": {"path": "$path", "mode": "upsert",
+        "loader": {"parquet": {"path": "$table", "mode": "upsert",
                                "key": "$key", "buckets": $buckets}} }""")
     val basePq = s"$tmp/upbc_base_pq"
     (1L to 40L).map(i => (i, i * 10)).toDF("id", "x")
@@ -440,6 +447,45 @@ class EngineSpec extends SparkSpec {
     // layout mismatch fails loud instead of writing the wrong buckets
     val e = intercept[Exception] { run(deltaPq, buckets = 16) }
     assert(e.getMessage.contains("layout mismatch"), e.getMessage)
+    // a spec without `buckets` does not match the recorded layout either
+    val eFlat = intercept[Exception] {
+      Engine.runJson(newCtx(), s"""{
+        "source": {"file": {"path": "$deltaPq"}},
+        "extractor": {"parquet": {}},
+        "loader": {"parquet": {"path": "$path", "mode": "upsert", "key": "id"}} }""")
+    }
+    assert(eFlat.getMessage.contains("layout mismatch"), eFlat.getMessage)
+    // the recorded count is matched whole: a 12-bucket table is not 1-bucket
+    run(deltaPq, buckets = 12, table = s"$path-wide")
+    val eWide = intercept[Exception] { run(deltaPq, buckets = 1, table = s"$path-wide") }
+    assert(eWide.getMessage.contains("layout mismatch"), eWide.getMessage)
+    // bucket dirs without their sidecar: the layout is unknown, say so
+    assert(new java.io.File(s"$path/_graft_buckets.json").delete())
+    val eLost = intercept[Exception] { run(deltaPq) }
+    assert(eLost.getMessage.contains("no ") &&
+      eLost.getMessage.contains("_graft_buckets.json"), eLost.getMessage)
+    assert(spark.read.parquet(path).count() == 41, "a failed upsert leaves the table")
+  }
+
+  test("parquet table rewrites swap only through TableSwap") {
+    import scala.jdk.CollectionConverters._
+    val main = java.nio.file.Paths.get("src/main/scala")
+    val loaders = main.resolve("graft/loaders/Loaders.scala")
+    val tokens = Seq("\".old\"", "\".staging\"", "fs.rename(")
+    def lines(p: java.nio.file.Path) = java.nio.file.Files.readAllLines(p).asScala.toSeq
+    val elsewhere = java.nio.file.Files.walk(main).iterator.asScala
+      .filter(p => p.toString.endsWith(".scala") && p != loaders)
+      .filter(p => lines(p).exists(l => tokens.exists(l.contains))).toSeq
+    assert(elsewhere.isEmpty, s"table swaps outside Loaders: $elsewhere")
+    val src = lines(loaders)
+    val start = src.indexWhere(_.startsWith("  private final class TableSwap("))
+    val end = src.indexWhere(_ == "  }", start)
+    assert(start >= 0 && end > start)
+    val outside = src.zipWithIndex.collect {
+      case (l, i) if (i < start || i > end) && tokens.exists(l.contains) => s"${i + 1}: $l"
+    }
+    assert(outside.isEmpty, s"staging/.old swaps outside TableSwap: $outside")
+    assert(src.count(_.contains("fs.open(")) == 1, "one text read")
   }
 
   test("bucketed upsert: migrates an existing flat table once, then prunes") {
@@ -1421,6 +1467,21 @@ class EngineSpec extends SparkSpec {
       }""")
     }
     assert(e3.getMessage.contains("path required"), e3.getMessage)
+    // every loader's required options fail the pre-flight, not the run
+    for ((loader, missing) <- Seq("""{ "graph": {} }""" -> "graph loader: path required",
+        """{ "jdbc": { "table": "t" } }""" -> "jdbc loader: url required",
+        """{ "jdbc": { "url": "jdbc:derby:memory:x" } }""" -> "jdbc loader: table required",
+        """{ "orientdb": { "dbType": "graph" } }""" -> "orientdb loader: dbURL required")) {
+      val e4 = intercept[Exception] {
+        Engine.runJson(newCtx(), s"""{
+          "config": { "dryRun": true },
+          "source": { "file": { "path": "$path" } },
+          "extractor": { "csv": { "columns": ["n_nationkey:integer", "n_name:string", "n_regionkey:integer"] } },
+          "loader": $loader
+        }""")
+      }
+      assert(e4.getMessage.contains(missing), e4.getMessage)
+    }
     // side-effecting begin/end blocks do NOT run (let blocks DO — their
     // bindings shape the plan); a dry run followed by a REAL run on the
     // same context works (no stale observe checks poison it)

@@ -53,7 +53,17 @@ class JobBudgetSpec extends SparkSpec {
       jobsOf(spark)(graft.stages.Stages.command(
         ComponentSpec("command", Map("command" -> script)), ctx)(spark.emptyDataFrame)
         .collect())
-    }, 10)) // three eager rounds: 13 before their drain check rode the checkpoint
+    }, 10), // three eager rounds: 13 before their drain check rode the checkpoint
+    // one stream_upsert micro-batch: a one-key delta into an 8-bucket table
+    ("bucketed upsert", () => jobsOf(spark)(graft.loaders.Loaders.upsertDelta(newCtx(),
+      bucketedSpec, Seq((7L, "UPDATED")).toDF("id", "v")): Unit), 4))
+
+  private lazy val bucketedSpec = {
+    val spec = ComponentSpec("parquet", Map("mode" -> "upsert", "key" -> "id", "buckets" -> 8,
+      "path" -> (java.nio.file.Files.createTempDirectory("graft_budget_upsert").toString + "/t")))
+    graft.loaders.Loaders.upsertDelta(newCtx(), spec, (1L to 200L).map(i => (i, s"v$i")).toDF("id", "v"))
+    spec
+  }
 
   for ((name, run, budget) <- budgets)
     test(s"job budget: $name") {

@@ -259,7 +259,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("bucketed upsert read: bucket isin is a PartitionFilter (pruned listing)") {
-    // the same read expression upsertParquetBucketed builds for an
+    // the same read expression Loaders.upsertDelta builds for an
     // affected-bucket scan: the __bucket predicate must prune partition
     // DIRECTORIES at planning (PartitionFilters), never surface as a
     // row filter over a full scan — this is what makes upsert cost

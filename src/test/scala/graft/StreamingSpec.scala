@@ -291,15 +291,15 @@ class StreamingSpec extends SparkSpec {
   test("streaming upsert sink: micro-batch CDC merge rewrites only touched buckets; replay idempotent") {
     val base = java.nio.file.Files.createTempDirectory("graft_supsert").toString
     val target = s"$base/table"
-    def run(srcDir: String, cp: String): Unit = {
+    def run(srcDir: String, cp: String, path: String = target): Unit = {
       val q = Streaming.run(newCtx(), PipelineSpec(
-        config = Map.empty, begin = Nil,
+        config = Map("out" -> base), begin = Nil,
         source = Some(ComponentSpec("stream", Map(
           "path" -> srcDir, "format" -> "parquet",
           "schema" -> "id BIGINT, v STRING"))),
         extractor = None, transformers = Nil,
         loader = Some(ComponentSpec("streamsink", Map(
-          "format" -> "upsert", "path" -> target, "key" -> "id",
+          "format" -> "upsert", "path" -> path, "key" -> "id",
           "buckets" -> 8, "checkpoint" -> s"$base/$cp",
           "trigger" -> "availableNow"))),
         end = Nil))
@@ -337,6 +337,12 @@ class StreamingSpec extends SparkSpec {
     val replayed = spark.read.parquet(target).drop("__bucket")
       .as[(Long, String)].collect().toMap
     assert(replayed == out, "upsert replay must be idempotent")
+    // the sink's path resolves config variables, as the batch loader's does
+    run(deltaDir, "cp4", path = "$out/var_table")
+    assert(new java.io.File(s"$base/var_table/_graft_buckets.json").exists,
+      "a `$out` path must land under the variable's value")
+    assert(spark.read.parquet(s"$base/var_table").drop("__bucket")
+      .as[(Long, String)].collect().toSeq == Seq((7L, "UPDATED")))
   }
 
   test("streaming upsert sink rejects scd2 at config time (batch-load-only contract)") {
