@@ -213,20 +213,6 @@ object ImageCodec {
   def isPng(b: Array[Byte]): Boolean =
     b.length > 8 && PngSig.indices.forall(i => b(i) == PngSig(i))
 
-  private def inflate(data: Array[Byte]): Array[Byte] = {
-    val inf = new java.util.zip.Inflater()
-    inf.setInput(data)
-    val out = new java.io.ByteArrayOutputStream(data.length * 4)
-    val buf = new Array[Byte](8192)
-    while (!inf.finished()) {
-      val n = inf.inflate(buf)
-      if (n == 0 && inf.needsInput()) sys.error("png: truncated compressed text")
-      out.write(buf, 0, n)
-    }
-    inf.end()
-    out.toByteArray
-  }
-
   private def beInt(b: Array[Byte], i: Int): Int =
     ((b(i) & 0xff) << 24) | ((b(i + 1) & 0xff) << 16) |
       ((b(i + 2) & 0xff) << 8) | (b(i + 3) & 0xff)
@@ -252,6 +238,8 @@ object ImageCodec {
         var j = from; while (j < data.length && data(j) != 0) j += 1; j
       }
       val latin1 = java.nio.charset.StandardCharsets.ISO_8859_1
+      def inflate(z: Array[Byte]): Array[Byte] =
+        graft.sources.Flate.inflate(z, m => fail(id, s"png: $typ chunk at byte $i: $m"))
       typ match {
         case "tEXt" =>
           val z = upTo0(0)
@@ -299,12 +287,8 @@ object ImageCodec {
         case "text" => Seq(chunk("tEXt",
           k.getBytes(latin1) ++ Array(0.toByte) ++ v.getBytes(latin1)))
         case "ztxt" =>
-          val d = new java.util.zip.Deflater()
-          d.setInput(v.getBytes(latin1)); d.finish()
-          val buf = new Array[Byte](v.length * 2 + 64)
-          val n = d.deflate(buf); d.end()
           Seq(chunk("zTXt", k.getBytes(latin1) ++ Array(0.toByte, 0.toByte) ++
-            buf.take(n)))
+            graft.sources.Flate.deflate(v.getBytes(latin1))))
         case "itxt" => Seq(chunk("iTXt",
           k.getBytes(latin1) ++ Array(0.toByte, 0.toByte, 0.toByte) ++
             "en".getBytes(latin1) ++ Array(0.toByte) ++ Array(0.toByte) ++

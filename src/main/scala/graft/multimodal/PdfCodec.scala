@@ -494,33 +494,8 @@ object PdfCodec {
 
   // ------------------------------------------------------------ filters
 
-  private def inflate(data: Array[Byte], what: String): Array[Byte] = {
-    val inf = new java.util.zip.Inflater()
-    inf.setInput(data)
-    val out = new java.io.ByteArrayOutputStream(data.length * 4)
-    val buf = new Array[Byte](16 * 1024)
-    try {
-      while (!inf.finished()) {
-        val n = inf.inflate(buf)
-        if (n == 0 && !inf.finished()) {
-          // every stall mode must fail LOUD (a bare needsInput check
-          // spins forever on an FDICT preset-dictionary stream); n == 0
-          // with finished() is normal completion of an empty stream
-          if (inf.needsDictionary())
-            sys.error(s"pdfextract: FlateDecode stream declares a preset " +
-              s"dictionary (FDICT) — not in the subset ($what)")
-          if (inf.needsInput())
-            sys.error(s"pdfextract: truncated FlateDecode stream in $what")
-          sys.error(s"pdfextract: stalled FlateDecode stream in $what")
-        }
-        out.write(buf, 0, n)
-      }
-    } catch {
-      case e: java.util.zip.DataFormatException =>
-        sys.error(s"pdfextract: corrupt FlateDecode stream in $what: ${e.getMessage}")
-    } finally inf.end()
-    out.toByteArray
-  }
+  private def inflate(data: Array[Byte], what: String): Array[Byte] =
+    graft.sources.Flate.inflate(data, m => sys.error(s"pdfextract: FlateDecode: $m in $what"))
 
   private def asciiHex(data: Array[Byte], what: String): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream(data.length / 2)
@@ -932,15 +907,7 @@ object PdfCodec {
     def emit(s: Array[Byte]): Unit = { chunks += s; size += s.length }
     def emitStr(s: String): Unit = emit(s.getBytes(Cp1252))
     val offsets = new Array[Int](xrefNum + 1)
-    def deflate(raw: Array[Byte]): Array[Byte] = {
-      val d = new java.util.zip.Deflater()
-      d.setInput(raw); d.finish()
-      val out = new java.io.ByteArrayOutputStream(raw.length)
-      val buf = new Array[Byte](8192)
-      while (!d.finished()) out.write(buf, 0, d.deflate(buf))
-      d.end()
-      out.toByteArray
-    }
+    def deflate(raw: Array[Byte]): Array[Byte] = graft.sources.Flate.deflate(raw)
     // dict-only objects: top-level in the classic layout, collected
     // into a compressed /ObjStm in the 1.5 layout (the modern form)
     val stash = mutable.ArrayBuffer.empty[(Int, String)]

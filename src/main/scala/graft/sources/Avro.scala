@@ -2,7 +2,6 @@ package graft.sources
 
 import graft.spec.ComponentSpec
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 
 /** Avro container-file extractor. The Spark distribution on the
@@ -75,29 +74,16 @@ object Avro {
       }).asScala)
   }
 
-  private def headerSchema(path: String): Schema = {
-    val dirFile = new java.io.File(path)
-    val first =
-      if (dirFile.isDirectory)
-        dirFile.listFiles().filter(_.isFile)
-          .filterNot(f => f.getName.startsWith("_") || f.getName.startsWith("."))
-          .sortBy(_.getName).headOption
-          .getOrElse(sys.error(s"avro: no files under $path"))
-      else dirFile
-    // the schema lives in the file header — read it without decoding blocks
-    val in = new java.io.FileInputStream(first)
-    try new org.apache.avro.file.DataFileStream[GenericRecord](
-      in, new GenericDatumReader[GenericRecord]()).getSchema
-    finally in.close()
-  }
-
   /** Writer (the loader side): one Object Container File per partition
     * (deflate codec), written executor-side — the generation
     * parallelizes like the read. Column mapping mirrors [[read]]:
     * integers widen to long, floats to double, bool/string/binary map
     * directly, and every other type (timestamps, decimals, structs,
     * arrays, maps) exports as its string/JSON rendering — lossless for
-    * interchange, re-parse downstream. All fields are nullable unions. */
+    * interchange, re-parse downstream. All fields are nullable unions.
+    * `mode` overwrite (default) | append, through the shared shard loop
+    * ([[Container.writeShards]]): append runs tag their file names, so a
+    * second run never truncates the first run's files. */
   def write(df: DataFrame, path: String, spec: ComponentSpec): Unit = {
     import org.apache.spark.sql.functions.{col => c, to_json}
     val spark = df.sparkSession
@@ -115,10 +101,6 @@ object Avro {
       case LongType => 'l'; case DoubleType => 'd'; case BooleanType => 'b'
       case BinaryType => 'y'; case _ => 's'
     })
-    val dir = new java.io.File(path)
-    if (spec.strOr("mode", "overwrite") == "overwrite" && dir.exists())
-      Option(dir.listFiles()).foreach(_.foreach(_.delete()))
-    dir.mkdirs()
     val schemaJson = {
       var b = org.apache.avro.SchemaBuilder.record("row").fields()
       names.zip(kinds).foreach { case (n, k) =>
@@ -131,15 +113,14 @@ object Avro {
       }
       b.endRecord().toString
     }
-    prepared.foreachPartition { (rows: Iterator[org.apache.spark.sql.Row]) =>
-      if (rows.hasNext) {
-        val schema = new Schema.Parser().parse(schemaJson)
-        val pid = org.apache.spark.TaskContext.getPartitionId()
-        val w = new org.apache.avro.file.DataFileWriter[GenericRecord](
+    Container.writeShards("avro", prepared, path, spec, new Container.ShardFormat(".avro") {
+      def open(f: java.io.File): Container.Shard = new Container.Shard {
+        private val schema = new Schema.Parser().parse(schemaJson)
+        private val w = new org.apache.avro.file.DataFileWriter[GenericRecord](
           new org.apache.avro.generic.GenericDatumWriter[GenericRecord](schema))
         w.setCodec(org.apache.avro.file.CodecFactory.deflateCodec(6))
-        w.create(schema, new java.io.File(dir, f"part-$pid%05d.avro"))
-        try rows.foreach { r =>
+        w.create(schema, f)
+        def add(r: Row): Unit = {
           val rec = new org.apache.avro.generic.GenericData.Record(schema)
           var i = 0
           while (i < names.length) {
@@ -156,13 +137,19 @@ object Avro {
             i += 1
           }
           w.append(rec)
-        } finally w.close()
+        }
+        def close(): Unit = w.close()
       }
-    }
+    }, rolling = false)
   }
 
   def read(spark: SparkSession, path: String, spec: ComponentSpec): DataFrame = {
-    val avroSchema = headerSchema(path)
+    // the writer schema lives in the first file's header: read it
+    // without decoding blocks
+    val avroSchema = Container.firstFile(spark, path) { (_, in) =>
+      new org.apache.avro.file.DataFileStream[GenericRecord](
+        in, new GenericDatumReader[GenericRecord]()).getSchema
+    }.getOrElse(sys.error(s"avro: no files under $path"))
     require(avroSchema.getType == Schema.Type.RECORD,
       s"avro: top-level schema must be a record, got ${avroSchema.getType}")
     val fields = scala.jdk.CollectionConverters
@@ -173,9 +160,7 @@ object Avro {
         if (dt == NullType) StringType else dt, nullable = true)
     }.toSeq)
     val expectNames = fields.map(_.name).toSeq
-    import spark.implicits._
-    val files = spark.read.format("binaryFile").load(path)
-      .select(col("path"), col("content")).as[(String, Array[Byte])]
+    val files = Container.files(spark, path)
     val complexFlags = mapped.map(_._2)
     val dts = schema.fields.map(_.dataType)
     val rows = files.flatMap { case (p, bytes) =>

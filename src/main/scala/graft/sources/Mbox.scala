@@ -2,7 +2,6 @@ package graft.sources
 
 import graft.spec.ComponentSpec
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.col
 
 /** MBOX mail-archive extractor — mailing-list dumps (the classic
   * public-corpus source: Usenet/pipermail/Enron-style archives) ship
@@ -281,7 +280,7 @@ object Mbox {
   /** Frame one mbox file into messages (mboxrd unescape applied). */
   def parseFile(path: String, raw: Array[Byte]): Iterator[MboxRow] = {
     def fail(msg: String): Nothing = sys.error(s"mbox: $msg in $path")
-    val b0 = if (Tar.isGzip(raw)) Tar.gunzip(raw, fail) else raw
+    val b0 = Flate.gunzipIfGzip(raw, fail)
     if (b0.length == 0) return Iterator.empty
     val text = b0 // byte-level framing; message content decoded per-part
     // locate "From " at line starts
@@ -335,7 +334,7 @@ object Mbox {
     * envelope are common). Gzip by magic. */
   def parseEml(path: String, raw: Array[Byte]): MboxRow = {
     def fail(msg: String): Nothing = sys.error(s"eml: $msg in $path")
-    val b = if (Tar.isGzip(raw)) Tar.gunzip(raw, fail) else raw
+    val b = Flate.gunzipIfGzip(raw, fail)
     val hasEnvelope = b.length >= 5 && b(0) == 'F' && b(1) == 'r' &&
       b(2) == 'o' && b(3) == 'm' && b(4) == ' '
     if (hasEnvelope) {
@@ -350,11 +349,7 @@ object Mbox {
   /** Extractor entry for `.eml`: one message per file. */
   def readEml(spark: SparkSession, path: String, spec: ComponentSpec): DataFrame = {
     import spark.implicits._
-    spark.read.format("binaryFile")
-      .option("pathGlobFilter", spec.strOr("glob", "*"))
-      .load(path)
-      .select(col("path"), col("content"))
-      .as[(String, Array[Byte])]
+    Container.files(spark, path, spec.strOr("glob", "*"))
       .map { case (p, c) => parseEml(p, c) }
       .toDF()
   }
@@ -386,11 +381,7 @@ object Mbox {
     * `path`. Options: `glob` (pathGlobFilter). */
   def read(spark: SparkSession, path: String, spec: ComponentSpec): DataFrame = {
     import spark.implicits._
-    spark.read.format("binaryFile")
-      .option("pathGlobFilter", spec.strOr("glob", "*"))
-      .load(path)
-      .select(col("path"), col("content"))
-      .as[(String, Array[Byte])]
+    Container.files(spark, path, spec.strOr("glob", "*"))
       .flatMap { case (p, c) => parseFile(p, c) }
       .toDF()
   }

@@ -309,28 +309,17 @@ object Sources {
     }
   }
 
-  /** Driver-side read of the first line of a path (first file in
-    * lexicographic order for a directory) — used for CSV header learning
-    * at plan time, replacing a full-scan `orderBy.head` job. Goes through
-    * the Hadoop FS API so it works on any configured filesystem. */
-  def firstLine(spark: SparkSession, path: String): Option[String] = {
-    import org.apache.hadoop.fs.{FileSystem, Path => HPath}
-    try {
-      val p = new HPath(path)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val file =
-        if (fs.getFileStatus(p).isDirectory)
-          fs.listStatus(p).filter(_.isFile).map(_.getPath)
-            .filterNot(_.getName.startsWith("_")).sortBy(_.getName).headOption
-        else Some(p)
-      file.flatMap { f =>
-        val codec = new org.apache.hadoop.io.compress.CompressionCodecFactory(
-          spark.sparkContext.hadoopConfiguration).getCodec(f)
-        val raw = fs.open(f)
-        val in = if (codec != null) codec.createInputStream(raw) else raw
-        val br = new java.io.BufferedReader(new java.io.InputStreamReader(in, "UTF-8"))
-        try Option(br.readLine()) finally br.close()
-      }
-    } catch { case _: Exception => None }
-  }
+  /** Plan-time read of the first line of a path (the first file a
+    * read sees, [[Container.firstFile]]) — used for CSV header learning
+    * at plan time, replacing a full-scan `orderBy.head` job. Hadoop
+    * codecs decompress by extension, as the text read does. */
+  def firstLine(spark: SparkSession, path: String): Option[String] =
+    try Container.firstFile(spark, path) { (f, raw) =>
+      val codec = new org.apache.hadoop.io.compress.CompressionCodecFactory(
+        spark.sparkContext.hadoopConfiguration).getCodec(f)
+      val in = if (codec != null) codec.createInputStream(raw) else raw
+      val br = new java.io.BufferedReader(new java.io.InputStreamReader(in, "UTF-8"))
+      try Option(br.readLine()) finally br.close()
+    }.flatten
+    catch { case _: Exception => None }
 }

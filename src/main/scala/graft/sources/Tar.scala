@@ -1,7 +1,7 @@
 package graft.sources
 
 import graft.spec.ComponentSpec
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.col
 
 /** TAR container extractor — dataset dumps and doc corpora ship as
@@ -98,30 +98,10 @@ object Tar {
     out.result()
   }
 
-  private[sources] def isGzip(b: Array[Byte]): Boolean =
-    b.length > 2 && (b(0) & 0xff) == 0x1f && (b(1) & 0xff) == 0x8b
-
-  private[sources] def gunzip(b: Array[Byte], fail: String => Nothing): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream(math.max(64, b.length * 3))
-    val buf = new Array[Byte](64 * 1024)
-    var in: java.util.zip.GZIPInputStream = null
-    try {
-      // constructor reads the header — inside the try: a bad method
-      // byte after the 1f 8b magic must surface as the named failure
-      in = new java.util.zip.GZIPInputStream(
-        new java.io.ByteArrayInputStream(b), 64 * 1024)
-      var n = in.read(buf)
-      while (n >= 0) { out.write(buf, 0, n); n = in.read(buf) }
-    } catch {
-      case ex: java.io.IOException => fail(s"corrupt gzip stream: ${ex.getMessage}")
-    } finally if (in != null) in.close()
-    out.toByteArray
-  }
-
   /** Walk every member of one archive (gunzipping first if gzipped). */
   def parseFile(path: String, raw: Array[Byte], verifyChecksum: Boolean): Iterator[TarRow] = {
     def fail(msg: String): Nothing = sys.error(s"tar: $msg in $path")
-    val b = if (isGzip(raw)) gunzip(raw, fail) else raw
+    val b = Flate.gunzipIfGzip(raw, fail)
     if (b.length % 512 != 0)
       fail(s"archive length ${b.length} is not a multiple of 512")
     val rows = Vector.newBuilder[TarRow]
@@ -328,56 +308,29 @@ object Tar {
       case None => lit(0L)
     }
     val gzip = spec.bool("gzip", dflt = false)
-    val maxShard = spec.long("maxShardBytes").getOrElse(1024L * 1024 * 1024)
-    require(maxShard >= 4096,
-      s"tar loader: maxShardBytes must be >= 4096, got $maxShard")
-    val dir = new java.io.File(path)
-    val append = spec.strOr("mode", "overwrite") == "append"
-    if (!append && dir.exists())
-      Option(dir.listFiles()).foreach(_.foreach(_.delete()))
-    dir.mkdirs()
-    // append: a run-unique tag keeps this run's shards from
-    // truncating an earlier run's identically-named files
-    val runTag = if (append)
-      "-r" + java.util.UUID.randomUUID().toString.take(8) else ""
-    val ext = if (gzip) ".tar.gz" else ".tar"
-    df.select(col(nameF).cast("string"), col(bodyF).cast("binary"), mtimeSel)
-      .foreachPartition { (rows: Iterator[org.apache.spark.sql.Row]) =>
-        if (rows.hasNext) {
-          val pid = org.apache.spark.TaskContext.getPartitionId()
-          var shard = 0
-          var out: java.io.OutputStream = null
-          var written = 0L
-          def open(): Unit = {
-            out = {
-              val f = new java.io.FileOutputStream(
-                new java.io.File(dir, f"part-$pid%05d-$shard%03d$runTag$ext"))
-              if (gzip) new java.util.zip.GZIPOutputStream(f, 64 * 1024)
-              else new java.io.BufferedOutputStream(f, 64 * 1024)
-            }
-            written = 0L
+    def body(r: Row) = if (r.isNullAt(1)) Array.emptyByteArray else r.getAs[Array[Byte]](1)
+    Container.writeShards("tar",
+      df.select(col(nameF).cast("string"), col(bodyF).cast("binary"), mtimeSel),
+      path, spec, new Container.ShardFormat(if (gzip) ".tar.gz" else ".tar") {
+        def open(f: java.io.File): Container.Shard = new Container.Shard {
+          private val out = {
+            val fo = new java.io.FileOutputStream(f)
+            if (gzip) new java.util.zip.GZIPOutputStream(fo, 64 * 1024)
+            else new java.io.BufferedOutputStream(fo, 64 * 1024)
           }
-          def close(): Unit = if (out != null) {
+          def add(r: Row): Unit = {
+            if (r.isNullAt(0)) sys.error(s"tar loader: null $nameF")
+            writeMember(out, r.getString(0), if (r.isNullAt(2)) 0L else r.getLong(2), body(r))
+          }
+          def close(): Unit = {
             out.write(new Array[Byte](1024)) // two terminator blocks
-            out.close(); out = null
+            out.close()
           }
-          open()
-          try {
-            rows.foreach { r =>
-              if (r.isNullAt(0)) sys.error(s"tar loader: null $nameF")
-              val name = r.getString(0)
-              val body = if (r.isNullAt(1)) Array.emptyByteArray
-                else r.getAs[Array[Byte]](1)
-              val mt = if (r.isNullAt(2)) 0L else r.getLong(2)
-              if (written > 0 &&
-                  written + memberBytes(name, body.length.toLong) + 1024 > maxShard) {
-                close(); shard += 1; open()
-              }
-              written += writeMember(out, name, mt, body)
-            }
-          } finally close()
         }
-      }
+        override def cost(r: Row): Long =
+          memberBytes(if (r.isNullAt(0)) "" else r.getString(0), body(r).length.toLong)
+        override def reserve: Long = 1024L
+      }, rolling = true)
   }
 
   /** Gzip an archive (the `.tar.gz` form — the reader detects the 1f 8b
@@ -397,11 +350,7 @@ object Tar {
   def read(spark: SparkSession, path: String, spec: ComponentSpec): DataFrame = {
     val verify = spec.bool("verifyChecksum", dflt = true)
     import spark.implicits._
-    val files = spark.read.format("binaryFile")
-      .option("pathGlobFilter", spec.strOr("glob", "*"))
-      .load(path)
-      .select(col("path"), col("content"))
-      .as[(String, Array[Byte])]
+    val files = Container.files(spark, path, spec.strOr("glob", "*"))
     val df = files.flatMap { case (p, c) => parseFile(p, c, verify) }.toDF()
     spec.str("memberGlob") match {
       case Some(g) => df.where(col("member").rlike(Sources.memberGlobRegex(g)))

@@ -29,9 +29,10 @@ import org.apache.spark.sql.functions.col
   * ~1 GB granularity (Common Crawl's own layout) rather than
   * multi-10-GB monoliths.
   *
-  * `.gz` files are decompressed with multi-member gzip (the standard
-  * WARC layout gzips each record as its own member; GZIPInputStream
-  * consumes concatenated members).
+  * Gzipped archives (`.warc.gz`) are detected by the 1f 8b magic, never
+  * by the file name, and decompressed whole through [[Flate]],
+  * concatenated members included (the standard WARC layout gzips each
+  * record as its own member).
   */
 object Warc {
 
@@ -52,17 +53,6 @@ object Warc {
       body: Array[Byte])
 
   private val Ascii = java.nio.charset.StandardCharsets.US_ASCII
-
-  private def gunzip(bytes: Array[Byte]): Array[Byte] = {
-    val in = new java.util.zip.GZIPInputStream(
-      new java.io.ByteArrayInputStream(bytes))
-    val out = new java.io.ByteArrayOutputStream(bytes.length * 4)
-    val buf = new Array[Byte](64 * 1024)
-    var n = in.read(buf)
-    while (n >= 0) { out.write(buf, 0, n); n = in.read(buf) }
-    in.close()
-    out.toByteArray
-  }
 
   /** Index of the CRLF CRLF terminating the header block starting at
     * `from`, or -1. Headers are ASCII by spec, so a byte scan is safe. */
@@ -89,11 +79,7 @@ object Warc {
     * framing fails loudly with the file and byte offset — a crawl
     * pipeline must surface a corrupt segment, not silently truncate. */
   def parseFile(path: String, raw: Array[Byte], httpParse: Boolean): Iterator[WarcRow] = {
-    val bytes =
-      if (path.endsWith(".gz") ||
-          (raw.length > 2 && (raw(0) & 0xff) == 0x1f && (raw(1) & 0xff) == 0x8b))
-        gunzip(raw)
-      else raw
+    val bytes = Flate.gunzipIfGzip(raw, m => sys.error(s"warc: $m in $path"))
     new Iterator[WarcRow] {
       private var i = 0
       private def skipCrlf(): Unit =
@@ -158,11 +144,7 @@ object Warc {
     val httpParse = spec.bool("httpParse", dflt = true)
     val types = spec.strList("types").map(_.toLowerCase(java.util.Locale.ROOT)).toSet
     import spark.implicits._
-    val files = spark.read.format("binaryFile")
-      .option("pathGlobFilter", spec.strOr("glob", "*"))
-      .load(path)
-      .select(col("path"), col("content"))
-      .as[(String, Array[Byte])]
+    val files = Container.files(spark, path, spec.strOr("glob", "*"))
     val rows = files.flatMap { case (p, c) => parseFile(p, c, httpParse) }
     val df = rows.toDF()
     if (types.isEmpty) df

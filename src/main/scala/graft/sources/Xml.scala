@@ -2,7 +2,6 @@ package graft.sources
 
 import graft.spec.ComponentSpec
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** XML extractor — record-oriented XML files (the Wikipedia-dump /
@@ -23,8 +22,9 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   *
   * Parallelism: one task per FILE (`binaryFile`), shards packed by
   * Spark's openCost binning — the layout of real dump mirrors (enwiki
-  * ships ~200 MB multistream shards). `.gz` shards are decompressed
-  * in-task (multi-member tolerated).
+  * ships ~200 MB multistream shards). Gzipped shards are detected by the
+  * 1f 8b magic, never by the file name, and decompressed in-task through
+  * [[Flate]] (multi-member tolerated).
   */
 object Xml {
 
@@ -205,19 +205,10 @@ object Xml {
     }
   }
 
-  private def gunzipIfNeeded(path: String, raw: Array[Byte]): String = {
-    val bytes =
-      if (path.endsWith(".gz") ||
-          (raw.length > 2 && (raw(0) & 0xff) == 0x1f && (raw(1) & 0xff) == 0x8b)) {
-        val in = new java.util.zip.GZIPInputStream(new java.io.ByteArrayInputStream(raw))
-        val out = new java.io.ByteArrayOutputStream(raw.length * 4)
-        val buf = new Array[Byte](64 * 1024)
-        var n = in.read(buf)
-        while (n >= 0) { out.write(buf, 0, n); n = in.read(buf) }
-        in.close(); out.toByteArray
-      } else raw
-    new String(bytes, java.nio.charset.StandardCharsets.UTF_8)
-  }
+  /** One file's document text, gunzipped first when it is gzipped. */
+  private def document(path: String, raw: Array[Byte]): String =
+    new String(Flate.gunzipIfGzip(raw, m => sys.error(s"xml: $m in $path")),
+      java.nio.charset.StandardCharsets.UTF_8)
 
   /** Extractor entry. Options: `rowTag` (required), `fields` (explicit
     * column list; absent = learned from the first `inferRecords`
@@ -231,29 +222,19 @@ object Xml {
         // plan-time peek, driver-side: first file only (the CSV
         // header-learning pattern — bounded, never a full-scan job)
         val inferN = spec.int("inferRecords", 20)
-        val dirFile = new java.io.File(path)
-        val first =
-          if (dirFile.isDirectory)
-            dirFile.listFiles().filter(_.isFile)
-              .filterNot(f => f.getName.startsWith("_") || f.getName.startsWith("."))
-              .sortBy(_.getName).headOption
-              .getOrElse(sys.error(s"xml: no files under $path"))
-          else dirFile
-        val doc = gunzipIfNeeded(first.getName,
-          java.nio.file.Files.readAllBytes(first.toPath))
-        val seen = scala.collection.mutable.LinkedHashSet.empty[String]
-        records(doc, rowTag).take(inferN)
-          .foreach(r => recordFields(r, rowTag).keys.foreach(seen += _))
-        if (seen.isEmpty) sys.error(s"xml: no <$rowTag> records in ${first.getName}")
-        seen.toSeq
+        Container.firstFile(spark, path) { (first, in) =>
+          val seen = scala.collection.mutable.LinkedHashSet.empty[String]
+          records(document(first.toString, in.readAllBytes()), rowTag).take(inferN)
+            .foreach(r => recordFields(r, rowTag).keys.foreach(seen += _))
+          if (seen.isEmpty) sys.error(s"xml: no <$rowTag> records in ${first.getName}")
+          seen.toSeq
+        }.getOrElse(sys.error(s"xml: no files under $path"))
       }
     val schema = StructType(cols.map(StructField(_, StringType, nullable = true)))
-    import spark.implicits._
-    val files = spark.read.format("binaryFile").load(path)
-      .select(col("path"), col("content")).as[(String, Array[Byte])]
+    val files = Container.files(spark, path)
     val colArr = cols.toArray
     val rows = files.flatMap { case (p, raw) =>
-      records(gunzipIfNeeded(p, raw), rowTag).map { rec =>
+      records(document(p, raw), rowTag).map { rec =>
         val f = recordFields(rec, rowTag)
         Row.fromSeq(colArr.map(c => f.get(c).orNull).toSeq)
       }

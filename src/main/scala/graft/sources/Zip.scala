@@ -1,7 +1,7 @@
 package graft.sources
 
 import graft.spec.ComponentSpec
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.col
 
 /** ZIP container extractor — real dumps and document corpora ship
@@ -17,7 +17,7 @@ import org.apache.spark.sql.functions.col
   * (`PK\x01\x02`) — the AUTHORITATIVE member list — and slices each
   * member's data after its local header (`PK\x03\x04`, whose name/extra
   * lengths may legitimately differ from the central copy, so both are
-  * read). Methods: 0 (stored) and 8 (deflate, raw `Inflater(true)`);
+  * read). Methods: 0 (stored) and 8 (raw deflate through [[Flate]]);
   * anything else, encryption (general-purpose bit 0), and ZIP64
   * markers fail LOUD by name. Every member's CRC-32 is verified — a
   * corrupt archive must surface, not silently truncate a corpus.
@@ -47,49 +47,24 @@ object Zip {
     val bodyF = spec.strOr("bodyField", "body")
     Seq(nameF, bodyF).foreach(c => require(df.columns.contains(c),
       s"zip loader: no column '$c'"))
-    val maxShard = spec.long("maxShardBytes").getOrElse(1024L * 1024 * 1024)
-    require(maxShard >= 4096,
-      s"zip loader: maxShardBytes must be >= 4096, got $maxShard")
-    val dir = new java.io.File(path)
-    val append = spec.strOr("mode", "overwrite") == "append"
-    if (!append && dir.exists())
-      Option(dir.listFiles()).foreach(_.foreach(_.delete()))
-    dir.mkdirs()
-    val runTag = if (append)
-      "-r" + java.util.UUID.randomUUID().toString.take(8) else ""
-    df.select(col(nameF).cast("string"), col(bodyF).cast("binary"))
-      .foreachPartition { (rows: Iterator[org.apache.spark.sql.Row]) =>
-        if (rows.hasNext) {
-          val pid = org.apache.spark.TaskContext.getPartitionId()
-          var shard = 0
-          var zos: java.util.zip.ZipOutputStream = null
-          var written = 0L
-          def open(): Unit = {
-            zos = new java.util.zip.ZipOutputStream(
-              new java.io.BufferedOutputStream(new java.io.FileOutputStream(
-                new java.io.File(dir, f"part-$pid%05d-$shard%03d$runTag.zip")),
-                64 * 1024))
-            written = 0L
+    def body(r: Row) = if (r.isNullAt(1)) Array.emptyByteArray else r.getAs[Array[Byte]](1)
+    Container.writeShards("zip", df.select(col(nameF).cast("string"), col(bodyF).cast("binary")),
+      path, spec, new Container.ShardFormat(".zip") {
+        def open(f: java.io.File): Container.Shard = new Container.Shard {
+          private val zos = new java.util.zip.ZipOutputStream(
+            new java.io.BufferedOutputStream(new java.io.FileOutputStream(f), 64 * 1024))
+          def add(r: Row): Unit = {
+            if (r.isNullAt(0)) sys.error(s"zip loader: null $nameF")
+            zos.putNextEntry(new java.util.zip.ZipEntry(r.getString(0)))
+            zos.write(body(r))
+            zos.closeEntry()
           }
-          def close(): Unit = if (zos != null) { zos.close(); zos = null }
-          open()
-          try {
-            rows.foreach { r =>
-              if (r.isNullAt(0)) sys.error(s"zip loader: null $nameF")
-              val name = r.getString(0)
-              val body = if (r.isNullAt(1)) Array.emptyByteArray
-                else r.getAs[Array[Byte]](1)
-              if (written > 0 && written + body.length + 512 > maxShard) {
-                close(); shard += 1; open()
-              }
-              zos.putNextEntry(new java.util.zip.ZipEntry(name))
-              zos.write(body)
-              zos.closeEntry()
-              written += body.length + 128 // + headers/central-dir share
-            }
-          } finally close()
+          def close(): Unit = zos.close()
         }
-      }
+        // + headers and the member's central-directory share
+        override def cost(r: Row): Long = body(r).length + 128L
+        override def reserve: Long = 384L // the end-of-central-directory record and slack
+      }, rolling = true)
   }
 
   /** One archive member. `size`/`compressed` come from the central
@@ -170,30 +145,7 @@ object Zip {
           case 0 =>
             if (csize != usize) fail(s"stored member '$name' with csize != usize")
             comp
-          case 8 =>
-            val inf = new java.util.zip.Inflater(true) // raw deflate
-            inf.setInput(comp)
-            val out = new java.io.ByteArrayOutputStream(math.max(64, usize.toInt))
-            val buf = new Array[Byte](16 * 1024)
-            try {
-              while (!inf.finished()) {
-                val n = inf.inflate(buf)
-                if (n == 0 && !inf.finished()) {
-                  // every stall mode fails loud (a bare needsInput
-                  // check would spin on a dictionary-demanding stream);
-                  // n == 0 with finished() is normal completion (an
-                  // empty member's deflate block)
-                  if (inf.needsDictionary() || !inf.needsInput())
-                    fail(s"stalled deflate data in member '$name'")
-                  fail(s"truncated deflate data in member '$name'")
-                }
-                out.write(buf, 0, n)
-              }
-            } catch {
-              case ex: java.util.zip.DataFormatException =>
-                fail(s"corrupt deflate data in member '$name': ${ex.getMessage}")
-            } finally inf.end()
-            out.toByteArray
+          case 8 => Flate.inflate(comp, m => fail(s"$m in member '$name'"), raw = true)
           case other =>
             fail(s"member '$name' uses compression method $other " +
               "(subset: 0 stored, 8 deflate)")
@@ -221,11 +173,7 @@ object Zip {
   def read(spark: SparkSession, path: String, spec: ComponentSpec): DataFrame = {
     val verifyCrc = spec.bool("verifyCrc", dflt = true)
     import spark.implicits._
-    val files = spark.read.format("binaryFile")
-      .option("pathGlobFilter", spec.strOr("glob", "*"))
-      .load(path)
-      .select(col("path"), col("content"))
-      .as[(String, Array[Byte])]
+    val files = Container.files(spark, path, spec.strOr("glob", "*"))
     val df = files.flatMap { case (p, c) => parseFile(p, c, verifyCrc) }.toDF()
     spec.str("memberGlob") match {
       case Some(g) => df.where(col("member").rlike(Sources.memberGlobRegex(g)))

@@ -51,6 +51,23 @@ class EngineSpec extends SparkSpec {
     assert(out.count() == 25)
   }
 
+  test("csv header learning skips the dot-files the text read skips") {
+    val dir = s"$tmp/csv_dotfile"
+    new java.io.File(dir).mkdirs()
+    Files.write(java.nio.file.Paths.get(dir, ".a.csv"), "x,y\n9,9\n".getBytes("UTF-8"))
+    Files.write(java.nio.file.Paths.get(dir, "b.csv"), "id,name\n1,one\n".getBytes("UTF-8"))
+    val out = Engine.runJson(newCtx(), s"""{
+      "source": { "file": { "path": "$dir" } },
+      "extractor": { "row": {} },
+      "transformers": [ { "csv": { "separator": ",", "errorStats": true } } ],
+      "loader": { "memory": {} }
+    }""")
+    // errorStats keeps the csv stage off the fused spark.read.csv path,
+    // so the header is learned at plan time from the first file
+    assert(out.columns.toSeq.take(2) == Seq("id", "name"), out.columns.toSeq)
+    assert(out.select("name").collect().map(_.getString(0)).toSeq == Seq("one"))
+  }
+
   test("fixedwidth extractor: 1-based slices, types, blank→null, short lines, guards") {
     val f = s"$tmp/fw.txt"
     // layout: id[1..3] name[4..11] qty[12..14]; row 3 has a blank qty

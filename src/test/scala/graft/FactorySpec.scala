@@ -54,6 +54,20 @@ class FactorySpec extends SparkSpec {
     assert(hitsIn(src, "case\\s+\"(window_agg|sessionize|stream_dedup|stream_throttle|stream_join)\"".r).isEmpty)
   }
 
+  test("one container-bytes path: Flate decompresses, Container reads, peeks and writes shards") {
+    val src = mainSources
+    val sources = src.filter(_._1.startsWith("src/main/scala/graft/sources/"))
+    def onlyIn(scope: Map[String, String], file: String, res: String*) = res.foreach(re =>
+      assert(hitsIn(scope, re.r).keySet == Set(s"src/main/scala/graft/sources/$file"), re))
+    // one inflate loop and one gunzip, one (path, bytes) read
+    onlyIn(src, "Flate.scala", """java\.util\.zip\.Inflater\b""", "GZIPInputStream")
+    onlyIn(src, "Container.scala", """format\("binaryFile"\)""")
+    // among the codecs: one shard loop and one first-file peek (the
+    // dot-file skip; the old peeks opened paths through java.io.File)
+    onlyIn(sources, "Container.scala", """\bforeachPartition\b""",
+      """startsWith\("\."\)""", """new java\.io\.File\(""")
+  }
+
   test("ensure() registers exactly what a session lacks, in every session") {
     for (s <- Seq(ensureSession(), ensureSession()); f <- NativeFunctions.all)
       assert(s.catalog.functionExists(f.name), f.name)

@@ -187,5 +187,13 @@ class MboxSpec extends SparkSpec {
     val df = Mbox.read(spark, dir, ComponentSpec("mbox", Map()))
     assert(df.count() == 2)
     assert(df.select("subject").as[String].collect().toSeq == Seq("s1", "s1"))
+    // a truncated gzip keeps the corrupt-gzip name, mbox and eml alike
+    val cut = bos.toByteArray.dropRight(12)
+    val e1 = intercept[RuntimeException](within(10)(Mbox.parseFile("cut.mbox.gz", cut).toList))
+    assert(e1.getMessage.contains("mbox: corrupt gzip stream") &&
+      e1.getMessage.contains("cut.mbox.gz"), e1.getMessage)
+    val e2 = intercept[RuntimeException](within(10)(Mbox.parseEml("cut.eml.gz", cut)))
+    assert(e2.getMessage.contains("eml: corrupt gzip stream") &&
+      e2.getMessage.contains("cut.eml.gz"), e2.getMessage)
   }
 }

@@ -39,6 +39,24 @@ class MultimodalSpec extends SparkSpec {
     huge(10) = 0xff.toByte; huge(11) = 0xf0.toByte
     val e3 = intercept[RuntimeException](ImageCodec.pngText(5L, huge))
     assert(e3.getMessage != null && e3.getMessage.contains("overruns"), e3.toString)
+    // zTXt/iTXt text whose zlib header sets FDICT (78 20 + a DICTID): the
+    // inflater asks for a preset dictionary and never makes progress, so
+    // a loop that only checks needsInput spins forever
+    val fdict = Array[Byte](0x78, 0x20, 0, 0, 0, 1) ++ Array.fill[Byte](16)(0x4b)
+    def textChunk(typ: String, data: Array[Byte]): Array[Byte] = {
+      val crc = new java.util.zip.CRC32()
+      crc.update(typ.getBytes("US-ASCII")); crc.update(data)
+      java.nio.ByteBuffer.allocate(12 + data.length).putInt(data.length)
+        .put(typ.getBytes("US-ASCII")).put(data).putInt(crc.getValue.toInt).array()
+    }
+    for ((typ, head) <- Seq("zTXt" -> Array[Byte]('k', 0, 0),
+                            "iTXt" -> Array[Byte]('k', 0, 1, 0, 0, 0))) {
+      val hostile = png.take(png.length - 12) ++ textChunk(typ, head ++ fdict) ++
+        png.takeRight(12)
+      val e4 = intercept[RuntimeException](within(10)(ImageCodec.pngText(6L, hostile)))
+      assert(e4.getMessage.contains("preset dictionary") &&
+        e4.getMessage.contains(typ) && e4.getMessage.contains("media_id=6"), e4.getMessage)
+    }
     // stage: skip mode drops the non-PNG row instead of failing
     import spark.implicits._
     val df = Seq((1L, withText), (2L, jpg)).toDF("doc_id", "payload")

@@ -7,6 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Unit coverage for the WARC (ISO 28500) record walk + the engine
   * extractor wiring. */
 class WarcParserSpec extends AnyFunSuite {
+  import SparkSpec.within
 
   private val crlf = "\r\n"
   private def rec(tpe: String, payload: Array[Byte],
@@ -63,6 +64,11 @@ class WarcParserSpec extends AnyFunSuite {
     assert(Warc.parseFile("t.warc.gz", members, httpParse = true).size == 2)
     // magic-byte sniff without the .gz suffix
     assert(Warc.parseFile("t.warc", gz(plain), httpParse = true).size == 2)
+    // a truncated member fails by name with the codec and the file
+    val e = intercept[RuntimeException](within(10)(
+      Warc.parseFile("cut.warc.gz", gz(plain).dropRight(12), httpParse = true).toList))
+    assert(e.getMessage.contains("warc: corrupt gzip stream") &&
+      e.getMessage.contains("cut.warc.gz"), e.getMessage)
   }
 
   test("malformed framing fails loudly with file and offset") {

@@ -209,5 +209,41 @@ class XmlStageSpec extends SparkSpec {
     val rows = out.collect()
     assert(rows.map(_.getString(0)).toSeq == Seq("T1", "T2", "T3"))
     assert(rows.map(_.getString(2)).toSeq == Seq("x a", "plain", "z"))
+    // a truncated gzip shard fails by name with the codec and the file,
+    // at read time and in the plan-time peek alike
+    def causes(t: Throwable) = Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
+      .map(c => Option(c.getMessage).getOrElse("")).mkString(" | ")
+    val cut = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(dir, "b.xml.gz"))
+      .dropRight(12)
+    java.nio.file.Files.write(java.nio.file.Paths.get(dir, "c.xml.gz"), cut)
+    val onlyCut = java.nio.file.Files.createTempDirectory("graft_xml_cut").toString
+    java.nio.file.Files.write(java.nio.file.Paths.get(onlyCut, "c.xml.gz"), cut)
+    for (d <- Seq(dir, onlyCut)) {
+      val e = intercept[Exception](within(60)(Engine.runJson(newCtx(), s"""{
+        "source": {"file": {"path": "$d"}},
+        "extractor": {"xml": {"rowTag": "page"}},
+        "loader": {"memory": {}} }""").collect()))
+      assert(causes(e).contains("xml: corrupt gzip stream") &&
+        causes(e).contains("c.xml.gz"), causes(e))
+    }
+  }
+
+  test("avro and xml extractors peek a file: URI directory, as their read does") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_peek_uri").toFile
+    val avroDir = new java.io.File(dir, "avro")
+    graft.sources.Avro.write(Seq((1L, "a"), (2L, "b")).toDF("id", "name"),
+      avroDir.toString, graft.spec.ComponentSpec("avro", Map()))
+    val xmlDir = new java.io.File(dir, "xml"); xmlDir.mkdirs()
+    java.nio.file.Files.write(new java.io.File(xmlDir, "a.xml").toPath,
+      "<mw><page><id>1</id></page><page><id>2</id></page></mw>".getBytes("UTF-8"))
+    for ((sub, extractor) <- Seq(avroDir -> "\"avro\": {}",
+                                 xmlDir -> "\"xml\": {\"rowTag\": \"page\"}")) {
+      val out = Engine.runJson(newCtx(), s"""{
+        "source": {"file": {"path": "${sub.toURI}"}},
+        "extractor": {$extractor},
+        "loader": {"memory": {}} }""")
+      assert(out.columns.contains("id") && out.count() == 2, sub)
+    }
   }
 }

@@ -50,6 +50,41 @@ class ZipSpec extends SparkSpec {
     val e2 = intercept[RuntimeException](
       Zip.parseFile("t.zip", "plain text, no archive here".getBytes, verifyCrc = true).toSeq)
     assert(e2.getMessage.contains("end-of-central-directory"), e2.getMessage)
+    // a few-byte member whose central directory declares ~2 GiB: the
+    // output buffer grows from what inflates, never from the declared size
+    val huge = buildZip(Seq(("h.txt", "tiny".getBytes("UTF-8"), false)))
+    val cd = new String(huge, java.nio.charset.StandardCharsets.ISO_8859_1).indexOf("PK\u0001\u0002")
+    java.nio.ByteBuffer.wrap(huge, cd + 24, 4).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+      .putInt(0x7FFFFFF0)
+    val e3 = intercept[RuntimeException](Zip.parseFile("h.zip", huge, verifyCrc = true).toSeq)
+    assert(e3.getMessage.contains("inflated to 4 bytes, central directory says 2147483632"),
+      e3.getMessage)
+  }
+
+  test("container loaders: append runs keep every run's rows, overwrite keeps the last") {
+    import graft.sources.{Avro, Tar}
+    def run(n: Int, tag: String) =
+      (1 to n).map(i => (s"$tag/$i.txt", s"$tag body $i")).toDF("member", "body").repartition(2)
+    val loaders = Seq[(String, (org.apache.spark.sql.DataFrame, String, ComponentSpec) => Unit,
+        String => org.apache.spark.sql.DataFrame)](
+      ("avro", Avro.write, Avro.read(spark, _, ComponentSpec("avro", Map()))),
+      ("tar", Tar.write, Tar.read(spark, _, ComponentSpec("tar", Map()))),
+      ("zip", Zip.write, Zip.read(spark, _, ComponentSpec("zip", Map()))))
+    for ((name, write, read) <- loaders) {
+      val dir = java.nio.file.Files.createTempDirectory(s"graft_${name}_modes").toString
+      def members = read(dir).select("member").as[String].collect().toSet
+      val append = ComponentSpec(name, Map("mode" -> "append"))
+      write(run(6, "first"), dir, append)
+      write(run(4, "second"), dir, append)
+      assert(members == (1 to 6).map(i => s"first/$i.txt").toSet ++
+        (1 to 4).map(i => s"second/$i.txt"), name)
+      write(run(3, "third"), dir, ComponentSpec(name, Map()))
+      assert(members == (1 to 3).map(i => s"third/$i.txt").toSet, name)
+      val e = intercept[RuntimeException](
+        write(run(1, "x"), dir, ComponentSpec(name, Map("mode" -> "ignore"))))
+      assert(e.getMessage.contains(s"$name loader: mode must be overwrite or append"),
+        e.getMessage)
+    }
   }
 
   test("zip loader: rolling shards; independent java.util.zip reader agrees") {
