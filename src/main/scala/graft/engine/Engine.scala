@@ -5,6 +5,7 @@ import graft.loaders.Loaders
 import graft.sources.Sources
 import graft.spec.{ComponentSpec, PipelineSpec}
 import graft.stages.{LookupStages, Stages}
+import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import scala.collection.concurrent.TrieMap
 
@@ -367,8 +368,7 @@ object Engine {
            // raw cells → from_csv path
            !head.bool("errorStats", dflt = false) &&
            head.str("errorField").isEmpty =>
-        val path = OrientExpr.resolveString(
-          src.str("path").getOrElse(sys.error("file source: path required")), ctx.varMap)
+        val path = ctx.resolved(src, "path").getOrElse(sys.error("file source: path required"))
         (tail, Some(Sources.csv(ctx.spark, path, head)))
       case _ => (spec.transformers, None)
     }
@@ -553,10 +553,15 @@ object Engine {
       .getOrCreate()
   }
 
-  /** Register the driver-testdata tables for a scale-factor directory. */
-  def registerSfTables(ctx: EtlContext, sfDir: String): Unit =
+  /** Register the driver-testdata tables found in a scale-factor
+    * directory (checked through the session's Hadoop FS, so a `file:`
+    * URI directory registers alike). */
+  def registerSfTables(ctx: EtlContext, sfDir: String): Unit = {
+    val dir = new HPath(sfDir)
+    val fs = dir.getFileSystem(ctx.spark.sparkContext.hadoopConfiguration)
     graft.sources.Tables.names.foreach { t =>
-      if (new java.io.File(s"$sfDir/$t.parquet").exists())
+      if (fs.exists(new HPath(dir, s"$t.parquet")))
         ctx.registerTable(t, graft.sources.Tables.load(ctx.spark, sfDir, t))
     }
+  }
 }

@@ -176,6 +176,12 @@ final class EtlContext(val spark: SparkSession) {
 
   def varMap: Map[String, Any] = vars.toMap
 
+  /** Option `name` of `spec` with config variables resolved — the one
+    * read of a path-valued option: loader targets, the file source's
+    * path, stage model files (`saveMapping`, `loadCentroids`, …). */
+  def resolved(spec: graft.spec.ComponentSpec, name: String): Option[String] =
+    spec.str(name).map(graft.expr.OrientExpr.resolveString(_, varMap))
+
   def registerTable(name: String, df: DataFrame): Unit = {
     tables.put(name, df)
     // r19 optimization: the catalog call is skipped when the session's

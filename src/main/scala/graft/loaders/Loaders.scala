@@ -1,7 +1,6 @@
 package graft.loaders
 
-import graft.engine.EtlContext
-import graft.expr.OrientExpr
+import graft.engine.{EtlContext, TextFiles}
 import graft.spec.ComponentSpec
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 import org.apache.spark.sql.DataFrame
@@ -224,7 +223,7 @@ object Loaders {
       val bucketOf = buckets.map(n => pmod(hash(col(key)), lit(n)))
       def layout(n: Int) = s"""{"key":"$key","buckets":$n}"""
       val sidecar = new HPath(table.target, "_graft_buckets.json")
-      val recorded = readText(table.fs, sidecar)
+      val recorded = TextFiles.read(ctx.spark, sidecar.toString)
       recorded.foreach(meta => require(buckets.exists(n => meta.trim == layout(n)),
         s"parquet upsert: bucket layout mismatch for $path — table sidecar " +
         s"$meta vs spec (key=$key, buckets=${buckets.getOrElse("none")}); " +
@@ -255,7 +254,7 @@ object Loaders {
         }
         // a whole-table write carries its layout into the same rename
         if (dirs.isEmpty) buckets.foreach(n =>
-          writeText(table.fs, new HPath(table.staging, sidecar.getName), layout(n)))
+          TextFiles.write(ctx.spark, s"${table.staging}/${sidecar.getName}", layout(n)))
         table.replace(dirs)
       }
       true
@@ -299,7 +298,7 @@ object Loaders {
         else
           try { fs.create(lock, false).close(); true }
           catch { case _: java.io.IOException => false }
-      if (claimed) writeText(fs, lock, s"""{"holder":"$holder",""" +
+      if (claimed) TextFiles.write(ctx.spark, lock.toString, s"""{"holder":"$holder",""" +
         s""""acquired_ms":${System.currentTimeMillis()}}""")
       claimed
     }
@@ -316,8 +315,8 @@ object Loaders {
     }
     if (!acquired)
       sys.error(s"parquet $mode: another writer holds the lease on $path " +
-        s"(${readText(fs, lock).getOrElse("?")} at $lock) — concurrent merges " +
-        "to one table would interleave their swaps; retry after it finishes " +
+        s"(${TextFiles.read(ctx.spark, lock.toString).getOrElse("?")} at $lock) — " +
+        "concurrent merges to one table would interleave their swaps; retry after it finishes " +
         s"(a dead holder's lease breaks automatically after lockStaleMinutes=$staleMins)")
     // heartbeat: a LIVE merge must never cross the stale threshold
     val beat = new Thread(() => {
@@ -395,19 +394,6 @@ object Loaders {
       fs.delete(old, true)
       fs.delete(staging, true)
     }
-  }
-
-  /** A small UTF-8 text file (bucket sidecar, lease, schema sidecar);
-    * None when it cannot be read. */
-  private def readText(fs: FileSystem, p: HPath): Option[String] =
-    try {
-      val in = fs.open(p)
-      try Some(new String(in.readAllBytes(), "UTF-8")) finally in.close()
-    } catch { case _: java.io.IOException => None }
-
-  private def writeText(fs: FileSystem, p: HPath, text: String): Unit = {
-    val out = fs.create(p, true)
-    try out.write(text.getBytes("UTF-8")) finally out.close()
   }
 
   /** `mode: "compact"` — small-file maintenance for an existing parquet
@@ -502,14 +488,13 @@ object Loaders {
     * missing (a typo'd field would silently quarantine nothing). */
   private def applyQuarantine(ctx: EtlContext, spec: ComponentSpec,
                               df: DataFrame): DataFrame =
-    spec.str("quarantinePath") match {
+    ctx.resolved(spec, "quarantinePath") match {
       case None => df
-      case Some(qp) =>
+      case Some(path) =>
         val ef = spec.strOr("quarantineField", "__errors")
         require(df.columns.contains(ef),
           s"loader quarantinePath: input has no error column '$ef' — add " +
           "`errorField` to the csv transformer (or set `quarantineField`)")
-        val path = OrientExpr.resolveString(qp, ctx.varMap)
         df.where(col(ef).isNotNull).write.mode("overwrite").parquet(path)
         df.where(col(ef).isNull).drop(ef)
     }
@@ -714,11 +699,10 @@ object Loaders {
     ()
   }
 
-  /** Option `name` with config variables resolved — the one read of a
-    * loader's target (`path`, `url`, `dbURL`). */
+  /** A loader's target (`path`, `url`, `dbURL`), config variables
+    * resolved ([[EtlContext.resolved]]). */
   private def resolved(ctx: EtlContext, spec: ComponentSpec, name: String): String =
-    OrientExpr.resolveString(spec.str(name)
-      .getOrElse(sys.error(s"${spec.name} loader: $name required")), ctx.varMap)
+    ctx.resolved(spec, name).getOrElse(sys.error(s"${spec.name} loader: $name required"))
 
   /** Run the sink. Returns true when a terminal ACTION executed (so the
     * engine can collect deferred observe checks — EtlContext.drainChecks);
@@ -867,10 +851,8 @@ object Loaders {
         val dbUrl = resolved(ctx, spec, "dbURL")
         val cls = spec.strOr("class", "record")
         val (df2, sidecar) = orientSchema(spec, df, cls)
-        def writeSidecar(dir: String): Unit = sidecar.foreach { json =>
-          val p = new HPath(s"$dir/_schema.json")
-          writeText(p.getFileSystem(ctx.spark.sparkContext.hadoopConfiguration), p, json)
-        }
+        def writeSidecar(dir: String): Unit =
+          sidecar.foreach(TextFiles.write(ctx.spark, s"$dir/_schema.json", _))
         if (dbUrl.startsWith("jdbc:")) {
           // a jdbc target has no database DIRECTORY to carry the sidecar
           // — declared indexes were validated above but have nowhere to

@@ -1,9 +1,9 @@
 package graft.similarity
 
-import graft.engine.EtlContext
+import graft.engine.{EtlContext, TextFiles}
 import graft.spec.ComponentSpec
 import graft.stages.Stages
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Similarity search over an embedding column (`array<float>`) — builder
@@ -841,25 +841,14 @@ object SimilarityStages {
     }
   }
 
-  /** Centroid persistence (the BPE saveMerges/loadMerges pattern):
-    * cluster one reference snapshot, export, apply verbatim later —
-    * retraining per batch would renumber every cluster id. Format: one
-    * centroid per line, comma-separated `Double.toString` components
-    * (exact roundtrip). */
-  private[graft] def writeCentroids(path: String, cb: Array[Array[Double]]): Unit = {
-    val p = java.nio.file.Paths.get(path)
-    Option(p.getParent).foreach(java.nio.file.Files.createDirectories(_))
-    java.nio.file.Files.write(p,
-      cb.map(_.mkString(",")).mkString("\n").getBytes("UTF-8"))
-  }
-
-  private[graft] def readCentroids(path: String): Array[Array[Double]] = {
-    val p = java.nio.file.Paths.get(path)
-    require(java.nio.file.Files.exists(p),
-      s"kmeans: loadCentroids file not found: $path")
-    val cb = scala.jdk.CollectionConverters
-      .ListHasAsScala(java.nio.file.Files.readAllLines(p)).asScala
-      .filter(_.nonEmpty).map(_.split(",").map(_.toDouble)).toArray
+  /** Centroid persistence through [[graft.engine.TextFiles]]: cluster
+    * one reference snapshot, export, apply verbatim later — retraining
+    * per batch would renumber every cluster id. Format: one centroid per
+    * line, comma-separated `Double.toString` components (exact
+    * roundtrip; [[assignClusters]] writes it). */
+  private def readCentroids(spark: SparkSession, path: String): Array[Array[Double]] = {
+    val cb = TextFiles.lines(spark, path, "kmeans: loadCentroids")
+      .map(_.split(",").map(_.toDouble)).toArray
     require(cb.nonEmpty, s"kmeans: loadCentroids file is empty: $path")
     require(cb.map(_.length).distinct.length == 1,
       s"kmeans: loadCentroids rows have mixed dimensions: $path")
@@ -873,7 +862,8 @@ object SimilarityStages {
                              savePath: Option[String] = None): DataFrame =
     preloaded.orElse {
       val trained = trainFromSample(df, vec, idOrd, k, lloydIters, trainRows)
-      savePath.foreach(p => trained.foreach(writeCentroids(p, _)))
+      for (p <- savePath; cb <- trained)
+        TextFiles.write(df.sparkSession, p, cb.map(_.mkString(",")).mkString("\n"))
       trained
     } match {
       case None =>
@@ -898,7 +888,8 @@ object SimilarityStages {
     * Options: `idField` (default vec_id — sample-order tie-break only),
     * `field` (default embedding), `k` (default 8), `lloydIters`
     * (default 5; 0 = untrained first-k-of-sample codebook), `trainRows`
-    * (default k·40).
+    * (default k·40), `saveCentroids`/`loadCentroids` (the codebook
+    * through [[graft.engine.TextFiles]]; config variables resolved).
     *
     * Scale shape: training is ONE bounded TakeOrdered + driver
     * arithmetic (k·dim doubles of codebook, `trainRows`·dim sample —
@@ -915,8 +906,8 @@ object SimilarityStages {
       assignClusters(df, vec, col(id), k,
         spec.int("lloydIters", 5), spec.int("trainRows", k * 40),
         spec.int("coarseProbe", 2),
-        preloaded = spec.str("loadCentroids").map(readCentroids),
-        savePath = spec.str("saveCentroids"))
+        preloaded = ctx.resolved(spec, "loadCentroids").map(readCentroids(ctx.spark, _)),
+        savePath = ctx.resolved(spec, "saveCentroids"))
     }
 
   /** `semanticdedup` transformer — embedding-cluster-bucketed near-dup

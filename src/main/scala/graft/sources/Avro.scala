@@ -114,12 +114,12 @@ object Avro {
       b.endRecord().toString
     }
     Container.writeShards("avro", prepared, path, spec, new Container.ShardFormat(".avro") {
-      def open(f: java.io.File): Container.Shard = new Container.Shard {
+      def open(file: java.io.OutputStream): Container.Shard = new Container.Shard {
         private val schema = new Schema.Parser().parse(schemaJson)
         private val w = new org.apache.avro.file.DataFileWriter[GenericRecord](
           new org.apache.avro.generic.GenericDatumWriter[GenericRecord](schema))
         w.setCodec(org.apache.avro.file.CodecFactory.deflateCodec(6))
-        w.create(schema, f)
+        w.create(schema, file)
         def add(r: Row): Unit = {
           val rec = new org.apache.avro.generic.GenericData.Record(schema)
           var i = 0

@@ -1,8 +1,10 @@
 package graft.sources
 
 import graft.spec.ComponentSpec
+import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions.col
+import org.apache.spark.util.SerializableConfiguration
 
 /** The file plumbing the container codecs share: one `(path, bytes)`
   * read, one plan-time peek at the first file, and one shard-writer
@@ -26,8 +28,7 @@ object Container {
     * so any path the read accepts (a `file:` URI too) peeks alike.
     * None when there is no such file. */
   def firstFile[T](spark: SparkSession, path: String)(
-      read: (org.apache.hadoop.fs.Path, java.io.InputStream) => T): Option[T] = {
-    import org.apache.hadoop.fs.{Path => HPath}
+      read: (HPath, java.io.InputStream) => T): Option[T] = {
     val first = try {
       val p = new HPath(path)
       val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -49,24 +50,29 @@ object Container {
   }
 
   /** A container loader's shard format, shipped to the executors.
+    * `open` wraps the shard file's stream (and closes it on `close`);
     * `cost` is what a row adds toward `maxShardBytes`; `reserve` is the
     * shard's trailer and slack. */
   abstract class ShardFormat(val ext: String) extends Serializable {
-    def open(f: java.io.File): Shard
+    def open(out: java.io.OutputStream): Shard
     def cost(r: Row): Long = 0L
     def reserve: Long = 0L
   }
 
   /** The one shard-writer loop of the container loaders ([[Tar.write]],
-    * [[Zip.write]], [[Avro.write]]). `mode` overwrite (default) clears
-    * `path` first; append tags this run's file names with a run-unique
-    * id, because names are deterministic per partition and a second run
-    * would otherwise truncate the first run's files; any other mode
-    * fails by name. Each partition writes its own shard sequence,
-    * executor-side. With `rolling`, a shard closes before a row when it
-    * holds any and the row's `cost` plus the `reserve` would pass
-    * `maxShardBytes` (default 1 GiB, at least 4096); without, one file
-    * per partition. */
+    * [[Zip.write]], [[Avro.write]]), through the session's Hadoop FS:
+    * its configuration ships to the executors, so a `file:` URI target
+    * (or any scheme the session knows) writes where it reads. `mode`
+    * overwrite (default) clears `path` as Spark's overwrite does (one
+    * recursive delete, then mkdirs); append tags this run's file names
+    * with a run-unique id, because names are deterministic per
+    * partition and a second run would otherwise truncate the first
+    * run's files; any other mode fails by name. Each partition writes
+    * its own shard sequence, executor-side, each shard created with
+    * overwrite, so a retried task rewrites its own files. With
+    * `rolling`, a shard closes before a row when it holds any and the
+    * row's `cost` plus the `reserve` would pass `maxShardBytes` (default
+    * 1 GiB, at least 4096); without, one file per partition. */
   def writeShards(loader: String, rows: DataFrame, path: String,
                   spec: ComponentSpec, format: ShardFormat, rolling: Boolean): Unit = {
     val maxShard =
@@ -74,16 +80,16 @@ object Container {
       else spec.long("maxShardBytes").getOrElse(1024L * 1024 * 1024)
     require(maxShard >= 4096,
       s"$loader loader: maxShardBytes must be >= 4096, got $maxShard")
-    val dir = new java.io.File(path)
+    val conf = new SerializableConfiguration(rows.sparkSession.sparkContext.hadoopConfiguration)
+    val dir = new HPath(path)
+    val fs = dir.getFileSystem(conf.value)
     val runTag = spec.strOr("mode", "overwrite") match {
-      case "overwrite" =>
-        if (dir.exists()) Option(dir.listFiles()).foreach(_.foreach(_.delete()))
-        ""
+      case "overwrite" => fs.delete(dir, true); ""
       case "append" => "-r" + java.util.UUID.randomUUID().toString.take(8)
       case other => sys.error(
         s"$loader loader: mode must be overwrite or append, got '$other'")
     }
-    dir.mkdirs()
+    fs.mkdirs(dir)
     rows.foreachPartition { (it: Iterator[Row]) =>
       if (it.hasNext) {
         val pid = org.apache.spark.TaskContext.getPartitionId()
@@ -92,7 +98,8 @@ object Container {
         var written = 0L
         def open(): Unit = {
           val idx = if (rolling) f"-$n%03d" else ""
-          shard = format.open(new java.io.File(dir, f"part-$pid%05d$idx$runTag${format.ext}"))
+          val file = new HPath(dir, f"part-$pid%05d$idx$runTag${format.ext}")
+          shard = format.open(file.getFileSystem(conf.value).create(file, true))
           written = 0L
         }
         open()

@@ -1,7 +1,6 @@
 package graft.sources
 
 import graft.engine.EtlContext
-import graft.expr.OrientExpr
 import graft.spec.ComponentSpec
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -240,14 +239,11 @@ object Sources {
             extractor: Option[ComponentSpec],
             needRowNumbers: Boolean = false): DataFrame = {
     val spark = ctx.spark
-    val vars = ctx.varMap
     def sourcePath: String = {
       val s = source.getOrElse(sys.error("extractor requires a source with a path/url"))
       s.name match {
-        case "file" => OrientExpr.resolveString(
-          s.str("path").getOrElse(sys.error("file source: path required")), vars)
-        case "http" => OrientExpr.resolveString(
-          s.str("url").getOrElse(sys.error("http source: url required")), vars)
+        case "file" => ctx.resolved(s, "path").getOrElse(sys.error("file source: path required"))
+        case "http" => ctx.resolved(s, "url").getOrElse(sys.error("http source: url required"))
         case other => sys.error(s"source $other provides no path")
       }
     }

@@ -312,12 +312,10 @@ object Tar {
     Container.writeShards("tar",
       df.select(col(nameF).cast("string"), col(bodyF).cast("binary"), mtimeSel),
       path, spec, new Container.ShardFormat(if (gzip) ".tar.gz" else ".tar") {
-        def open(f: java.io.File): Container.Shard = new Container.Shard {
-          private val out = {
-            val fo = new java.io.FileOutputStream(f)
-            if (gzip) new java.util.zip.GZIPOutputStream(fo, 64 * 1024)
-            else new java.io.BufferedOutputStream(fo, 64 * 1024)
-          }
+        def open(file: java.io.OutputStream): Container.Shard = new Container.Shard {
+          private val out =
+            if (gzip) new java.util.zip.GZIPOutputStream(file, 64 * 1024)
+            else new java.io.BufferedOutputStream(file, 64 * 1024)
           def add(r: Row): Unit = {
             if (r.isNullAt(0)) sys.error(s"tar loader: null $nameF")
             writeMember(out, r.getString(0), if (r.isNullAt(2)) 0L else r.getLong(2), body(r))

@@ -50,9 +50,9 @@ object Zip {
     def body(r: Row) = if (r.isNullAt(1)) Array.emptyByteArray else r.getAs[Array[Byte]](1)
     Container.writeShards("zip", df.select(col(nameF).cast("string"), col(bodyF).cast("binary")),
       path, spec, new Container.ShardFormat(".zip") {
-        def open(f: java.io.File): Container.Shard = new Container.Shard {
+        def open(file: java.io.OutputStream): Container.Shard = new Container.Shard {
           private val zos = new java.util.zip.ZipOutputStream(
-            new java.io.BufferedOutputStream(new java.io.FileOutputStream(f), 64 * 1024))
+            new java.io.BufferedOutputStream(file, 64 * 1024))
           def add(r: Row): Unit = {
             if (r.isNullAt(0)) sys.error(s"zip loader: null $nameF")
             zos.putNextEntry(new java.util.zip.ZipEntry(r.getString(0)))

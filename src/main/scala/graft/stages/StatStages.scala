@@ -1,6 +1,6 @@
 package graft.stages
 
-import graft.engine.EtlContext
+import graft.engine.{EtlContext, TextFiles}
 import graft.spec.ComponentSpec
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -91,9 +91,12 @@ object StatStages {
     *
     * Options: `field` (required), `outputField` (default `<field>_id`),
     * `startAt` (default 0). NULL encodes as NULL. Vocabulary persistence
-    * (the BPE/kmeans pattern): `saveMapping` writes value→id lines;
-    * `loadMapping` applies a prior mapping verbatim — unseen values get
-    * NULL ids (surface them, don't renumber history).
+    * through [[graft.engine.TextFiles]] (config variables resolved):
+    * `saveMapping` writes `value<TAB>id` lines (a value holding a line
+    * break fails by name; one holding a tab or empty round-trips, the id
+    * follows the last tab); `loadMapping` applies a prior mapping
+    * verbatim — unseen values get NULL ids (surface them, don't renumber
+    * history).
     *
     * Scale shape: distinct + a window over the DISTINCT set (vocabulary-
     * sized, not corpus-sized) + one broadcast-eligible join back. */
@@ -104,18 +107,14 @@ object StatStages {
       val out = spec.strOr("outputField", s"${f}_id")
       val start = spec.long("startAt").getOrElse(0L)
       val spark = ctx.spark
-      val mapping: DataFrame = spec.str("loadMapping") match {
+      val mapping: DataFrame = ctx.resolved(spec, "loadMapping") match {
         case Some(path) =>
-          val p = java.nio.file.Paths.get(path)
-          require(java.nio.file.Files.exists(p),
-            s"labelencode: loadMapping file not found: $path")
-          val rows = scala.jdk.CollectionConverters
-            .ListHasAsScala(java.nio.file.Files.readAllLines(p)).asScala
-            .filter(_.nonEmpty).map { line =>
-              val tab = line.indexOf('\t')
-              require(tab > 0, s"labelencode: bad mapping line '$line' in $path")
-              (line.substring(0, tab), line.substring(tab + 1).toLong)
-            }.toSeq
+          val rows = TextFiles.lines(spark, path, "labelencode: loadMapping").map { line =>
+            val tab = line.lastIndexOf('\t')
+            val id = line.substring(tab + 1).toLongOption
+            require(tab >= 0 && id.isDefined, s"labelencode: bad mapping line '$line' in $path")
+            (line.substring(0, tab), id.get)
+          }
           import spark.implicits._
           rows.toDF("__val", "__id")
         case None =>
@@ -142,12 +141,14 @@ object StatStages {
           val w = org.apache.spark.sql.expressions.Window.orderBy(col("__val"))
           val m = distinctVals
             .withColumn("__id", row_number().over(w).cast("long") - 1 + start)
-          spec.str("saveMapping").foreach { path =>
-            val p = java.nio.file.Paths.get(path)
-            Option(p.getParent).foreach(java.nio.file.Files.createDirectories(_))
-            val lines = m.orderBy("__id").collect()
-              .map(r => s"${r.getString(0)}\t${r.getLong(1)}")
-            java.nio.file.Files.write(p, lines.mkString("\n").getBytes("UTF-8"))
+          ctx.resolved(spec, "saveMapping").foreach { path =>
+            val lines = m.orderBy("__id").collect().map { r =>
+              val v = r.getString(0)
+              require(!v.exists(c => c == '\n' || c == '\r'), "labelencode: saveMapping " +
+                s"cannot record a value holding a line break: '${v.replaceAll("\r?\n|\r", "\\\\n")}'")
+              s"$v\t${r.getLong(1)}"
+            }
+            TextFiles.write(spark, path, lines.mkString("\n"))
           }
           m
       }

@@ -1,6 +1,6 @@
 package graft.text
 
-import graft.engine.EtlContext
+import graft.engine.{EtlContext, TextFiles}
 import graft.spec.ComponentSpec
 import graft.stages.Stages
 import org.apache.spark.sql.{Column, DataFrame}
@@ -481,24 +481,23 @@ object TextStages {
     *
     * Options: `field` (default text), `outputField` (default
     * bpe_tokens; also emits `n_<outputField>`), `numMerges` (default
-    * 200), `trainRows` (default 512). */
+    * 200), `trainRows` (default 512), `saveMerges`/`loadMerges` (the
+    * merge table as one line per merge, through
+    * [[graft.engine.TextFiles]]; config variables resolved). */
   def bpe(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
     { df =>
       graft.functions.VectorExpressions.ensure(ctx.spark)
       val fieldName = spec.strOr("field", "text")
       val outField = spec.strOr("outputField", "bpe_tokens")
-      // model persistence: `loadMerges` applies a previously-trained
-      // table verbatim (train ONCE on a reference corpus snapshot, apply
-      // to every later batch — retraining per run would re-tokenize the
-      // whole history differently); `saveMerges` exports this run's
-      // table (one line per merge, rank order) for exactly that reuse
-      val merges: Array[String] = spec.str("loadMerges") match {
+      // model persistence through TextFiles: `loadMerges` applies a
+      // previously-trained table verbatim (train ONCE on a reference
+      // corpus snapshot, apply to every later batch — retraining per run
+      // would re-tokenize the whole history differently); `saveMerges`
+      // exports this run's table (one line per merge, rank order) for
+      // exactly that reuse
+      val merges: Array[String] = ctx.resolved(spec, "loadMerges") match {
         case Some(path) =>
-          val p = java.nio.file.Paths.get(path)
-          require(java.nio.file.Files.exists(p), s"bpe: loadMerges file not found: $path")
-          val m = scala.jdk.CollectionConverters
-            .ListHasAsScala(java.nio.file.Files.readAllLines(p)).asScala
-            .filter(_.nonEmpty).toArray
+          val m = TextFiles.lines(ctx.spark, path, "bpe: loadMerges").toArray
           require(m.nonEmpty, s"bpe: loadMerges file is empty: $path")
           m
         case None =>
@@ -513,12 +512,7 @@ object TextStages {
             .foreach(w => freqs(w) = freqs.getOrElse(w, 0L) + 1L))
           graft.functions.Bpe.train(freqs.toSeq.sortBy(_._1), numMerges)
       }
-      spec.str("saveMerges").foreach { path =>
-        val p = java.nio.file.Paths.get(path)
-        Option(p.getParent).foreach(java.nio.file.Files.createDirectories(_))
-        java.nio.file.Files.write(p,
-          merges.mkString("\n").getBytes("UTF-8"))
-      }
+      ctx.resolved(spec, "saveMerges").foreach(TextFiles.write(ctx.spark, _, merges.mkString("\n")))
       val toks = graft.functions.VectorExpressions.bpeEncode(
         col(fieldName).cast("string"), merges)
       // spread before the encode: the per-word merge loop is the

@@ -102,5 +102,18 @@ class BpeSpec extends SparkSpec {
       "transformers": [{"bpe": {"loadMerges": "/nonexistent/m.txt"}}],
       "loader": {"memory": {}} }"""))
     assert(e.getMessage.contains("loadMerges"))
+    // config variables resolve in both paths, a file: URI included
+    val dir = java.nio.file.Files.createTempDirectory("graft_bpe_var").toString
+    def viaVar(bpe: String) = Engine.runJson(newCtx(), s"""{
+      "config": {"out": "file:$dir"},
+      "source": {"file": {"path": "$sfDir/documents.parquet"}},
+      "extractor": {"parquet": {}},
+      "transformers": [{"bpe": {"field": "text", $bpe}}],
+      "loader": {"memory": {}} }""")
+      .select("doc_id", "bpe_tokens").orderBy("doc_id").collect()
+    viaVar(""""numMerges": 40, "trainRows": 64, "saveMerges": "$out/m.txt"""")
+    assert(new java.io.File(s"$dir/m.txt").length() > 0)
+    assert(viaVar(""""loadMerges": "$out/m.txt"""").map(_.getSeq[String](1)).toSeq ==
+      trained.map(_.getSeq[String](1)).toSeq)
   }
 }

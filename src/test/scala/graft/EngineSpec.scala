@@ -207,6 +207,12 @@ class EngineSpec extends SparkSpec {
     }""")
     assert(out.count() == 5)
     assert(out.agg(sum("n")).head().getLong(0) == 25)
+    // a file: URI scale dir registers the same tables (checked through
+    // the session's FS, not java.io.File)
+    val viaUri = new graft.engine.EtlContext(spark)
+    Engine.registerSfTables(viaUri, "file:" + sfDir)
+    val plain = newCtx().tables.keySet
+    assert(viaUri.tables.keySet == plain && plain.nonEmpty)
   }
 
   test("output capture: result diverted, input passes through") {
@@ -502,7 +508,7 @@ class EngineSpec extends SparkSpec {
       case (l, i) if (i < start || i > end) && tokens.exists(l.contains) => s"${i + 1}: $l"
     }
     assert(outside.isEmpty, s"staging/.old swaps outside TableSwap: $outside")
-    assert(src.count(_.contains("fs.open(")) == 1, "one text read")
+    assert(!src.exists(_.contains("fs.open(")), "text reads go through TextFiles")
   }
 
   test("bucketed upsert: migrates an existing flat table once, then prunes") {

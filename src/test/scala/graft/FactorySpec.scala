@@ -63,9 +63,31 @@ class FactorySpec extends SparkSpec {
     onlyIn(src, "Flate.scala", """java\.util\.zip\.Inflater\b""", "GZIPInputStream")
     onlyIn(src, "Container.scala", """format\("binaryFile"\)""")
     // among the codecs: one shard loop and one first-file peek (the
-    // dot-file skip; the old peeks opened paths through java.io.File)
-    onlyIn(sources, "Container.scala", """\bforeachPartition\b""",
-      """startsWith\("\."\)""", """new java\.io\.File\(""")
+    // dot-file skip); shards and peeks open paths through the session's
+    // Hadoop FS, never through java.io.File
+    onlyIn(sources, "Container.scala", """\bforeachPartition\b""", """startsWith\("\."\)""")
+    assert(hitsIn(sources, """new java\.io\.File\(""".r).isEmpty)
+  }
+
+  test("one storage path: engine file I/O goes through the session's Hadoop FS") {
+    val dirs = Seq("engine", "loaders", "similarity", "sources", "stages", "streaming", "text")
+    val banned = """java\.nio\.file\b|\bPaths\.get\b|new\s+(java\.io\.)?File\(|File(In|Out)putStream""".r
+    val hits = for {
+      (path, src) <- mainSources.toSeq
+      if dirs.exists(d => path.startsWith(s"src/main/scala/graft/$d/"))
+      // the local FileSystem itself is the one place that talks to java.nio
+      if !path.endsWith("/engine/LocalFs.scala")
+      lines = src.linesIterator.toIndexedSeq
+      // the streaming checkpoint base is a local tmpfs dir by design
+      ckpt = lines.indexWhere(_.contains("private lazy val ramCkptBase"))
+      ckptEnd = lines.indexWhere(_.contains("private def ramCkptDir"))
+      (line, i) <- lines.zipWithIndex
+      if banned.findFirstIn(line).isDefined
+      // the upsert lease's O_EXCL claim is synchronisation, not storage
+      if !line.contains(".createNewFile()")
+      if !(ckpt >= 0 && i >= ckpt && i <= ckptEnd + 2)
+    } yield s"$path:${i + 1}: ${line.trim}"
+    assert(hits.isEmpty, hits.mkString("\n"))
   }
 
   test("ensure() registers exactly what a session lacks, in every session") {

@@ -1098,6 +1098,18 @@ class LlmStagesSpec extends SparkSpec {
     assert(loaded == trained.filter(_._1 < 10))
     val e = intercept[Exception](stage("kmeans", "loadCentroids" -> "/no/such.txt")(df))
     assert(e.getMessage.contains("loadCentroids"))
+    // config variables resolve in both paths, a file: URI included
+    val dir = java.nio.file.Files.createTempDirectory("graft_km_var").toString
+    val ctx = newCtx()
+    ctx.vars.put("out", s"file:$dir")
+    def kmeans(opts: (String, Any)*) =
+      graft.engine.Engine.transformers("kmeans")(ComponentSpec("kmeans", opts.toMap), ctx)
+    kmeans("k" -> 3, "saveCentroids" -> "$out/c.txt")(df).collect()
+    assert(new java.io.File(s"$dir/c.txt").isFile)
+    val viaVar = kmeans("loadCentroids" -> "$out/c.txt")(df.where(col("vec_id") < 10))
+      .select("vec_id", "cluster", "centroid_sim")
+      .as[(Long, Long, Double)].collect().sortBy(_._1).toSeq
+    assert(viaVar == loaded)
   }
 
   test("semanticdedup: keeps min id per near-dup group; pairs mode; guard fires") {

@@ -176,10 +176,15 @@ class LocalFsSpec extends SparkSpec {
     val rec = new Recording()
     rec.enable("jdk.ProcessStart")
     rec.start()
+    // the container loaders write their shards executor-side, through
+    // the session's FS classes shipped in its configuration
+    val docs = Seq(("a.txt", "alpha"), ("b.txt", "beta")).toDF("member", "body").repartition(2)
     val batches = try {
       upsert("base"); upsert("delta")
       val q = Streaming.run(newCtx(), PipelineSpec.parse(stream))
       q.awaitTermination()
+      graft.sources.Tar.write(docs, s"$base/tar", graft.spec.ComponentSpec("tar", Map()))
+      graft.sources.Zip.write(docs, s"$base/zip", graft.spec.ComponentSpec("zip", Map()))
       q.recentProgress.count(_.numInputRows > 0)
     } finally rec.stop()
     val dump = Files.createTempFile(Paths.get(tmp), "spawn", ".jfr")
@@ -192,6 +197,11 @@ class LocalFsSpec extends SparkSpec {
       Map(1L -> "a", 2L -> "B", 3L -> "c", 4L -> "d"))
     assert(batches == 2)
     assert(spark.read.parquet(s"$base/stream_table").count() == 4)
+    assert(graft.sources.Zip.read(spark, s"$base/zip", graft.spec.ComponentSpec("zip", Map()))
+      .count() == 2)
+    // checksummed like every other file the session writes
+    for (fmt <- Seq("tar", "zip"))
+      assert(new java.io.File(s"$base/$fmt").list().exists(_.endsWith(s".$fmt.crc")), fmt)
     val forks = commands.filter(_.split("\\s+").headOption.exists(c =>
       c.endsWith("chmod") || c.endsWith("readlink")))
     if (forks.nonEmpty) fail(s"${forks.size} chmod/readlink starts, e.g. ${forks.take(3).mkString("; ")}")

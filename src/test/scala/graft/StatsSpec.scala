@@ -248,6 +248,29 @@ class StatsSpec extends SparkSpec {
       Map("field" -> "fruit", "startAt" -> 10)), ctx)(df)
       .where(col("fruit") === "apple").select("fruit_id").as[Long].head()
     assert(shifted == 10L)
+    // paths resolve config variables and go through the session's FS (a
+    // file: URI too); "" and a value holding a tab round-trip, a value
+    // holding a line break fails by name
+    val dir = java.nio.file.Files.createTempDirectory("graft_le_var").toString
+    val vctx = newCtx()
+    vctx.vars.put("out", s"file:$dir")
+    def encode(opts: (String, String)*)(d: org.apache.spark.sql.DataFrame) =
+      StatStages.labelEncode(ComponentSpec("labelencode",
+        (opts :+ ("field" -> "fruit")).toMap), vctx)(d)
+    val odd = Seq("", "a\tb", "apple").zipWithIndex.map { case (v, i) => (i.toLong, v) }
+      .toDF("id", "fruit")
+    val saved = encode("saveMapping" -> "$out/map.tsv")(odd)
+      .orderBy("id").select("fruit_id").as[Long].collect().toSeq
+    assert(saved == Seq(0L, 1L, 2L))
+    assert(new java.io.File(s"$dir/map.tsv").isFile)
+    val reloaded = encode("loadMapping" -> "$out/map.tsv")(odd)
+      .orderBy("id").select("fruit_id").as[Long].collect().toSeq
+    assert(reloaded == saved)
+    val broken = Seq((1L, "two\nlines")).toDF("id", "fruit")
+    val e = intercept[IllegalArgumentException](
+      encode("saveMapping" -> "$out/broken.tsv")(broken))
+    assert(e.getMessage.contains("labelencode: saveMapping cannot record a value " +
+      "holding a line break: 'two\\nlines'"), e.getMessage)
   }
 
   test("zscore method=mad: robust to the outlier it flags; zero-MAD group nulls") {

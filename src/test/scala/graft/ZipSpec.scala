@@ -65,25 +65,37 @@ class ZipSpec extends SparkSpec {
     import graft.sources.{Avro, Tar}
     def run(n: Int, tag: String) =
       (1 to n).map(i => (s"$tag/$i.txt", s"$tag body $i")).toDF("member", "body").repartition(2)
-    val loaders = Seq[(String, (org.apache.spark.sql.DataFrame, String, ComponentSpec) => Unit,
+    val loaders = Seq[(String, Map[String, Any], String,
+        (org.apache.spark.sql.DataFrame, String, ComponentSpec) => Unit,
         String => org.apache.spark.sql.DataFrame)](
-      ("avro", Avro.write, Avro.read(spark, _, ComponentSpec("avro", Map()))),
-      ("tar", Tar.write, Tar.read(spark, _, ComponentSpec("tar", Map()))),
-      ("zip", Zip.write, Zip.read(spark, _, ComponentSpec("zip", Map()))))
-    for ((name, write, read) <- loaders) {
+      ("avro", Map(), ".avro", Avro.write, Avro.read(spark, _, ComponentSpec("avro", Map()))),
+      ("tar", Map(), ".tar", Tar.write, Tar.read(spark, _, ComponentSpec("tar", Map()))),
+      ("tar", Map("gzip" -> true), ".tar.gz", Tar.write,
+        Tar.read(spark, _, ComponentSpec("tar", Map()))),
+      ("zip", Map(), ".zip", Zip.write, Zip.read(spark, _, ComponentSpec("zip", Map()))))
+    for ((name, opts, ext, write, read) <- loaders) {
+      def spec(more: (String, Any)*) = ComponentSpec(name, opts ++ more)
       val dir = java.nio.file.Files.createTempDirectory(s"graft_${name}_modes").toString
-      def members = read(dir).select("member").as[String].collect().toSet
-      val append = ComponentSpec(name, Map("mode" -> "append"))
+      def members(at: String = dir) = read(at).select("member").as[String].collect().toSet
+      val append = spec("mode" -> "append")
       write(run(6, "first"), dir, append)
       write(run(4, "second"), dir, append)
-      assert(members == (1 to 6).map(i => s"first/$i.txt").toSet ++
+      assert(members() == (1 to 6).map(i => s"first/$i.txt").toSet ++
         (1 to 4).map(i => s"second/$i.txt"), name)
-      write(run(3, "third"), dir, ComponentSpec(name, Map()))
-      assert(members == (1 to 3).map(i => s"third/$i.txt").toSet, name)
+      write(run(3, "third"), dir, spec())
+      assert(members() == (1 to 3).map(i => s"third/$i.txt").toSet, name)
       val e = intercept[RuntimeException](
-        write(run(1, "x"), dir, ComponentSpec(name, Map("mode" -> "ignore"))))
+        write(run(1, "x"), dir, spec("mode" -> "ignore")))
       assert(e.getMessage.contains(s"$name loader: mode must be overwrite or append"),
         e.getMessage)
+      // a file: URI target lands where the extractor reads it (not under a
+      // relative directory named "file:"), overwrite included
+      val uri = s"file:$dir/uri"
+      write(run(5, "old"), uri, spec())
+      write(run(2, "uri"), uri, spec())
+      assert(members(uri) == Set("uri/1.txt", "uri/2.txt"), s"$name $ext")
+      val shards = new java.io.File(s"$dir/uri").list().filterNot(_.startsWith("."))
+      assert(shards.nonEmpty && shards.forall(_.endsWith(ext)), shards.toSeq)
     }
   }
 
