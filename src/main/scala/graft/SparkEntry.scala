@@ -1,10 +1,11 @@
 package graft
 
+import graft.Fixtures.{emlFixture, epubFixture, exactTop5, fixtures, mboxFixture,
+  odtFixture, pdfWarcFixture, scratch, tarFixture, warcFixture, wikiFixture, zipFixture}
 import graft.engine.{Engine, EtlContext}
 import graft.stages.LookupStages
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import scala.collection.concurrent.TrieMap
 
 /** Driver contract — one `queries` entry (+ DuckDB `oracleSql` where
   * SQL-expressible) per implemented operator from SURVEY.md §2 plus the
@@ -27,801 +28,6 @@ object SparkEntry {
     c
   }
 
-  // ---------------------------------------------------------------------
-  // Derived text/CSV/JSON fixtures (FIXTURES.md "Derived text inputs"):
-  // generated once per scale dir from the parquet, so the oracle stays
-  // the parquet itself.
-  // ---------------------------------------------------------------------
-  private val fxDirs = TrieMap.empty[String, String]
-  private def fixtures(spark: SparkSession, sfDir: String): String =
-    fxDirs.getOrElseUpdate(sfDir, {
-      val dir = s"/tmp/graft_fx_${math.abs(sfDir.hashCode)}"
-      val d = new java.io.File(dir)
-      d.mkdirs()
-      val nation = spark.read.parquet(s"$sfDir/nation.parquet")
-        .orderBy("n_nationkey").collect()
-      def csvLines(header: Boolean): Seq[String] = {
-        val hdr = if (header) Seq("n_nationkey,n_name,n_regionkey") else Nil
-        hdr ++ nation.map(r => s"${r.get(0)},${r.get(1)},${r.get(2)}")
-      }
-      java.nio.file.Files.write(java.nio.file.Paths.get(dir, "nation.csv"),
-        csvLines(header = true).mkString("\n").getBytes("UTF-8"))
-      java.nio.file.Files.write(java.nio.file.Paths.get(dir, "nation_noheader.csv"),
-        csvLines(header = false).mkString("\n").getBytes("UTF-8"))
-      // planted-dirty variant: every 5th row's n_regionkey cell is a
-      // non-numeric token (per-field conversion-error fixture)
-      val dirty = Seq("n_nationkey,n_name,n_regionkey") ++ nation.map { r =>
-        val rk = if (r.get(0).toString.toLong % 5 == 2) "bad" else r.get(2).toString
-        s"${r.get(0)},${r.get(1)},$rk"
-      }
-      java.nio.file.Files.write(java.nio.file.Paths.get(dir, "nation_dirty.csv"),
-        dirty.mkString("\n").getBytes("UTF-8"))
-      // nation as FIXED-WIDTH text (the fixedwidth extractor's input):
-      // key[1..4] name[5..20] regionkey[21..22, blank every 7th → null]
-      // price[23..30] = key · 1.5 (binary-exact halves round-trip %.2f)
-      val fw = nation.map { r =>
-        val k = r.get(0).toString.toLong
-        val rk = if (k % 7 == 3) "  " else f"${r.get(2).toString.toLong}%2d"
-        f"$k%4d${r.get(1).toString}%-16s$rk${k * 1.5}%8.2f"
-      }
-      java.nio.file.Files.write(java.nio.file.Paths.get(dir, "nation.fw"),
-        fw.mkString("\n").getBytes("UTF-8"))
-      val gz = new java.util.zip.GZIPOutputStream(
-        new java.io.FileOutputStream(s"$dir/nation.csv.gz"))
-      gz.write(csvLines(header = true).mkString("\n").getBytes("UTF-8")); gz.close()
-      // orders as JSON-lines (the scalable JSON layout)
-      spark.read.parquet(s"$sfDir/orders.parquet")
-        .select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice")
-        .write.mode("overwrite").json(s"$dir/orders_json")
-      // region as a single JSON array-of-objects document
-      // (OJsonExtractor.java:75-90 input shape)
-      val region = spark.read.parquet(s"$sfDir/region.parquet")
-        .orderBy("r_regionkey").toJSON.collect()
-      java.nio.file.Files.write(java.nio.file.Paths.get(dir, "region_array.json"),
-        region.mkString("[", ",", "]").getBytes("UTF-8"))
-      // nation as an Avro Object Container File (deflate codec): long/
-      // string primitives plus an array and a nested record (the
-      // complex→JSON-column mapping) — the `avro` extractor's input
-      locally {
-        import org.apache.avro.{Schema, SchemaBuilder}
-        import org.apache.avro.generic.{GenericData, GenericRecordBuilder}
-        val metaS = SchemaBuilder.record("meta").fields()
-          .requiredString("k").requiredLong("v").endRecord()
-        val schema = SchemaBuilder.record("nation").fields()
-          .requiredLong("n_nationkey")
-          .requiredString("n_name")
-          .requiredLong("n_regionkey")
-          .name("tags").`type`().array().items().stringType().noDefault()
-          .name("meta").`type`(metaS).noDefault()
-          .optionalString("note")
-          .endRecord()
-        val w = new org.apache.avro.file.DataFileWriter[GenericData.Record](
-          new org.apache.avro.generic.GenericDatumWriter[GenericData.Record](schema))
-        w.setCodec(org.apache.avro.file.CodecFactory.deflateCodec(6))
-        w.create(schema, new java.io.File(dir, "nation.avro"))
-        nation.foreach { r =>
-          val nk = r.get(0).toString.toLong
-          val rk = r.get(2).toString.toLong
-          val tags = new GenericData.Array[AnyRef](
-            schema.getField("tags").schema(),
-            java.util.Arrays.asList[AnyRef](s"r$rk", s"n$nk"))
-          val meta = new GenericRecordBuilder(metaS)
-            .set("k", s"key$nk").set("v", nk * 10).build()
-          w.append(new GenericRecordBuilder(schema)
-            .set("n_nationkey", nk).set("n_name", r.get(1).toString)
-            .set("n_regionkey", rk).set("tags", tags).set("meta", meta)
-            .set("note", if (nk % 2 == 0) s"even$nk" else null)
-            .build().asInstanceOf[GenericData.Record])
-        }
-        w.close()
-      }
-      // real encoded images (PNG/JPEG/BMP/animated GIF), one per doc_id,
-      // generated executor-side — the mm_* decode queries' input
-      graft.multimodal.MediaFixtures.ensure(spark, sfDir, s"$dir/media_parquet")
-      // real WAV payloads for the audio metadata decode
-      graft.multimodal.MediaFixtures.ensureAudio(spark, sfDir, s"$dir/audio_parquet")
-      // real MP4 container bytes for the pure-byte box-parse decode
-      graft.multimodal.MediaFixtures.ensureVideo(spark, sfDir, s"$dir/video_parquet")
-      // MP4 containers carrying REAL JPEG frames (MJPEG layout) for the
-      // per-frame pixel decode
-      graft.multimodal.MediaFixtures.ensureMjpeg(spark, sfDir, s"$dir/mjpeg_parquet")
-      // structurally-real MP3/ADTS frame sequences for the compressed-
-      // audio frame-header walk (metadata = doc_id arithmetic)
-      graft.multimodal.MediaFixtures.ensureCompressedAudio(
-        spark, sfDir, s"$dir/ca_parquet")
-      // block-pattern PNGs whose average-hash is planted doc_id
-      // arithmetic (the image near-dup query's input)
-      graft.multimodal.MediaFixtures.ensurePhash(spark, sfDir, s"$dir/phash_parquet")
-      // PNGs carrying planted tEXt/zTXt/iTXt chunks (mm_meta's input)
-      graft.multimodal.MediaFixtures.ensureMetaPng(spark, sfDir, s"$dir/metapng_parquet")
-      // REAL PDF bytes (xref table, page tree, Flate/raw streams) whose
-      // per-page text is doc_id arithmetic — pdfextract's input
-      graft.multimodal.MediaFixtures.ensurePdf(spark, sfDir, s"$dir/pdf_parquet")
-      // REAL DOCX bytes (ZIP + WordprocessingML) — docxextract's input
-      graft.multimodal.MediaFixtures.ensureDocx(spark, sfDir, s"$dir/docx_parquet")
-      // REAL RTF bytes (control words, escapes, dropped destinations)
-      graft.multimodal.MediaFixtures.ensureRtf(spark, sfDir, s"$dir/rtf_parquet")
-      // script-mix plant (scriptmix's input): minor latin 'a' run +
-      // a dominant-script run rotating LATIN/CYRILLIC/HAN by doc_id %
-      // 3 — counts are pure doc_id arithmetic, so the oracle recomputes
-      // n_letters/top_script and the exact one-division ratio while the
-      // engine must classify REAL code points
-      locally {
-        val docK = graft.multimodal.MediaFixtures.docKey(spark, sfDir)
-        val marker = new java.io.File(s"$dir/scriptmix_parquet",
-          s"_graft_script1_$docK")
-        if (!marker.exists()) {
-          spark.read.parquet(s"$sfDir/documents.parquet")
-            .select(col("doc_id"),
-              concat(
-                repeat(lit("a"), (col("doc_id") % 6).cast("int")),
-                lit(" 42, "), // digits/punct are script-neutral
-                repeat(element_at(typedLit(Seq("b", "я", "漢")),
-                  (col("doc_id") % 3).cast("int") + 1),
-                  (lit(7) + col("doc_id") % 5).cast("int"))).as("text"))
-            .write.mode("overwrite").parquet(s"$dir/scriptmix_parquet")
-          marker.createNewFile()
-        }
-      }
-      // LaTeX-wrapped documents (latexstrip's input): the document text
-      // embedded in a real article skeleton with planted comments, math,
-      // cite/includegraphics drops, an escaped percent, a figure float
-      // and styling commands — built with the Spark API (ONE escaping
-      // layer; a JSON-SQL wrap would eat backslashes twice, CLAUDE.md).
-      // Content-keyed on the doc population + text checksum.
-      locally {
-        val docK = graft.multimodal.MediaFixtures.docKey(spark, sfDir)
-        val textCk = spark.read.parquet(s"$sfDir/documents.parquet")
-          .agg(sum(crc32(col("text"))).as("ck")).head().getLong(0)
-        val marker = new java.io.File(s"$dir/latex_parquet",
-          s"_graft_latex1_${docK}_$textCk")
-        if (!marker.exists()) {
-          spark.read.parquet(s"$sfDir/documents.parquet")
-            .select(col("doc_id"), concat(
-              lit("\\documentclass[11pt]{article} % preamble cmt\n"),
-              lit("\\begin{document}\n\\title{Doc "),
-              col("doc_id").cast("string"),
-              lit("}\n\\section{Intro}\nText: "), col("text"),
-              lit(" \\cite{x"), col("doc_id").cast("string"),
-              lit("} and $e=mc^2$ 100\\% \\textbf{bold"),
-              (col("doc_id") % 7).cast("string"),
-              lit("}\n\\begin{figure}\n\\includegraphics[width=3cm]{f.png}\n" +
-                "\\caption{hidden caption}\n\\end{figure}\n\\end{document}\n"))
-              .as("tex"))
-            .write.mode("overwrite").parquet(s"$dir/latex_parquet")
-          marker.createNewFile()
-        }
-      }
-      // Markdown-wrapped documents (markdownstrip's input): the document
-      // text embedded in a README-shaped skeleton planting every subset
-      // family — heading, emphasis, code span, inline/image links, list
-      // markers, blockquote, fence, table, setext, link-def, escapes,
-      // entity, intraword underscore, thematic break. Spark-API build
-      // (ONE escaping layer); content-keyed like the latex fixture.
-      locally {
-        val docK = graft.multimodal.MediaFixtures.docKey(spark, sfDir)
-        val textCk = spark.read.parquet(s"$sfDir/documents.parquet")
-          .agg(sum(crc32(col("text"))).as("ck")).head().getLong(0)
-        val marker = new java.io.File(s"$dir/markdown_parquet",
-          s"_graft_md1_${docK}_$textCk")
-        if (!marker.exists()) {
-          spark.read.parquet(s"$sfDir/documents.parquet")
-            .select(col("doc_id"), concat(
-              lit("# Doc "), col("doc_id").cast("string"),
-              lit("\n\nIntro *em"), (col("doc_id") % 7).cast("string"),
-              lit("* and **bold** plus `code span "),
-              (col("doc_id") % 5).cast("string"),
-              lit("` here.\n[Link text](http://example.com/"),
-              col("doc_id").cast("string"),
-              lit(") and ![fig alt "), (col("doc_id") % 3).cast("string"),
-              lit("](img.png)\n\n- item one\n2. item two "),
-              (col("doc_id") % 4).cast("string"),
-              lit("\n\n> quoted tail "), (col("doc_id") % 6).cast("string"),
-              lit("\n\n```scala\ncode fence "), (col("doc_id") % 2).cast("string"),
-              lit("\n```\n\n| col a | col b |\n|---|---|\n| cell "),
-              (col("doc_id") % 8).cast("string"),
-              lit(" | x |\n\nSetext "), (col("doc_id") % 9).cast("string"),
-              lit("\n====\n[ref]: http://r.example\nBody: "), col("text"),
-              lit("\nTail \\*lit\\* snake_case &amp; done\n---\n")).as("md"))
-            .write.mode("overwrite").parquet(s"$dir/markdown_parquet")
-          marker.createNewFile()
-        }
-      }
-      // multilingual text: one held-out sentence per doc_id, language
-      // keyed by doc_id % Languages.length — the langid query must recover the key
-      // from the TEXT; the oracle recomputes the arithmetic. The cache
-      // marker is CONTENT-KEYED on the holdout data so an edit to
-      // LangIdModel can never leave a stale /tmp fixture silently
-      // disagreeing with the oracle arithmetic.
-      locally {
-        import graft.text.LangIdModel.{Languages, Holdout, HoldoutK}
-        val flat = Languages.flatMap(l => Holdout(l)) // idx = lang*K + sentence
-        val contentKey = math.abs(
-          scala.util.hashing.MurmurHash3.orderedHash(flat ++ Languages))
-        // keyed on BOTH the holdout content and the doc population —
-        // regenerated testdata invalidates this cache like every other
-        // fixture (MediaFixtures.docKey)
-        val docK = graft.multimodal.MediaFixtures.docKey(spark, sfDir)
-        val marker = new java.io.File(s"$dir/langid_parquet",
-          s"_graft_${contentKey}_$docK")
-        if (!marker.exists()) {
-          spark.read.parquet(s"$sfDir/documents.parquet")
-            .select(col("doc_id"))
-            .withColumn("text", element_at(typedLit(flat),
-              (expr(s"CAST(doc_id % ${Languages.length} AS INT)") * HoldoutK
-                + expr(s"CAST((doc_id DIV ${Languages.length}) % $HoldoutK AS INT)")
-                + 1)))
-            .write.mode("overwrite").parquet(s"$dir/langid_parquet")
-          marker.createNewFile()
-        }
-      }
-      dir
-    })
-
-  // ---------------------------------------------------------------------
-  // Exact brute-force top-5 reference fixture: the recall verdicts of
-  // similarity_lsh / similarity_ivf / similarity_ivfpq / quantize_embed
-  // all compare against the SAME deterministic exact search over
-  // embeddings. That reference answer is a derived artifact of the
-  // table (like the csv/json/media fixtures), not cost of the operator
-  // under test — so it is computed ONCE per scale dir through the real
-  // `similarity` stage, cached content-keyed in /tmp, and read back by
-  // each verdict harness. The APPROXIMATE side of every query stays
-  // fully timed. Content key covers count, id range and a per-row
-  // vector checksum: regenerated testdata invalidates the cache
-  // (CLAUDE.md fixture rule).
-  // ---------------------------------------------------------------------
-  private val exactDirs = TrieMap.empty[String, String]
-  private def exactTop5(s: SparkSession, sfDir: String): String =
-    exactDirs.getOrElseUpdate(sfDir, {
-      val out = s"/tmp/graft_exact5_${math.abs(sfDir.hashCode)}"
-      val r = s.read.parquet(s"$sfDir/embeddings.parquet")
-        .agg(count(lit(1)).as("n"),
-          min(col("vec_id").cast("long")).as("lo"),
-          max(col("vec_id").cast("long")).as("hi"),
-          sum(crc32(to_json(struct(col("embedding"))))).as("ck")).head()
-      val key = ((r.getLong(0) * 1000003L + r.getLong(1) * 31L +
-        r.getLong(2) * 7L) ^ r.getLong(3)) & Long.MaxValue
-      val marker = new java.io.File(out, s"_graft_$key")
-      if (!marker.exists()) {
-        Engine.runJson(ctx(s, sfDir), s"""{
-          "source": {"file": {"path": "$sfDir/embeddings.parquet"}},
-          "extractor": {"parquet": {}},
-          "transformers": [{"similarity": {"idField": "vec_id",
-            "field": "embedding", "k": 5}}],
-          "loader": {"memory": {}} }""")
-          .select("q_id", "n_id", "rank")
-          .write.mode("overwrite").parquet(out)
-        marker.createNewFile()
-      }
-      out
-    })
-
-  // ---------------------------------------------------------------------
-  // WARC fixture: a 16-file web-crawl archive (mixed .warc.gz / .warc)
-  // derived from documents — warcinfo + request + response records whose
-  // every field is doc_id arithmetic and whose response bodies wrap the
-  // document text in escaped HTML. The warc extractor must recover the
-  // facts from real ISO 28500 framing (Content-Length walks, multi-record
-  // gzip, HTTP payload splits); the oracle recomposes the arithmetic
-  // from the parquet. Content key covers the doc population AND a text
-  // checksum (regenerated testdata invalidates the cache, CLAUDE.md).
-  // ---------------------------------------------------------------------
-  private val WarcFixtureVersion = 1
-  private val warcDirs = TrieMap.empty[String, String]
-  private def warcFixture(s: SparkSession, sfDir: String): String =
-    warcDirs.getOrElseUpdate(sfDir, {
-      val out = s"/tmp/graft_warc_${math.abs(sfDir.hashCode)}"
-      val docK = graft.multimodal.MediaFixtures.docKey(s, sfDir)
-      val textCk = s.read.parquet(s"$sfDir/documents.parquet")
-        .agg(sum(crc32(col("text"))).as("ck")).head().getLong(0)
-      val marker = new java.io.File(out,
-        s"_graft_warcv${WarcFixtureVersion}_${docK}_$textCk")
-      if (!marker.exists()) {
-        new java.io.File(out).mkdirs()
-        // stale shards/markers from a previous doc population must not
-        // survive a regeneration (a shard that became empty would linger)
-        Option(new java.io.File(out).listFiles()).foreach(_.foreach(_.delete()))
-        val docs = s.read.parquet(s"$sfDir/documents.parquet")
-          .select(col("doc_id").cast("long"), col("text")).orderBy("doc_id")
-          .collect().map(r => (r.getLong(0), r.getString(1)))
-        val crlf = "\r\n"
-        def rec(headers: Seq[(String, String)], payload: Array[Byte]): Array[Byte] = {
-          val head = ("WARC/1.0" + crlf +
-            headers.map { case (k, v) => s"$k: $v$crlf" }.mkString +
-            s"Content-Length: ${payload.length}$crlf$crlf").getBytes("UTF-8")
-          head ++ payload ++ (crlf + crlf).getBytes("UTF-8")
-        }
-        def esc(t: String): String =
-          t.replace("&", "&amp;").replace("<", "&lt;").replace(">", "&gt;")
-        val epoch = java.time.Instant.parse("2024-01-01T00:00:00Z")
-        for (f <- 0 until 16) {
-          val mine = docs.filter(_._1 % 16 == f)
-          if (mine.nonEmpty) {
-            val bos = new java.io.ByteArrayOutputStream()
-            bos.write(rec(Seq(
-              "WARC-Type" -> "warcinfo",
-              "WARC-Record-ID" -> f"<urn:uuid:00000000-0000-0000-0001-${f}%012d>",
-              "WARC-Date" -> epoch.toString,
-              "Content-Type" -> "application/warc-fields"),
-              s"software: graft/13$crlf".getBytes("UTF-8")))
-            for ((id, text) <- mine) {
-              val uri = s"https://ex.com/doc/$id"
-              val date = epoch.plusSeconds(id).toString
-              if (id % 5 == 0)
-                bos.write(rec(Seq(
-                  "WARC-Type" -> "request",
-                  "WARC-Record-ID" -> f"<urn:uuid:00000000-0000-0000-0002-${id}%012d>",
-                  "WARC-Date" -> date,
-                  "WARC-Target-URI" -> uri,
-                  "Content-Type" -> "application/http; msgtype=request"),
-                  (s"GET /doc/$id HTTP/1.1$crlf" + s"Host: ex.com$crlf$crlf")
-                    .getBytes("UTF-8")))
-              val http =
-                if (id % 7 == 3)
-                  s"HTTP/1.1 404 Not Found$crlf" +
-                    s"Content-Type: text/plain$crlf$crlf" + s"not found $id"
-                else
-                  s"HTTP/1.1 200 OK$crlf" +
-                    s"Content-Type: text/html; charset=utf-8$crlf$crlf" +
-                    s"<html><body><h2>D$id</h2><p>${esc(text)}</p></body></html>"
-              bos.write(rec(Seq(
-                "WARC-Type" -> "response",
-                "WARC-Record-ID" -> f"<urn:uuid:00000000-0000-0000-0003-${id}%012d>",
-                "WARC-Date" -> date,
-                "WARC-Target-URI" -> uri,
-                "Content-Type" -> "application/http; msgtype=response"),
-                http.getBytes("UTF-8")))
-            }
-            // mixed layout: even shards gzipped (the production form),
-            // odd shards plain — both parser branches stay exercised
-            if (f % 2 == 0) {
-              val gz = new java.util.zip.GZIPOutputStream(
-                new java.io.FileOutputStream(f"$out/part-$f%02d.warc.gz"))
-              gz.write(bos.toByteArray); gz.close()
-            } else {
-              java.nio.file.Files.write(
-                java.nio.file.Paths.get(out, f"part-$f%02d.warc"),
-                bos.toByteArray)
-            }
-          }
-        }
-        marker.createNewFile()
-      }
-      out
-    })
-
-  // ---------------------------------------------------------------------
-  // PDF-in-WARC fixture: 8 shards (mixed .warc.gz / .warc) whose
-  // response bodies are the REAL PDF payloads of MediaFixtures.pdfPayload
-  // (every 3rd doc carries a text/html decoy the content-type routing
-  // must drop) — the warc_pdf composition's input. Same content-key
-  // discipline as the WARC fixture.
-  // ---------------------------------------------------------------------
-  private val PdfWarcFixtureVersion = 4 // v4: + xref-stream layout class (v3 /Info, v2 figures)
-  private val pdfWarcDirs = TrieMap.empty[String, String]
-  private def pdfWarcFixture(s: SparkSession, sfDir: String): String =
-    pdfWarcDirs.getOrElseUpdate(sfDir, {
-      val out = s"/tmp/graft_pdfwarc_${math.abs(sfDir.hashCode)}"
-      val docK = graft.multimodal.MediaFixtures.docKey(s, sfDir)
-      val marker = new java.io.File(out,
-        s"_graft_pdfwarcv${PdfWarcFixtureVersion}_$docK")
-      if (!marker.exists()) {
-        new java.io.File(out).mkdirs()
-        Option(new java.io.File(out).listFiles()).foreach(_.foreach(_.delete()))
-        val ids = s.read.parquet(s"$sfDir/documents.parquet")
-          .select(col("doc_id").cast("long")).orderBy("doc_id")
-          .collect().map(_.getLong(0))
-        val crlf = "\r\n"
-        def rec(headers: Seq[(String, String)], payload: Array[Byte]): Array[Byte] = {
-          val head = ("WARC/1.0" + crlf +
-            headers.map { case (k, v) => s"$k: $v$crlf" }.mkString +
-            s"Content-Length: ${payload.length}$crlf$crlf").getBytes("UTF-8")
-          head ++ payload ++ (crlf + crlf).getBytes("UTF-8")
-        }
-        val epoch = java.time.Instant.parse("2024-01-01T00:00:00Z")
-        for (f <- 0 until 8) {
-          val mine = ids.filter(_ % 8 == f)
-          if (mine.nonEmpty) {
-            val bos = new java.io.ByteArrayOutputStream()
-            for (id <- mine) {
-              val isPdf = id % 3 != 1 // every 3rd: an html decoy record
-              val (ct, body) =
-                if (isPdf) ("application/pdf",
-                  graft.multimodal.MediaFixtures.pdfPayload(id))
-                else ("text/html", s"<html><body>decoy $id</body></html>"
-                  .getBytes("UTF-8"))
-              val http = (s"HTTP/1.1 200 OK$crlf" +
-                s"Content-Type: $ct$crlf$crlf").getBytes("UTF-8") ++ body
-              bos.write(rec(Seq(
-                "WARC-Type" -> "response",
-                "WARC-Record-ID" -> f"<urn:uuid:00000000-0000-0000-0005-${id}%012d>",
-                "WARC-Date" -> epoch.plusSeconds(id).toString,
-                "WARC-Target-URI" -> s"https://ex.com/pdf/$id",
-                "Content-Type" -> "application/http; msgtype=response"),
-                http))
-            }
-            if (f % 2 == 0) {
-              val gz = new java.util.zip.GZIPOutputStream(
-                new java.io.FileOutputStream(f"$out/part-$f%02d.warc.gz"))
-              gz.write(bos.toByteArray); gz.close()
-            } else {
-              java.nio.file.Files.write(
-                java.nio.file.Paths.get(out, f"part-$f%02d.warc"),
-                bos.toByteArray)
-            }
-          }
-        }
-        marker.createNewFile()
-      }
-      out
-    })
-
-  // ---------------------------------------------------------------------
-  // ZIP fixture: 8 archives written with java.util.zip.ZipOutputStream —
-  // an INDEPENDENT writer, so the extractor's own EOCD/central-directory
-  // walk is checked against a second implementation of the format. One
-  // member per doc (`doc/<id>.txt`, body = the document text; stored for
-  // ids ≡ 0 mod 5, deflate otherwise) plus a directory entry the walk
-  // must skip. Same content-key discipline as the WARC fixture.
-  // ---------------------------------------------------------------------
-  private val ZipFixtureVersion = 1
-  private val zipDirs = TrieMap.empty[String, String]
-  private def zipFixture(s: SparkSession, sfDir: String): String =
-    zipDirs.getOrElseUpdate(sfDir, {
-      val out = s"/tmp/graft_zip_${math.abs(sfDir.hashCode)}"
-      val docK = graft.multimodal.MediaFixtures.docKey(s, sfDir)
-      val textCk = s.read.parquet(s"$sfDir/documents.parquet")
-        .agg(sum(crc32(col("text"))).as("ck")).head().getLong(0)
-      val marker = new java.io.File(out,
-        s"_graft_zipv${ZipFixtureVersion}_${docK}_$textCk")
-      if (!marker.exists()) {
-        new java.io.File(out).mkdirs()
-        Option(new java.io.File(out).listFiles()).foreach(_.foreach(_.delete()))
-        val docs = s.read.parquet(s"$sfDir/documents.parquet")
-          .select(col("doc_id").cast("long"), col("text")).orderBy("doc_id")
-          .collect().map(r => (r.getLong(0), r.getString(1)))
-        for (f <- 0 until 8) {
-          val mine = docs.filter(_._1 % 8 == f)
-          if (mine.nonEmpty) {
-            val zos = new java.util.zip.ZipOutputStream(
-              new java.io.FileOutputStream(f"$out/part-$f%02d.zip"))
-            val dirEnt = new java.util.zip.ZipEntry(s"dir$f/")
-            zos.putNextEntry(dirEnt); zos.closeEntry()
-            for ((id, text) <- mine) {
-              val body = text.getBytes("UTF-8")
-              val ent = new java.util.zip.ZipEntry(s"doc/$id.txt")
-              if (id % 5 == 0) { // STORED needs preset size+crc
-                ent.setMethod(java.util.zip.ZipEntry.STORED)
-                ent.setSize(body.length)
-                val c = new java.util.zip.CRC32(); c.update(body)
-                ent.setCrc(c.getValue)
-              }
-              zos.putNextEntry(ent); zos.write(body); zos.closeEntry()
-            }
-            zos.close()
-          }
-        }
-        marker.createNewFile()
-      }
-      out
-    })
-
-  // ---------------------------------------------------------------------
-  // TAR fixture: 8 ustar archives (graft.sources.Tar.archive builder —
-  // cross-checked against /usr/bin/tar in TarSpec), one member per doc
-  // (`doc/<id>.txt`, body = the document text, mtime = 1500000000 +
-  // doc_id) plus a directory entry the walk must skip. Odd shards are
-  // gzipped (`.tar.gz`) so the magic-detected gunzip path runs on real
-  // data. Same content-key discipline as the ZIP fixture.
-  // ---------------------------------------------------------------------
-  private val TarFixtureVersion = 1
-  private val tarDirs = TrieMap.empty[String, String]
-  private def tarFixture(s: SparkSession, sfDir: String): String =
-    tarDirs.getOrElseUpdate(sfDir, {
-      val out = s"/tmp/graft_tar_${math.abs(sfDir.hashCode)}"
-      val docK = graft.multimodal.MediaFixtures.docKey(s, sfDir)
-      val textCk = s.read.parquet(s"$sfDir/documents.parquet")
-        .agg(sum(crc32(col("text"))).as("ck")).head().getLong(0)
-      val marker = new java.io.File(out,
-        s"_graft_tarv${TarFixtureVersion}_${docK}_$textCk")
-      if (!marker.exists()) {
-        new java.io.File(out).mkdirs()
-        Option(new java.io.File(out).listFiles()).foreach(_.foreach(_.delete()))
-        val docs = s.read.parquet(s"$sfDir/documents.parquet")
-          .select(col("doc_id").cast("long"), col("text")).orderBy("doc_id")
-          .collect().map(r => (r.getLong(0), r.getString(1)))
-        for (f <- 0 until 8) {
-          val mine = docs.filter(_._1 % 8 == f)
-          if (mine.nonEmpty) {
-            val members = mine.toSeq.map { case (id, text) =>
-              (s"doc/$id.txt", 1500000000L + id, text.getBytes("UTF-8")) }
-            val bytes = graft.sources.Tar.archive(members, dirs = Seq(s"dir$f"))
-            val (name, payload) =
-              if (f % 2 == 1) (f"part-$f%02d.tar.gz", graft.sources.Tar.gzipBytes(bytes))
-              else (f"part-$f%02d.tar", bytes)
-            java.nio.file.Files.write(
-              java.nio.file.Paths.get(out, name), payload)
-          }
-        }
-        marker.createNewFile()
-      }
-      out
-    })
-
-  // ---------------------------------------------------------------------
-  // MBOX fixture: 8 RFC 4155 mail archives, one message per doc — four
-  // body classes by doc_id % 4 (plain + an mboxrd '>From '-quoted line,
-  // quoted-printable with a soft break, MIME base64, multipart/mixed
-  // whose text/plain part must win over the html part) and RFC 2047
-  // Q-encoded subjects on even ids. Ground truth is doc arithmetic.
-  // ---------------------------------------------------------------------
-  private val MboxFixtureVersion = 2
-  private val mboxDirs = TrieMap.empty[String, String]
-  private def mboxFixture(s: SparkSession, sfDir: String): String =
-    mboxDirs.getOrElseUpdate(sfDir, {
-      val out = s"/tmp/graft_mbox_${math.abs(sfDir.hashCode)}"
-      val docK = graft.multimodal.MediaFixtures.docKey(s, sfDir)
-      val textCk = s.read.parquet(s"$sfDir/documents.parquet")
-        .agg(sum(crc32(col("text"))).as("ck")).head().getLong(0)
-      val marker = new java.io.File(out,
-        s"_graft_mboxv${MboxFixtureVersion}_${docK}_$textCk")
-      if (!marker.exists()) {
-        new java.io.File(out).mkdirs()
-        Option(new java.io.File(out).listFiles()).foreach(_.foreach(_.delete()))
-        val docs = s.read.parquet(s"$sfDir/documents.parquet")
-          .select(col("doc_id").cast("long"), col("text")).orderBy("doc_id")
-          .collect().map(r => (r.getLong(0), r.getString(1)))
-        for (f <- 0 until 8) {
-          val mine = docs.filter(_._1 % 8 == f)
-          if (mine.nonEmpty) {
-            val sb = new StringBuilder
-            for ((id, text) <- mine) {
-              // the class-0 body splices raw corpus text UNQUOTED — a
-              // future corpus with newlines would need mboxrd quoting
-              // here AND in the oracle (the fixture-drift rule); fail
-              // by name instead of silently misframing messages
-              require(!text.contains('\n'), s"mbox fixture: doc $id text " +
-                "contains a newline — the corpus changed shape; add " +
-                "mboxrd '>From' quoting to this builder and mirror it " +
-                "in the mbox_extract oracle")
-              sb.append("From alice@example.com Thu Jan  1 00:00:00 2026\n")
-              sb.append(if (id % 2 == 0)
-                s"Subject: =?UTF-8?Q?Msg_caf=C3=A9_$id?=\n"
-              else s"Subject: Msg $id\n")
-              sb.append(s"From: User $id <user$id@example.com>\n")
-              sb.append("Date: Thu, 1 Jan 2026 00:00:00 +0000\n")
-              sb.append(s"Message-ID: <m$id@example.com>\n")
-              // reply chains of four: roots at id % 4 == 0, each other
-              // message replies to its predecessor (thread depth =
-              // id % 4 — the mail_threads composition's ground truth)
-              if (id % 4 != 0)
-                sb.append(s"In-Reply-To: <m${id - 1}@example.com>\n")
-              (id % 4) match {
-                case 0 =>
-                  sb.append("Content-Type: text/plain; charset=utf-8\n\n")
-                  sb.append(text).append("\n>From here on\n")
-                case 1 =>
-                  sb.append("Content-Type: text/plain; charset=utf-8\n")
-                  sb.append("Content-Transfer-Encoding: quoted-printable\n\n")
-                  sb.append(s"QP caf=C3=A9 bo=\ndy $id\n")
-                case 2 =>
-                  sb.append("Content-Type: text/plain; charset=utf-8\n")
-                  sb.append("Content-Transfer-Encoding: base64\n\n")
-                  sb.append(java.util.Base64.getMimeEncoder.encodeToString(
-                    s"B64 body $id é".getBytes("UTF-8"))).append("\n")
-                case _ =>
-                  sb.append(s"""Content-Type: multipart/mixed; boundary="b$id"""")
-                  sb.append("\n\n")
-                  sb.append(s"preamble\n--b$id\nContent-Type: text/html\n\n")
-                  sb.append(s"<p>html $id</p>\n--b$id\n")
-                  sb.append("Content-Type: text/plain; charset=utf-8\n\n")
-                  sb.append(s"MP plain $id\n--b$id--\n")
-              }
-            }
-            java.nio.file.Files.write(
-              java.nio.file.Paths.get(out, f"part-$f%02d.mbox"),
-              sb.toString.getBytes("UTF-8"))
-          }
-        }
-        marker.createNewFile()
-      }
-      out
-    })
-
-  // ---------------------------------------------------------------------
-  // EML fixture: one bare RFC 5322 message file per doc ≡ 1 mod 4 (no
-  // mbox envelope — the per-message export convention): RFC 2047
-  // B-encoded subject + quoted-printable body, both doc arithmetic.
-  // ---------------------------------------------------------------------
-  private val EmlFixtureVersion = 1
-  private val emlDirs = TrieMap.empty[String, String]
-  private def emlFixture(s: SparkSession, sfDir: String): String =
-    emlDirs.getOrElseUpdate(sfDir, {
-      val out = s"/tmp/graft_eml_${math.abs(sfDir.hashCode)}"
-      val docK = graft.multimodal.MediaFixtures.docKey(s, sfDir)
-      val marker = new java.io.File(out,
-        s"_graft_emlv${EmlFixtureVersion}_$docK")
-      if (!marker.exists()) {
-        new java.io.File(out).mkdirs()
-        Option(new java.io.File(out).listFiles()).foreach(_.foreach(_.delete()))
-        val ids = s.read.parquet(s"$sfDir/documents.parquet")
-          .select(col("doc_id").cast("long")).where(col("doc_id") % 4 === 1)
-          .orderBy("doc_id").collect().map(_.getLong(0))
-        for (id <- ids) {
-          val subj = java.util.Base64.getEncoder.encodeToString(
-            s"Eml café $id".getBytes("UTF-8"))
-          val body = s"Subject: =?UTF-8?B?$subj?=\n" +
-            s"Message-ID: <e$id@example.com>\n" +
-            "Content-Type: text/plain; charset=utf-8\n" +
-            "Content-Transfer-Encoding: quoted-printable\n\n" +
-            s"E=C3=A9 body $id"
-          java.nio.file.Files.write(
-            java.nio.file.Paths.get(out, s"m$id.eml"), body.getBytes("UTF-8"))
-        }
-        marker.createNewFile()
-      }
-      out
-    })
-
-  // ---------------------------------------------------------------------
-  // EPUB fixture: one real .epub per doc ≡ 0 mod 4 (java.util.zip
-  // writer) — a STORED `mimetype` member (the EPUB OCF signature rule)
-  // plus 1–2 deflated OEBPS/chN.xhtml chapters whose body text is pure
-  // doc_id arithmetic. The epub_extract composition (zip extractor →
-  // htmlextract) must recover it. Content-keyed on the doc population.
-  // ---------------------------------------------------------------------
-  private val EpubFixtureVersion = 1
-  private val epubDirs = TrieMap.empty[String, String]
-  private def epubFixture(s: SparkSession, sfDir: String): String =
-    epubDirs.getOrElseUpdate(sfDir, {
-      val out = s"/tmp/graft_epub_${math.abs(sfDir.hashCode)}"
-      val docK = graft.multimodal.MediaFixtures.docKey(s, sfDir)
-      val marker = new java.io.File(out,
-        s"_graft_epubv${EpubFixtureVersion}_$docK")
-      if (!marker.exists()) {
-        new java.io.File(out).mkdirs()
-        Option(new java.io.File(out).listFiles()).foreach(_.foreach(_.delete()))
-        val ids = s.read.parquet(s"$sfDir/documents.parquet")
-          .select(col("doc_id").cast("long")).where(col("doc_id") % 4 === 0)
-          .orderBy("doc_id").collect().map(_.getLong(0))
-        for (id <- ids) {
-          val zos = new java.util.zip.ZipOutputStream(
-            new java.io.FileOutputStream(s"$out/doc$id.epub"))
-          val mt = "application/epub+zip".getBytes("US-ASCII")
-          val ent = new java.util.zip.ZipEntry("mimetype")
-          ent.setMethod(java.util.zip.ZipEntry.STORED)
-          ent.setSize(mt.length)
-          val c = new java.util.zip.CRC32(); c.update(mt); ent.setCrc(c.getValue)
-          zos.putNextEntry(ent); zos.write(mt); zos.closeEntry()
-          val chapters = if (id % 8 == 0) 2 else 1
-          for (ch <- 1 to chapters) {
-            zos.putNextEntry(new java.util.zip.ZipEntry(s"OEBPS/ch$ch.xhtml"))
-            zos.write((s"<html><head><title>c$ch</title></head><body>" +
-              s"<h1>Ch $ch</h1><p>Body $ch of doc $id</p></body></html>")
-              .getBytes("UTF-8"))
-            zos.closeEntry()
-          }
-          zos.close()
-        }
-        marker.createNewFile()
-      }
-      out
-    })
-
-  // ---------------------------------------------------------------------
-  // ODT fixture: one real OpenDocument Text file per doc ≡ 2 mod 4
-  // (java.util.zip writer) — STORED `mimetype` first (the ODF OCF
-  // signature rule, same as EPUB) + a deflated content.xml whose
-  // text:p paragraphs carry doc arithmetic. odt_extract composes the
-  // zip extractor with htmlextract: the ODF tags strip like any
-  // markup, newlines between paragraphs collapse to single spaces.
-  // ---------------------------------------------------------------------
-  private val OdtFixtureVersion = 1
-  private val odtDirs = TrieMap.empty[String, String]
-  private def odtFixture(s: SparkSession, sfDir: String): String =
-    odtDirs.getOrElseUpdate(sfDir, {
-      val out = s"/tmp/graft_odt_${math.abs(sfDir.hashCode)}"
-      val docK = graft.multimodal.MediaFixtures.docKey(s, sfDir)
-      val marker = new java.io.File(out,
-        s"_graft_odtv${OdtFixtureVersion}_$docK")
-      if (!marker.exists()) {
-        new java.io.File(out).mkdirs()
-        Option(new java.io.File(out).listFiles()).foreach(_.foreach(_.delete()))
-        val ids = s.read.parquet(s"$sfDir/documents.parquet")
-          .select(col("doc_id").cast("long")).where(col("doc_id") % 4 === 2)
-          .orderBy("doc_id").collect().map(_.getLong(0))
-        for (id <- ids) {
-          val zos = new java.util.zip.ZipOutputStream(
-            new java.io.FileOutputStream(s"$out/doc$id.odt"))
-          val mt = "application/vnd.oasis.opendocument.text".getBytes("US-ASCII")
-          val ent = new java.util.zip.ZipEntry("mimetype")
-          ent.setMethod(java.util.zip.ZipEntry.STORED)
-          ent.setSize(mt.length)
-          val c = new java.util.zip.CRC32(); c.update(mt); ent.setCrc(c.getValue)
-          zos.putNextEntry(ent); zos.write(mt); zos.closeEntry()
-          zos.putNextEntry(new java.util.zip.ZipEntry("content.xml"))
-          zos.write((s"""<?xml version="1.0" encoding="UTF-8"?>""" +
-            "<office:document-content xmlns:office=\"urn:oasis:names:tc:opendocument:xmlns:office:1.0\">" +
-            "<office:body><office:text>" +
-            s"<text:h>Odt $id</text:h>\n" +
-            s"<text:p>First part of doc $id</text:p>\n" +
-            s"<text:p>Second part ${id % 6}</text:p>" +
-            "</office:text></office:body></office:document-content>")
-            .getBytes("UTF-8"))
-          zos.closeEntry()
-          zos.close()
-        }
-        marker.createNewFile()
-      }
-      out
-    })
-
-  // ---------------------------------------------------------------------
-  // Wikipedia-dump fixture: 8 shards (mixed .xml / .xml.gz) of
-  // <mediawiki><page>… records whose <text> carries the document text
-  // wrapped in real wikitext markup (templates, tables, refs, links,
-  // headings, bullets — each a plant the wikitext stage must strip).
-  // Same content-key discipline as the WARC fixture.
-  // ---------------------------------------------------------------------
-  private val WikiFixtureVersion = 1
-  private val wikiDirs = TrieMap.empty[String, String]
-  private def wikiFixture(s: SparkSession, sfDir: String): String =
-    wikiDirs.getOrElseUpdate(sfDir, {
-      val out = s"/tmp/graft_wiki_${math.abs(sfDir.hashCode)}"
-      val docK = graft.multimodal.MediaFixtures.docKey(s, sfDir)
-      val textCk = s.read.parquet(s"$sfDir/documents.parquet")
-        .agg(sum(crc32(col("text"))).as("ck")).head().getLong(0)
-      val marker = new java.io.File(out,
-        s"_graft_wikiv${WikiFixtureVersion}_${docK}_$textCk")
-      if (!marker.exists()) {
-        new java.io.File(out).mkdirs()
-        Option(new java.io.File(out).listFiles()).foreach(_.foreach(_.delete()))
-        val docs = s.read.parquet(s"$sfDir/documents.parquet")
-          .select(col("doc_id").cast("long"), col("text")).orderBy("doc_id")
-          .collect().map(r => (r.getLong(0), r.getString(1)))
-        def esc(t: String): String =
-          t.replace("&", "&amp;").replace("<", "&lt;").replace(">", "&gt;")
-        val epoch = java.time.Instant.parse("2024-01-01T00:00:00Z")
-        for (f <- 0 until 8) {
-          val mine = docs.filter(_._1 % 8 == f)
-          if (mine.nonEmpty) {
-            val sb = new StringBuilder
-            sb.append("<mediawiki xml:lang=\"en\">\n")
-            for ((id, text) <- mine) {
-              val wiki =
-                s"== Heading $id ==\n" +
-                s"'''Bold''' intro with a [[Main Link|label $id]] and [[Plain]].\n" +
-                s"{{Infobox|key=value|n=$id}}\n" +
-                "{| class=\"wikitable\"\n| cell\n|}\n" +
-                s"<ref name=\"r$id\">citation</ref>\n" +
-                s"[[File:Pic$id.png|thumb|A [[nested]] caption]]\n" +
-                s"[https://ex.com/$id ext label] and text follows.\n" +
-                "* bullet one\n" + text
-              sb.append("<page><title>Page ").append(id)
-                .append("</title><ns>0</ns><id>").append(id)
-                .append("</id><revision><id>").append(id * 7)
-                .append("</id><timestamp>").append(epoch.plusSeconds(id))
-                .append("</timestamp><text bytes=\"")
-                .append(wiki.getBytes("UTF-8").length).append("\">")
-                .append(esc(wiki)).append("</text></revision></page>\n")
-            }
-            sb.append("</mediawiki>\n")
-            val bytes = sb.toString.getBytes("UTF-8")
-            if (f % 2 == 0) {
-              val gz = new java.util.zip.GZIPOutputStream(
-                new java.io.FileOutputStream(f"$out/shard-$f%02d.xml.gz"))
-              gz.write(bytes); gz.close()
-            } else
-              java.nio.file.Files.write(
-                java.nio.file.Paths.get(out, f"shard-$f%02d.xml"), bytes)
-          }
-        }
-        marker.createNewFile()
-      }
-      out
-    })
-
   // in-memory Derby: the same real JDBC write/read path (DriverManager,
   // batched inserts, typed readback) without Derby's per-commit disk
   // sync — the roundtrip measures the engine's JDBC surface, not /tmp
@@ -832,15 +38,12 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("link_fk")(spark, "/root/testdata/sf0.001")
 
-  /** One-time derived-fixture generation for a scale dir (csv/json/gzip
-    * dumps of the parquet). Benchmarks call this in their UNTIMED warm-up
-    * so the first fixture-consuming query doesn't carry the generation
-    * cost in its number; queries themselves hit the memoized path. */
-  def warm(spark: SparkSession, sfDir: String): Unit = {
-    fixtures(spark, sfDir)
-    exactTop5(spark, sfDir)
-    ()
-  }
+  /** Builds every derived fixture of a scale dir ([[Fixtures.all]]).
+    * Benchmarks call this in their UNTIMED warm-up so no query carries
+    * a fixture's generation in its number; queries themselves hit the
+    * memoized path. */
+  def warm(spark: SparkSession, sfDir: String): Unit =
+    Fixtures.all.foreach(_(spark, sfDir))
 
   /** Deterministic recall-verdict frame for the approximate operators
     * whose raw outputs aren't SQL-expressible: `(metric, pass)` rows —
@@ -880,7 +83,7 @@ object SparkEntry {
     "file_row_count" -> { (s, dir) =>
       val c = ctx(s, dir); val fx = fixtures(s, dir)
       Engine.runJson(c, s"""{
-        "source": {"file": {"path": "$fx/nation_noheader.csv"}},
+        "source": {"file": {"path": "$fx/tables/nation_noheader.csv"}},
         "extractor": {"row": {}},
         "transformers": [{"command": {"command": "SELECT count(*) AS n_lines FROM input"}}],
         "loader": {"memory": {}} }""")
@@ -888,7 +91,7 @@ object SparkEntry {
     "csv_typed" -> { (s, dir) =>
       val c = ctx(s, dir); val fx = fixtures(s, dir)
       Engine.runJson(c, s"""{
-        "source": {"file": {"path": "$fx/nation.csv"}},
+        "source": {"file": {"path": "$fx/tables/nation.csv"}},
         "extractor": {"row": {}},
         "transformers": [{"csv": {"columns":
           ["n_nationkey:integer", "n_name:string", "n_regionkey:integer"]}}],
@@ -901,7 +104,7 @@ object SparkEntry {
       // (asserted in EngineSpec; the oracle checks the row semantics)
       val c = ctx(s, dir); val fx = fixtures(s, dir)
       Engine.runJson(c, s"""{
-        "source": {"file": {"path": "$fx/nation_dirty.csv"}},
+        "source": {"file": {"path": "$fx/tables/nation_dirty.csv"}},
         "extractor": {"row": {}},
         "transformers": [{"csv": {"errorStats": true, "columns":
           ["n_nationkey:integer", "n_name:string", "n_regionkey:integer"]}}],
@@ -917,10 +120,10 @@ object SparkEntry {
       // every-5th bad n_regionkey rows, error naming the field) plus a
       // clean-row count sentinel proving the main write excluded them.
       val c = ctx(s, dir); val fx = fixtures(s, dir)
-      val main = s"/tmp/graft_q_main_${math.abs(dir.hashCode)}"
-      val q = s"/tmp/graft_q_bad_${math.abs(dir.hashCode)}"
+      val main = scratch("q_main", dir)
+      val q = scratch("q_bad", dir)
       Engine.runJson(c, s"""{
-        "source": {"file": {"path": "$fx/nation_dirty.csv"}},
+        "source": {"file": {"path": "$fx/tables/nation_dirty.csv"}},
         "extractor": {"row": {}},
         "transformers": [{"csv": {"errorField": "__errors", "columns":
           ["n_nationkey:integer", "n_name:string", "n_regionkey:integer"]}}],
@@ -937,7 +140,7 @@ object SparkEntry {
     "file_gzip" -> { (s, dir) =>
       val c = ctx(s, dir); val fx = fixtures(s, dir)
       Engine.runJson(c, s"""{
-        "source": {"file": {"path": "$fx/nation.csv.gz"}},
+        "source": {"file": {"path": "$fx/tables/nation.csv.gz"}},
         "extractor": {"row": {}},
         "transformers": [{"csv": {"columns":
           ["n_nationkey:integer", "n_name:string", "n_regionkey:integer"]}}],
@@ -946,7 +149,7 @@ object SparkEntry {
     "csv_skiprange" -> { (s, dir) =>
       val c = ctx(s, dir); val fx = fixtures(s, dir)
       Engine.runJson(c, s"""{
-        "source": {"file": {"path": "$fx/nation_noheader.csv"}},
+        "source": {"file": {"path": "$fx/tables/nation_noheader.csv"}},
         "extractor": {"row": {}},
         "transformers": [{"csv": {"columnsOnFirstLine": false,
           "skipFrom": 0, "skipTo": 4, "columns":
@@ -957,7 +160,7 @@ object SparkEntry {
     "json_lines" -> { (s, dir) =>
       val c = ctx(s, dir); val fx = fixtures(s, dir)
       Engine.runJson(c, s"""{
-        "source": {"file": {"path": "$fx/orders_json"}},
+        "source": {"file": {"path": "$fx/tables/orders_json"}},
         "extractor": {"jsonl": {}},
         "loader": {"memory": {}} }""")
         .select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice")
@@ -966,7 +169,7 @@ object SparkEntry {
     "json_array" -> { (s, dir) =>
       val c = ctx(s, dir); val fx = fixtures(s, dir)
       Engine.runJson(c, s"""{
-        "source": {"file": {"path": "$fx/region_array.json"}},
+        "source": {"file": {"path": "$fx/tables/region_array.json"}},
         "extractor": {"json": {"multiLine": true}},
         "loader": {"memory": {}} }""")
         .select(col("r_regionkey").cast("int").as("r_regionkey"), col("r_name"))
@@ -1027,7 +230,7 @@ object SparkEntry {
       // parity — a single bounded Reader), so swapping System.in around
       // the build is safe.
       val bytes = java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(s"$fx/nation_noheader.csv"))
+        java.nio.file.Paths.get(s"$fx/tables/nation_noheader.csv"))
       val old = System.in
       System.setIn(new java.io.ByteArrayInputStream(bytes))
       try Engine.runJson(c, s"""{
@@ -2075,7 +1278,7 @@ object SparkEntry {
       val c = ctx(s, dir)
       // columnar-format breadth: part → ORC via the orc loader, read
       // back via the orc extractor
-      val out = s"/tmp/graft_orc_${math.abs(dir.hashCode)}"
+      val out = scratch("orc", dir)
       Engine.runJson(c, s"""{
         "source": {"file": {"path": "$dir/part.parquet"}},
         "extractor": {"parquet": {}},
@@ -2092,11 +1295,7 @@ object SparkEntry {
       // loader-level MERGE: base customer table, then a delta batch
       // (custkey%10==0 rows with +100 acctbal) upserted into the files;
       // the read-back must equal the merge transformer's oracle
-      val out = s"/tmp/graft_upsert_${math.abs(dir.hashCode)}"
-      def rmrf(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(rmrf); f.delete(); ()
-      }
-      rmrf(new java.io.File(out))
+      val out = scratch("upsert", dir)
       Engine.runJson(c, s"""{
         "source": {"file": {"path": "$dir/customer.parquet"}},
         "extractor": {"parquet": {}},
@@ -2118,11 +1317,7 @@ object SparkEntry {
       // partition-pruned MERGE: the hash-bucketed layout rewrites only
       // the buckets the delta touches (delta = custkey%10==0 rows with
       // +100 acctbal); read-back must equal the whole-table upsert
-      val out = s"/tmp/graft_upsert_bkt_${math.abs(dir.hashCode)}"
-      def rmrf(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(rmrf); f.delete(); ()
-      }
-      rmrf(new java.io.File(out))
+      val out = scratch("upsert_bkt", dir)
       Engine.runJson(c, s"""{
         "source": {"file": {"path": "$dir/customer.parquet"}},
         "extractor": {"parquet": {}},
@@ -2145,11 +1340,7 @@ object SparkEntry {
       // repartition scatters every nation's rows across tasks), then
       // compact rewrites each partition dir to ONE file behind the
       // upsert-style atomic swap — rows must survive byte-identically
-      val out = s"/tmp/graft_compact_${math.abs(dir.hashCode)}"
-      def rmrf(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(rmrf); f.delete(); ()
-      }
-      rmrf(new java.io.File(out))
+      val out = scratch("compact", dir)
       Engine.runJson(c, s"""{
         "source": {"file": {"path": "$dir/supplier.parquet"}},
         "extractor": {"parquet": {}},
@@ -2248,11 +1439,7 @@ object SparkEntry {
       // changes acctbal, %10==1 re-sends unchanged values → no-op), v3
       // delta (%20==0 changes segment). Final table carries every value
       // each key ever held with (valid_from, valid_to, is_current)
-      val out = s"/tmp/graft_scd2_${math.abs(dir.hashCode)}"
-      def rmrf(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(rmrf); f.delete(); ()
-      }
-      rmrf(new java.io.File(out))
+      val out = scratch("scd2", dir)
       def batch(selectSql: String, version: Int): Unit = {
         Engine.runJson(c, s"""{
           "source": {"file": {"path": "$dir/customer.parquet"}},
@@ -2369,7 +1556,7 @@ object SparkEntry {
       // reference's named clusters, OOrientDBLoader.java:153-177):
       // write supplier partitioned by nation, read one partition back —
       // partition pruning asserted in PlanSpec
-      val out = s"/tmp/graft_part_${math.abs(dir.hashCode)}"
+      val out = scratch("part", dir)
       Engine.runJson(c, s"""{
         "source": {"file": {"path": "$dir/supplier.parquet"}},
         "extractor": {"parquet": {}},
@@ -2597,7 +1784,7 @@ object SparkEntry {
       // is fetched driver-side at plan-build time (OHttpSource parity),
       // so the server can stop as soon as the pipeline is built
       val body = java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(s"$fx/nation.csv"))
+        java.nio.file.Paths.get(s"$fx/tables/nation.csv"))
       val server = com.sun.net.httpserver.HttpServer.create(
         new java.net.InetSocketAddress("127.0.0.1", 0), 0)
       server.createContext("/nation.csv",
@@ -2651,7 +1838,7 @@ object SparkEntry {
       // `orientdb` loader, plocal dbURL → parquet database directory with
       // declared-schema DDL checks (OOrientDBLoader.java:399-514 analogue);
       // round-trip read-back proves the writer executed
-      val db = s"/tmp/graft_odb_${math.abs(dir.hashCode)}"
+      val db = scratch("odb", dir)
       Engine.runJson(c, s"""{
         "source": {"file": {"path": "$dir/supplier.parquet"}},
         "extractor": {"parquet": {}},
@@ -2682,7 +1869,7 @@ object SparkEntry {
       // WARNING-policy link counts unresolved customers — then the
       // context's one-row counter frame. Every count is recomputable
       // by the oracle from the tables; elapsed_ms excluded (wall time)
-      val out = s"/tmp/graft_stats_${math.abs(dir.hashCode)}"
+      val out = scratch("stats", dir)
       Engine.runJson(c, s"""{
         "config": {"telemetry": true},
         "source": {"file": {"path": "$dir/orders.parquet"}},
@@ -3589,7 +2776,7 @@ object SparkEntry {
       // loader→extractor roundtrip: export typed columns (long, string,
       // double, boolean) as Object Container Files, read them back with
       // the avro extractor, match the source table exactly
-      val out = s"/tmp/graft_avro_out_${math.abs(dir.hashCode)}"
+      val out = scratch("avro_out", dir)
       Engine.runJson(c, s"""{
         "source": {"file": {"path": "$dir/customer.parquet"}},
         "extractor": {"parquet": {}},
@@ -3731,7 +2918,7 @@ object SparkEntry {
       // primitives widened (int→long, float→double), nullable union
       // unwrapped, array/record fields as their canonical JSON rendering
       Engine.runJson(c, s"""{
-        "source": {"file": {"path": "$fx/nation.avro"}},
+        "source": {"file": {"path": "$fx/tables/nation.avro"}},
         "extractor": {"avro": {}},
         "loader": {"memory": {}} }""")
         .orderBy("n_nationkey")
@@ -5076,7 +4263,7 @@ object SparkEntry {
       // loader→extractor roundtrip across TWO implementations: the
       // java.util.zip writer produces the shards, our own
       // central-directory walk (CRC-verified) reads them back
-      val out = s"/tmp/graft_zip_out_${math.abs(dir.hashCode)}"
+      val out = scratch("zip_out", dir)
       Engine.runJson(c, s"""{
         "source": {"file": {"path": "$dir/documents.parquet"}},
         "extractor": {"parquet": {}},
@@ -5097,7 +4284,7 @@ object SparkEntry {
       // export documents as gzipped ustar shards (rolling per
       // partition, executor-side), read them back with the tar
       // extractor — member/size/mtime/body must match the source
-      val out = s"/tmp/graft_tar_out_${math.abs(dir.hashCode)}"
+      val out = scratch("tar_out", dir)
       Engine.runJson(c, s"""{
         "source": {"file": {"path": "$dir/documents.parquet"}},
         "extractor": {"parquet": {}},
@@ -5188,7 +4375,7 @@ object SparkEntry {
       // <id>.cls label — the image/caption/label pairing of multimodal
       // training shards); the tar extractor explodes members, one
       // hash-agg regroups one row per SAMPLE with typed fields
-      val out = s"/tmp/graft_wds_out_${math.abs(dir.hashCode)}"
+      val out = scratch("wds_out", dir)
       Engine.runJson(c, s"""{
         "source": {"file": {"path": "$dir/documents.parquet"}},
         "extractor": {"parquet": {}},
@@ -5735,7 +4922,7 @@ object SparkEntry {
       val c = ctx(s, dir)
       // CSV EXPORT loader → fused file+row+csv scan back in; quoting /
       // header round-trip through the reference's option names
-      val out = s"/tmp/graft_csvout_${math.abs(dir.hashCode)}"
+      val out = scratch("csvout", dir)
       Engine.runJson(c, s"""{
         "source": {"file": {"path": "$dir/nation.parquet"}},
         "extractor": {"parquet": {}},
@@ -5751,7 +4938,7 @@ object SparkEntry {
     },
     "jsonl_write_roundtrip" -> { (s, dir) =>
       val c = ctx(s, dir)
-      val out = s"/tmp/graft_jsonout_${math.abs(dir.hashCode)}"
+      val out = scratch("jsonout", dir)
       Engine.runJson(c, s"""{
         "source": {"file": {"path": "$dir/region.parquet"}},
         "extractor": {"parquet": {}},
@@ -6476,7 +5663,7 @@ object SparkEntry {
       // fixed-width layout recovery from real padded text: typed longs,
       // a trimmed string, a blank-cell → null column, an exact double
       Engine.runJson(c, s"""{
-        "source": {"file": {"path": "$fx/nation.fw"}},
+        "source": {"file": {"path": "$fx/tables/nation.fw"}},
         "extractor": {"fixedwidth": {"columns": [
           "n_nationkey:1:4:long", "n_name:5:16",
           "n_regionkey:21:2:long", "price:23:8:double"]}},

@@ -1,7 +1,7 @@
 package graft.multimodal
 
 import java.awt.image.BufferedImage
-import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Deterministic real-image fixture generation for the multimodal
@@ -102,17 +102,12 @@ object MediaFixtures {
     case _ => ImageCodec.encodeGif(Seq.fill(gifFrames(id))(frame(id)))
   }
 
-  /** The fixture frame: (media_id, media_type, payload), one row per
-    * document id, encoded executor-side. */
+  /** The image fixture frame: (media_id, media_type, payload), one row
+    * per document id, encoded executor-side. */
   def frame(spark: SparkSession, sfDir: String): DataFrame = {
-    val enc = Encoders.tuple(Encoders.scalaLong, Encoders.STRING, Encoders.BINARY)
-    spark.read.parquet(s"$sfDir/documents.parquet")
-      .select(col("doc_id").cast("long"))
-      .as(Encoders.scalaLong)
-      .repartition(FixtureFiles) // parallel generation AND a multi-file
-                                 // layout, so decode stages scan in parallel
-      .mapPartitions(it => it.map(id => (id, mediaType(id), payload(id))))(enc)
-      .toDF("media_id", "media_type", "payload")
+    val mt = udf((id: Long) => mediaType(id))
+    graft.Fixtures.payloadFrame(spark, sfDir)(payload)
+      .select(col("media_id"), mt(col("media_id")).as("media_type"), col("payload"))
   }
 
   // ---- audio fixture: real WAV payloads, metadata = doc_id arithmetic
@@ -137,27 +132,6 @@ object MediaFixtures {
       i += 1
     }
     AudioCodec.encodeWav(pcm, audioRate(id), ch)
-  }
-
-  /** The audio fixture frame: (media_id, payload), one WAV per doc. */
-  def audioFrame(spark: SparkSession, sfDir: String): DataFrame = {
-    val enc = Encoders.tuple(Encoders.scalaLong, Encoders.BINARY)
-    spark.read.parquet(s"$sfDir/documents.parquet")
-      .select(col("doc_id").cast("long"))
-      .as(Encoders.scalaLong)
-      .repartition(FixtureFiles) // parallel generation AND a multi-file
-                                 // layout, so decode stages scan in parallel
-      .mapPartitions(it => it.map(id => (id, audioPayload(id))))(enc)
-      .toDF("media_id", "payload")
-  }
-
-  def ensureAudio(spark: SparkSession, sfDir: String, outPath: String): String = {
-    val marker = new java.io.File(outPath, markerName(spark, sfDir))
-    if (!marker.exists()) {
-      audioFrame(spark, sfDir).write.mode("overwrite").parquet(outPath)
-      marker.createNewFile()
-    }
-    outPath
   }
 
   // ---- compressed-audio fixture: structurally-REAL MP3 / ADTS-AAC
@@ -287,29 +261,6 @@ object MediaFixtures {
   def compressedAudioPayload(id: Long): Array[Byte] =
     if (caIsAdts(id)) adtsPayload(id) else mp3Payload(id)
 
-  /** The compressed-audio fixture frame: (media_id, payload) — 3 of 4
-    * ids MP3, 1 of 4 ADTS. */
-  def compressedAudioFrame(spark: SparkSession, sfDir: String): DataFrame = {
-    val enc = Encoders.tuple(Encoders.scalaLong, Encoders.BINARY)
-    spark.read.parquet(s"$sfDir/documents.parquet")
-      .select(col("doc_id").cast("long"))
-      .as(Encoders.scalaLong)
-      .repartition(FixtureFiles) // parallel generation AND a multi-file
-                                 // layout, so decode stages scan in parallel
-      .mapPartitions(it => it.map(id => (id, compressedAudioPayload(id))))(enc)
-      .toDF("media_id", "payload")
-  }
-
-  def ensureCompressedAudio(spark: SparkSession, sfDir: String,
-                            outPath: String): String = {
-    val marker = new java.io.File(outPath, markerName(spark, sfDir))
-    if (!marker.exists()) {
-      compressedAudioFrame(spark, sfDir).write.mode("overwrite").parquet(outPath)
-      marker.createNewFile()
-    }
-    outPath
-  }
-
   // ---- video fixture: real MP4 container bytes, metadata = doc_id
   // arithmetic (the FIXTURES.md protocol: the oracle recomputes the
   // arithmetic, the engine must recover it by parsing the boxes)
@@ -357,27 +308,6 @@ object MediaFixtures {
       VideoTimescale, videoDuration(id), seed = id, v1Headers = id % 4 == 3,
       chunkSizes = videoChunkSizes(id), interChunkGap = videoChunkGap(id))
 
-  /** The video fixture frame: (media_id, payload), one MP4 per doc. */
-  def videoFrame(spark: SparkSession, sfDir: String): DataFrame = {
-    val enc = Encoders.tuple(Encoders.scalaLong, Encoders.BINARY)
-    spark.read.parquet(s"$sfDir/documents.parquet")
-      .select(col("doc_id").cast("long"))
-      .as(Encoders.scalaLong)
-      .repartition(FixtureFiles) // parallel generation AND a multi-file
-                                 // layout, so decode stages scan in parallel
-      .mapPartitions(it => it.map(id => (id, videoPayload(id))))(enc)
-      .toDF("media_id", "payload")
-  }
-
-  def ensureVideo(spark: SparkSession, sfDir: String, outPath: String): String = {
-    val marker = new java.io.File(outPath, markerName(spark, sfDir))
-    if (!marker.exists()) {
-      videoFrame(spark, sfDir).write.mode("overwrite").parquet(outPath)
-      marker.createNewFile()
-    }
-    outPath
-  }
-
   // ---- MJPEG fixture: MP4 containers whose mdat carries REAL JPEG
   // frames; per-frame dimensions and brightness are (doc_id, frame_idx)
   // arithmetic, so the oracle recomputes the arithmetic while the
@@ -404,28 +334,6 @@ object MediaFixtures {
     }
     VideoCodec.encodeMjpeg(mjpegWidth(id, 0), mjpegHeight(id, 0), frames,
       VideoTimescale, mjpegFrames(id) * 60L, v1Headers = id % 4 == 3)
-  }
-
-  def mjpegFrame(spark: SparkSession, sfDir: String): DataFrame = {
-    val enc = Encoders.tuple(Encoders.scalaLong, Encoders.BINARY)
-    spark.read.parquet(s"$sfDir/documents.parquet")
-      .select(col("doc_id").cast("long"))
-      .as(Encoders.scalaLong)
-      .repartition(FixtureFiles) // parallel generation AND a multi-file
-                                 // layout, so decode stages scan in parallel
-      .mapPartitions(it => it.map(id => (id, mjpegPayload(id))))(enc)
-      .toDF("media_id", "payload")
-  }
-
-  def ensureMjpeg(spark: SparkSession, sfDir: String, outPath: String): String = {
-    // _v1 content key: bump when the generation arithmetic changes
-    // (the CLAUDE.md stale-fixture rule)
-    val marker = new java.io.File(outPath, markerName(spark, sfDir) + "_v1")
-    if (!marker.exists()) {
-      mjpegFrame(spark, sfDir).write.mode("overwrite").parquet(outPath)
-      marker.createNewFile()
-    }
-    outPath
   }
 
   // ---- perceptual-hash fixture: 64×64 grayscale PNGs whose 8×8 block
@@ -475,58 +383,11 @@ object MediaFixtures {
     ImageCodec.encode(img, "png")
   }
 
-  /** The phash fixture frame: (media_id, payload), one PNG per doc. */
-  def phashFrame(spark: SparkSession, sfDir: String): DataFrame = {
-    val enc = Encoders.tuple(Encoders.scalaLong, Encoders.BINARY)
-    spark.read.parquet(s"$sfDir/documents.parquet")
-      .select(col("doc_id").cast("long"))
-      .as(Encoders.scalaLong)
-      .repartition(FixtureFiles) // parallel generation AND a multi-file
-                                 // layout, so decode stages scan in parallel
-      .mapPartitions(it => it.map(id => (id, phashPayload(id))))(enc)
-      .toDF("media_id", "payload")
-  }
-
-  def ensurePhash(spark: SparkSession, sfDir: String, outPath: String): String = {
-    val marker = new java.io.File(outPath, markerName(spark, sfDir))
-    if (!marker.exists()) {
-      phashFrame(spark, sfDir).write.mode("overwrite").parquet(outPath)
-      marker.createNewFile()
-    }
-    outPath
-  }
-
   /** Bump when the format plan / dimension arithmetic above changes —
-    * the on-disk cache marker is keyed on it, so an edit here can never
-    * leave a stale /tmp fixture disagreeing with the oracle. */
-  /** Fixture parquet file count: small single-row-group files scan one
-    * task per FILE (Spark packs them ~one per openCost bin), so a
-    * multi-file layout is what lets the decode stages' mapPartitions
-    * run in parallel locally — exactly the shape a real media corpus
-    * has. Also parallelizes fixture GENERATION. */
-  val FixtureFiles = 16
-
-  // v3: multi-file fixture layout (FixtureFiles) — bump regenerates
-  // every cached /tmp fixture
+    * every payload fixture's cache marker is keyed on it, so an edit
+    * here can never leave a stale /tmp fixture disagreeing with the
+    * oracle (v3 was the multi-file layout). */
   val Version = 7 // v7: ID3v2.2 + unsynchronised-v2.3 tag classes (+v6 ID3 text frames, v5 multi-chunk stsc video)
-
-  /** Content key of the doc_id population every fixture derives from:
-    * the driver REGENERATES testdata between rounds without notice
-    * (CLAUDE.md, round-8 lesson) — a count or id-range drift must
-    * invalidate the /tmp caches exactly like an arithmetic edit does,
-    * or the fixtures silently disagree with oracles recomputed over
-    * the NEW documents table. One tiny aggregate per (sfDir, JVM). */
-  private val docKeys = scala.collection.concurrent.TrieMap.empty[String, Long]
-  def docKey(spark: SparkSession, sfDir: String): Long =
-    docKeys.getOrElseUpdate(sfDir, {
-      val r = spark.read.parquet(s"$sfDir/documents.parquet")
-        .agg(count(lit(1)).as("n"),
-          min(col("doc_id").cast("long")).as("lo"),
-          max(col("doc_id").cast("long")).as("hi")).head()
-      r.getLong(0) * 1000003L + r.getLong(1) * 31L + r.getLong(2)
-    })
-  private def markerName(spark: SparkSession, sfDir: String): String =
-    s"_graft_v${Version}_${docKey(spark, sfDir)}"
 
   // ---- PDF fixture: REAL spec-conformant PDF bytes (xref table,
   // page tree, Flate/raw content streams) whose per-page text is pure
@@ -578,23 +439,6 @@ object MediaFixtures {
     * stays unchanged while the parser exercises both xref families. */
   def pdfIs15(id: Long): Boolean = id % 5 == 3
 
-  def ensurePdf(spark: SparkSession, sfDir: String, outPath: String): String = {
-    // _pdf4: + xref-stream/ObjStm layout class (v3 /Info, v2 figures)
-    val marker = new java.io.File(outPath, markerName(spark, sfDir) + "_pdf4")
-    if (!marker.exists()) {
-      val enc = Encoders.tuple(Encoders.scalaLong, Encoders.BINARY)
-      spark.read.parquet(s"$sfDir/documents.parquet")
-        .select(col("doc_id").cast("long"))
-        .as(Encoders.scalaLong)
-        .repartition(FixtureFiles)
-        .mapPartitions(_.map(id => (id, pdfPayload(id))))(enc)
-        .toDF("media_id", "payload")
-        .write.mode("overwrite").parquet(outPath)
-      marker.createNewFile()
-    }
-    outPath
-  }
-
   // ---- DOCX fixture: REAL ZIP+WordprocessingML bytes (independent
   // writer: java.util.zip + hand-built ECMA-376 XML) whose paragraph
   // text is pure doc_id arithmetic — para 1 exercises XML entities,
@@ -618,75 +462,43 @@ object MediaFixtures {
       (if (id % 3 >= 2) Seq(p3) else Nil)
   }
 
-  def ensureRtf(spark: SparkSession, sfDir: String, outPath: String): String = {
-    val marker = new java.io.File(outPath, markerName(spark, sfDir) + "_rtf1")
-    if (!marker.exists()) {
-      val enc = Encoders.tuple(Encoders.scalaLong, Encoders.BINARY)
-      spark.read.parquet(s"$sfDir/documents.parquet")
-        .select(col("doc_id").cast("long"))
-        .as(Encoders.scalaLong)
-        .repartition(FixtureFiles)
-        .mapPartitions(_.map(id => (id, RtfCodec.encodeRtf(rtfParas(id)))))(enc)
-        .toDF("media_id", "payload")
-        .write.mode("overwrite").parquet(outPath)
-      marker.createNewFile()
-    }
-    outPath
-  }
-
-  def ensureDocx(spark: SparkSession, sfDir: String, outPath: String): String = {
-    val marker = new java.io.File(outPath, markerName(spark, sfDir) + "_docx1")
-    if (!marker.exists()) {
-      val enc = Encoders.tuple(Encoders.scalaLong, Encoders.BINARY)
-      spark.read.parquet(s"$sfDir/documents.parquet")
-        .select(col("doc_id").cast("long"))
-        .as(Encoders.scalaLong)
-        .repartition(FixtureFiles)
-        .mapPartitions(_.map(id => (id, docxPayload(id))))(enc)
-        .toDF("media_id", "payload")
-        .write.mode("overwrite").parquet(outPath)
-      marker.createNewFile()
-    }
-    outPath
-  }
-
-  /** PNG-with-textual-chunks fixture (mm_meta's input): every doc gets
+  /** PNG-with-textual-chunks payload (mm_meta's input): every doc gets
     * a PNG; ids with `id % 9 != 4` carry three planted entries — a
     * tEXt `author`, a zTXt `rank` (deflate path) and an iTXt `note`
     * (utf8 path) — all pure doc_id arithmetic for the oracle. */
-  def ensureMetaPng(spark: SparkSession, sfDir: String, outPath: String): String = {
-    val marker = new java.io.File(outPath, markerName(spark, sfDir) + "_meta1")
-    if (!marker.exists()) {
-      val enc = Encoders.tuple(Encoders.scalaLong, Encoders.BINARY)
-      spark.read.parquet(s"$sfDir/documents.parquet")
-        .select(col("doc_id").cast("long"))
-        .as(Encoders.scalaLong)
-        .repartition(FixtureFiles)
-        .mapPartitions(_.map { id =>
-          val png = ImageCodec.encode(frame(id), "png")
-          val out =
-            if (id % 9 == 4) png // no textual chunks at all
-            else ImageCodec.addPngText(png, Seq(
-              ("text", "author", s"user${id % 50}"),
-              ("ztxt", "rank", s"${id * 7 % 1000}"),
-              ("itxt", "note", s"n$id")))
-          (id, out)
-        })(enc)
-        .toDF("media_id", "payload")
-        .write.mode("overwrite").parquet(outPath)
-      marker.createNewFile()
-    }
-    outPath
+  def metaPngPayload(id: Long): Array[Byte] = {
+    val png = ImageCodec.encode(frame(id), "png")
+    if (id % 9 == 4) png // no textual chunks at all
+    else ImageCodec.addPngText(png, Seq(
+      ("text", "author", s"user${id % 50}"),
+      ("ztxt", "rank", s"${id * 7 % 1000}"),
+      ("itxt", "note", s"n$id")))
   }
 
-  /** Write the fixture parquet once per (sfDir, outPath, Version);
-    * idempotent. */
-  def ensure(spark: SparkSession, sfDir: String, outPath: String): String = {
-    val marker = new java.io.File(outPath, markerName(spark, sfDir))
-    if (!marker.exists()) {
-      frame(spark, sfDir).write.mode("overwrite").parquet(outPath)
-      marker.createNewFile()
-    }
-    outPath
-  }
+  /** The per-doc payload fixtures under the fixtures dir besides the
+    * images: (dir name, marker tag, payload). A tag is [[Version]] plus
+    * the fixture's own revision; bump it when that payload changes. */
+  val payloadFixtures: Seq[(String, String, Long => Array[Byte])] = Seq(
+    // real WAV payloads for the audio metadata decode
+    ("audio_parquet", s"v$Version", audioPayload),
+    // real MP4 container bytes for the pure-byte box-parse decode
+    ("video_parquet", s"v$Version", videoPayload),
+    // MP4 containers carrying REAL JPEG frames (MJPEG layout) for the
+    // per-frame pixel decode
+    ("mjpeg_parquet", s"v${Version}_v1", mjpegPayload),
+    // structurally-real MP3/ADTS frame sequences for the compressed-
+    // audio frame-header walk (metadata = doc_id arithmetic)
+    ("ca_parquet", s"v$Version", compressedAudioPayload),
+    // block-pattern PNGs whose average-hash is planted doc_id
+    // arithmetic (the image near-dup query's input)
+    ("phash_parquet", s"v$Version", phashPayload),
+    ("metapng_parquet", s"v${Version}_meta1", metaPngPayload),
+    // REAL PDF bytes whose per-page text is doc_id arithmetic —
+    // pdfextract's input (pdf4: + xref-stream/ObjStm layout class, v3
+    // /Info, v2 figures)
+    ("pdf_parquet", s"v${Version}_pdf4", pdfPayload),
+    // REAL DOCX bytes (ZIP + WordprocessingML) — docxextract's input
+    ("docx_parquet", s"v${Version}_docx1", docxPayload),
+    // REAL RTF bytes (control words, escapes, dropped destinations)
+    ("rtf_parquet", s"v${Version}_rtf1", id => RtfCodec.encodeRtf(rtfParas(id))))
 }

@@ -1,5 +1,6 @@
 package graft.tools
 
+import graft.Fixtures
 import graft.engine.{Engine, EtlContext}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -18,8 +19,9 @@ import org.apache.spark.sql.functions._
   * factor 1). The factor-100 leg also asserts the similarity density
   * guard fails fast on an under-bucketed config — do not trim it.
   *
-  * Fixture caches are content-keyed (`_graft_v<N>` marker per the
-  * CLAUDE.md rule). Each op is timed twice per scale and the MIN kept —
+  * Every fixture is built through `graft.Fixtures.cached`, keyed on the
+  * generator [[Version]] and its row count. Each op is timed twice per
+  * scale and the MIN kept —
   * this box shows ambient CPU steal (BASELINE.md), and best-observed ≈
   * plan cost is the established measurement protocol.
   */
@@ -30,210 +32,135 @@ object ScaleStress {
   private val Version = 2
   private val Dim = 64
 
-  /** Deterministic synthetic corpus: Zipf-ish token stream (log-uniform
-    * rank over a 10k vocab), 1% planted near-dup partners (id%100==1
+  /** The `name` fixture dir of a factor; its key is [[Version]] and size. */
+  private def stressDir(name: String, factor: Int): String =
+    s"${Fixtures.dir("stress", s"f$factor")}/$name"
+
+  private def stressParquet(name: String, factor: Int, n: Long)(df: => DataFrame): String =
+    Fixtures.parquet(stressDir(name, factor), s"v${Version}_$n")(df)
+
+  /** 64 shard files written executor-side (one task per shard — the
+    * generation parallelizes like the read); shard `f` holds the ids
+    * ≡ f mod 64 below `n`. */
+  private def stressShards(spark: SparkSession, name: String, factor: Int, n: Long)(
+      write: (String, Long, Seq[Long]) => Unit): String = {
+    val dir = stressDir(name, factor)
+    Fixtures.cached(dir, s"v${Version}_$n")(
+      Fixtures.shards(spark, 64)(f => write(dir, f, f until n by 64)))
+  }
+
+  /** Deterministic synthetic corpus: the Zipf-ish word stream
+    * ([[Fixtures.words]]), 1% planted near-dup partners (id%100==1
     * copies id-1's text with a short suffix), 20% hot domain. */
-  private def ensureDocs(spark: SparkSession, n: Long, dir: String): String = {
-    val marker = new java.io.File(dir, s"_graft_v${Version}_$n")
-    if (!marker.exists()) {
-      import org.apache.spark.sql.Encoders
-      val enc = Encoders.tuple(Encoders.scalaLong, Encoders.STRING, Encoders.STRING)
-      spark.range(n).select(col("id")).as(Encoders.scalaLong)
+  private def ensureDocs(spark: SparkSession, factor: Int): String = {
+    val n = 5000L * factor // sf0.1-equivalent docs × factor
+    stressParquet("docs", factor, n) {
+      import spark.implicits._
+      spark.range(n).select(col("id")).as[Long]
         .mapPartitions(_.map { id =>
           val base = if (id % 100 == 1) id - 1 else id // planted partner
-          val r = new scala.util.Random(base * 2654435761L)
-          val len = 40 + (math.abs(base * 31) % 160).toInt
-          val sb = new StringBuilder
-          var i = 0
-          while (i < len) {
-            // log-uniform rank ≈ zipf(1): realistic bucket-size skew
-            val rank = math.min(9999, math.exp(r.nextDouble() * math.log(10000.0)).toInt)
-            sb.append('w').append(rank).append(' ')
-            i += 1
-          }
-          if (id % 100 == 1) sb.append("tail").append(id) // near- not exact-dup
+          val tail = if (id % 100 == 1) s"tail$id" else "" // near- not exact-dup
           val domain =
             if (id % 5 == 0) "hot.example.com"
             else s"site${math.abs(id * 131) % 1000}.example.com"
-          (id, sb.toString, domain)
-        })(enc)
+          (id, Fixtures.words(base) + tail, domain)
+        })
         .toDF("doc_id", "text", "domain")
-        .write.mode("overwrite").parquet(dir)
-      marker.createNewFile()
     }
-    dir
   }
 
   /** REAL PDF payloads ∝ N (MediaFixtures.pdfPayload — xref table, page
     * tree, Flate/raw content streams; 1–4 pages each): the pdf_extract
     * leg's input. Per-row byte parsing must track linear in total
     * payload bytes. */
-  private def ensurePdfParquet(spark: SparkSession, n: Long, dir: String): String = {
-    val marker = new java.io.File(dir, s"_graft_v${Version}_$n")
-    if (!marker.exists()) {
+  private def ensurePdfParquet(spark: SparkSession, factor: Int): String = {
+    val n = 5000L * factor
+    stressParquet("pdf", factor, n) {
       import spark.implicits._
       spark.range(n).select(col("id")).as[Long]
         .repartition(spark.sparkContext.defaultParallelism)
         .mapPartitions(_.map(id =>
           (id, graft.multimodal.MediaFixtures.pdfPayload(id))))
         .toDF("media_id", "payload")
-        .write.mode("overwrite").parquet(dir)
-      marker.createNewFile()
     }
-    dir
   }
 
   /** LaTeX-wrapped documents ∝ N (the latexstrip leg's input) — built
     * with the Spark API so the TeX backslashes pass through ONE
-    * escaping layer (a JSON-SQL wrap would eat them twice, CLAUDE.md). */
-  private def ensureLatexDocs(spark: SparkSession, n: Long, dir: String): String = {
-    val marker = new java.io.File(dir, s"_graft_v${Version}_$n")
-    if (!marker.exists()) {
-      val docs = ensureDocs(spark, n, s"/tmp/graft_stress_docs_f${n / 5000}")
-      spark.read.parquet(docs)
+    * escaping layer (a JSON-SQL wrap would eat them twice). */
+  private def ensureLatexDocs(spark: SparkSession, factor: Int): String =
+    stressParquet("latex", factor, 5000L * factor) {
+      spark.read.parquet(ensureDocs(spark, factor))
         .select(col("doc_id"), concat(
           lit("\\documentclass{article} % c\n\\begin{document}\n\\section{S"),
           col("doc_id").cast("string"),
           lit("}\nBody: "), col("text"),
           lit(" \\cite{x} $a+b$ \\textbf{end}\n\\end{document}\n")).as("tex"))
-        .write.mode("overwrite").parquet(dir)
-      marker.createNewFile()
     }
-    dir
-  }
 
-  private def ensureMarkdownDocs(spark: SparkSession, n: Long, dir: String): String = {
-    val marker = new java.io.File(dir, s"_graft_v${Version}_$n")
-    if (!marker.exists()) {
-      val docs = ensureDocs(spark, n, s"/tmp/graft_stress_docs_f${n / 5000}")
-      spark.read.parquet(docs)
+  private def ensureMarkdownDocs(spark: SparkSession, factor: Int): String =
+    stressParquet("md", factor, 5000L * factor) {
+      spark.read.parquet(ensureDocs(spark, factor))
         .select(col("doc_id"), concat(
           lit("# Doc "), col("doc_id").cast("string"),
           lit("\n\n- item *em* `code`\n> quote\n\nBody: [link](http://e.com/x) "),
           col("text"), lit("\n---\n")).as("md"))
-        .write.mode("overwrite").parquet(dir)
-      marker.createNewFile()
     }
-    dir
-  }
 
-  /** 64 .tar.gz shards, members ∝ N (the ensureWarc shape) — built
-    * executor-side with the Tar builder; bodies are the word streams. */
-  private def ensureTar(spark: SparkSession, n: Long, dir: String): String = {
-    val marker = new java.io.File(dir, s"_graft_v${Version}_$n")
-    if (!marker.exists()) {
-      new java.io.File(dir).mkdirs()
-      Option(new java.io.File(dir).listFiles()).foreach(_.foreach(_.delete()))
-      val shards = 64
-      import org.apache.spark.sql.Encoders
-      spark.range(shards).repartition(shards).as(Encoders.scalaLong)
-        .foreachPartition { (it: Iterator[Long]) =>
-          it.foreach { f =>
-            val members = Vector.newBuilder[(String, Long, Array[Byte])]
-            var id = f
-            while (id < n) {
-              val r = new scala.util.Random(id * 2654435761L)
-              val len = 40 + (math.abs(id * 31) % 160).toInt
-              val sb = new StringBuilder
-              var i = 0
-              while (i < len) {
-                val rank = math.min(9999,
-                  math.exp(r.nextDouble() * math.log(10000.0)).toInt)
-                sb.append('w').append(rank).append(' ')
-                i += 1
-              }
-              members += ((s"doc/$id.txt", 1500000000L + id,
-                sb.toString.getBytes("UTF-8")))
-              id += 64
-            }
-            val bytes = graft.sources.Tar.gzipBytes(
-              graft.sources.Tar.archive(members.result()))
-            java.nio.file.Files.write(
-              java.nio.file.Paths.get(dir, f"part-$f%02d.tar.gz"), bytes)
-          }
-        }
-      marker.createNewFile()
+  /** 64 .tar.gz shards, members ∝ N (the [[ensureWarc]] shape) — built with
+    * the Tar builder; bodies are the word streams. */
+  private def ensureTar(spark: SparkSession, factor: Int): String =
+    stressShards(spark, "tar", factor, 5000L * factor) { (dir, f, ids) =>
+      val members = ids.map(id =>
+        (s"doc/$id.txt", 1500000000L + id, Fixtures.words(id).getBytes("UTF-8")))
+      Fixtures.put(dir, f"part-$f%02d.tar.gz")(_.write(graft.sources.Tar.archive(members)))
     }
-    dir
-  }
 
-  /** 64 mbox shards, messages ∝ N (the ensureWarc shape): plain and
+  /** 64 mbox shards, messages ∝ N (the [[ensureWarc]] shape): plain and
     * quoted-printable bodies alternate, subjects carry an RFC 2047
     * word on every 4th message. */
-  private def ensureMbox(spark: SparkSession, n: Long, dir: String): String = {
-    val marker = new java.io.File(dir, s"_graft_v${Version}_$n")
-    if (!marker.exists()) {
-      new java.io.File(dir).mkdirs()
-      Option(new java.io.File(dir).listFiles()).foreach(_.foreach(_.delete()))
-      val shards = 64
-      import org.apache.spark.sql.Encoders
-      spark.range(shards).repartition(shards).as(Encoders.scalaLong)
-        .foreachPartition { (it: Iterator[Long]) =>
-          it.foreach { f =>
-            val w = new java.io.OutputStreamWriter(new java.io.BufferedOutputStream(
-              new java.io.FileOutputStream(f"$dir/part-$f%02d.mbox"), 64 * 1024),
-              java.nio.charset.StandardCharsets.UTF_8)
-            var id = f
-            while (id < n) {
-              val r = new scala.util.Random(id * 2654435761L)
-              val len = 40 + (math.abs(id * 31) % 160).toInt
-              val sb = new StringBuilder
-              var i = 0
-              while (i < len) {
-                val rank = math.min(9999,
-                  math.exp(r.nextDouble() * math.log(10000.0)).toInt)
-                sb.append('w').append(rank).append(' ')
-                i += 1
-              }
-              w.write(s"From a@x Thu Jan  1 00:00:00 2026\n")
-              w.write(if (id % 4 == 0) s"Subject: =?UTF-8?Q?M_$id?=\n"
-                else s"Subject: M $id\n")
-              w.write(s"Message-ID: <m$id@x>\n")
-              if (id % 2 == 0) {
-                w.write("Content-Type: text/plain; charset=utf-8\n")
-                w.write("Content-Transfer-Encoding: quoted-printable\n\n")
-                w.write(s"qp=C3=A9 $sb\n")
-              } else {
-                w.write("Content-Type: text/plain; charset=utf-8\n\n")
-                w.write(s"$sb\n")
-              }
-              id += 64
-            }
-            w.close()
+  private def ensureMbox(spark: SparkSession, factor: Int): String =
+    stressShards(spark, "mbox", factor, 5000L * factor) { (dir, f, ids) =>
+      Fixtures.put(dir, f"part-$f%02d.mbox") { o =>
+        val w = new java.io.OutputStreamWriter(o, java.nio.charset.StandardCharsets.UTF_8)
+        for (id <- ids) {
+          val text = Fixtures.words(id)
+          w.write(s"From a@x Thu Jan  1 00:00:00 2026\n")
+          w.write(if (id % 4 == 0) s"Subject: =?UTF-8?Q?M_$id?=\n"
+            else s"Subject: M $id\n")
+          w.write(s"Message-ID: <m$id@x>\n")
+          if (id % 2 == 0) {
+            w.write("Content-Type: text/plain; charset=utf-8\n")
+            w.write("Content-Transfer-Encoding: quoted-printable\n\n")
+            w.write(s"qp=C3=A9 $text\n")
+          } else {
+            w.write("Content-Type: text/plain; charset=utf-8\n\n")
+            w.write(s"$text\n")
           }
         }
-      marker.createNewFile()
+        w.flush()
+      }
     }
-    dir
-  }
 
-  /** RTF payload parquet ∝ N (the ensureLatexDocs shape): each doc's
+  /** RTF payload parquet ∝ N (the [[ensureLatexDocs]] shape): each doc's
     * word stream wrapped in a real RTF skeleton with escapes. */
-  private def ensureRtfDocs(spark: SparkSession, n: Long, dir: String): String = {
-    val marker = new java.io.File(dir, s"_graft_v${Version}_$n")
-    if (!marker.exists()) {
-      val docs = ensureDocs(spark, n, s"/tmp/graft_stress_docs_f${n / 5000}")
-      import org.apache.spark.sql.Encoders
-      val enc = Encoders.tuple(Encoders.scalaLong, Encoders.BINARY)
-      spark.read.parquet(docs)
-        .selectExpr("doc_id", "text")
-        .as(Encoders.tuple(Encoders.scalaLong, Encoders.STRING))
+  private def ensureRtfDocs(spark: SparkSession, factor: Int): String =
+    stressParquet("rtf", factor, 5000L * factor) {
+      import spark.implicits._
+      spark.read.parquet(ensureDocs(spark, factor))
+        .selectExpr("doc_id", "text").as[(Long, String)]
         .mapPartitions(_.map { case (id, text) =>
           (id, graft.multimodal.RtfCodec.encodeRtf(
             Seq(s"Doc $id café {x}", text)))
-        })(enc)
+        })
         .toDF("media_id", "payload")
-        .write.mode("overwrite").parquet(dir)
-      marker.createNewFile()
     }
-    dir
-  }
 
   /** Deterministic embeddings: hash-derived components in [-1,1], 1%
     * planted near-identical partners (tiny perturbation). */
-  private def ensureVecs(spark: SparkSession, m: Long, dir: String): String = {
-    val marker = new java.io.File(dir, s"_graft_v${Version}_$m")
-    if (!marker.exists()) {
+  private def ensureVecs(spark: SparkSession, factor: Int): String = {
+    val m = 2000L * factor
+    stressParquet("vecs", factor, m) {
       import spark.implicits._
       spark.range(m).select(col("id")).as[Long]
         .mapPartitions(_.map { id =>
@@ -244,64 +171,39 @@ object ScaleStress {
           (id, v)
         })
         .toDF("vec_id", "embedding")
-        .write.mode("overwrite").parquet(dir)
-      marker.createNewFile()
     }
-    dir
   }
 
   /** Deterministic event stream for the temporal-join stress: n events
     * over 30 days, `n/66`-ish users, alternating purchase/click kinds —
     * the merge-asof cost driver is the keyed sort, so users scale with
-    * N to keep per-key runs realistic. */
-  private def ensureEvents(spark: SparkSession, n: Long, dir: String): String = {
-    val marker = new java.io.File(dir, s"_graft_v${Version}_$n")
-    if (!marker.exists()) {
+    * N to keep per-key runs realistic. With `ts` the time is a REAL
+    * timestamp column — the streaming leg's input (the stateful stages
+    * normalize/watermark a timestamp); the batch ops use double seconds. */
+  private def ensureEvents(spark: SparkSession, factor: Int, ts: Boolean = false): String = {
+    val n = 10000L * factor
+    stressParquet(if (ts) "evts" else "events", factor, n) {
       import spark.implicits._
       val users = math.max(150L, n / 66)
-      spark.range(n).select(col("id")).as[Long]
+      val secs = spark.range(n).select(col("id")).as[Long]
         .mapPartitions(_.map { id =>
           val r = new scala.util.Random(id * 6364136223846793005L + 11)
-          (id, math.abs(r.nextLong()) % users,
-            r.nextDouble() * 30 * 86400, (id % 2).toInt)
+          (id, math.abs(r.nextLong()) % users, r.nextDouble() * 30 * 86400, (id % 2).toInt)
         })
         .toDF("eid", "user_id", "t", "kind")
-        .write.mode("overwrite").parquet(dir)
-      marker.createNewFile()
+      if (!ts) secs
+      else secs.select(col("eid"), col("user_id"),
+        timestamp_micros((col("t") * 1e6).cast("long")).as("ts"), col("kind"))
     }
-    dir
-  }
-
-  /** The temporal-stress events with a REAL timestamp column — the
-    * streaming leg's input (the stateful stages normalize/watermark a
-    * timestamp; the batch ops above use the double-seconds variant). */
-  private def ensureEventsTs(spark: SparkSession, n: Long, dir: String): String = {
-    val marker = new java.io.File(dir, s"_graft_v${Version}_$n")
-    if (!marker.exists()) {
-      import spark.implicits._
-      val users = math.max(150L, n / 66)
-      spark.range(n).select(col("id")).as[Long]
-        .mapPartitions(_.map { id =>
-          val r = new scala.util.Random(id * 6364136223846793005L + 11)
-          (id, math.abs(r.nextLong()) % users,
-            (r.nextDouble() * 30 * 86400 * 1e6).toLong, (id % 2).toInt)
-        })
-        .toDF("eid", "user_id", "us", "kind")
-        .select(col("eid"), col("user_id"),
-          timestamp_micros(col("us")).as("ts"), col("kind"))
-        .write.mode("overwrite").parquet(dir)
-      marker.createNewFile()
-    }
-    dir
   }
 
   /** Deterministic 64-bit fingerprints (splitmix64), 1% planted
     * partners two bit-flips away — the hammingpairs banded-join input
     * at scale (ids + longs only; the decode that produces them in the
     * real pipeline is embarrassingly parallel and linear). */
-  private def ensureHashes(spark: SparkSession, n: Long, dir: String): String = {
-    val marker = new java.io.File(dir, s"_graft_v${Version}_$n")
-    if (!marker.exists()) {
+  private def ensureHashes(spark: SparkSession, factor: Int): String = {
+    val n = 20000L * factor
+    stressParquet("hash", factor, n) {
       import spark.implicits._
       // the EXACT plant arithmetic of the phash fixture (one authority:
       // MediaFixtures.phashPattern — partner flips, clamps and all), so
@@ -310,102 +212,43 @@ object ScaleStress {
         .mapPartitions(_.map(id =>
           (id, graft.multimodal.MediaFixtures.phashPattern(id))))
         .toDF("doc_id", "h")
-        .write.mode("overwrite").parquet(dir)
-      marker.createNewFile()
     }
-    dir
   }
 
-  /** WARC archive fixture, generated EXECUTOR-side (one task per shard
-    * file — the generation itself parallelizes like the read): 64
-    * `.warc.gz` shards of response records whose HTML bodies carry the
-    * same deterministic word stream as [[ensureDocs]]. */
-  private def ensureWarc(spark: SparkSession, n: Long, dir: String): String = {
-    val marker = new java.io.File(dir, s"_graft_v${Version}_$n")
-    if (!marker.exists()) {
-      new java.io.File(dir).mkdirs()
-      Option(new java.io.File(dir).listFiles()).foreach(_.foreach(_.delete()))
-      val shards = 64
-      import org.apache.spark.sql.Encoders
-      spark.range(shards).repartition(shards).as(Encoders.scalaLong)
-        .foreachPartition { (it: Iterator[Long]) =>
-          it.foreach { f =>
-            val crlf = "\r\n"
-            val gz = new java.util.zip.GZIPOutputStream(
-              new java.io.FileOutputStream(f"$dir/part-$f%02d.warc.gz"))
-            var id = f
-            while (id < n) {
-              val r = new scala.util.Random(id * 2654435761L)
-              val len = 40 + (math.abs(id * 31) % 160).toInt
-              val sb = new StringBuilder
-              var i = 0
-              while (i < len) {
-                val rank = math.min(9999,
-                  math.exp(r.nextDouble() * math.log(10000.0)).toInt)
-                sb.append('w').append(rank).append(' ')
-                i += 1
-              }
-              val http = s"HTTP/1.1 200 OK${crlf}Content-Type: text/html$crlf$crlf" +
-                s"<html><body><h1>D$id</h1><p>$sb</p></body></html>"
-              val payload = http.getBytes("UTF-8")
-              gz.write((s"WARC/1.0${crlf}WARC-Type: response$crlf" +
-                s"WARC-Record-ID: <urn:uuid:$id>$crlf" +
-                s"WARC-Target-URI: https://ex.com/doc/$id$crlf" +
-                s"Content-Type: application/http; msgtype=response$crlf" +
-                s"Content-Length: ${payload.length}$crlf$crlf").getBytes("UTF-8"))
-              gz.write(payload)
-              gz.write((crlf + crlf).getBytes("UTF-8"))
-              id += 64
-            }
-            gz.close()
-          }
+  /** WARC archive fixture: 64 `.warc.gz` shards of response records
+    * whose HTML bodies carry the same deterministic word stream as
+    * [[ensureDocs]]. */
+  private def ensureWarc(spark: SparkSession, factor: Int): String =
+    stressShards(spark, "warc", factor, 5000L * factor) { (dir, f, ids) =>
+      Fixtures.put(dir, f"part-$f%02d.warc.gz") { o =>
+        for (id <- ids) {
+          val http = "HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n\r\n" +
+            s"<html><body><h1>D$id</h1><p>${Fixtures.words(id)}</p></body></html>"
+          o.write(Fixtures.warcRecord(Seq(
+            "WARC-Type" -> "response",
+            "WARC-Record-ID" -> s"<urn:uuid:$id>",
+            "WARC-Target-URI" -> s"https://ex.com/doc/$id",
+            "Content-Type" -> "application/http; msgtype=response"),
+            http.getBytes("UTF-8")))
         }
-      marker.createNewFile()
+      }
     }
-    dir
-  }
 
-  /** XML-dump fixture, executor-side like [[ensureWarc]]: 64 gz shards
-    * of `<page>` records with wikitext-wrapped word streams. */
-  private def ensureWikiXml(spark: SparkSession, n: Long, dir: String): String = {
-    val marker = new java.io.File(dir, s"_graft_v${Version}_$n")
-    if (!marker.exists()) {
-      new java.io.File(dir).mkdirs()
-      Option(new java.io.File(dir).listFiles()).foreach(_.foreach(_.delete()))
-      val shards = 64
-      import org.apache.spark.sql.Encoders
-      spark.range(shards).repartition(shards).as(Encoders.scalaLong)
-        .foreachPartition { (it: Iterator[Long]) =>
-          it.foreach { f =>
-            val gz = new java.util.zip.GZIPOutputStream(
-              new java.io.FileOutputStream(f"$dir/shard-$f%02d.xml.gz"))
-            gz.write("<mediawiki>\n".getBytes("UTF-8"))
-            var id = f
-            while (id < n) {
-              val r = new scala.util.Random(id * 2654435761L)
-              val len = 40 + (math.abs(id * 31) % 160).toInt
-              val sb = new StringBuilder
-              var i = 0
-              while (i < len) {
-                val rank = math.min(9999,
-                  math.exp(r.nextDouble() * math.log(10000.0)).toInt)
-                sb.append('w').append(rank).append(' ')
-                i += 1
-              }
-              val wiki = s"== H$id ==\n'''B''' [[T|l$id]] {{tpl|$id}} " +
-                s"&lt;ref&gt;c&lt;/ref&gt; $sb"
-              gz.write((s"<page><title>P$id</title><id>$id</id>" +
-                s"<revision><text>$wiki</text></revision></page>\n").getBytes("UTF-8"))
-              id += 64
-            }
-            gz.write("</mediawiki>\n".getBytes("UTF-8"))
-            gz.close()
-          }
+  /** XML-dump fixture, like [[ensureWarc]]: 64 gz shards of `<page>` records
+    * with wikitext-wrapped word streams. */
+  private def ensureWikiXml(spark: SparkSession, factor: Int): String =
+    stressShards(spark, "wiki", factor, 5000L * factor) { (dir, f, ids) =>
+      Fixtures.put(dir, f"shard-$f%02d.xml.gz") { o =>
+        o.write("<mediawiki>\n".getBytes("UTF-8"))
+        for (id <- ids) {
+          val wiki = s"== H$id ==\n'''B''' [[T|l$id]] {{tpl|$id}} " +
+            s"&lt;ref&gt;c&lt;/ref&gt; ${Fixtures.words(id)}"
+          o.write((s"<page><title>P$id</title><id>$id</id>" +
+            s"<revision><text>$wiki</text></revision></page>\n").getBytes("UTF-8"))
         }
-      marker.createNewFile()
+        o.write("</mediawiki>\n".getBytes("UTF-8"))
+      }
     }
-    dir
-  }
 
   def main(args: Array[String]): Unit = {
     val spark = Engine.session("graft-scale-stress")
@@ -447,10 +290,10 @@ object ScaleStress {
     for (factor <- Seq(1, 10, 100) if batchLegs.exists(enabled)) {
       val n = 5000L * factor // sf0.1-equivalent docs × factor
       val m = 2000L * factor
-      val docs = ensureDocs(spark, n, s"/tmp/graft_stress_docs_f$factor")
-      val vecs = ensureVecs(spark, m, s"/tmp/graft_stress_vecs_f$factor")
-      val events = ensureEvents(spark, 10000L * factor, s"/tmp/graft_stress_events_f$factor")
-      val hashes = ensureHashes(spark, 20000L * factor, s"/tmp/graft_stress_hash_f$factor")
+      val docs = ensureDocs(spark, factor)
+      val vecs = ensureVecs(spark, factor)
+      val events = ensureEvents(spark, factor)
+      val hashes = ensureHashes(spark, factor)
       spark.read.parquet(events).createOrReplaceTempView("stress_events")
       spark.read.parquet(docs).createOrReplaceTempView("stress_docs")
       spark.read.parquet(vecs).createOrReplaceTempView("stress_vecs")
@@ -458,7 +301,7 @@ object ScaleStress {
       // corpus stays FIXED (the f1 vector table) — the r17 queryTable
       // contract's growth axis (fresh documents searching a frozen
       // index). Work = |Q|·|corpus| cosines → the exponent must be ~1.
-      val corpusFixed = ensureVecs(spark, 2000L, "/tmp/graft_stress_vecs_f1")
+      val corpusFixed = ensureVecs(spark, 1)
       // semanticdedup: cells must GROW with N (candidates ≈ (nProbe·N)²/k);
       // k ∝ N keeps per-cell work flat, but the bounded driver trainer is
       // the documented trade — sample capped, so training stays O(k·cap·dim)
@@ -656,7 +499,7 @@ object ScaleStress {
         // linear in total payload bytes; the length filter references
         // the extracted text (count-elimination trap)
         "pdf_extract" -> s"""{
-          "source": {"file": {"path": "${if (enabled("pdf_extract")) ensurePdfParquet(spark, n, s"/tmp/graft_stress_pdf_f$factor") else ""}"}},
+          "source": {"file": {"path": "${if (enabled("pdf_extract")) ensurePdfParquet(spark, factor) else ""}"}},
           "extractor": {"parquet": {}},
           "transformers": [
             {"pdfextract": {"idField": "media_id"}},
@@ -667,7 +510,7 @@ object ScaleStress {
         // html_normalize's linearity; the length filter references the
         // stripped text (count-elimination trap)
         "latex_strip" -> s"""{
-          "source": {"file": {"path": "${if (enabled("latex_strip")) ensureLatexDocs(spark, n, s"/tmp/graft_stress_latex_f$factor") else ""}"}},
+          "source": {"file": {"path": "${if (enabled("latex_strip")) ensureLatexDocs(spark, factor) else ""}"}},
           "extractor": {"parquet": {}},
           "transformers": [
             {"latexstrip": {"field": "tex"}},
@@ -690,7 +533,7 @@ object ScaleStress {
         // (records per shard ∝ N) — the filter references body, forcing
         // the full parse, not just the file listing
         "warc_parse" -> s"""{
-          "source": {"file": {"path": "${if (enabled("warc_parse")) ensureWarc(spark, n, s"/tmp/graft_stress_warc_f$factor") else ""}"}},
+          "source": {"file": {"path": "${if (enabled("warc_parse")) ensureWarc(spark, factor) else ""}"}},
           "extractor": {"warc": {"types": ["response"]}},
           "transformers": [
             {"code": {"language": "sql", "code":
@@ -700,7 +543,7 @@ object ScaleStress {
         // shards — the dump-ingest class; the filter references the
         // cleaned text (count-elimination trap)
         "wiki_parse" -> s"""{
-          "source": {"file": {"path": "${if (enabled("wiki_parse")) ensureWikiXml(spark, n, s"/tmp/graft_stress_wiki_f$factor") else ""}"}},
+          "source": {"file": {"path": "${if (enabled("wiki_parse")) ensureWikiXml(spark, factor) else ""}"}},
           "extractor": {"xml": {"rowTag": "page", "fields": ["title", "id", "revision"]}},
           "transformers": [
             {"code": {"language": "sql", "code":
@@ -1017,7 +860,7 @@ object ScaleStress {
         // html_normalize linearity; the filter references the stripped
         // text (count-elimination trap)
         "markdown_strip" -> s"""{
-          "source": {"file": {"path": "${if (enabled("markdown_strip")) ensureMarkdownDocs(spark, n, s"/tmp/graft_stress_md_f$factor") else ""}"}},
+          "source": {"file": {"path": "${if (enabled("markdown_strip")) ensureMarkdownDocs(spark, factor) else ""}"}},
           "extractor": {"parquet": {}},
           "transformers": [
             {"markdownstrip": {"field": "md"}},
@@ -1028,7 +871,7 @@ object ScaleStress {
         // (members ∝ N, per-member work constant) — the filter
         // references body, forcing the full member parse
         "tar_parse" -> s"""{
-          "source": {"file": {"path": "${if (enabled("tar_parse")) ensureTar(spark, n, s"/tmp/graft_stress_tar_f$factor") else ""}"}},
+          "source": {"file": {"path": "${if (enabled("tar_parse")) ensureTar(spark, factor) else ""}"}},
           "extractor": {"tar": {}},
           "transformers": [
             {"code": {"language": "sql", "code":
@@ -1055,7 +898,7 @@ object ScaleStress {
         // half quoted-printable) — the filter references the decoded
         // text and subject (count-elimination trap)
         "mbox_parse" -> s"""{
-          "source": {"file": {"path": "${if (enabled("mbox_parse")) ensureMbox(spark, n, s"/tmp/graft_stress_mbox_f$factor") else ""}"}},
+          "source": {"file": {"path": "${if (enabled("mbox_parse")) ensureMbox(spark, factor) else ""}"}},
           "extractor": {"mbox": {}},
           "transformers": [
             {"code": {"language": "sql", "code":
@@ -1064,7 +907,7 @@ object ScaleStress {
         // per-row RTF control-word scan — must track the docx/latex
         // extractor linearity; filter references the stripped text
         "rtf_strip" -> s"""{
-          "source": {"file": {"path": "${if (enabled("rtf_strip")) ensureRtfDocs(spark, n, s"/tmp/graft_stress_rtf_f$factor") else ""}"}},
+          "source": {"file": {"path": "${if (enabled("rtf_strip")) ensureRtfDocs(spark, factor) else ""}"}},
           "extractor": {"parquet": {}},
           "transformers": [
             {"rtfextract": {"idField": "media_id"}},
@@ -1122,7 +965,7 @@ object ScaleStress {
     // the wall time is scan + state-build + join, measured end-to-end.
     for (factor <- Seq(1, 10, 100) if enabled("stream_join")) {
       val n = 10000L * factor
-      val ev = ensureEventsTs(spark, n, s"/tmp/graft_stress_evts_f$factor")
+      val ev = ensureEvents(spark, factor, ts = true)
       val t = wallS(spark.emptyDataFrame, _ => graft.streaming.Streaming.run(ctx(),
           graft.spec.PipelineSpec.parse(s"""{
         "source": {"stream": {"path": "$ev", "format": "parquet",
@@ -1154,28 +997,24 @@ object ScaleStress {
       import spark.implicits._
       val n = 20000L * factor
       val buckets = (8 * factor).toInt
-      val dir = s"/tmp/graft_stress_upsert_f$factor"
-      def rmrf(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(rmrf); f.delete(); ()
-      }
-      rmrf(new java.io.File(dir)); rmrf(new java.io.File(dir + "_tbl"))
+      val dir = Fixtures.scratch("stress_upsert", s"f$factor")
       spark.range(1, n + 1).select(col("id"),
           concat(lit("payload_"), col("id")).as("v"))
-        .write.mode("overwrite").parquet(s"${dir}_base")
+        .write.mode("overwrite").parquet(s"$dir/base")
       Engine.runJson(ctx(), s"""{
-        "source": {"file": {"path": "${dir}_base"}},
+        "source": {"file": {"path": "$dir/base"}},
         "extractor": {"parquet": {}},
-        "loader": {"parquet": {"path": "${dir}_tbl", "mode": "upsert",
+        "loader": {"parquet": {"path": "$dir/tbl", "mode": "upsert",
                                "key": "id", "buckets": $buckets}} }""")
       // delta: 200 existing keys that ALL hash into bucket 0
       spark.range(1, n + 1)
         .where(pmod(hash(col("id")), lit(buckets)) === 0).limit(200)
         .select(col("id"), lit("UPDATED").as("v"))
-        .write.mode("overwrite").parquet(s"${dir}_delta")
+        .write.mode("overwrite").parquet(s"$dir/delta")
       def once(): Double = wallS(Engine.runJson(ctx(), s"""{
-          "source": {"file": {"path": "${dir}_delta"}},
+          "source": {"file": {"path": "$dir/delta"}},
           "extractor": {"parquet": {}},
-          "loader": {"parquet": {"path": "${dir}_tbl", "mode": "upsert",
+          "loader": {"parquet": {"path": "$dir/tbl", "mode": "upsert",
                                  "key": "id", "buckets": $buckets}} }"""), _ => ())
       val t = math.min(once(), once())
       results(("upsert_delta", factor)) = t
@@ -1190,7 +1029,7 @@ object ScaleStress {
     // trailing filter references a right column (count-elimination trap).
     for (factor <- Seq(1, 10, 100) if enabled("skew_join")) {
       val n = 5000L * factor
-      val docs = ensureDocs(spark, n, s"/tmp/graft_stress_docs_f$factor")
+      val docs = ensureDocs(spark, factor)
       spark.sql(s"CREATE OR REPLACE TEMPORARY VIEW skj_dim AS " +
         s"SELECT domain, count(*) AS dn FROM parquet.`$docs` GROUP BY 1")
       val prevBroadcast = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")

@@ -90,6 +90,29 @@ class FactorySpec extends SparkSpec {
     assert(hits.isEmpty, hits.mkString("\n"))
   }
 
+  test("one fixture cache: markers, content keys, word streams, WARC framing and /tmp paths live in Fixtures") {
+    val module = "src/main/scala/graft/Fixtures.scala"
+    val src = mainSources
+    def onlyInModule(token: String, exempt: (String, String) => Boolean = (_, _) => false) = {
+      val hits = for {
+        (path, text) <- src.toSeq if path != module
+        (line, i) <- text.linesIterator.zipWithIndex
+        if line.contains(token) && !exempt(path, line)
+      } yield s"$path:${i + 1}: ${line.trim}"
+      assert(hits.isEmpty, s"$token outside $module:\n" + hits.mkString("\n"))
+      assert(src(module).contains(token), token)
+    }
+    // the upsert lease's O_EXCL claim is synchronisation, not a marker
+    onlyInModule("createNewFile()", (path, line) =>
+      path.endsWith("/loaders/Loaders.scala") && line.contains("lock.toUri"))
+    onlyInModule("""crc32(col("text"))""")
+    onlyInModule("math.log(10000.0)")
+    onlyInModule("\"WARC/1.0\"")
+    onlyInModule("\"/tmp/")
+    // an in-memory Derby name is no /tmp path
+    onlyInModule(".hashCode)}", (_, line) => line.contains("jdbc:derby:memory:"))
+  }
+
   test("ensure() registers exactly what a session lacks, in every session") {
     for (s <- Seq(ensureSession(), ensureSession()); f <- NativeFunctions.all)
       assert(s.catalog.functionExists(f.name), f.name)
