@@ -1,9 +1,12 @@
 package graft.loaders
 
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import graft.engine.{EtlContext, TextFiles}
 import graft.spec.ComponentSpec
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.graftbridge.Schemas
+import org.apache.spark.sql.types.{DataType, StructType}
 import org.apache.spark.sql.functions.{array, col, concat_ws, explode, filter, hash, lit, pmod, raise_error, struct, when}
 
 /** Loaders (sinks) — SURVEY.md §2.4.
@@ -190,18 +193,23 @@ object Loaders {
     *
     * `buckets: n` opts into the hash-bucketed layout for targets too big
     * to rewrite per delta: `__bucket=<i>` partition dirs,
-    * `i = pmod(hash(key), n)`, layout recorded in a `_graft_buckets.json`
-    * sidecar. An upsert into such a table computes the DISTINCT bucket
-    * ids the delta touches (≤ n values), scans ONLY those partitions
-    * (Catalyst partition pruning; Spark's partition discovery still
-    * lists every bucket dir), merges within them and swaps in ONLY the
-    * rewritten bucket dirs, so its scan and rewrite scale with the
-    * delta, not the table (PlanSpec, the ScaleStress upsert leg).
-    * Every other write — a first write, a flat table, the one-time
-    * flat → bucketed migration — replaces the whole table, sidecar
-    * included, in one rename. The sidecar's (key, n) is
-    * the on-disk hash: a spec that differs from it (a missing `buckets`
-    * included) would read and write the wrong buckets, so it fails.
+    * `i = pmod(hash(key), n)`, layout and data schema recorded in a
+    * `_graft_buckets.json` sidecar ([[BucketLayout]]). An upsert into
+    * such a table computes the DISTINCT bucket ids the delta touches
+    * (≤ n values), reads ONLY those bucket dirs through the recorded
+    * schema ([[bucketRows]]: no listing of the table root, no footer
+    * read for inference), merges within them, writes one file per
+    * bucket and swaps in ONLY the rewritten bucket dirs, so its scan and
+    * rewrite scale with the delta, not the table (PlanSpec, JobBudgetSpec,
+    * the ScaleStress upsert leg). A sidecar that predates the recorded
+    * schema takes one partition-pruned read of the table root, and the
+    * swap that follows records the schema; a merge that changes the
+    * schema re-records it the same way. Every other write — a first
+    * write, a flat table, the one-time flat → bucketed migration —
+    * replaces the whole table, sidecar included, in one rename. The
+    * sidecar's (key, n) is the on-disk hash: a spec that differs from it
+    * (a missing `buckets` included) would read and write the wrong
+    * buckets, so it fails.
     *
     * `scd2: {…}` turns the merge into the Type-2 history merge (see
     * [[Scd2Cfg]]); batch loads only — a streaming sink re-applies one
@@ -221,44 +229,91 @@ object Loaders {
       val table = new TableSwap(ctx, path, "upsert")
       table.recover()
       val bucketOf = buckets.map(n => pmod(hash(col(key)), lit(n)))
-      def layout(n: Int) = s"""{"key":"$key","buckets":$n}"""
-      val sidecar = new HPath(table.target, "_graft_buckets.json")
-      val recorded = TextFiles.read(ctx.spark, sidecar.toString)
-      recorded.foreach(meta => require(buckets.exists(n => meta.trim == layout(n)),
-        s"parquet upsert: bucket layout mismatch for $path — table sidecar " +
-        s"$meta vs spec (key=$key, buckets=${buckets.getOrElse("none")}); " +
-        "re-create the table or match the recorded layout"))
-      val (merged, dirs) =
-        if (recorded.isDefined) {
+      val sidecar = new HPath(table.target, BucketLayout.File)
+      val recorded = TextFiles.read(ctx.spark, sidecar.toString).map { meta =>
+        val layout = BucketLayout.parse(meta)
+        require(layout.exists(l => l.key == key && buckets.contains(l.buckets)),
+          s"parquet upsert: bucket layout mismatch for $path — table sidecar " +
+          s"$meta vs spec (key=$key, buckets=${buckets.getOrElse("none")}); " +
+          "re-create the table or match the recorded layout")
+        layout.get
+      }
+      val (merged, dirs) = recorded match {
+        case Some(layout) =>
           val affected = incoming.select(bucketOf.get.cast("int")).distinct()
             .collect().map(_.getInt(0)).toSeq.sorted
-          // partition-PRUNED read: only the affected bucket dirs are
-          // scanned (isin on the partition column)
-          val existing = ctx.spark.read.parquet(path)
-            .where(col("__bucket").isin(affected.map(Integer.valueOf): _*))
-            .drop("__bucket")
+          val existing = layout.schema match {
+            case Some(schema) => bucketRows(ctx, path, affected, schema)
+            // a sidecar without a schema: one partition-pruned read of
+            // the root (its swap below records the schema)
+            case None => ctx.spark.read.parquet(path)
+              .where(col("__bucket").isin(affected.map(Integer.valueOf): _*))
+              .drop("__bucket")
+          }
           (mergeResult(existing, incoming, key, spec), affected.map(b => s"__bucket=$b"))
-        } else if (table.fs.exists(table.target)) {
+        case None if table.fs.exists(table.target) =>
           val existing = ctx.spark.read.parquet(path)
           require(!existing.columns.contains("__bucket"), s"parquet upsert: $path " +
             s"has __bucket= partitions but no $sidecar — its bucket layout is " +
             "unknown; re-create the table")
           (mergeResult(existing, incoming, key, spec), Nil)
-        } else (firstWrite(incoming, spec), Nil)
+        case None => (firstWrite(incoming, spec), Nil)
+      }
       // an empty delta into a bucketed table touches no bucket
       if (recorded.isEmpty || dirs.nonEmpty) {
         bucketOf match {
-          case Some(b) => merged.withColumn("__bucket", b).write.mode("overwrite")
-            .partitionBy("__bucket").parquet(table.staging.toString)
+          // clustered on the bucket: one file per bucket dir
+          case Some(b) => merged.withColumn("__bucket", b).repartition(col("__bucket"))
+            .write.mode("overwrite").partitionBy("__bucket").parquet(table.staging.toString)
           case None => merged.write.mode("overwrite").parquet(table.staging.toString)
         }
-        // a whole-table write carries its layout into the same rename
-        if (dirs.isEmpty) buckets.foreach(n =>
-          TextFiles.write(ctx.spark, s"${table.staging}/${sidecar.getName}", layout(n)))
-        table.replace(dirs)
+        // the layout rides the data's rename: whole with a whole-table
+        // write, after the bucket dirs when a partial swap changes it
+        val changed = buckets.map(n => BucketLayout(key, n, Some(Schemas.asNullable(merged.schema))))
+          .filterNot(recorded.contains(_))
+        changed.foreach(l => TextFiles.write(ctx.spark, s"${table.staging}/${sidecar.getName}", l.json))
+        table.replace(if (dirs.isEmpty) Nil else dirs ++ changed.map(_ => sidecar.getName))
       }
       true
     }
+  }
+
+  /** A bucketed table's `_graft_buckets.json`: the hash key, the bucket
+    * count and the data schema (without `__bucket`). A sidecar written
+    * before the schema was recorded has none. */
+  private final case class BucketLayout(key: String, buckets: Int, schema: Option[StructType]) {
+    def json: String = {
+      val node = BucketLayout.mapper.createObjectNode().put("key", key).put("buckets", buckets)
+      schema.foreach(s => node.set[JsonNode]("schema", BucketLayout.mapper.readTree(s.json)))
+      BucketLayout.mapper.writeValueAsString(node)
+    }
+  }
+
+  private object BucketLayout {
+    val File = "_graft_buckets.json"
+    private val mapper = new ObjectMapper()
+
+    /** The layout, when `text` is an object with a string `key` and an
+      * int `buckets`; None for anything else. */
+    def parse(text: String): Option[BucketLayout] = scala.util.Try(mapper.readTree(text)).toOption
+      .filter(n => n.path("key").isTextual && n.path("buckets").isInt)
+      .map(n => BucketLayout(n.get("key").asText, n.get("buckets").intValue,
+        Option(n.get("schema")).map(s => DataType.fromJson(s.toString).asInstanceOf[StructType])))
+  }
+
+  /** The rows of a bucketed table's `buckets`, read through its recorded
+    * `schema`: only the bucket dirs that exist are listed (with
+    * `basePath`, so `__bucket` stays a partition column, then dropped)
+    * and no footer is read to infer a schema; when none exists the
+    * result is an empty frame of `schema`. */
+  private[graft] def bucketRows(ctx: EtlContext, path: String, buckets: Seq[Int],
+                                schema: StructType): DataFrame = {
+    val root = new HPath(path)
+    val fs = root.getFileSystem(ctx.spark.sparkContext.hadoopConfiguration)
+    val dirs = buckets.map(b => new HPath(root, s"__bucket=$b")).filter(fs.exists)
+    if (dirs.isEmpty) ctx.spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
+    else ctx.spark.read.schema(schema).option("basePath", path)
+      .parquet(dirs.map(_.toString): _*).drop("__bucket")
   }
 
   /** Single-writer lease on a parquet merge target: two simultaneous
@@ -358,23 +413,25 @@ object Loaders {
       require(fs.rename(from, to), s"parquet $mode: $what ($from -> $to)")
 
     /** A whole table found only in `.old` (died between moving it aside
-      * and the swap) is restored; otherwise each `__bucket=` dir found
-      * only in `.old` is, and `.old` copies of dirs whose swap landed
-      * are dropped. */
+      * and the swap) is restored; otherwise each `__bucket=` dir and a
+      * bucket sidecar found only in `.old` is, and `.old` copies of
+      * entries whose swap landed are dropped. */
     def recover(): Unit = if (fs.exists(old)) {
       if (!fs.exists(target)) move(old, target, "crash recovery failed restoring the table")
       else {
-        for (s <- fs.listStatus(old) if s.isDirectory && s.getPath.getName.startsWith("__bucket=")) {
+        for (s <- fs.listStatus(old) if s.getPath.getName.startsWith("__bucket=") ||
+             s.getPath.getName == BucketLayout.File) {
           val live = new HPath(target, s.getPath.getName)
-          if (!fs.exists(live)) move(s.getPath, live, "crash recovery failed restoring a bucket")
+          if (!fs.exists(live)) move(s.getPath, live, s"crash recovery failed restoring ${live.getName}")
         }
         fs.delete(old, true)
       }
     }
 
     /** Swaps the staged copy in: the whole table when `dirs` is empty,
-      * else only the named partition dirs (the target's other dirs stay
-      * as they are). A failed rename puts the moved-aside copy back. */
+      * else only the named entries — partition dirs, then a sidecar —
+      * in order (the target's other entries stay as they are). A failed
+      * rename puts the moved-aside copy back. */
     def replace(dirs: Seq[String]): Unit = {
       val swaps =
         if (dirs.isEmpty) Seq((target, staging, old))

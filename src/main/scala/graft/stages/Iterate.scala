@@ -1,6 +1,8 @@
 package graft.stages
 
 import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.graftbridge.Blocks
 import org.apache.spark.sql.functions.{col, count, lit, when}
 
 /** The round-loop contract of the iterative operators (pagerank,
@@ -127,6 +129,13 @@ object Iterate {
   /** Checkpoints `df` and counts its rows on the same job. */
   def counted(ckpt: DataFrame => DataFrame, df: DataFrame): (DataFrame, Long) =
     ckptObserve(ckpt, df, count(lit(1)))
+
+  /** Frees the blocks behind a [[localCheckpoint]]ed frame once nothing
+    * reads it any more (non-blocking); the frame cannot be read after. */
+  def release(ckpted: DataFrame): Unit = ckpted.queryExecution.logical.foreach {
+    case r: LogicalRDD => Blocks.release(r.rdd)
+    case _ => ()
+  }
 
   private def partitionsOf(df: DataFrame): Int = math.max(df.rdd.getNumPartitions, 1)
 

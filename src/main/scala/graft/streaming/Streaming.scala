@@ -2,6 +2,7 @@ package graft.streaming
 
 import graft.engine.{Engine, EtlContext}
 import graft.spec.{ComponentSpec, PipelineSpec}
+import graft.stages.Iterate
 import org.apache.spark.sql.{DataFrame, Encoders}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
@@ -576,8 +577,13 @@ object Streaming {
   /** Start the `streamsink` writer: memory (named table), parquet dir,
     * console, or `upsert` (continuous MERGE: each micro-batch is applied
     * through the batch upsert writer — with `buckets: n`, the
-    * partition-pruned bucketed layout, so per-batch cost scales with the
-    * DELTA, not the table; the streaming CDC-merge shape). A
+    * bucketed layout that reads and rewrites only the buckets the batch
+    * touches, so per-batch cost scales with the DELTA, not the table;
+    * the streaming CDC-merge shape). The upsert sink materializes each
+    * micro-batch once — one eager local checkpoint that counts its rows
+    * on the same job — and the merge reads only that checkpoint, so the
+    * stateful operators upstream run once per batch; an empty batch
+    * stops there, and the blocks are freed when the batch ends. A
     * watermark-respecting checkpoint dir is required for durable sinks.
     * `trigger`: `"availableNow"` (process everything currently
     * available, then stop — the batch-over-stream mode), `"once"`, or a
@@ -643,8 +649,11 @@ object Streaming {
             .getOrElse(sys.error("streamsink: checkpoint required for upsert")))
           .outputMode(mode)
           .foreachBatch { (batch: DataFrame, _: Long) =>
-            if (!batch.isEmpty)
-              graft.loaders.Loaders.upsertDelta(ctx, spec, batch): Unit
+            // `batch` is an uncached plan over the stream's stateful
+            // operators: each action on it would run them again
+            val (rows, n) = Iterate.counted(Iterate.localCheckpoint, batch)
+            try if (n > 0) graft.loaders.Loaders.upsertDelta(ctx, spec, rows): Unit
+            finally Iterate.release(rows)
           }).start()
       case other => sys.error(s"streamsink: unknown format $other")
     }

@@ -23,3 +23,21 @@ object ListenerBus {
   def drain(spark: SparkSession): Unit =
     spark.sparkContext.listenerBus.waitUntilEmpty()
 }
+
+/** `StructType.asNullable` is `private[spark]`; the bucketed upsert
+  * records a table's schema as a file read returns it (every field
+  * nullable, nested ones too), so a merge's own nullability does not
+  * read as a schema change. */
+object Schemas {
+  def asNullable(s: org.apache.spark.sql.types.StructType): org.apache.spark.sql.types.StructType =
+    s.asNullable
+}
+
+/** `RDD.unpersist` logs a warning for every locally checkpointed RDD
+  * (its lineage is gone); [[graft.stages.Iterate.release]] frees such
+  * blocks once per stream micro-batch on purpose, so it unpersists
+  * through the context. */
+object Blocks {
+  def release(rdd: org.apache.spark.rdd.RDD[_]): Unit =
+    rdd.sparkContext.unpersistRDD(rdd.id, blocking = false)
+}

@@ -50,6 +50,15 @@ class IterateSpec extends SparkSpec {
     }
   }
 
+  test("release frees the blocks of a local checkpoint") {
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet
+    val before = persisted
+    val (ckpted, n) = Iterate.counted(Iterate.localCheckpoint, spark.range(0, 100, 1, 4).toDF("id"))
+    assert(n == 100L && (persisted -- before).size == 1)
+    Iterate.release(ckpted)
+    assert(persisted == before)
+  }
+
   test("fixpoint: a loud budget spans calls and names its stage; a quiet cap stops silently") {
     val one = spark.range(1).toDF("id")
     val budget = Iterate.Budget.loud("demo", 3, "the hint")

@@ -56,14 +56,20 @@ class JobBudgetSpec extends SparkSpec {
     }, 10), // three eager rounds: 13 before their drain check rode the checkpoint
     // one stream_upsert micro-batch: a one-key delta into an 8-bucket table
     ("bucketed upsert", () => jobsOf(spark)(graft.loaders.Loaders.upsertDelta(newCtx(),
-      bucketedSpec, Seq((7L, "UPDATED")).toDF("id", "v")): Unit), 4))
+      bucketedSpec, Seq((7L, "UPDATED")).toDF("id", "v")): Unit), 4),
+    // past 32 bucket dirs, a read that lists the table root adds a
+    // listing job; the budget is the count with that read
+    ("40-bucket upsert", () => jobsOf(spark)(graft.loaders.Loaders.upsertDelta(newCtx(),
+      wideSpec, Seq((7L, "UPDATED")).toDF("id", "v")): Unit), 5))
 
-  private lazy val bucketedSpec = {
-    val spec = ComponentSpec("parquet", Map("mode" -> "upsert", "key" -> "id", "buckets" -> 8,
+  private def seeded(buckets: Int) = {
+    val spec = ComponentSpec("parquet", Map("mode" -> "upsert", "key" -> "id", "buckets" -> buckets,
       "path" -> (java.nio.file.Files.createTempDirectory("graft_budget_upsert").toString + "/t")))
     graft.loaders.Loaders.upsertDelta(newCtx(), spec, (1L to 200L).map(i => (i, s"v$i")).toDF("id", "v"))
     spec
   }
+  private lazy val bucketedSpec = seeded(8)
+  private lazy val wideSpec = seeded(40)
 
   for ((name, run, budget) <- budgets)
     test(s"job budget: $name") {

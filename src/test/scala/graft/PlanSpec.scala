@@ -282,6 +282,31 @@ class PlanSpec extends SparkSpec {
       s"bucket column must prune directories, not row-filter:\n$plan")
   }
 
+  test("bucketed upsert read through a recorded schema: only the named bucket dirs") {
+    // the read Loaders.upsertDelta builds once the sidecar records the
+    // table's schema: the file index holds just the affected bucket dirs,
+    // so there is no bucket predicate left to prune, and a bucket that
+    // does not exist yet reads as an empty frame of the schema
+    val dir = java.nio.file.Files.createTempDirectory("graft_bktrows").toString
+    Engine.runJson(newCtx(), s"""{
+      "source": {"file": {"path": "$sfDir/customer.parquet"}},
+      "extractor": {"parquet": {}},
+      "loader": {"parquet": {"path": "$dir/tbl", "mode": "upsert",
+                             "key": "c_custkey", "buckets": 8}} }""")
+    val whole = spark.read.parquet(s"$dir/tbl")
+    val schema = whole.drop("__bucket").schema
+    val rows = graft.loaders.Loaders.bucketRows(newCtx(), s"$dir/tbl", Seq(2, 5), schema)
+    val plan = analyzedPlan(rows)
+    assert(plan.contains("InMemoryFileIndex(2 paths)"), s"only the two bucket dirs:\n$plan")
+    for (field <- Seq("PartitionFilters", "PushedFilters")) {
+      val filters = s"$field: \\[([^\\]]*)\\]".r.findFirstMatchIn(plan).map(_.group(1))
+      assert(filters.exists(!_.contains("__bucket")), s"no bucket predicate in $field:\n$plan")
+    }
+    assert(rows.count() == whole.where(col("__bucket").isin(2, 5)).count())
+    val none = graft.loaders.Loaders.bucketRows(newCtx(), s"$dir/tbl", Seq(99), schema)
+    assert(none.schema == schema && none.count() == 0)
+  }
+
   test("gremlin repeat(out).times(k) plans exactly k edge joins") {
     val ctx = newCtx()
     import spark.implicits._

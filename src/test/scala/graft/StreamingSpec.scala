@@ -345,6 +345,36 @@ class StreamingSpec extends SparkSpec {
       .as[(Long, String)].collect().toSeq == Seq((7L, "UPDATED")))
   }
 
+  test("streaming upsert sink: the stateful plan runs once per micro-batch") {
+    val base = java.nio.file.Files.createTempDirectory("graft_sonce").toString
+    val landing = s"$base/landing"
+    val t0 = Timestamp.valueOf("2026-01-01 00:00:00").getTime
+    // three files, one micro-batch each: 20 fresh events apiece, and the
+    // later two re-send five events of the first
+    (0 until 3).foreach { k =>
+      val fresh = (0 until 20).map(j => (k * 100L + j, s"e$k-$j", new Timestamp(t0 + k * 60000L + j)))
+      val resent = if (k == 0) Nil else (0 until 5).map(j => (j.toLong, s"e0-$j", new Timestamp(t0 + j)))
+      (fresh ++ resent).toDF("id", "ev", "ts").coalesce(1).write.parquet(s"$base/f$k")
+      val part = new java.io.File(s"$base/f$k").listFiles().find(_.getName.endsWith(".parquet")).get
+      val landed = new java.io.File(landing, s"evt-$k.parquet")
+      landed.getParentFile.mkdirs()
+      assert(part.renameTo(landed) && landed.setLastModified(t0 + k * 1000L))
+    }
+    val q = Streaming.run(newCtx(), PipelineSpec.parse(s"""{
+      "source": {"stream": {"path": "$landing", "format": "parquet",
+                 "schema": "id BIGINT, ev STRING, ts TIMESTAMP", "maxFilesPerTrigger": "1"}},
+      "transformers": [{"stream_dedup": {"keyFields": ["ev"], "tsField": "ts", "watermark": "1 hour"}}],
+      "loader": {"streamsink": {"format": "upsert", "path": "$base/table", "key": "id",
+                 "buckets": 8, "checkpoint": "$base/cp", "trigger": "availableNow"}} }"""))
+    q.awaitTermination()
+    // the state after batch i holds the 20 × (i + 1) distinct events; a
+    // batch whose stateful plan ran again per action reports a multiple
+    val batches = q.recentProgress.filter(_.numInputRows > 0).toSeq
+    assert(batches.map(_.stateOperators(0).numRowsTotal) == Seq(20L, 40L, 60L),
+      batches.map(_.stateOperators(0).json).mkString("\n"))
+    assert(spark.read.parquet(s"$base/table").count() == 60)
+  }
+
   test("streaming upsert sink rejects scd2 at config time (batch-load-only contract)") {
     val base = java.nio.file.Files.createTempDirectory("graft_sscd2").toString
     (1L to 3L).map(i => (i, s"v$i")).toDF("id", "v")
