@@ -13,7 +13,8 @@ import org.apache.spark.sql.SparkSessionExtensions
   * available to every session (including pure-SQL users) without any
   * driver-side `ensure()` call. [[graft.engine.Engine.session]] sets
   * this extension; [[graft.functions.VectorExpressions.ensure]] fills in
-  * the same table for sessions built without it.
+  * the same table for sessions built without it (the
+  * [[graft.engine.EtlContext]] constructor calls it).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit =

@@ -45,38 +45,153 @@ object SparkEntry {
   def warm(spark: SparkSession, sfDir: String): Unit =
     Fixtures.all.foreach(_(spark, sfDir))
 
-  /** Deterministic recall-verdict frame for the approximate operators
-    * whose raw outputs aren't SQL-expressible: `(metric, pass)` rows —
-    * recall of `approx` vs `exact` on `keys` must clear `floor`, plus a
-    * non-empty check — hash-compared against a constant DuckDB VALUES
-    * oracle. Lazy single plan: two 1-row aggregates cross-joined. */
-  private def recallVerdict(approx0: DataFrame, exact0: DataFrame,
-                            keys: Seq[String], metric: String,
-                            floor: Double): DataFrame = {
-    // both inputs are referenced twice below (semi-join + count /
-    // nonEmpty) — and cosine_dup's false-positive leg reads approx a
-    // third time. A lazy persist materializes each ONCE during the
-    // verdict's single action instead of re-running the whole
-    // approximate plan per reference (similarity_ivf: 4.0 s → one IVF
-    // execution); the result frames are just id pairs, so the cache is
-    // tiny, and Bench/Verify clear the cache between queries.
-    val approx = approx0.persist()
-    val exact = exact0.persist()
-    // count from the EXACT side (exact rows that the approx result found):
-    // robust to an approx operator emitting duplicate key rows, which
-    // would inflate an approx-side count past true recall
-    val hits = exact.join(approx, keys, "left_semi")
-      .agg(count(lit(1)).as("__hits"))
-    val total = exact.agg(count(lit(1)).as("__total"))
-    val recall = hits.crossJoin(total)
-      .select(lit(metric).as("metric"),
-        (col("__hits").cast("double") / col("__total") >= floor).as("pass"))
-    val nonEmpty = approx.agg((count(lit(1)) > 0L).as("pass"))
-      .select(lit("results_nonempty").as("metric"), col("pass"))
-    recall.unionByName(nonEmpty).orderBy("metric")
+  type Q = (SparkSession, String) => DataFrame
+
+  /** An approximate operator graded on recall against exact search: its
+    * result and the exact one, both projected to `keys`, and the `floor`
+    * the recall must clear under the verdict row named `metric`. */
+  final case class Recall(approx: Q, exact: Q, keys: Seq[String], metric: String,
+                          floor: Double) {
+    /** One row `(__hits, __total)`: the exact rows the approximate result
+      * found, and all exact rows. Hits are counted from the EXACT side
+      * (a semi-join), so an operator that emits a key row twice cannot
+      * inflate recall. Both inputs are persisted lazily: the verdict
+      * reads each more than once (the non-empty check, the dedup
+      * queries' false-positive leg), and a persist runs each plan ONCE
+      * inside the verdict's single action instead of once per reference
+      * (similarity_ivf: 4.0 s → one IVF execution). The frames are id
+      * pairs, so the cache is tiny; Bench, Verify and Probe clear it
+      * between queries. */
+    def counted(approxDf: DataFrame, exactDf: DataFrame): DataFrame = {
+      approxDf.persist()
+      exactDf.persist()
+      exactDf.join(approxDf, keys, "left_semi").agg(count(lit(1)).as("__hits"))
+        .crossJoin(exactDf.agg(count(lit(1)).as("__total")))
+    }
+
+    def counted(s: SparkSession, dir: String): DataFrame = counted(approx(s, dir), exact(s, dir))
   }
 
-  private type Q = (SparkSession, String) => DataFrame
+  private def embeddings(s: SparkSession, dir: String, transformers: String): DataFrame =
+    Engine.runJson(ctx(s, dir), s"""{
+      "source": {"file": {"path": "$dir/embeddings.parquet"}},
+      "extractor": {"parquet": {}},
+      "transformers": [$transformers],
+      "loader": {"memory": {}} }""")
+
+  /** Cross-table search: base rows `vec_id >= 50`, queries `vec_id < 10`. */
+  private def crossEmbeddings(s: SparkSession, dir: String, stage: String,
+                              opts: String): DataFrame =
+    embeddings(s, dir, s"""
+      {"command": {"command":
+        "SELECT vec_id, embedding FROM input WHERE vec_id >= 50"}},
+      {"$stage": {"idField": "vec_id", "field": "embedding", "k": 5, $opts
+        "queryTable": "SELECT vec_id, embedding FROM embeddings WHERE vec_id < 10"}}""")
+      .select("q_id", "n_id")
+
+  private val exactTop5Pairs: Q = (s, dir) =>
+    s.read.parquet(exactTop5(s, dir)).select("q_id", "n_id")
+  private val exactCosinePairs: Q = (s, dir) => embeddings(s, dir,
+    """{"cosinedup": {"idField": "vec_id", "field": "embedding",
+      "threshold": 0.4, "exact": true}}""").select("a", "b")
+
+  /** The one config of each recall-graded query, read by its verdict
+    * ([[recallVerdict]]) and by `Probe recall`, which prints each
+    * entry's hits/total next to its floor. The recall figures below are
+    * `Probe recall` at sf0.01 / sf0.1. Every approximate operator here
+    * is deterministic (literal hyperplanes, hash-ordered training
+    * samples, fixed Lloyd's rounds, lower-index tie-breaks), so a figure
+    * moves only when the operator or the data does. */
+  val recalls: Map[String, Recall] = Map(
+    // SRP-LSH top-5: recall@5 0.437 / 0.465 (1092/2500, 4648/10000)
+    "similarity_lsh" -> Recall((s, dir) => embeddings(s, dir,
+      """{"similaritylsh": {"idField": "vec_id", "field": "embedding", "k": 5,
+        "nBits": 16, "bands": 4}}""").select("q_id", "n_id"),
+      exactTop5Pairs, Seq("q_id", "n_id"), "recall_at_5_ge_0.3", 0.3),
+    // nProbe=18 over 32 well-trained cells (5 Lloyd's rounds, 2048-row
+    // sample): recall@5 0.904 / 0.897 (2259/2500, 8969/10000), ~0.1
+    // over the floor at both scales, at LOWER cost than the old 6/16
+    // config (1.7 s vs 2.66 s anchor: better centroids shrink per-cell
+    // populations, so more probes scan fewer total candidates)
+    "similarity_ivf" -> Recall((s, dir) => embeddings(s, dir,
+      """{"similarityivf": {"idField": "vec_id", "field": "embedding", "k": 5,
+        "nCells": 32, "nProbe": 18, "lloydIters": 5, "trainRows": 2048}}""")
+      .select("q_id", "n_id"),
+      exactTop5Pairs, Seq("q_id", "n_id"), "recall_at_5_ge_0.8", 0.8),
+    // IVF-PQ: the candidate exchange carries 16 code BYTES per base row
+    // instead of the 256-byte float vector (16× smaller big side),
+    // queries score candidates via a precomputed ADC table (16 array
+    // reads vs 64 multiply-adds), and an exact re-rank of the ADC
+    // top-(5·8) shortlist restores score accuracy — ADC error only costs
+    // shortlist recall. pqM=16 subspaces × pqK=64 Euclidean centroids
+    // over the unit-normalized vectors: recall@5 0.962 / 0.903
+    // (2404/2500, 9031/10000), ≥0.1 over the floor at both scales
+    "similarity_ivfpq" -> Recall((s, dir) => embeddings(s, dir,
+      """{"similarityivf": {"idField": "vec_id", "field": "embedding", "k": 5,
+        "nCells": 32, "nProbe": 24, "lloydIters": 5, "trainRows": 2048,
+        "pqM": 16, "pqK": 64, "refine": 8}}""").select("q_id", "n_id"),
+      exactTop5Pairs, Seq("q_id", "n_id"), "recall_at_5_ge_0.8", 0.8),
+    // cross-table IVF against the brute queryTable path over the SAME
+    // slices (hash-verified vs DuckDB by similarity_cross): recall@5
+    // 0.90 / 0.90 (45/50 at both), 0.1 over the floor at both scales
+    "similarity_ivf_cross" -> Recall(
+      crossEmbeddings(_, _, "similarityivf",
+        """"nCells": 32, "nProbe": 18, "lloydIters": 5, "trainRows": 2048,"""),
+      crossEmbeddings(_, _, "similarity", ""),
+      Seq("q_id", "n_id"), "recall_at_5_ge_0.8", 0.8),
+    // brute-force top-5 over the quantize -> dequantize round trip vs
+    // the float-exact top-5, on a probe panel of every 17th vector: the
+    // same verdict at 1/17th of the two N x N searches' cost. The exact
+    // side is the shared fixture restricted to that panel (top-5 is
+    // independent per query, so it equals a filtered exact search):
+    // recall@5 0.980 / 0.986 (147/150, 582/590)
+    "quantize_embed" -> Recall((s, dir) => embeddings(s, dir,
+      """{"quantize": {"field": "embedding"}},
+        {"quantize": {"field": "embedding", "mode": "dequantize"}},
+        {"similarity": {"idField": "vec_id", "field": "embedding", "k": 5,
+          "queryFilter": "vec_id % 17 = 0"}}""").select("q_id", "n_id"),
+      (s, dir) => s.read.parquet(exactTop5(s, dir))
+        .where(col("q_id") % 17 === 0).select("q_id", "n_id"),
+      Seq("q_id", "n_id"), "recall_at_5_ge_0.9", 0.9),
+    // SRP-bucketed cosine pairs vs all pairs: recall 0.508 / 0.520
+    // (30/59, 478/920)
+    "cosine_dup" -> Recall((s, dir) => embeddings(s, dir,
+      """{"cosinedup": {"idField": "vec_id", "field": "embedding",
+        "threshold": 0.4, "nBits": 16, "bands": 4}}""").select("a", "b"),
+      exactCosinePairs, Seq("a", "b"), "recall_ge_0.4", 0.4),
+    // cluster-bucketed pairs (k=8, nProbe=3) vs all pairs: recall
+    // 1.000 / 0.958 (59/59, 881/920)
+    "semantic_dedup" -> Recall((s, dir) => embeddings(s, dir,
+      """{"semanticdedup": {"idField": "vec_id", "field": "embedding",
+        "threshold": 0.4, "k": 8, "nProbe": 3, "emit": "pairs"}}""").select("a", "b"),
+      exactCosinePairs, Seq("a", "b"), "recall_ge_0.8", 0.8))
+
+  /** Deterministic recall-verdict frame for the approximate operators
+    * whose raw outputs aren't SQL-expressible: `(metric, pass)` rows —
+    * the recall of entry `name` of [[recalls]] must clear its floor, plus
+    * a non-empty check and the query's own `legs` on the approximate and
+    * exact frames — hash-compared against a constant DuckDB VALUES
+    * oracle. Lazy single plan: two 1-row aggregates cross-joined. */
+  private def recallVerdict(name: String, s: SparkSession, dir: String)(
+      legs: (DataFrame, DataFrame) => Seq[DataFrame] = (_, _) => Nil): DataFrame = {
+    val r = recalls(name)
+    val approx = r.approx(s, dir)
+    val exact = r.exact(s, dir)
+    val extra = legs(approx, exact)
+    val recall = r.counted(approx, exact).select(lit(r.metric).as("metric"),
+      (col("__hits").cast("double") / col("__total") >= r.floor).as("pass"))
+    val nonEmpty = approx.agg((count(lit(1)) > 0L).as("pass"))
+      .select(lit("results_nonempty").as("metric"), col("pass"))
+    extra.foldLeft(recall.unionByName(nonEmpty).orderBy("metric"))(
+      _.unionByName(_).orderBy("metric"))
+  }
+
+  /** The verdict leg of the dedup queries: no approximate pair is
+    * missing from the exact pair set. */
+  private def noFalsePositives(approx: DataFrame, exact: DataFrame): Seq[DataFrame] =
+    Seq(approx.join(exact, Seq("a", "b"), "left_anti")
+      .agg((count(lit(1)) === 0L).as("pass"))
+      .select(lit("false_positives_zero").as("metric"), col("pass")))
 
   def queries: Map[String, Q] = Map(
     // ------------------------------------------------ sources / extractors
@@ -3786,7 +3901,6 @@ object SparkEntry {
         "transformers": [{"simhash": {"idField": "doc_id", "field": "text",
                                       "maxDistance": 7}}],
         "loader": {"memory": {}} }""")
-      graft.functions.VectorExpressions.ensure(s)
       val sigDiff = c.table("documents").select(
           graft.functions.VectorExpressions.simHash64(col("text")).as("__n"),
           graft.dedup.DedupStages.simhash64(col("text")).as("__h"))
@@ -3830,59 +3944,18 @@ object SparkEntry {
     "similarity_lsh" -> { (s, dir) =>
       // recall < 1 by design, so the driver row is a deterministic
       // VERDICT table: recall@5 of the SRP-LSH path vs the brute-force
-      // exact path (both computed in Spark, both deterministic — literal
-      // hyperplanes) must clear a floor with margin (measured 0.437 at
-      // sf0.01). Oracle = the constant expected-verdict table.
-      val approx = Engine.runJson(ctx(s, dir), s"""{
-        "source": {"file": {"path": "$dir/embeddings.parquet"}},
-        "extractor": {"parquet": {}},
-        "transformers": [{"similaritylsh": {"idField": "vec_id",
-          "field": "embedding", "k": 5, "nBits": 16, "bands": 4}}],
-        "loader": {"memory": {}} }""").select("q_id", "n_id")
-      val exact = s.read.parquet(exactTop5(s, dir)).select("q_id", "n_id")
-      recallVerdict(approx, exact, Seq("q_id", "n_id"), "recall_at_5_ge_0.3", 0.3)
+      // exact path (both computed in Spark, both deterministic) must
+      // clear a floor with margin ([[recalls]]). Oracle = the constant
+      // expected-verdict table.
+      recallVerdict("similarity_lsh", s, dir)()
     },
     "similarity_ivf" -> { (s, dir) =>
-      // same verdict contract as similarity_lsh. nProbe=18 over 32
-      // well-trained cells (5 Lloyd's rounds, 2048-row sample):
-      // measured recall@5 0.904 at sf0.01 / 0.897 at sf0.1
-      // (RecallProbe sweep) — the 0.8 floor holds with ~0.1 margin at
-      // both scales at LOWER cost than the old 6/16 config (1.7 s vs
-      // 2.66 s anchor: better centroids shrink per-cell populations,
-      // so more probes scan fewer total candidates); deterministic:
-      // hash-ordered training sample, fixed Lloyd's rounds, fixed probes
-      val approx = Engine.runJson(ctx(s, dir), s"""{
-        "source": {"file": {"path": "$dir/embeddings.parquet"}},
-        "extractor": {"parquet": {}},
-        "transformers": [{"similarityivf": {"idField": "vec_id",
-          "field": "embedding", "k": 5, "nCells": 32, "nProbe": 18,
-          "lloydIters": 5, "trainRows": 2048}}],
-        "loader": {"memory": {}} }""").select("q_id", "n_id")
-      val exact = s.read.parquet(exactTop5(s, dir)).select("q_id", "n_id")
-      recallVerdict(approx, exact, Seq("q_id", "n_id"), "recall_at_5_ge_0.8", 0.8)
+      // same verdict contract as similarity_lsh
+      recallVerdict("similarity_ivf", s, dir)()
     },
     "similarity_ivfpq" -> { (s, dir) =>
-      // IVF-PQ: the candidate exchange carries 16 code BYTES per base
-      // row instead of the 256-byte float vector (16× smaller big
-      // side), queries score candidates via a precomputed ADC table
-      // (16 array reads vs 64 multiply-adds), and an exact re-rank of
-      // the ADC top-(5·8) shortlist restores score accuracy — ADC
-      // error only costs shortlist recall. pqM=16 subspaces × pqK=64
-      // Euclidean centroids over the unit-normalized vectors; measured
-      // recall@5 0.962 at sf0.01 / 0.903 at sf0.1 (PqProbe sweep) —
-      // the 0.8 floor holds with ≥0.1 margin at both scales.
-      // Deterministic: hash-ordered training sample, fixed Lloyd's
-      // rounds, lower-index tie-breaks end to end.
-      val approx = Engine.runJson(ctx(s, dir), s"""{
-        "source": {"file": {"path": "$dir/embeddings.parquet"}},
-        "extractor": {"parquet": {}},
-        "transformers": [{"similarityivf": {"idField": "vec_id",
-          "field": "embedding", "k": 5, "nCells": 32, "nProbe": 24,
-          "lloydIters": 5, "trainRows": 2048,
-          "pqM": 16, "pqK": 64, "refine": 8}}],
-        "loader": {"memory": {}} }""").select("q_id", "n_id")
-      val exact = s.read.parquet(exactTop5(s, dir)).select("q_id", "n_id")
-      recallVerdict(approx, exact, Seq("q_id", "n_id"), "recall_at_5_ge_0.8", 0.8)
+      // same verdict contract as similarity_lsh, for IVF-PQ
+      recallVerdict("similarity_ivfpq", s, dir)()
     },
     "similarity_ivf_cross" -> { (s, dir) =>
       // CROSS-TABLE IVF: the no-broadcast migration the brute
@@ -3890,35 +3963,8 @@ object SparkEntry {
       // frozen index on a linear cell equi-join (neither side
       // broadcasts; base rows carry one argmax cell, queries explode
       // to nProbe probed cells). Exact side = the brute queryTable
-      // path over the SAME slices (hash-verified vs DuckDB by
-      // similarity_cross); verdict contract as similarity_ivf.
-      // Measured recall@5 (CrossRecallProbe): 0.90 at sf0.01 AND at
-      // sf0.1 (45/50, nProbe=18 over 32 cells) — the 0.8 floor holds
-      // with 0.1 margin at both scales.
-      val ivfCfg = s"""{
-        "source": {"file": {"path": "$dir/embeddings.parquet"}},
-        "extractor": {"parquet": {}},
-        "transformers": [
-          {"command": {"command":
-            "SELECT vec_id, embedding FROM input WHERE vec_id >= 50"}},
-          {"similarityivf": {"idField": "vec_id", "field": "embedding",
-            "k": 5, "nCells": 32, "nProbe": 18,
-            "lloydIters": 5, "trainRows": 2048, "queryTable":
-            "SELECT vec_id, embedding FROM embeddings WHERE vec_id < 10"}}],
-        "loader": {"memory": {}} }"""
-      val bruteCfg = s"""{
-        "source": {"file": {"path": "$dir/embeddings.parquet"}},
-        "extractor": {"parquet": {}},
-        "transformers": [
-          {"command": {"command":
-            "SELECT vec_id, embedding FROM input WHERE vec_id >= 50"}},
-          {"similarity": {"idField": "vec_id", "field": "embedding",
-            "k": 5, "queryTable":
-            "SELECT vec_id, embedding FROM embeddings WHERE vec_id < 10"}}],
-        "loader": {"memory": {}} }"""
-      val approx = Engine.runJson(ctx(s, dir), ivfCfg).select("q_id", "n_id")
-      val exact = Engine.runJson(ctx(s, dir), bruteCfg).select("q_id", "n_id")
-      recallVerdict(approx, exact, Seq("q_id", "n_id"), "recall_at_5_ge_0.8", 0.8)
+      // path over the same slices; verdict contract as similarity_ivf.
+      recallVerdict("similarity_ivf_cross", s, dir)()
     },
     "rand_project" -> { (s, dir) =>
       val c = ctx(s, dir)
@@ -3960,17 +4006,10 @@ object SparkEntry {
       // quantize->dequantize round-trip keeps recall >= 0.9 vs the
       // float-exact top-5 (cosine is scale-invariant, so only rounding
       // noise can flip a neighbour). Oracle = constant expected table.
-      // Recall is measured on a bounded probe panel (every 17th vector)
-      // — the same verdict, at 1/17th of the two brute-force searches'
-      // N x N cost (the error-bound and range checks still scan ALL rows).
-      val c = ctx(s, dir)
-      val quant = Engine.runJson(c, s"""{
-        "source": {"file": {"path": "$dir/embeddings.parquet"}},
-        "extractor": {"parquet": {}},
-        "transformers": [{"quantize": {"field": "embedding",
-          "keepOriginal": true}}],
-        "loader": {"memory": {}} }""")
-      val checks = quant.select(
+      // Recall is measured on a bounded probe panel ([[recalls]]); the
+      // error-bound and range checks still scan ALL rows.
+      val checks = embeddings(s, dir,
+          """{"quantize": {"field": "embedding", "keepOriginal": true}}""").select(
           when(array_max(zip_with(col("embedding"), col("embedding_q8"),
               (a, b) => abs(a.cast("double") - b.cast("double") * col("embedding_scale"))))
               <= col("embedding_scale") * 0.5 + 1e-12, 0).otherwise(1).as("errbad"),
@@ -3981,46 +4020,15 @@ object SparkEntry {
           struct(lit("max_err_le_half_scale").as("metric"), (col("eb") === 0L).as("pass")),
           struct(lit("q_range_symmetric").as("metric"), (col("rb") === 0L).as("pass")))))
         .select("col.*")
-      val approx = Engine.runJson(ctx(s, dir), s"""{
-        "source": {"file": {"path": "$dir/embeddings.parquet"}},
-        "extractor": {"parquet": {}},
-        "transformers": [
-          {"quantize": {"field": "embedding"}},
-          {"quantize": {"field": "embedding", "mode": "dequantize"}},
-          {"similarity": {"idField": "vec_id", "field": "embedding", "k": 5,
-            "queryFilter": "vec_id % 17 = 0"}}],
-        "loader": {"memory": {}} }""").select("q_id", "n_id")
-      // the exact reference is the shared fixture restricted to the same
-      // probe panel (brute-force top-5 is independent per query, so the
-      // filtered subset is identical to a filtered exact search)
-      val exact = s.read.parquet(exactTop5(s, dir))
-        .where(col("q_id") % 17 === 0).select("q_id", "n_id")
-      recallVerdict(approx, exact, Seq("q_id", "n_id"), "recall_at_5_ge_0.9", 0.9)
-        .unionByName(checks).orderBy("metric")
+      recallVerdict("quantize_embed", s, dir)((_, _) => Seq(checks))
     },
     "cosine_dup" -> { (s, dir) =>
       // VERDICT table: the SRP-bucketed pair set must be a SUBSET of the
       // exact pair set (the LSH path exact-verifies candidates, so false
       // positives are structurally impossible — asserted, not assumed)
-      // and recall must clear a floor with margin (measured 0.509 at
-      // sf0.01). Oracle = the constant expected-verdict table.
-      val approx = Engine.runJson(ctx(s, dir), s"""{
-        "source": {"file": {"path": "$dir/embeddings.parquet"}},
-        "extractor": {"parquet": {}},
-        "transformers": [{"cosinedup": {"idField": "vec_id",
-          "field": "embedding", "threshold": 0.4, "nBits": 16, "bands": 4}}],
-        "loader": {"memory": {}} }""").select("a", "b")
-      val exact = Engine.runJson(ctx(s, dir), s"""{
-        "source": {"file": {"path": "$dir/embeddings.parquet"}},
-        "extractor": {"parquet": {}},
-        "transformers": [{"cosinedup": {"idField": "vec_id",
-          "field": "embedding", "threshold": 0.4, "exact": true}}],
-        "loader": {"memory": {}} }""").select("a", "b")
-      val falsePos = approx.join(exact, Seq("a", "b"), "left_anti")
-        .agg((count(lit(1)) === 0L).as("pass"))
-        .select(lit("false_positives_zero").as("metric"), col("pass"))
-      recallVerdict(approx, exact, Seq("a", "b"), "recall_ge_0.4", 0.4)
-        .unionByName(falsePos).orderBy("metric")
+      // and recall must clear a floor with margin ([[recalls]]). Oracle =
+      // the constant expected-verdict table.
+      recallVerdict("cosine_dup", s, dir)(noFalsePositives)
     },
     "kmeans_cluster" -> { (s, dir) =>
       // VERDICT table for the spherical k-means stage: every vector
@@ -4056,25 +4064,8 @@ object SparkEntry {
       // IVF-style multi-probe): within-cell pairs are exact-verified so
       // false positives are structurally impossible (asserted), and
       // multi-probe recall vs the all-pairs baseline must clear 0.8
-      // (measured 1.000 sf0.01 / 0.958 sf0.1 at k=8, nProbe=3)
-      val approx = Engine.runJson(ctx(s, dir), s"""{
-        "source": {"file": {"path": "$dir/embeddings.parquet"}},
-        "extractor": {"parquet": {}},
-        "transformers": [{"semanticdedup": {"idField": "vec_id",
-          "field": "embedding", "threshold": 0.4, "k": 8, "nProbe": 3,
-          "emit": "pairs"}}],
-        "loader": {"memory": {}} }""").select("a", "b")
-      val exact = Engine.runJson(ctx(s, dir), s"""{
-        "source": {"file": {"path": "$dir/embeddings.parquet"}},
-        "extractor": {"parquet": {}},
-        "transformers": [{"cosinedup": {"idField": "vec_id",
-          "field": "embedding", "threshold": 0.4, "exact": true}}],
-        "loader": {"memory": {}} }""").select("a", "b")
-      val falsePos = approx.join(exact, Seq("a", "b"), "left_anti")
-        .agg((count(lit(1)) === 0L).as("pass"))
-        .select(lit("false_positives_zero").as("metric"), col("pass"))
-      recallVerdict(approx, exact, Seq("a", "b"), "recall_ge_0.8", 0.8)
-        .unionByName(falsePos).orderBy("metric")
+      // ([[recalls]])
+      recallVerdict("semantic_dedup", s, dir)(noFalsePositives)
     },
     "cosine_dup_exact" -> { (s, dir) =>
       val c = ctx(s, dir)

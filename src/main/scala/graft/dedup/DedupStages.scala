@@ -137,7 +137,6 @@ object DedupStages {
       // native one-pass shingle hashing (graft.functions.ShingleHashes) —
       // byte-identical hash values to the HOF wordShingles+xxhash64 path
       // (asserted in specs), ~10× cheaper per row
-      graft.functions.VectorExpressions.ensure(ctx.spark)
       // null-text docs carry null signatures whose band keys degenerate
       // to the band-index hash — every null doc would collide into one
       // bucket per band (O(K²) candidates). Null text can't be a
@@ -236,7 +235,6 @@ object DedupStages {
       // native per-row signature (graft.functions.SimHash64) — a pure
       // projection, no explode + 64-SUM-agg shuffle (values identical to
       // simhashSignatures, asserted in specs)
-      graft.functions.VectorExpressions.ensure(ctx.spark)
       val sigs = df.select(col(id).as("__id"),
         graft.functions.VectorExpressions.simHash64(col(field)).as("__sig"))
       bandedHammingJoin(sigs, maxDist, spec, ctx, "simhash")
@@ -381,7 +379,6 @@ object DedupStages {
         .getOrElse(sys.error("decontaminate: against (table or SELECT) required")))
       val evalField = spec.strOr("againstField", field)
 
-      graft.functions.VectorExpressions.ensure(ctx.spark)
       import org.apache.spark.sql.functions.broadcast
       val evalShingleSet = eval0
         .select(explode(graft.functions.VectorExpressions

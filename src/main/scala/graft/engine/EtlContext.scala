@@ -14,6 +14,10 @@ import scala.collection.mutable.ArrayBuffer
   * (SURVEY.md §7.5 "mutable context during the run").
   */
 final class EtlContext(val spark: SparkSession) {
+  // the one registration point of graft's native SQL functions: every
+  // pipeline, stage call and driver query builds a context first
+  graft.functions.VectorExpressions.ensure(spark)
+
   /** Driver-side variables: `let` blocks, CLI `-NAME=value` args
     * (OETLProcessor.java:214-219), `output:` captures. */
   val vars = TrieMap.empty[String, Any]

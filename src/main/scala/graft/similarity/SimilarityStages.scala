@@ -30,7 +30,8 @@ object SimilarityStages {
 
   /** Dot product of two numeric array columns (double math) — the
     * native codegen'd [[graft.functions.ArrayDot]]; callers register it
-    * via [[graft.functions.VectorExpressions.ensure]] (the stages do). */
+    * via [[graft.functions.VectorExpressions.ensure]] (every
+    * [[graft.engine.EtlContext]] does). */
   def dot(a: Column, b: Column): Column =
     graft.functions.VectorExpressions.arrayDot(a, b)
 
@@ -164,7 +165,6 @@ object SimilarityStages {
            maxBroadcastRows: Long = DefaultMaxBroadcastRows,
            allowFlip: Boolean = false,
            queryRowsHint: Option[Long] = None): DataFrame = {
-    graft.functions.VectorExpressions.ensure(queries.sparkSession)
     val q = queries.select(col(idCol).as("q_id"), col(vecCol).as("__qv"))
       .withColumn("__qn", norm(col("__qv")))
     val b = base.select(col(idCol).as("n_id"), col(vecCol).as("__bv"))
@@ -333,7 +333,6 @@ object SimilarityStages {
     * `bands` (default 4). */
   def similarityLsh(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
     { df =>
-      graft.functions.VectorExpressions.ensure(ctx.spark)
       val id = spec.strOr("idField", "vec_id")
       val vec = spec.strOr("field", "embedding")
       val k = spec.int("k", 10)
@@ -401,7 +400,6 @@ object SimilarityStages {
     * its broadcast cap. */
   def similarityIvf(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
     { df =>
-      graft.functions.VectorExpressions.ensure(ctx.spark)
       val id = spec.strOr("idField", "vec_id")
       val vec = spec.strOr("field", "embedding")
       val k = spec.int("k", 10)
@@ -657,7 +655,6 @@ object SimilarityStages {
     { df =>
       val id = spec.strOr("idField", "vec_id")
       val vec = spec.strOr("field", "embedding")
-      graft.functions.VectorExpressions.ensure(ctx.spark)
       val threshold = spec.str("threshold").map(_.toDouble).getOrElse(0.99)
       if (spec.bool("exact", dflt = false)) {
         // enforce the documented small-N contract: the right side is
@@ -779,7 +776,7 @@ object SimilarityStages {
     * centroids — O(√k) per-row work. The true argmax can live in an
     * unprobed group (the standard IVF coarse-quantizer trade; raise
     * `coarseProbe` to trade work for recall) — the driver recall
-    * verdicts / SemProbe measure exactly this. */
+    * verdicts and `Probe recall` measure exactly this. */
   private def cellScores(vec: String, normC: Column,
                          codebook: Array[Array[Double]],
                          need: Int, coarseProbe: Int): Column = {
@@ -898,7 +895,6 @@ object SimilarityStages {
     * sample, tie-broken argmax. */
   def kmeans(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
     { df =>
-      graft.functions.VectorExpressions.ensure(ctx.spark)
       val id = spec.strOr("idField", "vec_id")
       val vec = spec.strOr("field", "embedding")
       val k = spec.int("k", 8)
@@ -940,7 +936,6 @@ object SimilarityStages {
     * `neardupdedup`. */
   def semanticDedup(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
     { df =>
-      graft.functions.VectorExpressions.ensure(ctx.spark)
       val id = spec.strOr("idField", "vec_id")
       val vec = spec.strOr("field", "embedding")
       val k = spec.int("k", 8)
@@ -1065,7 +1060,6 @@ object SimilarityStages {
       // element k times, and which the downstream non-outer posexplode's
       // injected size()>0 Filter evaluated a SECOND time per row) —
       // byte-identical by the jlProjectHof differential spec
-      graft.functions.VectorExpressions.ensure(df.sparkSession)
       val proj = graft.functions.VectorExpressions.jlProject(col(vec), k, scale, seed)
       val res = df.withColumn(out, proj)
       if (spec.bool("keepOriginal", dflt = false)) res else res.drop(vec)
@@ -1117,7 +1111,8 @@ object SimilarityStages {
 
   /** `retrievaleval`: ranking-quality metrics over scored (query,
     * candidate) rows — the evaluation companion to the similarity /
-    * BM25 stages (RecallProbe's job, productized). Candidates rank per
+    * BM25 stages (what `Probe recall` does for the driver queries, as a
+    * stage). Candidates rank per
     * query by (`scoreField` desc, `docField` asc — the deterministic
     * tie-break every ranking stage here uses); a candidate is relevant
     * when `labelField` > 0. Per query:

@@ -174,7 +174,6 @@ object SetOps {
   def bloomjoin(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
     { df =>
       import org.apache.spark.sql.functions._
-      graft.functions.VectorExpressions.ensure(ctx.spark)
       val right = rightOf(spec, ctx)
       val (lks, rks) = spec.str("on") match {
         case Some(on) =>

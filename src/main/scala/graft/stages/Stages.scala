@@ -1554,7 +1554,6 @@ object Stages {
     * shuffles and sorts the full input). */
   def topkPerGroup(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
     { df =>
-      graft.functions.VectorExpressions.ensure(ctx.spark)
       val keys = spec.strList("groupBy")
       require(keys.nonEmpty, "topkpergroup: groupBy required")
       val score = spec.str("scoreField").getOrElse(sys.error("topkpergroup: scoreField required"))

@@ -216,7 +216,6 @@ object StatStages {
     * `out` (default "kll_sketch"). */
   def kllSketch(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
     { df =>
-      graft.functions.VectorExpressions.ensure(ctx.spark)
       val f = spec.str("field").getOrElse(sys.error("kllsketch: field required"))
       require(df.columns.contains(f), s"kllsketch: no column '$f'")
       require(df.schema(f).dataType.isInstanceOf[NumericType],
@@ -239,7 +238,6 @@ object StatStages {
     * so a rollup self-reports its support. */
   def kllMerge(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
     { df =>
-      graft.functions.VectorExpressions.ensure(ctx.spark)
       val f = spec.strOr("field", "kll_sketch")
       require(df.columns.contains(f), s"kllmerge: no column '$f'")
       val keys = keyList(spec, "groupBy")
@@ -278,7 +276,6 @@ object StatStages {
     * (default "freq_sketch"). */
   def topkSketch(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
     { df =>
-      graft.functions.VectorExpressions.ensure(ctx.spark)
       val f = spec.str("itemField").getOrElse(
         sys.error("topksketch: itemField required"))
       require(df.columns.contains(f), s"topksketch: no column '$f'")
@@ -304,7 +301,6 @@ object StatStages {
     * (merge-buffer size, default 1024). */
   def topkMerge(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
     { df =>
-      graft.functions.VectorExpressions.ensure(ctx.spark)
       val f = spec.strOr("field", "freq_sketch")
       require(df.columns.contains(f), s"topkmerge: no column '$f'")
       val keys = keyList(spec, "groupBy")

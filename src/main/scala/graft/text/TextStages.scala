@@ -247,7 +247,6 @@ object TextStages {
     * pure per-row projection. */
   def wikitext(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
     { df =>
-      graft.functions.VectorExpressions.ensure(ctx.spark)
       val f = spec.strOr("field", "text")
       require(df.columns.contains(f), s"wikitext: no column '$f'")
       df.withColumn(spec.strOr("outputField", f),
@@ -264,7 +263,6 @@ object TextStages {
     * One codegen'd expression, pure per-row projection. */
   def compressRatio(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
     { df =>
-      graft.functions.VectorExpressions.ensure(ctx.spark)
       val f = spec.strOr("field", "text")
       require(df.columns.contains(f), s"compressratio: no column '$f'")
       val out = spec.strOr("outputField", "compress_ratio")
@@ -450,7 +448,6 @@ object TextStages {
     * Output column: `lang_pred`. */
   def langid(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
     { df =>
-      graft.functions.VectorExpressions.ensure(ctx.spark)
       df.withColumn("lang_pred",
         graft.functions.VectorExpressions.langId(col(spec.strOr("field", "text"))))
     }
@@ -486,7 +483,6 @@ object TextStages {
     * [[graft.engine.TextFiles]]; config variables resolved). */
   def bpe(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
     { df =>
-      graft.functions.VectorExpressions.ensure(ctx.spark)
       val fieldName = spec.strOr("field", "text")
       val outField = spec.strOr("outputField", "bpe_tokens")
       // model persistence through TextFiles: `loadMerges` applies a
@@ -536,7 +532,6 @@ object TextStages {
     * pure per-row projection, fuses into the scan. */
   def normalizetext(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
     { df =>
-      graft.functions.VectorExpressions.ensure(ctx.spark)
       val f = spec.strOr("field", "text")
       require(df.columns.contains(f), s"normalizetext: no column '$f'")
       val form = graft.functions.UnicodeNorm.checkForm(spec.strOr("form", "NFC"))
@@ -942,7 +937,6 @@ object TextStages {
     * dominant script equals the name, e.g. LATIN). */
   def scriptMix(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
     { df =>
-      graft.functions.VectorExpressions.ensure(ctx.spark)
       val f = spec.strOr("field", "text")
       require(df.columns.contains(f), s"scriptmix: no column '$f'")
       Seq("n_letters", "top_script", "top_ratio").foreach(c =>

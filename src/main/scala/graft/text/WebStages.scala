@@ -178,7 +178,6 @@ object WebStages {
     * whole-stage-codegen pass, zero shuffle, no UDF boxing. */
   def htmlextract(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
     { df =>
-      graft.functions.VectorExpressions.ensure(ctx.spark)
       val f = spec.strOr("field", "html")
       require(df.columns.contains(f), s"htmlextract: no column '$f'")
       val h = col(f).cast("string")
@@ -207,7 +206,6 @@ object WebStages {
     * markdown), `keepHtml` (default false). */
   def htmlmarkdown(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
     { df =>
-      graft.functions.VectorExpressions.ensure(ctx.spark)
       val f = spec.strOr("field", "html")
       require(df.columns.contains(f), s"htmlmarkdown: no column '$f'")
       val outF = spec.strOr("outputField", "markdown")
@@ -228,7 +226,6 @@ object WebStages {
     * `outputField` (default text), `keepSource` (default false). */
   def latexstrip(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
     { df =>
-      graft.functions.VectorExpressions.ensure(ctx.spark)
       val f = spec.strOr("field", "tex")
       require(df.columns.contains(f), s"latexstrip: no column '$f'")
       val outF = spec.strOr("outputField", "text")
@@ -250,7 +247,6 @@ object WebStages {
     * `outputField` (default text), `keepSource` (default false). */
   def markdownstrip(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
     { df =>
-      graft.functions.VectorExpressions.ensure(ctx.spark)
       val f = spec.strOr("field", "md")
       require(df.columns.contains(f), s"markdownstrip: no column '$f'")
       val outF = spec.strOr("outputField", "text")
@@ -274,7 +270,6 @@ object WebStages {
     * `keepBinary` (default false). */
   def decodetext(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
     { df =>
-      graft.functions.VectorExpressions.ensure(ctx.spark)
       val f = spec.strOr("field", "body")
       require(df.columns.contains(f), s"decodetext: no column '$f'")
       val outF = spec.strOr("outputField", "text")
@@ -315,7 +310,6 @@ object WebStages {
     * never hold the page bytes unless `keepHtml`. */
   def htmllinks(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
     { df =>
-      graft.functions.VectorExpressions.ensure(ctx.spark)
       val f = spec.strOr("field", "html")
       require(df.columns.contains(f), s"htmllinks: no column '$f'")
       val hrefF = spec.strOr("hrefField", "href")
@@ -359,7 +353,6 @@ object WebStages {
     * array projections — no shuffle, no explode. */
   def htmlmeta(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
     { df =>
-      graft.functions.VectorExpressions.ensure(ctx.spark)
       val f = spec.strOr("field", "html")
       require(df.columns.contains(f), s"htmlmeta: no column '$f'")
       val keys = spec.strList("keys").map(_.toLowerCase(java.util.Locale.ROOT))
@@ -406,7 +399,6 @@ object WebStages {
     * (default false), `emptyPages` drop|keep. */
   def htmltables(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
     { df =>
-      graft.functions.VectorExpressions.ensure(ctx.spark)
       val f = spec.strOr("field", "html")
       require(df.columns.contains(f), s"htmltables: no column '$f'")
       val tF = spec.strOr("tableField", "table_idx")
@@ -562,7 +554,6 @@ object WebStages {
     * per-executor parse cache (bodies repeat per host, rows per page). */
   def robotsfilter(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
     { df =>
-      graft.functions.VectorExpressions.ensure(ctx.spark)
       val f = spec.strOr("field", "url")
       require(df.columns.contains(f), s"robotsfilter: no column '$f'")
       val agent = spec.strOr("agent", "*")
@@ -640,7 +631,6 @@ object WebStages {
           require(isIntegral, s"groupcap threshold: orderField `$order` must " +
             s"be integral (got ${df.schema(order).dataType.simpleString}) — " +
             "use algorithm: \"window\" for other order-key types")
-          graft.functions.VectorExpressions.ensure(ctx.spark)
           // cap-th smallest order key per group = last element of the
           // top-`cap` heap on score -order (heap keeps the cap smallest;
           // a group with fewer than cap rows keeps its max → all rows

@@ -2,7 +2,7 @@ package graft.tools
 
 import graft.{Bench, Measurement, QueryMeter, SparkEntry}
 import graft.engine.Engine
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 
@@ -23,12 +23,17 @@ import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
   *    query with the min and every rep of each measured field.
   *  - `stages`, `execs`, `jobs`: the per-stage rows, the final executed
   *    plan of each SQL execution, or the job timeline of the fastest rep.
+  *  - `recall`: per entry of [[SparkEntry.recalls]] (all of them when no
+  *    query is named), one JSON record with the recall its verdict
+  *    grades — `hits`/`total`, counted exact-side as the verdict counts
+  *    them, `recall` and `floor` — and the min `task_s` and `jobs` of
+  *    collecting that one row, the full plan of both searches.
   *
   * The measuring modes run Bench's warm-up, then per query 1 warm-up and
   * [[Reps]] measured reps, clearing the cache after each as Bench does. */
 object Probe {
   val Reps = 3
-  private val Modes = Seq("plan", "show", "time", "stages", "execs", "jobs")
+  private val Modes = Seq("plan", "show", "time", "stages", "execs", "jobs", "recall")
 
   def main(args: Array[String]): Unit = {
     require(args.length >= 2 && Modes.contains(args(0)),
@@ -64,7 +69,7 @@ object Probe {
         query(n).show(50, truncate = false)
       }
       case _ =>
-        val meter = new QueryMeter(spark, detail = mode != "time")
+        val meter = new QueryMeter(spark, detail = mode != "time" && mode != "recall")
         try {
           meter.warm(dir)
           if (mode == "time") {
@@ -73,9 +78,15 @@ object Probe {
             println(f"_canary min=$c%.3f s (bench anchor ${anchor.getOrElse(Double.NaN)}%.3f s " +
               f"=> window ratio ${anchor.fold(Double.NaN)(c / _)}%.2fx)")
           }
-          names.foreach { n =>
+          val targets =
+            if (mode == "recall" && names.isEmpty) SparkEntry.recalls.keys.toSeq.sorted else names
+          targets.foreach { n =>
+            var counts: Row = null
             def rep(): Measurement = {
-              val m = meter.measure(query(n))
+              val m =
+                if (mode == "recall")
+                  meter.measure(SparkEntry.recalls(n).counted(spark, dir), df => counts = df.head())
+                else meter.measure(query(n))
               spark.catalog.clearCache()
               m
             }
@@ -83,6 +94,7 @@ object Probe {
             val reps = Seq.fill(Reps)(rep())
             reps.flatMap(_.error).headOption.foreach(e => println(s"[$n] FAILED: ${e.getMessage}"))
             if (mode == "time") println(record(n, reps))
+            else if (mode == "recall") Option(counts).foreach(c => println(recallRecord(n, c, reps)))
             else {
               val best = reps.minBy(_.wallS)
               println(f"=== $n wall=${best.wallS}%.3f s build=${best.buildS}%.3f s " +
@@ -113,6 +125,14 @@ object Probe {
       Fields.map { case (k, get) => "\"" + k + "\":" + f(get) }.mkString("{", ",", "}")
     s"""{"query":"$name","min":${obj(get => num(reps.map(get).min))},""" +
       s""""reps":${obj(get => reps.map(m => num(get(m))).mkString("[", ",", "]"))}}"""
+  }
+
+  /** `{"query":…,"hits":…,"total":…,"recall":…,"floor":…,"task_s":…,"jobs":…}`. */
+  private def recallRecord(name: String, counts: Row, reps: Seq[Measurement]): String = {
+    val (hits, total) = (counts.getLong(0), counts.getLong(1))
+    f"""{"query":"$name","hits":$hits,"total":$total,"recall":${hits.toDouble / total}%.4f,""" +
+      f""""floor":${SparkEntry.recalls(name).floor},"task_s":${reps.map(_.taskS).min}%.3f,""" +
+      s""""jobs":${reps.map(_.jobs).min}}"""
   }
 
   private object Walk extends AdaptiveSparkPlanHelper

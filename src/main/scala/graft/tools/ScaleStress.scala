@@ -569,8 +569,8 @@ object ScaleStress {
         // per-round degree-agg + anti-join cost ∝ edges. The TIGHT
         // maxIter (6, vs the default 50) is the round-count assertion
         // itself: rounds grow with graph diameter, never with N
-        // (RoundProbe r19: clique forest flat at 1 round across 16× N;
-        // the loud bound blows at factor 100 if that ever regresses)
+        // (RoundsSpec: clique forest flat at 1 round across 16× N; the
+        // loud bound blows at factor 100 if that ever regresses)
         "kcore_peel" -> s"""{
           "begin": [{"console": {"commands": [
             "CREATE OR REPLACE TEMPORARY VIEW kcs_ids AS SELECT CAST(doc_id AS STRING) AS vid FROM parquet.`$docs` UNION ALL SELECT CAST(doc_id + $n AS STRING) AS vid FROM parquet.`$docs` WHERE doc_id % 8 = 0"]}}],
@@ -615,8 +615,8 @@ object ScaleStress {
         // leg measures the per-round join + min-agg cost ∝ edges. The
         // trailing filter references scc_id (count-elimination trap).
         // The TIGHT maxIter (10, vs the default 50) is the round-count
-        // assertion itself (RoundProbe r19: pure 4-cycles flat at 4
-        // rounds across 16× N) — the loud bound blows at factor 100 if
+        // assertion itself (RoundsSpec: pure 4-cycles flat at 4 rounds
+        // across 16× N) — the loud bound blows at factor 100 if
         // rounds ever start growing with N instead of diameter.
         "scc_color" -> s"""{
           "begin": [{"console": {"commands": [

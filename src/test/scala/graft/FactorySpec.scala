@@ -1,5 +1,6 @@
 package graft
 
+import graft.engine.EtlContext
 import graft.functions.{NativeFunctions, VectorExpressions}
 import org.apache.spark.sql.{AnalysisException, SparkSession}
 import scala.jdk.CollectionConverters._
@@ -9,12 +10,17 @@ import scala.jdk.CollectionConverters._
   * and one pipeline runner for batch and stream. */
 class FactorySpec extends SparkSpec {
 
-  /** A session whose native functions come from `ensure()`: a new
-    * session with the extension's entries dropped. */
-  private def ensureSession(): SparkSession = {
+  /** A new session with the extension's entries dropped. */
+  private def bareSession(): SparkSession = {
     val s = spark.newSession()
     NativeFunctions.all.foreach(f => s.sessionState.functionRegistry.dropFunction(f.id))
     assert(!s.catalog.functionExists("graft_array_dot"))
+    s
+  }
+
+  /** A session whose native functions come from `ensure()`. */
+  private def ensureSession(): SparkSession = {
+    val s = bareSession()
     VectorExpressions.ensure(s)
     s
   }
@@ -124,6 +130,22 @@ class FactorySpec extends SparkSpec {
     val before = builders
     VectorExpressions.ensure(s)
     assert(builders.zip(before).forall { case (a, b) => a eq b })
+    // building a context registers them: a stage cannot forget the call
+    val bare = bareSession()
+    new EtlContext(bare)
+    assert(bare.sql("SELECT graft_array_dot(array(1.0D, 2.0D), array(3.0D, 4.0D))")
+      .head().getDouble(0) == 11.0)
+  }
+
+  test("one native-function registration point: only EtlContext calls ensure()") {
+    assert(hitsIn(mainSources, """VectorExpressions\s*\.\s*ensure\(""".r).keySet ==
+      Set("src/main/scala/graft/engine/EtlContext.scala"))
+  }
+
+  test("graft.tools holds only the Probe and ScaleStress mains") {
+    val tools = mainSources.filter(_._1.startsWith("src/main/scala/graft/tools/"))
+    assert(hitsIn(tools, """\bdef\s+main\s*\(""".r).keySet == Set(
+      "src/main/scala/graft/tools/Probe.scala", "src/main/scala/graft/tools/ScaleStress.scala"))
   }
 
   for ((path, session) <- Seq[(String, () => SparkSession)](

@@ -291,9 +291,15 @@ class ParitySpec extends SparkSpec {
       .findAllMatchIn(src).map(_.group(1)).toSeq
     val qDupes = qNames.groupBy(identity).filter(_._2.size > 1).keys
     assert(qDupes.isEmpty, s"duplicate query definitions: ${qDupes.mkString(", ")}")
+    // the recall table is keyed by query name too
+    val rNames = """(?m)^    "([a-z0-9_]+)" -> Recall\(""".r
+      .findAllMatchIn(src).map(_.group(1)).toSeq
+    val rDupes = rNames.groupBy(identity).filter(_._2.size > 1).keys
+    assert(rDupes.isEmpty, s"duplicate recall entries: ${rDupes.mkString(", ")}")
+    assert(rNames.toSet == SparkEntry.recalls.keySet)
     // oracle entries are every other 4-space `"name" ->` binding (plain
     // string, paren-concat, or `-> {`-block forms)
-    val oNames = """(?m)^    "([a-z0-9_]+)" ->(?! \{ \(s, dir\))""".r
+    val oNames = """(?m)^    "([a-z0-9_]+)" ->(?! \{ \(s, dir\)| Recall\()""".r
       .findAllMatchIn(src).map(_.group(1)).toSeq
     val oDupes = oNames.groupBy(identity).filter(_._2.size > 1).keys
     assert(oDupes.isEmpty, s"duplicate oracle definitions: ${oDupes.mkString(", ")}")

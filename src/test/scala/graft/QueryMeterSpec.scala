@@ -56,18 +56,40 @@ class QueryMeterSpec extends SparkSpec {
   }
 
   private val detail = "=== field_remove wall="
-  for ((mode, expected) <- Seq(
-      "plan" -> Seq("=== field_remove ===", "Physical Plan", "scans per file: "),
-      "show" -> Seq("=== field_remove ===", "+--"),
-      "time" -> Seq("_canary min=", "{\"query\":\"field_remove\",\"min\":{\"build_s\":"),
-      "stages" -> Seq(detail, "tasks="), "execs" -> Seq(detail, "--- exec "),
-      "jobs" -> Seq(detail, " start=")))
+  private val recallRecord =
+    """\{"query":"cosine_dup","hits":(\d+),"total":(\d+),"recall":[0-9.]+,"floor":0\.4,""" +
+      """"task_s":[0-9.]+,"jobs":\d+\}"""
+  for ((mode, query, expected) <- Seq(
+      ("plan", "field_remove", Seq("=== field_remove ===", "Physical Plan", "scans per file: ")),
+      ("show", "field_remove", Seq("=== field_remove ===", "+--")),
+      ("time", "field_remove",
+        Seq("_canary min=", "{\"query\":\"field_remove\",\"min\":{\"build_s\":")),
+      ("stages", "field_remove", Seq(detail, "tasks=")),
+      ("execs", "field_remove", Seq(detail, "--- exec ")),
+      ("jobs", "field_remove", Seq(detail, " start=")),
+      ("recall", "cosine_dup", Seq("{\"query\":\"cosine_dup\",\"hits\":"))))
     test(s"Probe $mode prints its header") {
       val out = new java.io.ByteArrayOutputStream
-      Console.withOut(out)(graft.tools.Probe.run(spark, mode, sfDir, Seq("field_remove")))
+      Console.withOut(out)(graft.tools.Probe.run(spark, mode, sfDir, Seq(query)))
       val text = out.toString("UTF-8")
       expected.foreach(e => assert(text.contains(e), text))
+      if (mode == "recall") {
+        val m = recallRecord.r.findFirstMatchIn(text).getOrElse(fail(text))
+        assert(m.group(1).toLong <= m.group(2).toLong, text)
+      }
     }
+
+  test("every recall entry is a driver query whose verdict rows name its metric") {
+    for ((name, r) <- SparkEntry.recalls) {
+      assert(SparkEntry.queries.contains(name), name)
+      assert(SparkEntry.oracleSql(name).contains(s"('${r.metric}', true)"), name)
+    }
+    val r = SparkEntry.recalls("cosine_dup")
+    val metrics = SparkEntry.queries("cosine_dup")(spark, sfDir)
+      .collect().map(_.getAs[String]("metric")).toSet
+    spark.catalog.clearCache()
+    assert(metrics.contains(r.metric), metrics)
+  }
 
   test("listeners are registered only in the meter, and one bus drain remains") {
     def hits(pattern: String): Map[String, Int] = {
